@@ -176,15 +176,6 @@ object Pipeline {
     * Returns the number of edge rows written (from the checkpoint layer's
     * lineage, i.e. free).
     */
-  private def timed[T](name: String)(f: => T): T = {
-    if (sys.env.contains("GRAFT_TIMING")) {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[timing] $name%-22s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    } else f
-  }
-
   def build(spark: SparkSession, cfg: PipelineConfig): Long = {
     validate(cfg)
     val table = buildPagesTable(spark, cfg)
@@ -197,11 +188,9 @@ object Pipeline {
     // link winners (zero extra joins in the hot pass); a huge one (discovered
     // entities) never touches the driver — the raw triples canonicalize via
     // a join whose broadcast/shuffle choice is left to AQE.
-    val (canonDf, fitsDriver) = timed("cc") {
-      ConnectedComponents.componentsSized(
-        PageSynth.sameAs(spark).toDF("src", "dst"),
-        localThreshold = cfg.ccLocalThreshold)
-    }
+    val (canonDf, fitsDriver) = ConnectedComponents.componentsSized(
+      PageSynth.sameAs(spark).toDF("src", "dst"),
+      localThreshold = cfg.ccLocalThreshold)
 
     // ONE fused narrow pass (codegen'd html_extract → char-trie scan →
     // map-side canonical linking → local candidate resolution), then ONE
@@ -224,32 +213,26 @@ object Pipeline {
           canonDf, assumeSmall = false, dedup = false)
     val salt =
       if (cfg.writeSalt == 0)
-        timed("auto salt")(autoSalt(pages, aliasDict, phrases, canonMap,
-          cfg.outputBuckets,
-          canonDf = if (fitsDriver) None else Some(canonDf)))
+        autoSalt(pages, aliasDict, phrases, canonMap, cfg.outputBuckets,
+          canonDf = if (fitsDriver) None else Some(canonDf))
       else cfg.writeSalt
-    val edgeStats = timed("scan+dedup+write edges") {
-      GraphOut.writeBucketedDedup(
-        rawTriples.toDF, edgesTable, "subj", cfg.outputBuckets,
-        Seq("subj", "pred", "obj", "url"), ckpt, cfg.runId, "edges",
-        inputTag = inputTag, skewSalt = salt)
-    }
+    val edgeStats = GraphOut.writeBucketedDedup(
+      rawTriples.toDF, edgesTable, "subj", cfg.outputBuckets,
+      Seq("subj", "pred", "obj", "url"), ckpt, cfg.runId, "edges",
+      inputTag = inputTag, skewSalt = salt)
 
     // Vertices derive from the written (compressed, pruned) edge table via
     // the fused single-exchange plan: endpoint-id union → ONE bucket
     // exchange → in-partition (part, id) degree aggregate → one file per
     // bucket (the old path exchanged twice: groupBy(id) + repartition).
-    timed("write vertices") {
-      val edges = IcebergishTable.read(spark, edgesTable)
-      GraphOut.writeVerticesBucketed(
-        edges, s"${cfg.workDir}/vertices", cfg.outputBuckets,
-        ckpt, cfg.runId, "vertices", inputTag = inputTag)
-    }
+    GraphOut.writeVerticesBucketed(
+      IcebergishTable.read(spark, edgesTable), s"${cfg.workDir}/vertices",
+      cfg.outputBuckets, ckpt, cfg.runId, "vertices", inputTag = inputTag)
     // Cross-table atomic publish: pin (pages, edges, vertices) snapshots in
     // one root commit — a reader resolving through the root can never see
     // new edges with old vertices (the torn window between the two stage
     // commits above). See io.RootCommit.
-    timed("root commit")(publishRoot(cfg, table))
+    publishRoot(cfg, table)
     edgeStats.rowsWritten
   }
 

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *
   *   table/
   *     data/part=<k>/ *.parquet     (hash(bucket key) % numParts)
-  *     snap-<n>.json                (schema + partition list for snapshot n)
+  *     snap-<n>.json                (snapshot n's [[Manifest]])
   *     VERSION                      (current snapshot number; atomic rename)
   *
   * The hash partitioning mirrors the reference's shard map — shards grouped
@@ -176,31 +176,25 @@ object IcebergishTable {
 
   private def dir(table: String): Path = Paths.get(table)
 
-  /** Extract the trailing `"schema":<json>` field of a manifest ("schema"
-    * is always the final field — see commit). ONE implementation: read(),
-    * readSnapshot() and manifestMeta() must parse identically or a format
-    * tweak would desynchronize them.
-    */
-  private def schemaJsonFrom(json: String, table: String,
-                             snapshot: Int): String = {
-    val idx = json.indexOf("\"schema\":")
-    if (idx < 0)
-      throw new graft.ManifestCorrupted(table, snapshot,
-        "missing \"schema\" field")
-    json.substring(idx + "\"schema\":".length, json.length - 1)
-  }
-
   /** Schema-typed empty frame (zero-column emptyDataFrame would break any
     * downstream `.select`).
     */
-  private def emptyTyped(spark: SparkSession, schemaJson: String): DataFrame =
+  private def emptyTyped(spark: SparkSession,
+                         schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
+  /** A snapshot's manifest for the lenient accessors: None when it is
+    * missing OR undecodable (the strict paths use [[Manifest.load]] /
+    * [[Manifest.read]] and fail typed instead).
+    */
+  private def tryLoad(table: String, snapshot: Int): Option[Manifest] =
+    try Manifest.load(table, snapshot)
+    catch { case _: graft.ManifestCorrupted => None }
+
+  /** Bucket ids a commit spans: the committed spec's, else `fallback`. */
+  private def partsOf(spec: Option[(String, Int)], fallback: => Seq[Int]): Seq[Int] =
+    spec.map { case (_, n) => 0 until n: Seq[Int] }.getOrElse(fallback)
 
   def currentSnapshot(table: String): Int = {
     val v = dir(table).resolve("VERSION")
@@ -355,17 +349,6 @@ object IcebergishTable {
       : Int = {
     val d = dir(table)
     Files.createDirectories(d)
-    // bucket_key/buckets record the partition spec (hash-bucket transform):
-    // the DSv2 catalog reports it to Catalyst so bucket-key joins between
-    // co-bucketed tables plan storage-partitioned (zero Exchange).
-    // bucket_fn versions the HASH FUNCTION itself: appends onto a table
-    // whose files were placed by a different function would silently mix
-    // two incompatible layouts (same key in two buckets → dedup misses,
-    // SPJ co-partitioning lies) — see validateAppend.
-    val bucketMeta = bucketKey
-      .map { case (k, n) =>
-        s""""bucket_key":"${esc(k)}","buckets":$n,"bucket_fn":"$BucketFn",""" }
-      .getOrElse("")
     // `base` = the last VALID manifest we merge deltas onto; `target` = the
     // snapshot number we are trying to claim. They can diverge: a TORN
     // colliding manifest (a crashed writer that never swapped VERSION — its
@@ -380,183 +363,116 @@ object IcebergishTable {
     // files' entries carry forward from the parent manifest like sizes.
     // Footer reads are independent ~ms I/O — a parallel map keeps a
     // many-file commit's stats pass off the serial driver path.
-    // Per-file (stats entry, exact row count), ONE footer open per file.
+    // Per-file (stats, exact row count), ONE footer open per file.
     // Row counts feed metadata-only aggregation (COUNT/MIN/MAX answered
     // from the manifest); -1 (unreadable footer) refuses that path for the
     // affected snapshot rather than corrupting it.
-    val addedStats: Map[String, (String, Long)] = {
-      val tStats = System.nanoTime()
+    val addedStats: Map[String, (ManifestStats.FileStats, Long)] = {
       val distinctAdded = added.distinct
-      val out =
-        if (distinctAdded.size <= 4)
-          distinctAdded.map(f => f -> ManifestStats.statsAndCount(d.resolve(f))).toMap
-        else {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          Await.result(Future.traverse(distinctAdded)(f =>
-            Future(f -> ManifestStats.statsAndCount(d.resolve(f)))), Duration.Inf)
-            .toMap
-        }
-      if (sys.env.contains("GRAFT_TIMING"))
-        System.err.println(f"[timing]   commit/footer-stats ${
-          (System.nanoTime() - tStats) / 1e9}%.3f s (${distinctAdded.size} files)")
-      out
+      if (distinctAdded.size <= 4)
+        distinctAdded.map(f => f -> ManifestStats.statsAndCount(d.resolve(f))).toMap
+      else {
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.duration.Duration
+        import scala.concurrent.ExecutionContext.Implicits.global
+        Await.result(Future.traverse(distinctAdded)(f =>
+          Future(f -> ManifestStats.statsAndCount(d.resolve(f)))), Duration.Inf)
+          .toMap
+      }
     }
+    val addedSet = added.toSet
+    val addedDeletesSet = addedDeletes.toSet
     while (committed < 0) {
       expectedParent.foreach { exp =>
         if (base != exp)
           throw new graft.CommitConflict(table, exp, base)
       }
-      // ONE read of the parent manifest feeds the file merge, the size
-      // carry-forward AND the epoch carry-forward.
-      val parentJson: Option[String] =
+      // ONE decode of the parent manifest feeds the file merge and every
+      // per-file carry-forward below.
+      val parent: Option[Manifest] =
         if (base < 0) None
-        else Some(
-          try new String(Files.readAllBytes(d.resolve(s"snap-$base.json")),
-            StandardCharsets.UTF_8)
-          catch {
-            case _: java.io.IOException =>
-              throw new graft.ManifestCorrupted(table, base,
-                "parent manifest unreadable during commit")
-          })
-      val parentFiles: Seq[String] = parentJson
-        .map(j => manifestFilesStrict(table, base, j)).getOrElse(Seq.empty)
-      val kept = if (replaceAll) Seq.empty else parentFiles.filterNot(dropParent)
+        else Some(Manifest.load(table, base).getOrElse(
+          throw new graft.ManifestCorrupted(table, base,
+            "parent manifest unreadable during commit")))
+      val prevFiles: Map[String, DataFile] =
+        parent.fold(Map.empty[String, DataFile])(_.files.map(f => f.path -> f).toMap)
+      val kept =
+        if (replaceAll) Seq.empty else parent.fold(Seq.empty[String])(_.paths).filterNot(dropParent)
       // Snapshot manifest records the exact file list — Iceberg-style time
-      // travel: readSnapshot(n) sees precisely snapshot n's files.
-      val fileList = (kept ++ added).distinct.sorted
-      // File sizes ride the manifest (index-aligned with "files"): scan
-      // planning then needs ZERO filesystem calls — Iceberg's metadata-only
-      // planning. Data files are immutable once written, so sizes carry
-      // forward from the parent manifest and only this commit's OWN files
-      // get statted — a streaming sink's per-epoch commit stays
-      // O(new files), not O(table history).
-      val prevSizes: Map[String, Long] = parentJson
-        .flatMap(j => sizesFromJson(j, table, base))
-        .map(_.toMap).getOrElse(Map.empty)
-      val sizes = fileList.map(f =>
-        prevSizes.getOrElse(f, Files.size(d.resolve(f))))
-      // Per-file SEQUENCE numbers (the snapshot that added each file),
-      // index-aligned like sizes: what scopes an EQUALITY delete to the
-      // files that existed when it committed — rows in files appended (or
-      // rewritten) later carry a higher seq and are exempt, which is
-      // exactly how a deleted key legally re-inserts. Files inherited
-      // from pre-seq manifests default to seq 0 (every eq delete applies
-      // — conservative in the right direction: over-deleting was the
-      // caller's stated intent for those keys).
-      val prevSeqs: Map[String, Long] = parentJson
-        .flatMap(j => seqsFromJson(j, table, base))
-        .map(_.toMap).getOrElse(Map.empty)
-      val addedSet = added.toSet
-      val seqs = fileList.map(f =>
-        if (addedSet.contains(f)) target.toLong
-        else prevSeqs.getOrElse(f, 0L))
-      // Per-file column stats, index-aligned with "files" exactly like
-      // sizes: parent entries carry forward, own files use the footer
-      // reads above, anything else (pre-stats parents) degrades to an
-      // empty entry — those files are simply never skipped.
-      val prevStats: Map[String, String] = parentJson.flatMap { j =>
-        ManifestStats.rawEntries(j).collect {
-          case entries if entries.length == parentFiles.length =>
-            parentFiles.zip(entries).toMap
-        }
-      }.getOrElse(Map.empty)
-      // Rename/drop commits RE-KEY the carried-forward entries: stats
-      // follow the field's identity (id), not its write-time name. Without
-      // this, after DROP x; RENAME y TO x, old files' stale x-entries would
-      // be consulted for predicates on the NEW x (whose values resolve from
-      // y via field ids) and could skip files that match — silently wrong
-      // scans. Iceberg keys bounds by field id for exactly this reason.
-      val colstats = fileList.map(f =>
-        addedStats.get(f).map(_._1).getOrElse(
-          ManifestStats.rekeyEntry(prevStats.getOrElse(f, "{}"), statsRekey)))
-      // Per-file exact row counts, index-aligned like sizes: own files from
-      // the footer reads above, inherited files carried forward, pre-
-      // feature parents degrade to -1 (metadata aggregation then refuses).
-      val prevFileRows: Map[String, Long] = parentJson
-        .flatMap(j => filerowsFromJson(j, table, base))
-        .map(_.toMap).getOrElse(Map.empty)
-      val fileRows = fileList.map(f =>
-        addedStats.get(f).map(_._2).getOrElse(prevFileRows.getOrElse(f, -1L)))
-      // Streaming epoch high-waters ride the manifest (carried forward on
-      // EVERY commit): the VERSION swap is then the single atomic point
-      // that commits a micro-batch's files AND records its epoch — no
-      // window where one is durable without the other (see streamCommit).
-      // Position-delete files (merge-on-read): carried forward on every
-      // commit like data files — entries referencing files a rewrite later
-      // drops become harmless no-ops (the file leaves the manifest's file
-      // list, so the anti-join never matches) — and reset by replace-all
-      // commits (compact/overwrite fold or discard them wholesale).
-      val deletesList: Seq[String] =
-        ((if (replaceAll) Seq.empty
-          else parentJson.map(deletesFromJson).getOrElse(Seq.empty)) ++
-          addedDeletes).distinct.sorted
-      // Delete-file sequence numbers (aligned with "deletes"): an EQUALITY
-      // delete applies to data files with fileSeq < its delseq — assigned
-      // HERE, at manifest build time, so a CAS retry that lands on a later
-      // snapshot re-scopes the delete over everything that serialized
-      // before it (the natural linearization; no parent pin needed).
-      val prevDelSeqs: Map[String, Long] = parentJson
-        .flatMap(j => delseqsFromJson(j)).map(_.toMap).getOrElse(Map.empty)
-      val addedDeletesSet = addedDeletes.toSet
-      val delseqs = deletesList.map(f =>
-        if (addedDeletesSet.contains(f)) target.toLong
-        else prevDelSeqs.getOrElse(f, 0L))
-      val deletesMeta =
-        if (deletesList.isEmpty) ""
-        else deletesList.map(f => "\"" + esc(f) + "\"")
-          .mkString("\"deletes\":[", ",", "],") +
-          delseqs.mkString("\"delseqs\":[", ",", "],")
+      // travel: readSnapshot(n) sees precisely snapshot n's files. Per file:
+      //  - SIZE: scan planning then needs ZERO filesystem calls (Iceberg's
+      //    metadata-only planning). Data files are immutable once written,
+      //    so sizes carry forward and only this commit's OWN files get
+      //    statted — a streaming sink's per-epoch commit stays O(new
+      //    files), not O(table history).
+      //  - SEQUENCE number (the snapshot that added the file): what scopes
+      //    an EQUALITY delete to the files that existed when it committed —
+      //    rows in files appended (or rewritten) later carry a higher seq
+      //    and are exempt, which is exactly how a deleted key legally
+      //    re-inserts. Pre-seq files keep seq 0 (every eq delete applies).
+      //  - COLUMN STATS and exact ROW COUNT: own files from the footer
+      //    reads above, inherited files carried forward (pre-feature
+      //    parents degrade to no stats / -1 rows). Rename/drop commits
+      //    RE-KEY carried-forward stats: they follow the field's identity
+      //    (id), not its write-time name. Without this, after DROP x;
+      //    RENAME y TO x, old files' stale x-entries would be consulted for
+      //    predicates on the NEW x and could skip files that match —
+      //    Iceberg keys bounds by field id for exactly this reason.
+      val files = (kept ++ added).distinct.sorted.map { f =>
+        val prev = prevFiles.get(f)
+        val (stats, fileRows) = addedStats.getOrElse(f,
+          (ManifestStats.rekey(prev.fold(Map.empty: ManifestStats.FileStats)(_.stats),
+            statsRekey), prev.fold(-1L)(_.rows)))
+        DataFile(f, Some(prev.flatMap(_.size).getOrElse(Files.size(d.resolve(f)))),
+          if (addedSet.contains(f)) target.toLong else prev.fold(0L)(_.seq),
+          fileRows, stats)
+      }
+      // Delete files (merge-on-read): carried forward on every commit like
+      // data files — entries referencing files a rewrite later drops become
+      // harmless no-ops — and reset by replace-all commits (compact/
+      // overwrite fold or discard them wholesale). Each delete's sequence
+      // number is assigned HERE, at manifest build time: an EQUALITY delete
+      // applies to data files with fileSeq < its seq, so a CAS retry that
+      // lands on a later snapshot re-scopes the delete over everything
+      // that serialized before it (the natural linearization).
+      val deletes =
+        ((if (replaceAll) Seq.empty else parent.fold(Seq.empty[DeleteFile])(_.deletes))
+          .filterNot(x => addedDeletesSet.contains(x.path)) ++
+          addedDeletes.map(DeleteFile(_, target.toLong)))
+          .distinctBy(_.path).sortBy(_.path)
       // GHOST names: column names physically present in live data files
       // under a DIFFERENT (or dropped) field id than the current schema's
       // binding — recorded by drop/rename commits, consulted by the read
       // path to suppress by-name parquet filter pushdown when such a name
       // re-enters the schema (see readSession). Replace-all commits
       // rewrite every file under the current schema, so the list resets.
-      val ghosts: Seq[String] =
-        ((if (replaceAll) Seq.empty
-          else parentJson.map(ghostsFromJson).getOrElse(Seq.empty)) ++
+      val ghosts =
+        ((if (replaceAll) Seq.empty else parent.fold(Seq.empty[String])(_.ghosts)) ++
           addedGhosts).distinct.sorted
-      val ghostMeta =
-        if (ghosts.isEmpty) ""
-        else ghosts.map(g => "\"" + esc(g) + "\"")
-          .mkString("\"ghosts\":[", ",", "],")
-      val epochs =
-        parentJson.map(epochsFromJson).getOrElse(Map.empty) ++ epochUpdate
-      val epochMeta =
-        if (epochs.isEmpty) ""
-        else epochs.toSeq.sorted
-          .map { case (q, e) => s""""${esc(q)}":$e""" }
-          .mkString("\"epochs\":{", ",", "},")
-      val files = fileList
-        .map(f => "\"" + f.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
       // Schema resolution against the (possibly re-merged) parent: a
       // pre-evolution writer's subset schema resolves to the table's wider
       // one; schemaEvolution commits (addColumn) pass their widened schema
       // through unchanged.
-      val effSchemaJson =
-        if (replaceAll || schemaEvolution || parentJson.isEmpty) schemaJson
-        else resolveAppendSchema(table, schemaJson,
-          schemaJsonFrom(parentJson.get, table, base))
+      val effSchema = structOf(
+        if (replaceAll || schemaEvolution || parent.isEmpty) schemaJson
+        else resolveAppendSchema(table, schemaJson, parent.get.schema.json))
       // Highest field id EVER assigned rides the manifest monotonically
       // (Iceberg's last-column-id): a column re-added after a DROP must get
       // a brand-new id, or id-based resolution would resurrect the dropped
       // column's values out of old files. The current schema alone can't
       // tell — the dropped id is gone from it.
-      val maxFid = math.max(
-        parentJson.flatMap(j => """"maxfid":(\d+)""".r.findFirstMatchIn(j))
-          .map(_.group(1).toLong).getOrElse(0L),
-        fieldIdsOf(structOf(effSchemaJson)).values.foldLeft(0L)(math.max))
-      val fidMeta = if (maxFid > 0) s""""maxfid":$maxFid,""" else ""
-      val manifest =
-        s"""{"snapshot":$target,"rows":$rows,$bucketMeta$epochMeta$fidMeta$ghostMeta$deletesMeta"partitions":[${parts.sorted.mkString(",")}],
-           |"sizes":[${sizes.mkString(",")}],
-           |"seqs":[${seqs.mkString(",")}],
-           |"filerows":[${fileRows.mkString(",")}],
-           |"files":[${files.mkString(",")}],
-           |"colstats":[${colstats.mkString(",")}],
-           |"schema":$effSchemaJson}""".stripMargin.replace("\n", "")
+      val maxFid = math.max(parent.fold(0L)(_.maxFid),
+        fieldIdsOf(effSchema).values.foldLeft(0L)(math.max))
+      // bucket_key/buckets record the partition spec (hash-bucket
+      // transform): the DSv2 catalog reports it to Catalyst so bucket-key
+      // joins between co-bucketed tables plan storage-partitioned (zero
+      // Exchange). bucket_fn versions the HASH FUNCTION itself (see
+      // validateAppend). Streaming epoch high-waters carry forward on
+      // EVERY commit: the VERSION swap is then the single atomic point
+      // that commits a micro-batch's files AND records its epoch.
+      val manifest = Manifest(target, rows, bucketKey, bucketKey.map(_ => BucketFn),
+        parent.fold(Map.empty[String, Long])(_.epochs) ++ epochUpdate,
+        maxFid, ghosts, deletes, parts.sorted, files, effSchema)
       // ATOMIC publication: full bytes to a private hidden temp file, then
       // the snapshot NAME claimed with a hard link — kernel-atomic EEXIST
       // arbitration, and the linked name carries COMPLETE content or
@@ -566,18 +482,16 @@ object IcebergishTable {
       // crashed writer leaves only a hidden temp file, never a partial
       // snap-*.json.
       if (publishAtomic(d, s"snap-$target.json",
-          manifest.getBytes(StandardCharsets.UTF_8))) {
+          manifest.encode.getBytes(StandardCharsets.UTF_8))) {
         committed = target
       } else {
         // Lost the race. A published manifest is complete by construction,
-        // so a PARSEABLE collision is a real concurrent commit — it
-        // becomes the new merge base (VERSION may lag the winner's swap,
-        // so merge from the manifest directly). An unparseable one can
-        // only be external corruption: step the number past it without
-        // merging — never clobber, never inherit garbage. The probe
-        // validates BOTH fields a merge consumes (files + schema), so a
-        // chosen base can never wedge the retry loop.
-        if (parseableSnapshot(table, d, target)) base = target
+        // so a DECODABLE collision is a real concurrent commit — it becomes
+        // the new merge base (VERSION may lag the winner's swap, so merge
+        // from the manifest directly). An undecodable one can only be
+        // external corruption: step the number past it without merging —
+        // never clobber, never inherit garbage.
+        if (decodes(table, target)) base = target
         target += 1
       }
     }
@@ -606,27 +520,15 @@ object IcebergishTable {
   }
 
   private def advanceVersionTo(table: String, d: Path, committed: Int): Unit =
-    advancePointer(d, "VERSION", committed,
-      n => parseableSnapshot(table, d, n))
+    advancePointer(d, "VERSION", committed, n => decodes(table, n))
 
-  /** True iff snap-<n>.json exists AND parses (both fields a consumer
-    * needs: files + schema). The shared probe behind CAS collision
-    * handling and pointer advancement — a pointer must never be advanced
-    * ONTO an existing-but-corrupt manifest (external corruption that
-    * commitLocked's own collision handling deliberately steps past).
+  /** True iff snap-<n>.json exists AND decodes. The shared probe behind
+    * CAS collision handling and pointer advancement — a pointer must never
+    * be advanced ONTO an existing-but-corrupt manifest (external
+    * corruption that commitLocked's own collision handling deliberately
+    * steps past).
     */
-  private def parseableSnapshot(table: String, d: Path, n: Int): Boolean =
-    try {
-      val f = d.resolve(s"snap-$n.json")
-      if (!Files.exists(f)) false
-      else {
-        val json = new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
-        manifestFilesStrict(table, n, json)
-        org.apache.spark.sql.types.DataType.fromJson(
-          schemaJsonFrom(json, table, n))
-        true
-      }
-    } catch { case _: Exception => false }
+  private def decodes(table: String, n: Int): Boolean = tryLoad(table, n).isDefined
 
   /** Advance a pointer file to the HIGHEST published snapshot (at least
     * `committed`). Per-attempt UNIQUE temp names (a fixed shared temp path
@@ -693,42 +595,25 @@ object IcebergishTable {
   private def validateAppend(table: String, keyCol: String, numParts: Int,
                              schema: org.apache.spark.sql.types.StructType): Unit = {
     if (!exists(table)) return
-    val snap = currentSnapshot(table)
-    val m = dir(table).resolve(s"snap-$snap.json")
-    if (!Files.exists(m))
-      throw new graft.ManifestCorrupted(table, snap,
-        "VERSION points at a missing manifest")
-    val json = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    val spec = for {
-      k <- """"bucket_key":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(json)
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-      n <- """"buckets":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
-    } yield (k, n)
-    if (keyCol.nonEmpty) spec.foreach { case (k, n) =>
+    val m = Manifest.read(table, currentSnapshot(table))
+    if (keyCol.nonEmpty) m.bucket.foreach { case (k, n) =>
       if (k != keyCol || n != numParts)
         throw new graft.BucketSpecMismatch(table, s"($k, $n)",
           s"($keyCol, $numParts)")
       // Hash-function version gate: a bucketed table committed without
       // bucket_fn (or with a different one) was laid out by an older
       // hash — appending this writer's placement would mix layouts.
-      val fn = """"bucket_fn":"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-      if (!fn.contains(BucketFn))
+      if (!m.bucketFn.contains(BucketFn))
         throw new graft.BucketSpecMismatch(table,
           s"bucket_fn=$BucketFn",
-          s"bucket_fn=${fn.getOrElse("<absent — pre-versioned layout; rewrite the table>")}")
+          s"bucket_fn=${m.bucketFn.getOrElse("<absent — pre-versioned layout; rewrite the table>")}")
     }
-    resolveAppendSchema(table, schema.json, schemaJsonFrom(json, table, snap))
+    resolveAppendSchema(table, schema.json, m.schema.json)
   }
 
   /** Bucket hash-function id recorded in the current manifest, if any. */
-  def bucketFnOf(table: String): Option[String] = {
-    val snap = currentSnapshot(table)
-    if (snap < 0) return None
-    val m = dir(table).resolve(s"snap-$snap.json")
-    if (!Files.exists(m)) return None
-    val json = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    """"bucket_fn":"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-  }
+  def bucketFnOf(table: String): Option[String] =
+    tryLoad(table, currentSnapshot(table)).flatMap(_.bucketFn)
 
   /** Stage `df` (already carrying [[PartCol]]) into a hidden per-write
     * staging directory, then promote each file into its bucket directory —
@@ -885,10 +770,7 @@ object IcebergishTable {
     validateAppend(table, keyCol, numParts, df.schema)
     val base = currentSnapshot(table) // pin before staging (see contract)
     val baseFiles: Seq[String] =
-      if (base < 0) Seq.empty
-      else snapshotFilesOpt(table, base).getOrElse(
-        throw new graft.ManifestCorrupted(table, base,
-          "VERSION points at a missing manifest"))
+      if (base < 0) Seq.empty else Manifest.read(table, base).paths
     val (added, touched) =
       stagePromote(df, table, alsoReplace = replaceParts)
     val touchedSet = touched.toSet
@@ -935,10 +817,7 @@ object IcebergishTable {
     validateAppend(table, keyCol, numParts, withPart.schema)
     val base = currentSnapshot(table)
     val baseFiles: Seq[String] =
-      if (base < 0) Seq.empty
-      else snapshotFilesOpt(table, base).getOrElse(
-        throw new graft.ManifestCorrupted(table, base,
-          "VERSION points at a missing manifest"))
+      if (base < 0) Seq.empty else Manifest.read(table, base).paths
     val (added, touched) =
       stagePromote(withPart, table, alsoReplace = parts)
     val touchedSet = touched.toSet
@@ -970,31 +849,8 @@ object IcebergishTable {
     */
   def manifestMetaAt(table: String,
                      snap: Int): (String, Option[(String, Int)]) = {
-    val m = dir(table).resolve(s"snap-$snap.json")
-    if (!Files.exists(m)) {
-      // Current pointer at a missing manifest = corruption; an explicitly
-      // requested older snapshot that is gone = expired (typed differently).
-      if (snap == currentSnapshot(table))
-        throw new graft.ManifestCorrupted(table, snap,
-          "VERSION points at a missing manifest")
-      else throw new graft.SnapshotNotFound(table, snap)
-    }
-    val json = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    // "schema": is always the final manifest field (see commit above).
-    val schemaJson = schemaJsonFrom(json, table, snap)
-    try {
-      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-    } catch {
-      case e: Exception =>
-        throw new graft.ManifestCorrupted(table, snap,
-          s"unparseable schema json (${e.getMessage})")
-    }
-    val spec = for {
-      k <- """"bucket_key":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(json)
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-      n <- """"buckets":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
-    } yield (k, n)
-    (schemaJson, spec)
+    val m = Manifest.read(table, snap)
+    (m.schema.json, m.bucket)
   }
 
   /** Committed bucket spec (key, buckets) of the current snapshot, if any. */
@@ -1004,74 +860,30 @@ object IcebergishTable {
   /** Per-streaming-query committed epoch high-waters recorded in the
     * current manifest (empty for fresh tables / non-streamed tables).
     */
-  def manifestEpochs(table: String): Map[String, Long] = {
-    val snap = currentSnapshot(table)
-    if (snap < 0) return Map.empty
-    val m = dir(table).resolve(s"snap-$snap.json")
-    if (!Files.exists(m)) return Map.empty
-    epochsFromJson(new String(Files.readAllBytes(m), StandardCharsets.UTF_8))
-  }
-
-  private def ghostsFromJson(json: String): Seq[String] =
-    """"ghosts":\[(.*?)\]""".r.findFirstMatchIn(json) match {
-      case None => Seq.empty
-      case Some(m) => m.group(1)
-        .split(",").filter(_.nonEmpty)
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"").replace("\\\"", "\"")
-          .replace("\\\\", "\\"))
-        .toSeq
-    }
+  def manifestEpochs(table: String): Map[String, Long] =
+    tryLoad(table, currentSnapshot(table)).fold(Map.empty[String, Long])(_.epochs)
 
   /** Ghost names of a snapshot — see the commit-path doc. Empty for
     * manifests predating the feature (those tables never ran drop/rename,
     * which is what creates ghosts).
     */
-  def snapshotGhostNames(table: String, snapshot: Int): Seq[String] = {
-    val m = dir(table).resolve(s"snap-$snapshot.json")
-    if (!Files.exists(m)) return Seq.empty
-    ghostsFromJson(new String(Files.readAllBytes(m), StandardCharsets.UTF_8))
-  }
-
-  private def deletesFromJson(json: String): Seq[String] =
-    """"deletes":\[(.*?)\]""".r.findFirstMatchIn(json) match {
-      case None => Seq.empty
-      case Some(m) => m.group(1)
-        .split(",").filter(_.nonEmpty)
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"").replace("\\\"", "\"")
-          .replace("\\\\", "\\"))
-        .toSeq
-    }
-
-  /** (delete file → sequence number) pairs, aligned from "delseqs". */
-  private def delseqsFromJson(json: String): Option[Seq[(String, Long)]] =
-    """"delseqs":\[([0-9,\s]*)\]""".r.findFirstMatchIn(json).flatMap { g =>
-      val seqs = g.group(1).split(",").iterator
-        .map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
-      val dels = deletesFromJson(json)
-      if (dels.length == seqs.length) Some(dels.zip(seqs)) else None
-    }
+  def snapshotGhostNames(table: String, snapshot: Int): Seq[String] =
+    tryLoad(table, snapshot).fold(Seq.empty[String])(_.ghosts)
 
   /** Delete-file sequence numbers of a snapshot. Pre-delseq manifests can
     * only contain POSITION delete files (equality deletes arrived with
     * delseqs), which never consult their seq — 0 keeps the map total.
     */
-  def snapshotDeleteSeqs(table: String, snapshot: Int): Map[String, Long] = {
-    val m = dir(table).resolve(s"snap-$snapshot.json")
-    if (!Files.exists(m)) return Map.empty
-    val json = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    delseqsFromJson(json).map(_.toMap)
-      .getOrElse(deletesFromJson(json).map(_ -> 0L).toMap)
-  }
+  def snapshotDeleteSeqs(table: String, snapshot: Int): Map[String, Long] =
+    tryLoad(table, snapshot).fold(Map.empty[String, Long])(
+      _.deletes.map(x => x.path -> x.seq).toMap)
 
   /** Position-delete files recorded in a snapshot's manifest (relative
     * paths under `deletes/`). Empty when the snapshot predates MOR deletes
     * or has none.
     */
-  def snapshotDeleteFiles(table: String, snapshot: Int): Seq[String] = {
-    val m = dir(table).resolve(s"snap-$snapshot.json")
-    if (!Files.exists(m)) return Seq.empty
-    deletesFromJson(new String(Files.readAllBytes(m), StandardCharsets.UTF_8))
-  }
+  def snapshotDeleteFiles(table: String, snapshot: Int): Seq[String] =
+    tryLoad(table, snapshot).fold(Seq.empty[String])(_.deletes.map(_.path))
 
   /** Parse one position-delete file: TSV lines `relativeDataFile\tposition`
     * (positions are parquet row ordinals within that file). Missing files
@@ -1116,11 +928,11 @@ object IcebergishTable {
     * Delete sets are driver-small by their write paths' own caps, so the
     * join sides broadcast.
     */
-  private def applyDeletes(spark: SparkSession, table: String, snapshot: Int,
+  private def applyDeletes(spark: SparkSession, table: String, m: Manifest,
                            df: DataFrame,
-                           deleteFiles: Seq[String],
-                           lenient: Boolean = false,
-                           keepPos: Boolean = false): DataFrame = {
+                           lenient: Boolean,
+                           keepPos: Boolean): DataFrame = {
+    val deleteFiles = m.deletes.map(_.path)
     if (deleteFiles.isEmpty) return if (keepPos) withMorPos(df) else df
     val (eqFiles, posFiles) = deleteFiles.partition(_.startsWith(EqDeletePrefix))
     val posEntries = posFiles.flatMap(readDeleteFile(table, _, lenient))
@@ -1144,12 +956,11 @@ object IcebergishTable {
     if (eqFiles.nonEmpty) {
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       val schema = df.schema
-      val delseqs = snapshotDeleteSeqs(table, snapshot)
-      val fileSeqs = snapshotFileSeqs(table, snapshot)
+      val delseqs = m.deletes.map(x => x.path -> x.seq).toMap
       // Each row's data-file sequence, via a broadcast (file → seq) join.
       val seqDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(fileSeqs.toSeq.map { case (f, sq) =>
-          org.apache.spark.sql.Row(f, sq) }, 1),
+        spark.sparkContext.parallelize(m.files.map(f =>
+          org.apache.spark.sql.Row(f.path, f.seq)), 1),
         StructType(Seq(StructField("__sq_file", StringType),
           StructField("__file_seq", LongType))))
       out = out.join(broadcast(seqDf),
@@ -1334,8 +1145,7 @@ object IcebergishTable {
       (s"#eq\t${keyCols.mkString(",")}\t${ids.mkString(",")}" +: body)
         .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     try {
-      commit(table, schemaJson,
-        spec.map { case (_, n) => 0 until n: Seq[Int] }.getOrElse(Seq.empty),
+      commit(table, schemaJson, partsOf(spec, Seq.empty),
         0L, bucketKey = spec, addedDeletes = Seq(rel))
     } catch {
       case e: graft.GraftError =>
@@ -1353,16 +1163,6 @@ object IcebergishTable {
     df.withColumn("__mor_f", regexp_extract(col("_metadata.file_path"),
         s"(data/$PartCol=[0-9]+/[^/]+)$$", 1))
       .withColumn("__mor_p", col("_metadata.row_index"))
-
-  private def epochsFromJson(json: String): Map[String, Long] =
-    """"epochs":\{(.*?)\}""".r.findFirstMatchIn(json) match {
-      case None => Map.empty
-      case Some(g) =>
-        """"((?:[^"\\]|\\.)*)":(-?\d+)""".r.findAllMatchIn(g.group(1))
-          .map(p => p.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-            -> p.group(2).toLong)
-          .toMap
-    }
 
   /** Commit one streaming micro-batch: promote `staged` files (written by
     * the DSv2 StreamingWrite's DataWriters under `data/_staging/…`, hidden
@@ -1402,7 +1202,8 @@ object IcebergishTable {
       if (Files.exists(stagingQ))
         Files.walk(stagingQ).iterator().asScala.toSeq.reverse.foreach(Files.delete)
     }
-    if (manifestEpochs(table).getOrElse(queryId, Long.MinValue) >= epochId) {
+    val m = Manifest.read(table, cur)
+    if (m.epochs.getOrElse(queryId, Long.MinValue) >= epochId) {
       staged.foreach { case (_, rel) =>
         Files.deleteIfExists(dir(table).resolve(rel))
       }
@@ -1414,14 +1215,11 @@ object IcebergishTable {
     // rollback sweep would also reap a concurrent batch maintenance
     // writer's (e.g. compact's) job-committed-but-not-yet-manifest-
     // committed files in its promote window.
-    val committed = snapshotFilesOpt(table, cur).getOrElse(
-      throw new graft.ManifestCorrupted(table, cur,
-        "VERSION points at a missing manifest")).toSet
+    val committed = m.paths.toSet
     listDataFiles(table)
       .filterNot(committed)
       .filter(_.contains(s"-q$queryId-"))
       .foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
-    val (schemaJson, spec) = manifestMeta(table)
     val promoted = staged.map { case (b, rel) =>
       val src = dir(table).resolve(rel)
       val dst = dir(table).resolve("data").resolve(s"$PartCol=$b")
@@ -1434,35 +1232,12 @@ object IcebergishTable {
         java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
       dir(table).relativize(dst).toString
     }
-    val parts = spec.map { case (_, n) => 0 until n: Seq[Int] }
-      .getOrElse(staged.map(_._1).distinct.sorted)
-    commit(table, schemaJson, parts, 0L, bucketKey = spec,
-      epochUpdate = Map(queryId -> epochId), added = promoted)
+    commit(table, m.schema.json,
+      partsOf(m.bucket, staged.map(_._1).distinct.sorted), 0L,
+      bucketKey = m.bucket, epochUpdate = Map(queryId -> epochId), added = promoted)
     // The epoch is committed: this query's staging area is dead weight
     // (earlier epochs' leftovers included — micro-batches are serial).
     sweepStaging()
-  }
-
-  /** The `"files":[...]` list of a manifest that MUST be intact: rollback
-    * and time travel delete/pin files based on it, so a torn manifest here
-    * must fail loudly (a lenient empty read would make rollbackTo delete
-    * every live file).
-    */
-  private def manifestFilesStrict(table: String, snapshot: Int,
-                                  json: String): Seq[String] = {
-    if (!json.contains("\"files\":"))
-      throw new graft.ManifestCorrupted(table, snapshot,
-        "missing \"files\" field")
-    """"files":\[(.*?)\]""".r.findFirstMatchIn(json) match {
-      case None =>
-        throw new graft.ManifestCorrupted(table, snapshot,
-          "unterminated \"files\" array")
-      case Some(m) => m.group(1)
-        .split(",").filter(_.nonEmpty)
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"").replace("\\\"", "\"")
-          .replace("\\\\", "\\"))
-        .toSeq
-    }
   }
 
   /** Remove the data directories of the given buckets. Dynamic partition
@@ -1492,27 +1267,37 @@ object IcebergishTable {
     val snap = currentSnapshot(table)
     if (snap < 0)
       return spark.read.parquet(dir(table).resolve("data").toString) // loud failure
-    val files = snapshotFilesOpt(table, snap).getOrElse(
-      throw new graft.ManifestCorrupted(table, snap,
-        "VERSION points at a missing manifest"))
-    val schemaJson = manifestMeta(table)._1
-    if (files.nonEmpty) {
-      // The MANIFEST schema drives the read (not file inference): after
-      // schema evolution the current schema is wider than old files, and
-      // the parquet reader resolves columns — by FIELD ID for id-aware
-      // tables (rename-safe; files keep their written names), by name
-      // otherwise — with missing ones read as null, exactly Iceberg's
-      // add-column semantics.
-      val schema = structOf(schemaJson)
-      applyDeletes(spark, table, snap,
-        readSession(spark, schema, snapshotGhostNames(table, snap)).read
-          .schema(schema)
-          .option("basePath", dir(table).resolve("data").toString)
-          .parquet(files.map(f => dir(table).resolve(f).toString): _*),
-        snapshotDeleteFiles(table, snap))
-    } else
-      emptyTyped(spark, schemaJson)
+    // The MANIFEST schema drives the read (not file inference): after
+    // schema evolution the current schema is wider than old files, and
+    // the parquet reader resolves columns — by FIELD ID for id-aware
+    // tables (rename-safe; files keep their written names), by name
+    // otherwise — with missing ones read as null, exactly Iceberg's
+    // add-column semantics.
+    readManifest(spark, table, Manifest.read(table, snap))
   }
+
+  /** Rows of the snapshot `m` describes: its files under its schema, minus
+    * its deletes; a snapshot without files reads as a schema-typed empty
+    * frame.
+    */
+  private def readManifest(spark: SparkSession, table: String, m: Manifest,
+                           lenient: Boolean = false): DataFrame =
+    if (m.files.isEmpty) emptyTyped(spark, m.schema)
+    else scanFiles(spark, table, m, m.paths, lenient)
+
+  /** Parquet read of `files` (a subset of `m`'s) under `m`'s schema, with
+    * `m`'s deletes applied; `keepPos` keeps the (file, ordinal) columns.
+    * basePath keeps the part=<k> partition column in the schema.
+    */
+  private def scanFiles(spark: SparkSession, table: String, m: Manifest,
+                        files: Seq[String], lenient: Boolean = false,
+                        keepPos: Boolean = false): DataFrame =
+    applyDeletes(spark, table, m,
+      readSession(spark, m.schema, m.ghosts).read
+        .schema(m.schema)
+        .option("basePath", dir(table).resolve("data").toString)
+        .parquet(files.map(f => dir(table).resolve(f).toString): _*),
+      lenient, keepPos)
 
   private def structOf(schemaJson: String): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(schemaJson)
@@ -1546,52 +1331,20 @@ object IcebergishTable {
   def readVerification(spark: SparkSession, table: String): DataFrame = {
     val snap = currentSnapshot(table)
     if (snap < 0) return read(spark, table) // same loud failure
-    val files = snapshotFilesOpt(table, snap).getOrElse(
-        throw new graft.ManifestCorrupted(table, snap,
-          "VERSION points at a missing manifest"))
-      .filter(f => Files.exists(dir(table).resolve(f)))
-    if (files.nonEmpty) {
-      val schema = structOf(manifestMeta(table)._1)
-      applyDeletes(spark, table, snap,
-        readSession(spark, schema, snapshotGhostNames(table, snap)).read
-          .schema(schema)
-          .option("basePath", dir(table).resolve("data").toString)
-          .parquet(files.map(f => dir(table).resolve(f).toString): _*),
-        snapshotDeleteFiles(table, snap), lenient = true)
-    } else
-      emptyTyped(spark, manifestMeta(table)._1)
+    val m = Manifest.read(table, snap)
+    readManifest(spark, table, m.copy(files =
+      m.files.filter(f => Files.exists(dir(table).resolve(f.path)))), lenient = true)
   }
 
   /** Time travel: read the table exactly as of `snapshot` (the file list
-    * recorded in that snapshot's manifest). Dropped/compacted files that
-    * no longer exist fail loudly, like Iceberg with expired snapshots.
+    * recorded in that snapshot's manifest), under the schema of its era
+    * (field-id resolution keeps renamed columns readable under their era
+    * name). Dropped/compacted files that no longer exist fail loudly, like
+    * Iceberg with expired snapshots.
     */
-  def readSnapshot(spark: SparkSession, table: String, snapshot: Int): DataFrame = {
-    val m = dir(table).resolve(s"snap-$snapshot.json")
-    if (!Files.exists(m)) throw new graft.SnapshotNotFound(table, snapshot)
-    val json = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    // Minimal extraction of the "files":[...] array (manifests are written
-    // by `commit` above — flat JSON, no nested arrays before "files").
-    val files = manifestFilesStrict(table, snapshot, json)
-    if (files.isEmpty) {
-      // A legitimately empty snapshot (createEmpty / CTAS snapshot 0) must
-      // read as a SCHEMA-TYPED empty frame, not a zero-column one.
-      emptyTyped(spark, schemaJsonFrom(json, table, snapshot))
-    } else {
-      val paths = files.map(f => dir(table).resolve(f).toString)
-      // basePath keeps the part=<k> partition column in the schema; the
-      // SNAPSHOT's recorded schema drives the read — time travel across a
-      // schema evolution sees exactly the schema of its era (field-id
-      // resolution keeps renamed columns readable under their era name).
-      val schema = structOf(schemaJsonFrom(json, table, snapshot))
-      applyDeletes(spark, table, snapshot,
-        readSession(spark, schema, ghostsFromJson(json)).read
-          .schema(schema)
-          .option("basePath", dir(table).resolve("data").toString)
-          .parquet(paths.toIndexedSeq: _*),
-        deletesFromJson(json))
-    }
-  }
+  def readSnapshot(spark: SparkSession, table: String, snapshot: Int): DataFrame =
+    readManifest(spark, table, Manifest.load(table, snapshot).getOrElse(
+      throw new graft.SnapshotNotFound(table, snapshot)))
 
   /** Schema evolution: add a nullable data column (the fixed-schema analog
     * of the reference's schemaless "any new attribute just appears" —
@@ -1611,8 +1364,8 @@ object IcebergishTable {
     // design) — the loser must abort typed and re-derive.
     val base = currentSnapshot(table)
     if (base < 0) throw new graft.TableNotFound(table)
-    val (schemaJson, spec) = manifestMetaAt(table, base)
-    val cur = structOf(schemaJson)
+    val m = Manifest.read(table, base)
+    val cur = m.schema
     if (cur.fieldNames.exists(_.equalsIgnoreCase(name)))
       throw new graft.InvalidConfig(
         s"column '$name' already exists in $table")
@@ -1623,33 +1376,24 @@ object IcebergishTable {
       if (fieldIdsOf(cur).isEmpty) StructField(name, dataType, nullable = true)
       else StructField(name, dataType, nullable = true,
         metadata = new org.apache.spark.sql.types.MetadataBuilder()
-          .putLong(FieldIdKey, maxFieldId(table, base) + 1).build())
+          .putLong(FieldIdKey, math.max(m.maxFid, fieldIdsOf(cur).values.max) + 1)
+          .build())
     // New data columns slot in BEFORE the physical part column (partition
     // columns stay last — the parquet reader appends them).
     val (dataCols, partCols) = cur.fields.partition(_.name != PartCol)
     val evolved = StructType(
       dataCols.toSeq ++ Seq(newField) ++ partCols.toSeq)
-    val parts = spec.map { case (_, n) => 0 until n: Seq[Int] }
-      .getOrElse(snapshotFiles(table, base).map(bucketOfPath).distinct.sorted)
     // No added files, no dropped parent files — the commit carries the
     // parent's file list forward under the evolved schema.
-    commit(table, evolved.json, parts, 0L, bucketKey = spec,
+    commit(table, evolved.json, partsOfManifest(m), 0L, bucketKey = m.bucket,
       schemaEvolution = true, expectedParent = Some(base))
   }
 
-  /** Highest field id ever assigned in this table's history: the
-    * manifest-tracked high-water when present, else the max over the
-    * snapshot's schema (tables whose history never dropped a column).
+  /** Bucket ids of a metadata-only commit onto `m`: the committed spec's,
+    * else the buckets its files occupy.
     */
-  private def maxFieldId(table: String, snapshot: Int): Long = {
-    val m = dir(table).resolve(s"snap-$snapshot.json")
-    val json = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    math.max(
-      """"maxfid":(\d+)""".r.findFirstMatchIn(json)
-        .map(_.group(1).toLong).getOrElse(0L),
-      fieldIdsOf(structOf(schemaJsonFrom(json, table, snapshot)))
-        .values.foldLeft(0L)(math.max))
-  }
+  private def partsOfManifest(m: Manifest): Seq[Int] =
+    partsOf(m.bucket, m.paths.map(bucketOfPath).distinct.sorted)
 
   /** Guard shared by rename/drop: both are only safe when every data file
     * carries field ids (the reader then resolves columns by id, immune to
@@ -1683,8 +1427,8 @@ object IcebergishTable {
     import org.apache.spark.sql.types.StructType
     val base = currentSnapshot(table)
     if (base < 0) throw new graft.TableNotFound(table)
-    val (schemaJson, spec) = manifestMetaAt(table, base)
-    val cur = structOf(schemaJson)
+    val m = Manifest.read(table, base)
+    val cur = m.schema
     if (from == PartCol)
       throw new graft.InvalidConfig(s"cannot rename the physical $PartCol column")
     if (!cur.fieldNames.contains(from))
@@ -1694,10 +1438,8 @@ object IcebergishTable {
     requireFieldIds(table, cur, "RENAME COLUMN")
     val evolved = StructType(cur.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
-    val evolvedSpec = spec.map { case (k, n) => (if (k == from) to else k, n) }
-    val parts = spec.map { case (_, n) => 0 until n: Seq[Int] }
-      .getOrElse(snapshotFiles(table, base).map(bucketOfPath).distinct.sorted)
-    commit(table, evolved.json, parts, 0L, bucketKey = evolvedSpec,
+    val evolvedSpec = m.bucket.map { case (k, n) => (if (k == from) to else k, n) }
+    commit(table, evolved.json, partsOfManifest(m), 0L, bucketKey = evolvedSpec,
       schemaEvolution = true, expectedParent = Some(base),
       statsRekey = Map(from -> Some(to)),
       // `from` stays physically present in old files under its id; if the
@@ -1719,19 +1461,19 @@ object IcebergishTable {
     import org.apache.spark.sql.types.StructType
     val base = currentSnapshot(table)
     if (base < 0) throw new graft.TableNotFound(table)
-    val (schemaJson, spec) = manifestMetaAt(table, base)
-    val cur = structOf(schemaJson)
+    val m = Manifest.read(table, base)
+    val cur = m.schema
     if (name == PartCol)
       throw new graft.InvalidConfig(s"cannot drop the physical $PartCol column")
     if (!cur.fieldNames.contains(name))
       throw new graft.InvalidConfig(s"no such column '$name' in $table")
-    if (spec.exists(_._1 == name))
+    if (m.bucket.exists(_._1 == name))
       throw new graft.InvalidConfig(
         s"cannot drop bucket key '$name' of $table — the layout depends on it")
     requireFieldIds(table, cur, "DROP COLUMN")
     // A live equality tombstone keyed on this column would silently stop
     // applying (its rows would resurrect) — fold it into data first.
-    val referencedByEq = snapshotDeleteFiles(table, base)
+    val referencedByEq = m.deletes.map(_.path)
       .filter(isEqDeleteFile)
       .flatMap(f => readEqDeleteFile(table, f, lenient = true))
       .exists { case (cols, ids, _) =>
@@ -1743,9 +1485,7 @@ object IcebergishTable {
         s"column '$name' is a key of a live equality-delete tombstone in " +
           s"$table — compact to fold the tombstone, then drop")
     val evolved = StructType(cur.fields.filterNot(_.name == name))
-    val parts = spec.map { case (_, n) => 0 until n: Seq[Int] }
-      .getOrElse(snapshotFiles(table, base).map(bucketOfPath).distinct.sorted)
-    commit(table, evolved.json, parts, 0L, bucketKey = spec,
+    commit(table, evolved.json, partsOfManifest(m), 0L, bucketKey = m.bucket,
       schemaEvolution = true, expectedParent = Some(base),
       statsRekey = Map(name -> None),
       // The dropped column's bytes stay in old files — ghost the name so
@@ -1780,9 +1520,8 @@ object IcebergishTable {
   private[graft] def commitAddedFiles(table: String, added: Seq[String],
                                       expectedParent: Option[Int] = None): Int = {
     val (schemaJson, spec) = manifestMeta(table)
-    val parts = spec.map { case (_, n) => 0 until n: Seq[Int] }
-      .getOrElse(added.map(bucketOfPath).distinct.sorted)
-    commit(table, schemaJson, parts, 0L, bucketKey = spec, added = added,
+    commit(table, schemaJson, partsOf(spec, added.map(bucketOfPath).distinct.sorted),
+      0L, bucketKey = spec, added = added,
       expectedParent = expectedParent)
   }
 
@@ -1802,12 +1541,10 @@ object IcebergishTable {
     * before replaying it.
     */
   def rollbackTo(table: String, snapshot: Int): Unit = {
-    val m = dir(table).resolve(s"snap-$snapshot.json")
-    if (!Files.exists(m)) throw new graft.SnapshotNotFound(table, snapshot)
-    val json = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    // Strict parse: a torn manifest read leniently as "no files" would make
-    // the loop below delete every live data file.
-    val keep = manifestFilesStrict(table, snapshot, json).toSet
+    // Strict decode: a torn manifest read leniently as "no files" would
+    // make the loop below delete every live data file.
+    val keep = Manifest.load(table, snapshot).getOrElse(
+      throw new graft.SnapshotNotFound(table, snapshot)).paths.toSet
     val priorCurrent = currentSnapshot(table)
     listDataFiles(table).filterNot(keep).foreach { f =>
       Files.deleteIfExists(dir(table).resolve(f))
@@ -1879,10 +1616,9 @@ object IcebergishTable {
     // unseen parent would silently drop that writer's files.
     val startSnap = currentSnapshot(table)
     if (startSnap < 0) throw new graft.TableNotFound(table)
-    val prevFiles = snapshotFilesOpt(table, startSnap).getOrElse(
-      throw new graft.ManifestCorrupted(table, startSnap,
-        "VERSION points at a missing manifest")).toSet
-    val current = readSnapshot(spark, table, startSnap)
+    val m = Manifest.read(table, startSnap)
+    val prevFiles = m.paths.toSet
+    val current = readManifest(spark, table, m)
       .repartition(numParts, col(PartCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     current.count() // materialize BEFORE the inputs are superseded
@@ -1931,15 +1667,13 @@ object IcebergishTable {
     require(newNumParts > 0, s"bucket count must be positive, got $newNumParts")
     val startSnap = currentSnapshot(table)
     if (startSnap < 0) throw new graft.TableNotFound(table)
-    val (schemaJson, _) = manifestMetaAt(table, startSnap)
-    val dataCols = structOf(schemaJson).fieldNames.filterNot(_ == PartCol)
+    val m = Manifest.read(table, startSnap)
+    val dataCols = m.schema.fieldNames.filterNot(_ == PartCol)
     if (!dataCols.contains(newKey))
       throw new graft.InvalidConfig(
         s"new bucket key '$newKey' is not a column of ${dataCols.mkString(",")}")
-    val prevFiles = snapshotFilesOpt(table, startSnap).getOrElse(
-      throw new graft.ManifestCorrupted(table, startSnap,
-        "VERSION points at a missing manifest")).toSet
-    val rewritten = withFieldIds(readSnapshot(spark, table, startSnap)
+    val prevFiles = m.paths.toSet
+    val rewritten = withFieldIds(readManifest(spark, table, m)
       .drop(PartCol)
       .withColumn(PartCol, partExpr(newKey, newNumParts))
       .repartition(newNumParts, col(PartCol)), table)
@@ -1983,8 +1717,9 @@ object IcebergishTable {
                   morMaxRows: Long = 0L): Long = {
     val startSnap = currentSnapshot(table)
     if (startSnap < 0) throw new graft.TableNotFound(table)
-    val (schemaJson, spec) = manifestMetaAt(table, startSnap)
-    val snap = readSnapshot(spark, table, startSnap)
+    val m = Manifest.read(table, startSnap)
+    val (schema, spec) = (m.schema, m.bucket)
+    val snap = readManifest(spark, table, m)
     val hit = coalesce(cond, lit(false))
     // ZONE-MAP PRUNING for the predicate scan: the manifest's per-file
     // min/max drops files whose ranges cannot contain a matching row, so
@@ -1992,33 +1727,22 @@ object IcebergishTable {
     // this was the one full-table scan in the delete path (flagged by the
     // round-4 review as what file stats would fix). The REWRITE below
     // still reads the touched buckets' full file sets, as it must.
-    val allFiles = snapshotFiles(table, startSnap)
     // Two predicate front doors: user-built Columns carry ColumnNode
     // trees; the SQL DELETE rewrite hands a Column wrapping a catalyst
     // expression — try both, conservatively.
     val preds = {
-      val fromNodes = ManifestStats.fromColumn(cond, structOf(schemaJson))
+      val fromNodes = ManifestStats.fromColumn(cond, schema)
       if (fromNodes.nonEmpty) fromNodes
       else scala.util.Try(ManifestStats.fromExpression(
         org.apache.spark.sql.GraftColumnBridge.expressionOf(cond)))
         .getOrElse(Seq.empty)
     }
-    val candidates = ManifestStats.prune(table, startSnap,
-      structOf(schemaJson), preds, allFiles)
+    val candidates = ManifestStats.prune(table, startSnap, schema, preds, m.paths)
     if (candidates.isEmpty) return 0L
-    val existingDeletes = snapshotDeleteFiles(table, startSnap)
     // The candidate scan carries (file, ordinal) columns and excludes
     // already-MOR-deleted rows, so the count below is exact and a MOR
     // victim list falls straight out of the same frame.
-    val predScan = {
-      val schema = structOf(schemaJson)
-      applyDeletes(spark, table, startSnap,
-        readSession(spark, schema, snapshotGhostNames(table, startSnap)).read
-          .schema(schema)
-          .option("basePath", dir(table).resolve("data").toString)
-          .parquet(candidates.map(f => dir(table).resolve(f).toString): _*),
-        existingDeletes, keepPos = true)
-    }
+    val predScan = scanFiles(spark, table, m, candidates, keepPos = true)
     // ONE job yields both the touched-bucket set and the deleted count
     // (bounded by numParts rows) — not a distinct-collect plus a second
     // full predicate scan.
@@ -2044,9 +1768,7 @@ object IcebergishTable {
         .map { case (f, pos) => s"$f\t$pos" }
         .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
       try {
-        commit(table, schemaJson,
-          spec.map { case (_, n) => 0 until n: Seq[Int] }
-            .getOrElse(touched.toSeq.sorted),
+        commit(table, schema.json, partsOf(spec, touched.toSeq.sorted),
           0L, bucketKey = spec, addedDeletes = Seq(rel),
           expectedParent = Some(startSnap))
       } catch {
@@ -2059,7 +1781,7 @@ object IcebergishTable {
     val keep = snap
       .where(col(PartCol).isin(touched.toSeq: _*)).where(!hit)
       .repartition(math.max(1, touched.size), col(PartCol))
-    rewriteBuckets(table, startSnap, schemaJson, spec, touched, keep)
+    rewriteBuckets(table, startSnap, schema.json, spec, touched, keep)
     deleted
   }
 
@@ -2156,8 +1878,8 @@ object IcebergishTable {
     }
     // Positions of matched EXISTING rows, excluding already-tombstoned
     // ones (they are logically absent — their keys re-insert, not match).
-    val files = snapshotFiles(table, startSnap)
-      .filter(f => touched.contains(bucketOfPath(f)))
+    val m = Manifest.read(table, startSnap)
+    val files = m.paths.filter(f => touched.contains(bucketOfPath(f)))
     if (files.isEmpty) {
       // Nothing to match against: the whole update set inserts — still
       // cheaper as a plain MOR append (no tombstone needed).
@@ -2165,20 +1887,13 @@ object IcebergishTable {
         up.select(outCols.map(col): _*)
           .repartition(math.max(1, touched.size), col(PartCol)), table), table)
       commitOrCleanup(table, added) {
-        commit(table, schemaJson,
-          spec.map { case (_, nn) => 0 until nn: Seq[Int] }
-            .getOrElse(touched.toSeq.sorted),
+        commit(table, schemaJson, partsOf(spec, touched.toSeq.sorted),
           0L, bucketKey = spec, added = added,
           expectedParent = Some(startSnap))
       }
       return true
     }
-    val posScan = applyDeletes(spark, table, startSnap,
-      readSession(spark, schema, snapshotGhostNames(table, startSnap))
-        .read.schema(schema)
-        .option("basePath", dir(table).resolve("data").toString)
-        .parquet(files.map(f => dir(table).resolve(f).toString): _*),
-      snapshotDeleteFiles(table, startSnap), keepPos = true)
+    val posScan = scanFiles(spark, table, m, files, keepPos = true)
     // take(limit+1): bounded driver memory AND the over-threshold signal
     // in one pass — no separate count job.
     val cap = math.min(morMaxRows, Int.MaxValue - 1L).toInt
@@ -2203,9 +1918,7 @@ object IcebergishTable {
         Some(rel)
       }
     try {
-      commit(table, schemaJson,
-        spec.map { case (_, nn) => 0 until nn: Seq[Int] }
-          .getOrElse(touched.toSeq.sorted),
+      commit(table, schemaJson, partsOf(spec, touched.toSeq.sorted),
         0L, bucketKey = spec, added = added,
         addedDeletes = delRel.toSeq, expectedParent = Some(startSnap))
     } catch {
@@ -2232,9 +1945,7 @@ object IcebergishTable {
     // dropped the field-id metadata the fresh files must embed.
     val (fresh, _) = stagePromote(withFieldIds(replacement, table), table)
     try {
-      commit(table, schemaJson,
-        spec.map { case (_, n) => 0 until n: Seq[Int] }
-          .getOrElse(touched.toSeq.sorted),
+      commit(table, schemaJson, partsOf(spec, touched.toSeq.sorted),
         0L, bucketKey = spec, added = fresh,
         dropParent = f => touched.contains(bucketOfPath(f)),
         expectedParent = Some(startSnap))
@@ -2260,26 +1971,25 @@ object IcebergishTable {
     val d = dir(table)
     if (!exists(table)) throw new graft.TableNotFound(table)
     val cur = currentSnapshot(table)
-    val referenced: Set[String] = {
+    val manifests: Seq[Manifest] = {
       val s = Files.list(d)
-      val manifests =
-        try s.iterator().asScala
-          .filter(_.getFileName.toString.matches("snap-\\d+\\.json")).toSeq
+      val snaps =
+        try s.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.matches("snap-\\d+\\.json"))
+          .map(_.stripPrefix("snap-").stripSuffix(".json").toInt).toSeq
         finally s.close()
-      manifests.flatMap { m =>
-        val snap = m.getFileName.toString.stripPrefix("snap-")
-          .stripSuffix(".json").toInt
-        // An unparseable NON-current manifest (external corruption — the
-        // commit protocol publishes complete-or-nothing) contributes no
-        // files and must not wedge the vacuum forever; a corrupt CURRENT
-        // manifest stays loud (deleting against it could reap live data).
-        try snapshotFiles(table, snap)
+      // An undecodable NON-current manifest (external corruption — the
+      // commit protocol publishes complete-or-nothing) contributes no
+      // files and must not wedge the vacuum forever; a corrupt CURRENT
+      // manifest stays loud (deleting against it could reap live data).
+      snaps.flatMap { snap =>
+        try Manifest.load(table, snap)
         catch {
-          case e: graft.ManifestCorrupted =>
-            if (snap == cur) throw e else Seq.empty
+          case e: graft.ManifestCorrupted => if (snap == cur) throw e else None
         }
-      }.toSet
+      }
     }
+    val referenced = manifests.flatMap(_.paths).toSet
     val data = d.resolve("data")
     if (!Files.exists(data)) return Seq.empty
     val cutoff = System.currentTimeMillis() - olderThanMs
@@ -2295,17 +2005,7 @@ object IcebergishTable {
     candidates.foreach { case (_, p) => Files.deleteIfExists(p) }
     // Orphaned position-delete files (a crashed MOR delete wrote its TSV
     // but never committed): same manifest-reference + grace rule.
-    val referencedDeletes: Set[String] = {
-      val s = Files.list(d)
-      val manifests =
-        try s.iterator().asScala
-          .filter(_.getFileName.toString.matches("snap-\\d+\\.json")).toSeq
-        finally s.close()
-      manifests.flatMap { m =>
-        snapshotDeleteFiles(table, m.getFileName.toString
-          .stripPrefix("snap-").stripSuffix(".json").toInt)
-      }.toSet
-    }
+    val referencedDeletes = manifests.flatMap(_.deletes.map(_.path)).toSet
     val orphanDeletes = listDeleteFiles(table)
       .filterNot(referencedDeletes)
       .filter(f => Files.getLastModifiedTime(d.resolve(f)).toMillis < cutoff)
@@ -2322,8 +2022,8 @@ object IcebergishTable {
     require(keepLast >= 1, "must retain at least the current snapshot")
     val cur = currentSnapshot(table)
     val keepFrom = math.max(0, cur - keepLast + 1)
-    val retained = (keepFrom to cur)
-      .flatMap(snapshotFiles(table, _)).toSet
+    val kept = (keepFrom to cur).flatMap(Manifest.load(table, _))
+    val retained = kept.flatMap(_.paths).toSet
     val (reclaimable, stillNeeded) = tombstones(table)
       .partition(f => !retained.contains(f))
     reclaimable.foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
@@ -2331,8 +2031,7 @@ object IcebergishTable {
     // Position-delete files referenced by NO retained snapshot (e.g. after
     // a compact folded them into data) reclaim with the manifests that
     // referenced them.
-    val retainedDeletes = (keepFrom to cur)
-      .flatMap(snapshotDeleteFiles(table, _)).toSet
+    val retainedDeletes = kept.flatMap(_.deletes.map(_.path)).toSet
     listDeleteFiles(table).filterNot(retainedDeletes)
       .foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
     (0 until keepFrom).foreach { s =>
@@ -2341,63 +2040,22 @@ object IcebergishTable {
   }
 
   /** (relative path, size) pairs from a snapshot's manifest, when it
-    * carries the index-aligned "sizes" array (tables committed before the
-    * feature return None → callers fall back to directory stat). Enables
-    * metadata-only scan planning: zero filesystem calls on the plan path.
+    * carries sizes (tables committed before the feature return None →
+    * callers fall back to directory stat). Enables metadata-only scan
+    * planning: zero filesystem calls on the plan path.
     */
   def snapshotFilesWithSizes(table: String,
-                             snapshot: Int): Option[Seq[(String, Long)]] = {
-    val m = dir(table).resolve(s"snap-$snapshot.json")
-    if (!Files.exists(m)) return None
-    sizesFromJson(new String(Files.readAllBytes(m), StandardCharsets.UTF_8),
-      table, snapshot)
-  }
-
-  private def sizesFromJson(json: String, table: String,
-                            snapshot: Int): Option[Seq[(String, Long)]] =
-    """"sizes":\[([0-9,\s]*)\]""".r.findFirstMatchIn(json).flatMap { g =>
-      val sizes = g.group(1).split(",").iterator
-        .map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
-      val files = manifestFilesStrict(table, snapshot, json)
-      if (files.length == sizes.length) Some(files.zip(sizes)) else None
-    }
-
-  private def seqsFromJson(json: String, table: String,
-                           snapshot: Int): Option[Seq[(String, Long)]] =
-    """"seqs":\[([0-9,\s]*)\]""".r.findFirstMatchIn(json).flatMap { g =>
-      val seqs = g.group(1).split(",").iterator
-        .map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
-      val files = manifestFilesStrict(table, snapshot, json)
-      if (files.length == seqs.length) Some(files.zip(seqs)) else None
-    }
-
-  private def filerowsFromJson(json: String, table: String,
-                               snapshot: Int): Option[Seq[(String, Long)]] =
-    """"filerows":\[([\-0-9,\s]*)\]""".r.findFirstMatchIn(json).flatMap { g =>
-      val rows = g.group(1).split(",").iterator
-        .map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
-      val files = manifestFilesStrict(table, snapshot, json)
-      if (files.length == rows.length) Some(files.zip(rows)) else None
-    }
-
-  /** (file → exact row count) of a snapshot's data files, or None when the
-    * manifest predates row tracking / is misaligned. Individual entries
-    * can be -1 (footer unreadable at commit time); consumers needing
-    * exactness (metadata aggregation) must refuse on any -1.
-    */
-  def snapshotFileRows(table: String, snapshot: Int): Option[Map[String, Long]] = {
-    val m = dir(table).resolve(s"snap-$snapshot.json")
-    if (!Files.exists(m)) return None
-    val json = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    filerowsFromJson(json, table, snapshot).map(_.toMap)
-  }
+                             snapshot: Int): Option[Seq[(String, Long)]] =
+    Manifest.load(table, snapshot).flatMap(m =>
+      Option.when(m.files.forall(_.size.isDefined))(
+        m.files.map(f => f.path -> f.size.get)))
 
   /** Everything a metadata-aggregation decision needs from ONE manifest
-    * read: live files, per-file row counts (None if untracked), delete
-    * files, ghost names, and per-file column stats (empty if absent/
-    * misaligned). The aggregate planning path runs per query — five
-    * separate accessor calls would re-read and re-parse the same
-    * (potentially multi-MB) manifest five times.
+    * read: live files, per-file row counts (-1 where untracked), delete
+    * files, ghost names, and per-file column stats (empty where absent).
+    * The aggregate planning path runs per query — five separate accessor
+    * calls would re-read and re-decode the same (potentially multi-MB)
+    * manifest five times.
     */
   final case class SnapshotAggMeta(files: Seq[String],
                                    fileRows: Option[Map[String, Long]],
@@ -2405,34 +2063,17 @@ object IcebergishTable {
                                    ghosts: Seq[String],
                                    colStats: Map[String, Map[String, (String, String)]])
 
-  def snapshotAggMeta(table: String, snapshot: Int): Option[SnapshotAggMeta] = {
-    val m = dir(table).resolve(s"snap-$snapshot.json")
-    if (!Files.exists(m)) return None
-    val json = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    val files =
-      try manifestFilesStrict(table, snapshot, json)
-      catch { case _: graft.GraftError => return None }
-    val stats: Map[String, Map[String, (String, String)]] =
-      ManifestStats.rawEntries(json) match {
-        case Some(entries) if entries.length == files.length =>
-          files.zip(entries.map(ManifestStats.parseEntry)).toMap
-        case _ => Map.empty
-      }
-    Some(SnapshotAggMeta(files,
-      filerowsFromJson(json, table, snapshot).map(_.toMap),
-      deletesFromJson(json), ghostsFromJson(json), stats))
-  }
+  def snapshotAggMeta(table: String, snapshot: Int): Option[SnapshotAggMeta] =
+    tryLoad(table, snapshot).map(m => SnapshotAggMeta(m.paths,
+      Some(m.files.map(f => f.path -> f.rows).toMap), m.deletes.map(_.path),
+      m.ghosts, m.files.map(f => f.path -> f.stats).toMap))
 
   /** (file → data sequence number) of a snapshot: the snapshot id that
     * added each file. Files from pre-seq manifests map to 0.
     */
-  def snapshotFileSeqs(table: String, snapshot: Int): Map[String, Long] = {
-    val m = dir(table).resolve(s"snap-$snapshot.json")
-    if (!Files.exists(m)) return Map.empty
-    val json = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    seqsFromJson(json, table, snapshot).map(_.toMap).getOrElse(
-      manifestFilesStrict(table, snapshot, json).map(_ -> 0L).toMap)
-  }
+  def snapshotFileSeqs(table: String, snapshot: Int): Map[String, Long] =
+    Manifest.load(table, snapshot).fold(Map.empty[String, Long])(
+      _.files.map(f => f.path -> f.seq).toMap)
 
   /** Relative data-file list of a snapshot manifest, distinguishing a
     * MISSING/expired manifest (None — callers usually fail loudly) from a
@@ -2440,13 +2081,8 @@ object IcebergishTable {
     * filesystem read: no exists-then-read TOCTOU against concurrent
     * expiry.
     */
-  def snapshotFilesOpt(table: String, snapshot: Int): Option[Seq[String]] = {
-    val m = dir(table).resolve(s"snap-$snapshot.json")
-    val json =
-      try new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-      catch { case _: java.io.IOException => return None }
-    Some(manifestFilesStrict(table, snapshot, json))
-  }
+  def snapshotFilesOpt(table: String, snapshot: Int): Option[Seq[String]] =
+    Manifest.load(table, snapshot).map(_.paths)
 
   /** Relative data-file list recorded in a snapshot's manifest (empty when
     * the manifest is missing/expired — use [[snapshotFilesOpt]] where the

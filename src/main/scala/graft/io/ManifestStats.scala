@@ -19,12 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Mechanics:
   *  - At commit, each writer reads the parquet FOOTERS of its own added
   *    files (same O(new files) cost class as the size stat) and encodes
-  *    min/max per eligible top-level column; entries carry forward from
-  *    the parent manifest for unchanged files, exactly like sizes.
-  *  - Manifest field `"colstats":[{...},{...}]`, index-aligned with
-  *    `"files"`. Entry format: `{"col":["min","max"],...}` with both
-  *    bounds encoded as JSON strings (numerics in decimal, timestamps as
-  *    epoch micros, dates as epoch days, strings escaped verbatim).
+  *    min/max per top-level column; entries carry forward from the parent
+  *    manifest for unchanged files, exactly like sizes.
+  *  - They ride the manifest as [[DataFile.stats]] (`"colstats"`, see
+  *    [[Manifest]] for the encoding).
   *  - Pruning is CONSERVATIVE by construction: a column absent from a
   *    file's entry (no stats in footer, unsupported type, value too long)
   *    simply never excludes that file, and unsupported predicate shapes
@@ -42,36 +40,8 @@ object ManifestStats {
     */
   private val MaxStringLen = 64
 
-  /** Column names that could collide with the flat manifest's own regex-
-    * parsed keys, or that embed JSON-hostile characters — excluded from
-    * stats (they stay readable, they just never prune).
-    */
-  private def eligibleName(n: String): Boolean =
-    n.matches("[A-Za-z0-9_][A-Za-z0-9_.-]*") &&
-      !Set("schema", "files", "sizes", "seqs", "colstats", "deletes",
-        "delseqs", "epochs", "partitions", "snapshot", "rows", "filerows",
-        "maxfid", "bucket_key", "buckets", "ghosts",
-        "bucket_fn").contains(n)
-
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
-
-  private def unesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n' => b.append('\n'); case 'r' => b.append('\r')
-          case 't' => b.append('\t'); case o => b.append(o)
-        }
-        i += 2
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
+  /** Column → (encoded min, encoded max) of one data file. */
+  type FileStats = Map[String, (String, String)]
 
   // ---- commit side: parquet footer → manifest entry ------------------------
 
@@ -82,17 +52,13 @@ object ManifestStats {
     */
   private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration(false)
 
-  /** Encode one file's column stats as a manifest entry (`{}` when nothing
-    * usable). Never throws — stats are advisory.
+  /** One file's column stats (empty when nothing usable) AND its exact
+    * row count, from ONE footer open. Never throws — stats are advisory:
+    * row count -1 when the footer is unreadable (a -1 in the manifest
+    * refuses metadata-only aggregation for the table, it never corrupts
+    * it).
     */
-  def statsEntryOf(file: Path): String = statsAndCount(file)._1
-
-  /** Stats entry AND the file's exact row count, from ONE footer open.
-    * Row count -1 when the footer is unreadable (stats stay advisory; a
-    * -1 in the manifest refuses metadata-only aggregation for the table,
-    * it never corrupts it).
-    */
-  def statsAndCount(file: Path): (String, Long) =
+  def statsAndCount(file: Path): (FileStats, Long) =
     try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(file.toUri), hadoopConf)
@@ -102,11 +68,11 @@ object ManifestStats {
         // column dotted path → merged (min, max) in encoded form. A column
         // missing usable stats in ANY block is dropped (the merge must
         // cover every row of the file).
-        var merged = Map.empty[String, (String, String)]
+        var merged: FileStats = Map.empty
         var dropped = Set.empty[String]
         for (b <- blocks; c <- b.getColumns.asScala) {
           val name = c.getPath.toDotString
-          if (c.getPath.size() == 1 && eligibleName(name) && !dropped(name)) {
+          if (c.getPath.size() == 1 && !dropped(name)) {
             encodeStats(c) match {
               case Some((mn, mx)) =>
                 merged += name -> (merged.get(name) match {
@@ -120,15 +86,9 @@ object ManifestStats {
             }
           }
         }
-        val rows = blocks.iterator.map(_.getRowCount).sum
-        val entry =
-          if (merged.isEmpty) "{}"
-          else merged.toSeq.sortBy(_._1).map { case (n, (mn, mx)) =>
-            s""""${esc(n)}":["${esc(mn)}","${esc(mx)}"]"""
-          }.mkString("{", ",", "}")
-        (entry, rows)
+        (merged, blocks.iterator.map(_.getRowCount).sum)
       } finally reader.close()
-    } catch { case scala.util.control.NonFatal(_) => ("{}", -1L) }
+    } catch { case scala.util.control.NonFatal(_) => (Map.empty, -1L) }
 
   /** "l" = integral-compared, "d" = double-compared, "s" = string/bytes. */
   private def statKind(c: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData): String = {
@@ -197,76 +157,17 @@ object ManifestStats {
   private def utf8Cmp(a: String, b: String): Int =
     UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
 
-  // ---- manifest parsing ----------------------------------------------------
-
-  /** Raw per-file entry strings of a manifest's `"colstats"` array, in file
-    * order (None for pre-stats manifests). Depth-aware scan — entries are
-    * nested objects, regexes can't split them.
-    */
-  def rawEntries(json: String): Option[Seq[String]] = {
-    val key = "\"colstats\":["
-    val start = json.indexOf(key)
-    if (start < 0) return None
-    val out = Seq.newBuilder[String]
-    var i = start + key.length
-    var depth = 0
-    var entryStart = -1
-    var inStr = false
-    var done = false
-    while (!done && i < json.length) {
-      val ch = json.charAt(i)
-      if (inStr) {
-        if (ch == '\\') i += 1
-        else if (ch == '"') inStr = false
-      } else ch match {
-        case '"' => inStr = true
-        case '{' => if (depth == 0) entryStart = i; depth += 1
-        case '}' =>
-          depth -= 1
-          if (depth == 0) { out += json.substring(entryStart, i + 1) }
-        case ']' if depth == 0 => done = true
-        case _ =>
-      }
-      i += 1
-    }
-    if (!done) None else Some(out.result())
-  }
-
-  /** column → (encodedMin, encodedMax) → one entry string (inverse of
-    * [[parseEntry]], used when a schema-evolution commit must RE-KEY
-    * carried-forward entries — see rekeyEntry).
-    */
-  def serializeEntry(m: Map[String, (String, String)]): String =
-    if (m.isEmpty) "{}"
-    else m.toSeq.sortBy(_._1).map { case (n, (mn, mx)) =>
-      s""""${esc(n)}":["${esc(mn)}","${esc(mx)}"]"""
-    }.mkString("{", ",", "}")
-
-  /** Apply a rename/drop re-keying to one carried-forward entry:
+  /** Apply a rename/drop re-keying to one carried-forward file's stats:
     * `rekey(old) = Some(new)` renames the stats key, `None` strips it.
     * Stats follow the FIELD's identity, not its name — after RENAME y TO x
     * the old files' y-values ARE column x under id resolution, so y's
     * bounds remain exact for x; after DROP x a stale x entry would alias
     * any later column reusing the name (silently wrong pruning), so it
-    * must not survive the drop commit. A rename target that is not an
-    * eligible stats key strips instead of renaming.
+    * must not survive the drop commit.
     */
-  def rekeyEntry(entry: String, rekey: Map[String, Option[String]]): String =
-    if (rekey.isEmpty || entry == "{}") entry
-    else serializeEntry(parseEntry(entry).flatMap { case (n, b) =>
-      rekey.get(n) match {
-        case None => Some(n -> b) // untouched column
-        case Some(Some(to)) if eligibleName(to) => Some(to -> b)
-        case _ => None // dropped, or renamed to an ineligible key
-      }
-    })
-
-  /** One entry string → column → (encodedMin, encodedMax). */
-  def parseEntry(entry: String): Map[String, (String, String)] =
-    """"((?:[^"\\]|\\.)*)":\["((?:[^"\\]|\\.)*)","((?:[^"\\]|\\.)*)"\]""".r
-      .findAllMatchIn(entry)
-      .map(m => unesc(m.group(1)) -> (unesc(m.group(2)), unesc(m.group(3))))
-      .toMap
+  def rekey(stats: FileStats, rekey: Map[String, Option[String]]): FileStats =
+    if (rekey.isEmpty) stats
+    else stats.flatMap { case (n, b) => rekey.getOrElse(n, Some(n)).map(_ -> b) }
 
   // ---- pruning -------------------------------------------------------------
 
@@ -432,7 +333,7 @@ object ManifestStats {
   /** MAY the file (described by `stats`) contain a row satisfying `p`?
     * Missing stats, unknown columns, or un-comparable values → true.
     */
-  def mayMatch(stats: Map[String, (String, String)], schema: StructType,
+  def mayMatch(stats: FileStats, schema: StructType,
                p: StatPred): Boolean = p match {
     case AndP(l, r) => mayMatch(stats, schema, l) && mayMatch(stats, schema, r)
     case OrP(l, r) => mayMatch(stats, schema, l) || mayMatch(stats, schema, r)
@@ -495,7 +396,7 @@ object ManifestStats {
     * column, typed by the TABLE schema (the stats were encoded from the
     * same files the schema describes). None → column unstatted/untypable.
     */
-  private def bounds(stats: Map[String, (String, String)], schema: StructType,
+  private def bounds(stats: FileStats, schema: StructType,
                      col: String): Option[(Any => Int, Any => Int)] =
     for {
       (mn, mx) <- stats.get(col)
@@ -535,24 +436,12 @@ object ManifestStats {
 
   // ---- table-level front door ----------------------------------------------
 
-  /** File → parsed stats for a snapshot (empty map per file when the
-    * manifest predates colstats).
+  /** File → stats for a snapshot (empty map per file when the manifest
+    * predates colstats; empty when it is missing or undecodable).
     */
-  def fileStatsOf(table: String, snapshot: Int)
-      : Map[String, Map[String, (String, String)]] = {
-    val m = java.nio.file.Paths.get(table).resolve(s"snap-$snapshot.json")
-    if (!java.nio.file.Files.exists(m)) return Map.empty
-    val json = new String(java.nio.file.Files.readAllBytes(m),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val files = scala.util.Try(
-      IcebergishTable.snapshotFilesOpt(table, snapshot)).toOption
-      .flatten.getOrElse(return Map.empty)
-    rawEntries(json) match {
-      case Some(entries) if entries.length == files.length =>
-        files.zip(entries.map(parseEntry)).toMap
-      case _ => Map.empty
-    }
-  }
+  def fileStatsOf(table: String, snapshot: Int): Map[String, FileStats] =
+    IcebergishTable.snapshotAggMeta(table, snapshot).fold(
+      Map.empty[String, FileStats])(_.colStats)
 
   /** Metadata MIN/MAX support for a column type: (decode an encoded bound
     * into Spark's INTERNAL value, compare two encoded bounds). Floats and

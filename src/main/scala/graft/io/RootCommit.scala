@@ -19,7 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * member through the SAME root — torn states are unobservable.
   *
   * Layout under the work dir:
-  *   root-<n>.json   {"root":n,"tables":{"edges":3,"vertices":2}}
+  *   root-<n>.json   [[RootManifest]], e.g. {"root":n,"tables":{"edges":3}}
   *   ROOT_VERSION    n   (atomic rename swap)
   */
 object RootCommit {
@@ -40,10 +40,8 @@ object RootCommit {
   def commit(root: String, tables: Map[String, Int]): Int = {
     require(tables.nonEmpty, "a root commit needs at least one table")
     tables.foreach { case (name, snap) =>
-      val t = s"$root/$name"
-      if (IcebergishTable.snapshotFiles(t, snap).isEmpty &&
-          !Files.exists(dir(root).resolve(name).resolve(s"snap-$snap.json")))
-        throw new graft.SnapshotNotFound(t, snap)
+      if (Manifest.load(s"$root/$name", snap).isEmpty)
+        throw new graft.SnapshotNotFound(s"$root/$name", snap)
     }
     Files.createDirectories(dir(root))
     // Same cross-JVM protocol as the table commit (IcebergishTable.commit):
@@ -51,9 +49,6 @@ object RootCommit {
     // written content, so two racing publishers (e.g. two builds sharing a
     // workDir) each claim their own COMPLETE root-<n>.json — no clobbering
     // and no partially-visible root manifest.
-    def body(n: Int): String = tables.toSeq.sorted
-      .map { case (t, s) => s""""${t.replace("\"", "\\\"")}":$s""" }
-      .mkString(s"""{"root":$n,"tables":{""", ",", "}}")
     var next = currentRoot(root) + 1
     var placed = false
     while (!placed) {
@@ -61,7 +56,8 @@ object RootCommit {
       // root-<n>.json always carries COMPLETE content — a racing publisher
       // can never read a half-written root manifest.
       if (IcebergishTable.publishAtomic(dir(root), s"root-$next.json",
-          body(next).getBytes(StandardCharsets.UTF_8))) placed = true
+          RootManifest(next, tables).encode.getBytes(StandardCharsets.UTF_8)))
+        placed = true
       else next += 1
     }
     // Advance ROOT_VERSION through the shared pointer protocol: unique
@@ -77,14 +73,17 @@ object RootCommit {
   def tablesOf(rootDir: String, root: Int = -1): Map[String, Int] = {
     val r = if (root >= 0) root else currentRoot(rootDir)
     if (r < 0) throw new graft.TableNotFound(s"$rootDir (no ROOT_VERSION)")
-    val m = dir(rootDir).resolve(s"root-$r.json")
-    if (!Files.exists(m))
-      throw new graft.ManifestCorrupted(rootDir, r, "missing root manifest")
-    val json = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    """"((?:[^"\\]|\\.)+)":(\d+)""".r.findAllMatchIn(json)
-      .filter(_.group(1) != "root")
-      .map(mm => mm.group(1).replace("\\\"", "\"") -> mm.group(2).toInt)
-      .toMap
+    val bytes =
+      try Files.readAllBytes(dir(rootDir).resolve(s"root-$r.json"))
+      catch {
+        case _: java.io.IOException =>
+          throw new graft.ManifestCorrupted(rootDir, r, "missing root manifest")
+      }
+    try RootManifest.decode(new String(bytes, StandardCharsets.UTF_8)).tables
+    catch {
+      case scala.util.control.NonFatal(e) => throw new graft.ManifestCorrupted(
+        rootDir, r, s"undecodable root manifest (${e.getMessage})")
+    }
   }
 
   /** Snapshot-consistent read of one member table AS OF the (current or

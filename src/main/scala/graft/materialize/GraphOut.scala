@@ -90,15 +90,6 @@ object GraphOut {
     val all = (0 until numParts).toSeq
     val pending = all.filterNot(done)
 
-    def timed[T](name: String)(f: => T): T =
-      if (sys.env.contains("GRAFT_TIMING")) {
-        val t = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"[timing]   $stage/$name%-14s ${(System.nanoTime() - t) / 1e9}%.3f s")
-        r
-      } else f
-
     var written = 0L
     var groups = 0
     pending.grouped(groupSize).foreach { group =>
@@ -121,12 +112,11 @@ object GraphOut {
       // group's (possibly stale) bucket dirs itself before promoting, and
       // a rewritten bucket that came out empty still leaves the parent
       // manifest.
-      timed("write")(
-        IcebergishTable.writePrePartitioned(deduped, table, numParts, keyCol,
-          replaceParts = group))
+      IcebergishTable.writePrePartitioned(deduped, table, numParts, keyCol,
+        replaceParts = group)
       val wallMs = (System.nanoTime() - t0) / 1000000L
       // Aggregates over an entirely empty group plan come back null.
-      val m = timed("lineage-metrics")(obs.get)
+      val m = obs.get
       def asLong(v: Any): Long = v match {
         case null => 0L
         case l: java.lang.Long => l.longValue
@@ -139,7 +129,7 @@ object GraphOut {
         CheckpointRow(runId, stage, p, inputTag,
           java.lang.Long.toHexString(fp), n, n, wallMs, "done")
       }
-      timed("ack-append")(Checkpoint.append(spark, ckptPath, rows))
+      Checkpoint.append(spark, ckptPath, rows)
       groups += 1
     }
     WriteStats(pending, all.filter(done), written)

@@ -4,8 +4,10 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 
-import graft.io.{IcebergishTable, RootCommit}
+import graft.io.{DataFile, DeleteFile, IcebergishTable, Manifest, RootCommit, RootManifest}
 
 /** The snapshot and root manifests must carry arbitrary column names and
   * member names through a commit and back, whatever JSON-significant
@@ -14,6 +16,90 @@ import graft.io.{IcebergishTable, RootCommit}
 class ManifestCodecSpec extends SparkSpec {
 
   private def freshDir(prefix: String) = Files.createTempDirectory(prefix)
+
+  private def check(name: String, prop: Prop, n: Int = 100): Unit = {
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(n), prop)
+    assert(res.passed, s"$name: $res")
+  }
+
+  /** Strings built from JSON-significant characters, control characters,
+    * BMP text and non-BMP code points (never lone surrogates — those are
+    * not text and cannot survive UTF-8).
+    */
+  private val textGen: Gen[String] = {
+    def cp(lo: Int, hi: Int) =
+      Gen.choose(lo, hi).map(c => new String(Character.toChars(c)))
+    Gen.listOf(Gen.frequency(
+      4 -> Gen.oneOf(",", "]", "}", "\"", "\\", "[", "{", ":", " ", "/"),
+      2 -> cp(0, 0x1f),
+      3 -> Gen.alphaNumChar.map(_.toString),
+      1 -> cp(0x7f, 0xd7ff),
+      1 -> cp(0xe000, 0xffff),
+      2 -> cp(0x10000, 0x10ffff))).map(_.mkString)
+  }
+
+  private val manifestGen: Gen[Manifest] = for {
+    snapshot <- Gen.choose(0, Int.MaxValue)
+    bucket <- Gen.option(Gen.zip(textGen, Gen.choose(1, 1024)))
+    bucketFn <- Gen.option(textGen)
+    epochs <- Gen.mapOf(Gen.zip(textGen, Gen.long))
+    maxFid <- Gen.choose(0L, Long.MaxValue)
+    ghosts <- Gen.listOf(textGen)
+    deletes <- Gen.listOf(Gen.zip(textGen, Gen.long).map(DeleteFile.tupled))
+    partitions <- Gen.listOf(Gen.choose(0, 4096))
+    sized <- Gen.oneOf(true, false)
+    files <- Gen.listOf(for {
+      path <- textGen
+      size <- Gen.choose(0L, Long.MaxValue)
+      seq <- Gen.long
+      rows <- Gen.long
+      stats <- Gen.mapOf(Gen.zip(textGen, Gen.zip(textGen, textGen)))
+    } yield DataFile(path, Option.when(sized)(size), seq, rows, stats))
+    columns <- Gen.listOf(textGen)
+  } yield Manifest(snapshot, 0L, bucket, bucketFn, epochs, maxFid, ghosts,
+    deletes, partitions, files,
+    StructType(columns.map(StructField(_, LongType))))
+
+  test("codec round-trip: any manifest decodes to itself") {
+    check("manifest", Prop.forAll(manifestGen) { m =>
+      Manifest.decode(m.encode) == m
+    })
+    check("root", Prop.forAll(Gen.choose(0, Int.MaxValue),
+        Gen.mapOf(Gen.zip(textGen, Gen.choose(0, Int.MaxValue)))) { (r, tables) =>
+      RootManifest.decode(RootManifest(r, tables).encode) == RootManifest(r, tables)
+    })
+  }
+
+  test("column names round-trip through add, rename and drop, and come back as ghosts") {
+    val names = for {
+      a <- textGen.suchThat(_.nonEmpty)
+      b <- textGen.suchThat(_.nonEmpty)
+    } yield (a, b)
+    def taken(n: String) = Seq("k", IcebergishTable.PartCol).exists(_.equalsIgnoreCase(n))
+    check("names", Prop.forAll(names) { case (a, b) =>
+      (!a.equalsIgnoreCase(b) && !taken(a) && !taken(b)) ==> {
+        val t = freshDir("graft-prop-names").resolve("t").toString
+        IcebergishTable.createEmpty(t,
+          StructType(Seq(StructField("k", StringType))), "k", 2)
+        def current = IcebergishTable.currentSnapshot(t)
+        def columns = Manifest.read(t, current).schema.fieldNames.toSeq
+        IcebergishTable.addColumn(t, a, LongType)
+        val added = columns == Seq("k", a, "part")
+        IcebergishTable.renameColumn(t, a, b)
+        val renamed = columns == Seq("k", b, "part") &&
+          IcebergishTable.snapshotGhostNames(t, current) == Seq(a)
+        IcebergishTable.dropColumn(t, b)
+        IcebergishTable.commitAddedFiles(t, Seq.empty)
+        // Query ids name a staging directory too, so they stay path-safe.
+        val query = a.filter(c => c >= ' ' && c < 0x7f && c != '/')
+        IcebergishTable.streamCommit(t, Seq.empty, query, 3L)
+        added && renamed && columns == Seq("k", "part") &&
+          IcebergishTable.snapshotGhostNames(t, current) == Seq(a, b).sorted &&
+          IcebergishTable.manifestEpochs(t) == Map(query -> 3L)
+      }
+    }, n = 40)
+  }
 
   test("ghost names holding ',' and ']' come back exactly, across a later append") {
     import spark.implicits._

@@ -164,4 +164,33 @@ class StatsPruningSpec extends SparkSpec {
     assert(IcebergishTable.read(spark, t)
       .where(col("ts") > lit(cutoff)).count() == 20)
   }
+
+  test("columns named like manifest keys or holding spaces get zone maps and prune") {
+    import spark.implicits._
+    val t = Files.createTempDirectory("graft-stats-names").resolve("t").toString
+    val lo = (0 until 40).map(i => (s"k$i", i.toLong, s"a${i % 7}"))
+    val hi = (0 until 40).map(i => (s"k$i", 1000L + i, s"z${i % 7}"))
+    IcebergishTable.write(lo.toDF("k", "files", "a b"), t, "k", 4)
+    IcebergishTable.write(hi.toDF("k", "files", "a b"), t, "k", 4, SaveMode.Append)
+    val snap = IcebergishTable.currentSnapshot(t)
+    val all = IcebergishTable.snapshotFiles(t, snap)
+    val stats = ManifestStats.fileStatsOf(t, snap)
+    assert(all.forall(f => stats(f).contains("files") && stats(f).contains("a b")))
+    val schema = IcebergishTable.read(spark, t).schema
+    spark.conf.set("spark.sql.catalog.statsnames",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.statsnames.warehouse",
+      java.nio.file.Paths.get(t).getParent.toString)
+    for (c <- Seq(col("files") >= 1000L, col("a b") >= "z")) {
+      val kept = ManifestStats.prune(t, snap, schema,
+        ManifestStats.fromColumn(c, schema), all)
+      assert(kept.nonEmpty && kept.size * 2 <= all.size,
+        s"$c kept ${kept.size} of ${all.size} files")
+      val pruned = spark.table("statsnames.t").where(c)
+        .select("k", "files", "a b").as[(String, Long, String)].collect().sorted
+      val unpruned = IcebergishTable.read(spark, t).where(c)
+        .select("k", "files", "a b").as[(String, Long, String)].collect().sorted
+      assert(pruned.length == 40 && pruned.sameElements(unpruned))
+    }
+  }
 }
