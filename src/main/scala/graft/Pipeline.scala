@@ -4,9 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.canon.ConnectedComponents
-import graft.extract.HtmlText
 import graft.io.IcebergishTable
-import graft.link.Mentions
 import graft.materialize.GraphOut
 import graft.synth.PageSynth
 import graft.triples.TripleExtract
@@ -31,7 +29,6 @@ final case class PipelineConfig(
     outputBuckets: Int = 32,
     workDir: String = "/tmp/graft-pipeline",
     runId: String = "run-1",
-    failAfterGroups: Int = -1,
     sentMin: Int = 3,
     sentSpread: Int = 5,
     // Max sameAs-edge count for which the component map is collected to the
@@ -53,14 +50,6 @@ final case class PipelineConfig(
 
 // InvalidConfig and the rest of the typed failure taxonomy live in
 // model.scala (sealed GraftError hierarchy).
-
-final case class PipelineStats(
-    pages: Long,
-    mentions: Long,
-    triples: Long,
-    vertices: Long,
-    edges: Long
-)
 
 object Pipeline {
 
@@ -171,10 +160,12 @@ object Pipeline {
       .as[Page]
   }
 
-  /** Lean bench path: identical stages to [[run]] but no per-stage counts —
-    * the only actions are the localCheckpoints and the checkpointed writes.
-    * Returns the number of edge rows written (from the checkpoint layer's
-    * lineage, i.e. free).
+  /** The one build path. No per-stage counts — the only actions are the
+    * canonicalization and the checkpointed writes. Returns the number of
+    * edge rows written (from the checkpoint layer's lineage, i.e. free); a
+    * resumed build counts only the buckets it rewrote. PipelineSpec proves
+    * the edge table equals the general operators' composition
+    * (Mentions.link → TripleExtract.triples → ConnectedComponents).
     */
   def build(spark: SparkSession, cfg: PipelineConfig): Long = {
     validate(cfg)
@@ -232,64 +223,10 @@ object Pipeline {
     // one root commit — a reader resolving through the root can never see
     // new edges with old vertices (the torn window between the two stage
     // commits above). See io.RootCommit.
-    publishRoot(cfg, table)
-    edgeStats.rowsWritten
-  }
-
-  /** The ONE cross-table root-publish used by both entry points — the
-    * member-table set must never diverge between build() and run().
-    */
-  private def publishRoot(cfg: PipelineConfig, pagesTable: String): Unit =
     graft.io.RootCommit.commit(cfg.workDir, Map(
-      "pages" -> IcebergishTable.currentSnapshot(pagesTable),
-      "edges" -> IcebergishTable.currentSnapshot(s"${cfg.workDir}/edges"),
+      "pages" -> IcebergishTable.currentSnapshot(table),
+      "edges" -> IcebergishTable.currentSnapshot(edgesTable),
       "vertices" -> IcebergishTable.currentSnapshot(s"${cfg.workDir}/vertices")))
-
-  /** Run the full pipeline; returns stage row counts. */
-  def run(spark: SparkSession, cfg: PipelineConfig): PipelineStats = {
-    import spark.implicits._
-    validate(cfg)
-    val table = buildPagesTable(spark, cfg)
-    val pages = readPagesForExtraction(spark, table)
-
-    val aliasDict = PageSynth.aliasDictionary
-    val aliases = PageSynth.aliases(spark)
-    val phrases = PageSynth.relations.toMap
-
-    val scanned = Mentions.scanPages(pages, aliasDict, phrases).localCheckpoint()
-    val mentions = scanned.flatMap(_.mentions)
-    val cands = scanned.flatMap(_.cands)
-    val linked = Mentions.link(mentions, aliases).localCheckpoint()
-    val rawTriples = TripleExtract.triples(cands, linked)
-
-    val sameAs = PageSynth.sameAs(spark).toDF("src", "dst")
-    val canon = ConnectedComponents.components(sameAs)
-    val triples = TripleExtract.canonicalize(rawTriples, canon)
-      .localCheckpoint()
-
-    val ckpt = s"${cfg.workDir}/checkpoint"
-    val edgeStats = GraphOut.writeWithCheckpoint(
-      triples.toDF, s"${cfg.workDir}/edges", "subj", cfg.outputBuckets,
-      ckpt, cfg.runId, "edges", groupSize = 8,
-      failAfterGroups = cfg.failAfterGroups)
-    val verts = GraphOut.vertices(triples.toDF)
-    GraphOut.writeWithCheckpoint(
-      verts, s"${cfg.workDir}/vertices", "id", cfg.outputBuckets,
-      ckpt, cfg.runId, "vertices", groupSize = 8)
-    // Same atomic cross-table publish as build(): without it the
-    // edges-then-vertices torn window stays open on this entry point and
-    // RootCommit.readConsistent cannot serve run()-produced workDirs.
-    publishRoot(cfg, table)
-
-    PipelineStats(
-      // Manifest-consistent count: a raw directory read would include
-      // tombstoned/compacted files and committer orphans the snapshot view
-      // correctly excludes.
-      pages = IcebergishTable.read(spark, table).count(),
-      mentions = linked.count(),
-      triples = triples.count(),
-      vertices = IcebergishTable.read(spark, s"${cfg.workDir}/vertices").count(),
-      edges = IcebergishTable.read(spark, s"${cfg.workDir}/edges").count()
-    )
+    edgeStats.rowsWritten
   }
 }

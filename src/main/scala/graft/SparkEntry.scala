@@ -37,8 +37,8 @@ object SparkEntry {
     // unshared mention/candidate subtrees re-synthesize and re-extract the
     // corpus THREE times in the final plan (cands side + both link-join
     // sides — measured in plans/r07/kg_triples_before.txt), and the link
-    // window runs twice. Same operators, same rows — run() uses exactly
-    // this shape and PipelineSpec proves it emits identical edges.
+    // window runs twice. Same operators, same rows — PipelineSpec's oracle
+    // composes exactly this shape and proves Pipeline.build emits its edges.
     val scanned = Mentions.scanPages(pages, dict,
       PageSynth.relations.toMap).localCheckpoint()
     // linked is ALSO checkpointed: its two uses (subj/obj join sides)

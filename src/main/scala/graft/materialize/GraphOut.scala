@@ -135,50 +135,14 @@ object GraphOut {
     WriteStats(pending, all.filter(done), written)
   }
 
-  /** Write `df` into `table`, bucketed on `keyCol` into `numParts` buckets,
-    * `groupSize` buckets per commit. `failAfterGroups >= 0` injects a crash
-    * after that many committed groups (tests only).
-    *
-    * The general path shares [[writeGrouped]]'s observe-lineage mechanism
-    * with the hot path: per-bucket counts + fingerprints ride the write job
-    * itself (CollectMetrics) — no separate pre-write stats aggregation and
-    * collect. The only difference from [[writeBucketedDedup]] is the plan:
-    * a plain bucket-aligned repartition, no dedup aggregate.
-    */
-  def writeWithCheckpoint(
-      df: DataFrame,
-      table: String,
-      keyCol: String,
-      numParts: Int,
-      ckptPath: String,
-      runId: String,
-      stage: String,
-      groupSize: Int = 8,
-      failAfterGroups: Int = -1,
-      inputTag: String = "static"
-  ): WriteStats = {
-    val withPart = df.withColumn(IcebergishTable.PartCol,
-      IcebergishTable.partExpr(keyCol, numParts))
-    writeGrouped(df.sparkSession, table, keyCol, numParts, ckptPath, runId,
-      stage, groupSize, inputTag, failAfterGroups) { group =>
-      // Aligned repartition on the KEY: partition id = pmod(murmur3(key),
-      // numParts) = bucket, so each task holds exactly one whole bucket
-      // (see bucketedDedupPlanAligned).
-      withPart.where(col(IcebergishTable.PartCol).isin(group: _*))
-        .repartition(numParts, col(keyCol))
-    }
-  }
-
   /** Single-shuffle bucketed write with in-shuffle dedup (the 100 TB hot
     * path): ONE exchange on the bucket column; rows are sorted within each
     * bucket on the dedup key by the shuffle's spill-safe sort machinery and
     * de-duplicated with an O(1)-memory adjacent filter; each task then holds
     * exactly one bucket, so `partitionBy` emits one file per bucket with no
-    * further repartition.
-    *
-    * vs [[writeWithCheckpoint]] (general path): saves one exchange, one
-    * full-data aggregation pass, and the intermediate checkpoint
-    * materialization.
+    * further repartition. `groupSize` buckets commit per group;
+    * `failAfterGroups >= 0` injects a crash after that many committed groups
+    * (tests only).
     */
   def writeBucketedDedup(
       df: DataFrame,
@@ -191,12 +155,13 @@ object GraphOut {
       stage: String,
       groupSize: Int = 64,
       inputTag: String = "static",
-      skewSalt: Int = 1
+      skewSalt: Int = 1,
+      failAfterGroups: Int = -1
   ): WriteStats = {
     val withPart = df.withColumn(IcebergishTable.PartCol,
       IcebergishTable.partExpr(keyCol, numParts))
     writeGrouped(df.sparkSession, table, keyCol, numParts, ckptPath, runId,
-      stage, groupSize, inputTag) { group =>
+      stage, groupSize, inputTag, failAfterGroups) { group =>
       val scoped = withPart.where(col(IcebergishTable.PartCol).isin(group: _*))
       if (skewSalt <= 1)
         bucketedDedupPlanAligned(scoped, numParts, keyCol, dedupCols)
@@ -204,18 +169,6 @@ object GraphOut {
         bucketedDedupPlanAlignedSalted(scoped, numParts, dedupCols, skewSalt)
     }
   }
-
-  /** The single-exchange dedup plan (exposed for plan assertions): input
-    * must already carry `PartCol`. Repartition on the bucket column, then
-    * group by (part ++ dedupCols) — the child's HashPartitioning on `part`
-    * is a SUBSET of the grouping keys, so it satisfies the aggregation's
-    * clustering requirement and Catalyst plans the dedup as an in-partition
-    * HashAggregate with NO second exchange, fully codegen'd (spill-safe via
-    * the sort-agg fallback).
-    */
-  def bucketedDedupPlan(withPart: DataFrame, shuffleParts: Int,
-                        dedupCols: Seq[String]): DataFrame =
-    bucketedDedupPlan(withPart, shuffleParts, dedupCols, 1)
 
   /** Bucket-ALIGNED single-exchange dedup (the hot-path default): because
     * [[IcebergishTable.partExpr]] is pmod(murmur3(key), n) — the exact
@@ -255,32 +208,6 @@ object GraphOut {
         sub.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
       }
     grouped.select(allCols.map(col).toIndexedSeq: _*)
-  }
-
-  /** `skewSalt > 1` splits each bucket over `skewSalt` shuffle sub-keys for
-    * hub-entity skew (north_rule: one entity in 50% of pages lands half the
-    * edge table in ONE bucket — with salt=1 that bucket is a single
-    * straggler task). The salt is a pure function of the dedup key, so
-    * duplicate rows still meet in one task and the dedup stays exact; the
-    * salt column joins the grouping keys (functionally redundant, but it
-    * lets the child's (part, salt) HashPartitioning satisfy the
-    * aggregation's clustering — still exactly ONE exchange). Cost: up to
-    * `skewSalt` files per bucket instead of one.
-    */
-  def bucketedDedupPlan(withPart: DataFrame, shuffleParts: Int,
-                        dedupCols: Seq[String], skewSalt: Int): DataFrame = {
-    if (skewSalt <= 1 || dedupCols.isEmpty) {
-      val sub = withPart.repartition(shuffleParts, col(IcebergishTable.PartCol))
-      if (dedupCols.isEmpty) sub
-      else dedupGroups(sub, withPart.columns, Seq.empty, dedupCols)
-    } else {
-      val saltCol = "_wsalt"
-      val salted = withPart.withColumn(saltCol,
-        pmod(xxhash64(dedupCols.map(col): _*), lit(skewSalt)).cast("int"))
-      val sub = salted.repartition(shuffleParts,
-        col(IcebergishTable.PartCol), col(saltCol))
-      dedupGroups(sub, withPart.columns, Seq(saltCol), dedupCols)
-    }
   }
 
   /** Ints whose Spark-HashPartitioning partition id (pmod(murmur3(x), m))

@@ -42,44 +42,47 @@ object AnnIndexProbe {
     (1 to reps).foreach { rep =>
       println(s"rep $rep")
       val base = java.nio.file.Files.createTempDirectory("graft-annprobe")
-      val path = base.toString + "/index"
-      timed("lshBuckets count") {
-        graft.ops.Ann.lshBuckets(emb, "vec_id", "embedding").count()
-      }
-      timed("writeLshIndex") {
-        graft.ops.Ann.writeLshIndex(emb, "vec_id", "embedding", path)
-      }
-      val pathIvf = base.toString + "/ivfindex"
-      timed("writeIvfIndex (8 cells)") {
-        graft.ops.Ann.writeIvfIndex(emb, "vec_id", "embedding", pathIvf,
-          nCells = 8)
-      }
-      val files = {
-        val d = new java.io.File(path)
-        def walk(f: java.io.File): Int =
-          if (f.isDirectory) f.listFiles().map(walk).sum
-          else if (f.getName.endsWith(".parquet")) 1 else 0
-        walk(d)
-      }
-      println(s"  files written              $files")
-      timed("read+count (discovery+scan)") {
-        spark.read.parquet(path).count()
-      }
-      timed("read+count again (relist)") {
-        spark.read.parquet(path).count()
-      }
-      timed("lshTopKIndexed multiprobe") {
-        graft.ops.Ann.lshTopKIndexed(spark, path, queryId = 0L, k = 10).count()
-      }
-      timed("lshTopKIndexed fullProbe") {
-        graft.ops.Ann
-          .lshTopKIndexed(spark, path, queryId = 0L, k = 10, fullProbe = true)
-          .count()
-      }
-      timed("knnJoin fullProbe (8 q)") {
-        graft.ops.Ann.knnJoin(emb.where(col("vec_id") < 8), "vec_id",
-          "embedding", path, k = 5, fullProbe = true).count()
-      }
+      try {
+        val path = base.toString + "/index"
+        timed("lshBuckets count") {
+          graft.ops.Ann.lshBuckets(emb, "vec_id", "embedding").count()
+        }
+        timed("writeLshIndex") {
+          graft.ops.Ann.writeLshIndex(emb, "vec_id", "embedding", path)
+        }
+        val pathIvf = base.toString + "/ivfindex"
+        timed("writeIvfIndex (8 cells)") {
+          graft.ops.Ann.writeIvfIndex(emb, "vec_id", "embedding", pathIvf,
+            nCells = 8)
+        }
+        val files = {
+          val d = new java.io.File(path)
+          def walk(f: java.io.File): Int =
+            if (f.isDirectory)
+              Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
+            else if (f.getName.endsWith(".parquet")) 1 else 0
+          walk(d)
+        }
+        println(s"  files written              $files")
+        timed("read+count (discovery+scan)") {
+          spark.read.parquet(path).count()
+        }
+        timed("read+count again (relist)") {
+          spark.read.parquet(path).count()
+        }
+        timed("lshTopKIndexed multiprobe") {
+          graft.ops.Ann.lshTopKIndexed(spark, path, queryId = 0L, k = 10).count()
+        }
+        timed("lshTopKIndexed fullProbe") {
+          graft.ops.Ann
+            .lshTopKIndexed(spark, path, queryId = 0L, k = 10, fullProbe = true)
+            .count()
+        }
+        timed("knnJoin fullProbe (8 q)") {
+          graft.ops.Ann.knnJoin(emb.where(col("vec_id") < 8), "vec_id",
+            "embedding", path, k = 5, fullProbe = true).count()
+        }
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }
     spark.stop()
   }

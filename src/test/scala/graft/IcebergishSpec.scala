@@ -325,9 +325,9 @@ class IcebergishSpec extends SparkSpec {
     graft.materialize.Checkpoint.append(spark, s"$table-acks", Seq(
       CheckpointRow("stream", "append", 0, "batch-1", pre.toString,
         0L, 0L, 0L, "pending")))
-    val deduped = graft.materialize.GraphOut.bucketedDedupPlan(
+    val deduped = graft.materialize.GraphOut.bucketedDedupPlanAligned(
       b1.withColumn(IcebergishTable.PartCol,
-        IcebergishTable.partExpr("subj", 4)), 8,
+        IcebergishTable.partExpr("subj", 4)), 4, "subj",
       Seq("subj", "pred", "obj", "url"))
     IcebergishTable.appendPrePartitioned(deduped, table, 4, "subj")
     assert(IcebergishTable.read(spark, table).count() == 3) // orphan rows live

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import graft.io.IcebergishTable
+import org.apache.spark.sql.DataFrame
+
+import graft.io.{IcebergishTable, RootCommit}
 import graft.materialize.{Checkpoint, GraphOut, SimulatedFailure}
 import graft.synth.PageSynth
 import graft.triples.TripleExtract
@@ -10,31 +12,55 @@ import graft.link.Mentions
 import graft.canon.ConnectedComponents
 
 /** End-to-end pipeline: golden-triple P/R, canonicalization, and
-  * checkpointed resume (FIXTURES.md §4, §6).
+  * checkpointed resume (FIXTURES.md §4, §6). The general operators are the
+  * oracle the fused `Pipeline.build` must equal.
   */
 class PipelineSpec extends SparkSpec {
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  private type Edge = (String, String, String, String)
+
+  private def edgeSet(df: DataFrame): Set[Edge] = {
+    import spark.implicits._
+    df.select("subj", "pred", "obj", "url").as[Edge].collect().toSet
+  }
+
+  /** The general-operator composition over a pages table: one scan pass →
+    * broadcast-join + window linking → candidate join resolution →
+    * canonicalization by distributed connected components over sameAs.
+    */
+  private def oracleTriples(pagesTable: String): DataFrame = {
+    import spark.implicits._
+    val scanned = Mentions.scanPages(
+      Pipeline.readPagesForExtraction(spark, pagesTable),
+      PageSynth.aliasDictionary, PageSynth.relations.toMap)
+    val linked = Mentions.link(scanned.flatMap(_.mentions),
+      PageSynth.aliases(spark))
+    TripleExtract.canonicalize(
+      TripleExtract.triples(scanned.flatMap(_.cands), linked),
+      ConnectedComponents.components(
+        PageSynth.sameAs(spark).toDF("src", "dst"))).toDF
+  }
+
   test("e2e: emitted triples reach P/R >= 0.95 vs golden set (exact match expected)") {
     import spark.implicits._
     val cfg = PipelineConfig(seed = 42L, nPages = 600L, partitions = 8,
       outputBuckets = 16, workDir = tmpDir("graft-e2e"), runId = "r1")
-    val stats = Pipeline.run(spark, cfg)
-    assert(stats.pages == 600L)
-    assert(stats.triples > 0)
+    val rows = Pipeline.build(spark, cfg)
+    assert(IcebergishTable.read(spark, s"${cfg.workDir}/pages").count() == 600L)
+    assert(rows > 0)
 
     val got = IcebergishTable.read(spark, s"${cfg.workDir}/edges")
       .select("subj", "pred", "obj")
       .as[(String, String, String)].collect().toSet
     val goldenCanon = PageSynth.goldenTriples(spark, 42L, 600L, 8)
       .map(t => (t.subj, t.pred, t.obj)).collect().toSet
-    // run() publishes the same atomic cross-table root as build():
-    // consistent readers must be servable from either entry point.
-    assert(graft.io.RootCommit.currentRoot(cfg.workDir) >= 0)
-    assert(graft.io.RootCommit.readConsistent(spark, cfg.workDir, "edges")
-      .count() == stats.edges)
+    // The atomic cross-table root serves exactly the rows build() wrote.
+    assert(RootCommit.currentRoot(cfg.workDir) >= 0)
+    assert(RootCommit.readConsistent(spark, cfg.workDir, "edges")
+      .count() == rows)
 
     val tp = (got intersect goldenCanon).size.toDouble
     val precision = tp / got.size
@@ -51,49 +77,36 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("resume: crash mid-write recomputes only pending partitions; final table identical") {
-    import spark.implicits._
-    val n = 300L
-    val pages = PageSynth.pages(spark, 7L, n, 8)
-      .map(p => Page(p.url, p.warc_ts, p.html,
-        graft.extract.HtmlText.extract(p.html), p.lang))
-    val aliasDict = PageSynth.aliasDictionary
-    val linked = Mentions.link(
-      Mentions.scan(pages, aliasDict), PageSynth.aliases(spark))
-    val cands = TripleExtract.candidates(
-      pages, aliasDict.map(_.alias).distinct, PageSynth.relations.toMap)
-    val triples = TripleExtract.canonicalize(
-      TripleExtract.triples(cands, linked),
-      ConnectedComponents.components(
-        PageSynth.sameAs(spark).toDF("src", "dst"))).toDF.localCheckpoint()
+    val cfg = PipelineConfig(seed = 7L, nPages = 300L, partitions = 8,
+      outputBuckets = 16, workDir = tmpDir("graft-resume-pages"))
+    val triples = oracleTriples(Pipeline.buildPagesTable(spark, cfg))
+      .localCheckpoint()
+    val dedupCols = Seq("subj", "pred", "obj", "url")
 
     val numParts = 16
     // Clean full write → expected table.
     val refDir = tmpDir("graft-ref")
-    GraphOut.writeWithCheckpoint(triples, s"$refDir/edges", "subj", numParts,
-      s"$refDir/ckpt", "ref", "edges", groupSize = 4)
-    val expected = IcebergishTable.read(spark, s"$refDir/edges")
-      .select("subj", "pred", "obj", "url").collect()
-      .map(_.toSeq).toSet
+    GraphOut.writeBucketedDedup(triples, s"$refDir/edges", "subj", numParts,
+      dedupCols, s"$refDir/ckpt", "ref", "edges", groupSize = 4)
+    val expected = edgeSet(IcebergishTable.read(spark, s"$refDir/edges"))
 
     // Crashing write: fails after 2 of 4 groups.
     val dir = tmpDir("graft-resume")
     intercept[SimulatedFailure] {
-      GraphOut.writeWithCheckpoint(triples, s"$dir/edges", "subj", numParts,
-        s"$dir/ckpt", "r1", "edges", groupSize = 4, failAfterGroups = 2)
+      GraphOut.writeBucketedDedup(triples, s"$dir/edges", "subj", numParts,
+        dedupCols, s"$dir/ckpt", "r1", "edges", groupSize = 4,
+        failAfterGroups = 2)
     }
     val doneBefore = Checkpoint.doneParts(spark, s"$dir/ckpt", "r1", "edges", "static")
     assert(doneBefore.size == 8, s"expected 8 acked parts, got $doneBefore")
 
     // Resume: only the remaining 8 partitions are recomputed.
-    val stats = GraphOut.writeWithCheckpoint(triples, s"$dir/edges", "subj",
-      numParts, s"$dir/ckpt", "r1", "edges", groupSize = 4)
+    val stats = GraphOut.writeBucketedDedup(triples, s"$dir/edges", "subj",
+      numParts, dedupCols, s"$dir/ckpt", "r1", "edges", groupSize = 4)
     assert(stats.partsWritten.toSet == (0 until numParts).toSet -- doneBefore)
     assert(stats.partsSkipped.toSet == doneBefore)
 
-    val got = IcebergishTable.read(spark, s"$dir/edges")
-      .select("subj", "pred", "obj", "url").collect()
-      .map(_.toSeq).toSet
-    assert(got == expected)
+    assert(edgeSet(IcebergishTable.read(spark, s"$dir/edges")) == expected)
 
     // Lineage recorded: every partition has fingerprint + counts.
     val ckpt = Checkpoint.read(spark, s"$dir/ckpt").collect()
@@ -122,31 +135,65 @@ class PipelineSpec extends SparkSpec {
     assert(fresh.partsWritten.size == 4)
   }
 
-  test("fused build() path emits exactly the same edge table as run()") {
-    import spark.implicits._
-    def edges(workDir: String): Set[(String, String, String, String)] =
-      IcebergishTable.read(spark, s"$workDir/edges")
-        .select("subj", "pred", "obj", "url")
-        .as[(String, String, String, String)].collect().toSet
-    val d1 = tmpDir("graft-run")
-    Pipeline.run(spark, PipelineConfig(seed = 5L, nPages = 250L,
-      partitions = 4, outputBuckets = 8, workDir = d1, runId = "a"))
-    val d2 = tmpDir("graft-build")
+  test("fused build() equals the general-operator oracle") {
+    val dir = tmpDir("graft-build")
     Pipeline.build(spark, PipelineConfig(seed = 5L, nPages = 250L,
-      partitions = 4, outputBuckets = 8, workDir = d2, runId = "b"))
-    assert(edges(d1) == edges(d2))
+      partitions = 4, outputBuckets = 8, workDir = dir, runId = "b"))
+    val oracle = edgeSet(oracleTriples(s"$dir/pages"))
+    assert(oracle.nonEmpty)
+    assert(edgeSet(IcebergishTable.read(spark, s"$dir/edges")) == oracle)
   }
 
   test("pipeline is deterministic across runs and parallelism") {
-    import spark.implicits._
-    def runOnce(parts: Int): Set[(String, String, String, String)] = {
+    def buildOnce(parts: Int): Set[Edge] = {
       val cfg = PipelineConfig(seed = 11L, nPages = 150L, partitions = parts,
         outputBuckets = 8, workDir = tmpDir("graft-det"), runId = "d")
-      Pipeline.run(spark, cfg)
-      IcebergishTable.read(spark, s"${cfg.workDir}/edges")
-        .select("subj", "pred", "obj", "url")
-        .as[(String, String, String, String)].collect().toSet
+      Pipeline.build(spark, cfg)
+      edgeSet(IcebergishTable.read(spark, s"${cfg.workDir}/edges"))
     }
-    assert(runOnce(2) == runOnce(8))
+    assert(buildOnce(2) == buildOnce(8))
+  }
+
+  test("build resume: a re-run skips every acked bucket and a deleted edges bucket alone recomputes") {
+    import spark.implicits._
+    val cfg = PipelineConfig(seed = 21L, nPages = 200L, partitions = 4,
+      outputBuckets = 8, workDir = tmpDir("graft-build-resume"), runId = "r")
+    val edgesTable = s"${cfg.workDir}/edges"
+    val verticesTable = s"${cfg.workDir}/vertices"
+    val ckpt = s"${cfg.workDir}/checkpoint"
+    def consistentEdges: Set[Edge] =
+      edgeSet(RootCommit.readConsistent(spark, cfg.workDir, "edges"))
+    def acks(stage: String): Seq[CheckpointRow] =
+      Checkpoint.readRows(ckpt).filter(_.stage == stage)
+
+    val rows = Pipeline.build(spark, cfg)
+    val original = consistentEdges
+    assert(rows > 0 && original.size == rows)
+    val edgesSnap = IcebergishTable.currentSnapshot(edgesTable)
+    val verticesSnap = IcebergishTable.currentSnapshot(verticesTable)
+
+    // Same workDir and runId: every bucket of both tables is acked.
+    assert(Pipeline.build(spark, cfg) == 0L)
+    assert(IcebergishTable.currentSnapshot(edgesTable) == edgesSnap)
+    assert(IcebergishTable.currentSnapshot(verticesTable) == verticesSnap)
+    assert(consistentEdges == original)
+
+    // Wipe one non-empty edges bucket behind the checkpoint's back.
+    val victim = Seq(original.head._1).toDF("k")
+      .select(IcebergishTable.partExpr("k", cfg.outputBuckets)).head().getInt(0)
+    val victimRows = IcebergishTable.read(spark, edgesTable)
+      .where(IcebergishTable.partExpr("subj", cfg.outputBuckets) === victim)
+      .count()
+    assert(victimRows > 0)
+    IcebergishTable.deletePartitionDirs(edgesTable, Seq(victim))
+    val edgeAcksBefore = acks("edges").size
+    val vertexAcksBefore = acks("vertices").size
+
+    assert(Pipeline.build(spark, cfg) == victimRows)
+    assert(acks("edges").drop(edgeAcksBefore).map(_.part) == Seq(victim))
+    assert(acks("vertices").size == vertexAcksBefore)
+    assert(IcebergishTable.currentSnapshot(verticesTable) == verticesSnap)
+    assert(consistentEdges == original)
+    assert(edgeSet(IcebergishTable.read(spark, edgesTable)) == original)
   }
 }

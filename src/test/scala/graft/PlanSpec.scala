@@ -94,7 +94,7 @@ class PlanSpec extends SparkSpec {
       .withColumn(IcebergishTable.PartCol,
         IcebergishTable.partExpr("subj", 8))
     val plan = graft.materialize.GraphOut
-      .bucketedDedupPlan(df, 16, Seq("subj", "pred", "obj", "url"))
+      .bucketedDedupPlanAligned(df, 8, "subj", Seq("subj", "pred", "obj", "url"))
       .queryExecution.executedPlan.toString
     val exchanges = "Exchange".r.findAllIn(plan).size
     assert(exchanges == 1, s"expected exactly 1 exchange, got $exchanges:\n$plan")

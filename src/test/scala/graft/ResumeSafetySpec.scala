@@ -52,7 +52,7 @@ class ResumeSafetySpec extends SparkSpec {
     assert(ack.nonEmpty && ack.forall(_.rows_out == 0L))
   }
 
-  test("recompute on new input drops zero-row buckets (general checkpoint path)") {
+  test("recompute on new input drops zero-row buckets (multi-group bucketed write)") {
     import spark.implicits._
     val numParts = 4
     val all = (1 to 40).map(i => Triple(s"E$i", "p", s"F$i", s"u$i", 1.0))
@@ -60,10 +60,12 @@ class ResumeSafetySpec extends SparkSpec {
     val df2 = all.filter(t => bucketOf(t.subj, numParts) != victimBucket).toDF
 
     val dir = tmpDir("graft-stalebucket2")
-    GraphOut.writeWithCheckpoint(all.toDF, s"$dir/edges", "subj", numParts,
-      s"$dir/ckpt", "r1", "edges", groupSize = 2, inputTag = "snap-0")
-    GraphOut.writeWithCheckpoint(df2, s"$dir/edges", "subj", numParts,
-      s"$dir/ckpt", "r1", "edges", groupSize = 2, inputTag = "snap-1")
+    GraphOut.writeBucketedDedup(all.toDF, s"$dir/edges", "subj", numParts,
+      Seq("subj", "pred", "obj", "url"), s"$dir/ckpt", "r1", "edges",
+      groupSize = 2, inputTag = "snap-0")
+    GraphOut.writeBucketedDedup(df2, s"$dir/edges", "subj", numParts,
+      Seq("subj", "pred", "obj", "url"), s"$dir/ckpt", "r1", "edges",
+      groupSize = 2, inputTag = "snap-1")
 
     val got = IcebergishTable.read(spark, s"$dir/edges")
       .select("subj").as[String].collect().toSet

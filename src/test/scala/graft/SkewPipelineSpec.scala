@@ -63,37 +63,6 @@ class SkewPipelineSpec extends SparkSpec {
       "salt=4 should split the hub bucket across writer tasks")
   }
 
-  test("salted dedup plan still has exactly ONE exchange and bounds the max task") {
-    import spark.implicits._
-    // 10k rows, 50% one hub subject, pre-bucketed into 8 parts.
-    val df = spark.range(0, 10000)
-      .select(
-        when(col("id") % 2 === 0, lit("HUB"))
-          .otherwise(concat(lit("s"), col("id") % 500)).as("subj"),
-        lit("p").as("pred"), concat(lit("o"), col("id")).as("obj"),
-        concat(lit("u"), col("id")).as("url"), lit(1.0).as("conf"))
-      .withColumn(IcebergishTable.PartCol, IcebergishTable.partExpr("subj", 8))
-    val salted = GraphOut.bucketedDedupPlan(df, 64,
-      Seq("subj", "pred", "obj", "url"), skewSalt = 8)
-    val plan = salted.queryExecution.executedPlan.toString
-    assert("Exchange".r.findAllIn(plan).size == 1, plan)
-
-    // Dedup exactness: same distinct set as the unsalted plan.
-    val plain = GraphOut.bucketedDedupPlan(df, 16,
-      Seq("subj", "pred", "obj", "url"))
-    assert(salted.select("subj", "obj").as[(String, String)].collect().toSet ==
-      plain.select("subj", "obj").as[(String, String)].collect().toSet)
-
-    // Max rows landing in one shuffle task: the unsalted hub task holds all
-    // 5000 hub rows; salting bounds it to ~5000/8 (+ slack for collisions).
-    val perTask = salted.groupBy(spark_partition_id().as("pid")).count()
-      .as[(Int, Long)].collect().map(_._2)
-    assert(perTask.max < 5000,
-      s"hub rows not split across tasks: max=${perTask.max}")
-    assert(perTask.max < 5000 / 8 * 3,
-      s"salted max task too heavy: ${perTask.max}")
-  }
-
   test("ALIGNED salted plan: one exchange, one (bucket,salt) slice per task, exact dedup") {
     import spark.implicits._
     val nParts = 8
@@ -132,6 +101,11 @@ class SkewPipelineSpec extends SparkSpec {
     val hubTasks = byTask.filter(_._2 == hubPart).map(_._1).distinct
     assert(hubTasks.length == salt,
       s"hub bucket split over ${hubTasks.length} tasks, expected $salt")
+    // Max rows landing in one shuffle task: the unsalted hub task holds all
+    // 5000 hub rows; salting bounds it to ~5000/salt (+ the bucket's share
+    // of the light subjects).
+    val maxTask = byTask.groupBy(_._1).values.map(_.map(_._3).sum).max
+    assert(maxTask < 5000 / 8 * 3, s"salted max task too heavy: $maxTask")
 
     // inverseHashSlots really inverts HashPartitioning for the exact m.
     val m = nParts * salt
