@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.io.IcebergishTable
@@ -175,6 +177,66 @@ class IcebergishSpec extends SparkSpec {
       .select("subj", "pred", "obj", "url")
       .as[(String, String, String, String)].collect().toSet
     assert(got == batchSet)
+  }
+
+  test("a table reused by a new stream checkpoint appends that stream's first batches") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-skg2q").toString
+    val canon = PageSynth.sameAsPairs.map { case (c, d) => d -> c }.toMap
+    val table = s"$base/edges"
+    val (dirA, dirB) = (s"$base/pages-a", s"$base/pages-b")
+    PageSynth.pages(spark, 41L, 80L, 2).toDF.write.parquet(dirA)
+    PageSynth.pages(spark, 42L, 60L, 2).toDF.write.parquet(dirB)
+
+    // The micro-batch thread carries the stream's persistent id (the one in
+    // the checkpoint's `metadata`): the same across restarts of one
+    // checkpoint, fresh for a new checkpoint.
+    val probeDir = s"$base/probe-src"
+    def probe(ckpt: String): (Set[String], String) = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      spark.readStream.schema(spark.read.parquet(dirA).schema).parquet(probeDir)
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen.add(b.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId"))
+          ()
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      val metadata = new String(Files.readAllBytes(
+        java.nio.file.Paths.get(ckpt, "metadata")), "UTF-8")
+      (seen.asScala.toSet,
+        """"id":"([^"]+)"""".r.findFirstMatchIn(metadata).get.group(1))
+    }
+    spark.read.parquet(dirA).limit(5).write.parquet(probeDir)
+    val (seen1, id1) = probe(s"$base/probe-1")
+    spark.read.parquet(dirB).limit(5).write.mode("append").parquet(probeDir)
+    val (seen1again, id1again) = probe(s"$base/probe-1") // restart
+    val (seen2, id2) = probe(s"$base/probe-2")
+    assert(seen1 == Set(id1) && seen1again == Set(id1) && id1again == id1)
+    assert(seen2 == Set(id2) && id2 != id1)
+
+    // Stream A (checkpoint c1) then stream B (new checkpoint c2) into T.
+    StreamingKg.buildIncrementalBucketed(spark, dirA, table, s"$base/c1",
+      canon, numParts = 8)
+    val out = StreamingKg.buildIncrementalBucketed(spark, dirB, table,
+      s"$base/c2", canon, numParts = 8)
+
+    val pages = spark.read.parquet(dirA).union(spark.read.parquet(dirB))
+      .select(col("url"), col("warc_ts"), col("html"),
+        graft.functions.HtmlExtractExpr.html_extract(col("html")).as("text"),
+        col("lang")).as[Page]
+    val batch = graft.triples.TripleExtract.extractDirect(pages,
+        PageSynth.aliasDictionary, PageSynth.relations.toMap)
+      .map(t => (canon.getOrElse(t.subj, t.subj), t.pred,
+        canon.getOrElse(t.obj, t.obj), t.url))
+      .collect().toSet
+    val streamed = out.select("subj", "pred", "obj", "url")
+      .as[(String, String, String, String)].collect()
+    val (missing, extra) = (batch -- streamed.toSet, streamed.toSet -- batch)
+    val exact = missing.isEmpty && extra.isEmpty
+    assert(exact, s"missing ${missing.size}, e.g. ${missing.take(3)}; extra ${extra.take(3)}")
+    assert(streamed.length == batch.size, "duplicate rows")
   }
 
   test("compaction tombstones superseded files; time travel survives until snapshots expire") {
