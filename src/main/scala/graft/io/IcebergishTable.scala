@@ -675,9 +675,6 @@ object IcebergishTable {
     (promoted, touched)
   }
 
-
-  /** Validate an incoming write's schema against the CURRENT manifest
-    */
   /** Run an append-type commit, deleting the just-promoted `added` files
     * when the commit is REJECTED with a typed error (SchemaMismatch,
     * CommitConflict, …) — a refused write must not leave orphans behind
@@ -788,48 +785,20 @@ object IcebergishTable {
   /** APPEND a DataFrame that is already hash-partitioned on `PartCol` into
     * the bucket directories (new files beside existing ones), committing a
     * new snapshot with an explicit file delta — safe under concurrent
-    * appends. The streaming micro-batch sink's unit: replay protection
-    * comes from the caller's batch-ack log.
+    * appends. The streaming micro-batch sink's unit: the commit records
+    * `queryId → epoch` in the same VERSION swap that publishes the files,
+    * and the caller skips any epoch at or below [[streamEpoch]].
     */
   def appendPrePartitioned(df0: DataFrame, table: String, numParts: Int,
-                           keyCol: String = ""): Unit = {
+                           keyCol: String, queryId: String, epoch: Long): Unit = {
     val df = withFieldIds(df0, table)
     validateAppend(table, keyCol, numParts, df.schema)
     val (added, _) = stagePromote(df, table)
     commitOrCleanup(table, added) {
       commit(table, df.schema.json, 0 until numParts, 0L,
         bucketKey = if (keyCol.nonEmpty) Some((keyCol, numParts)) else None,
-        added = added)
+        epochUpdate = Map(queryId -> epoch), added = added)
     }
-  }
-
-  /** Overwrite only the listed partitions (idempotent resume unit). Same
-    * concurrency contract as [[writePrePartitioned]]: parent pinned,
-    * concurrent commits abort typed, replaced files tombstoned (not
-    * deleted) so time travel survives.
-    */
-  def overwritePartitions(df: DataFrame, table: String, keyCol: String,
-                          numParts: Int, parts: Seq[Int]): Unit = {
-    val withPart = withFieldIds(df
-      .withColumn(PartCol, partExpr(keyCol, numParts))
-      .where(col(PartCol).isin(parts: _*))
-      .repartition(math.max(1, parts.size), col(PartCol)), table)
-    validateAppend(table, keyCol, numParts, withPart.schema)
-    val base = currentSnapshot(table)
-    val baseFiles: Seq[String] =
-      if (base < 0) Seq.empty else Manifest.read(table, base).paths
-    val (added, touched) =
-      stagePromote(withPart, table, alsoReplace = parts)
-    val touchedSet = touched.toSet
-    commitOrCleanup(table, added) {
-      commit(table, withPart.schema.json, 0 until numParts, 0L,
-        bucketKey = Some((keyCol, numParts)),
-        added = added,
-        dropParent = f => touchedSet.contains(bucketOfPath(f)),
-        expectedParent = Some(base))
-    }
-    addTombstones(table,
-      baseFiles.filter(f => touchedSet.contains(bucketOfPath(f))))
   }
 
   /** Parsed current-snapshot manifest metadata for the DSv2 catalog:
@@ -862,6 +831,12 @@ object IcebergishTable {
     */
   def manifestEpochs(table: String): Map[String, Long] =
     tryLoad(table, currentSnapshot(table)).fold(Map.empty[String, Long])(_.epochs)
+
+  /** Last epoch streaming query `queryId` committed into the current
+    * snapshot, if any — the replay guard of both streaming sinks.
+    */
+  def streamEpoch(table: String, queryId: String): Option[Long] =
+    manifestEpochs(table).get(queryId)
 
   /** Ghost names of a snapshot — see the commit-path doc. Empty for
     * manifests predating the feature (those tables never ran drop/rename,
@@ -1164,28 +1139,28 @@ object IcebergishTable {
         s"(data/$PartCol=[0-9]+/[^/]+)$$", 1))
       .withColumn("__mor_p", col("_metadata.row_index"))
 
+  /** One commit monitor per table path: two streaming queries writing the
+    * same table from one driver serialize their sweep+promote+commit
+    * windows. Cross-JVM writers remain single-writer by contract, like
+    * Iceberg's commit protocol.
+    */
+  private val commitLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
   /** Commit one streaming micro-batch: promote `staged` files (written by
     * the DSv2 StreamingWrite's DataWriters under `data/_staging/…`, hidden
     * from every read and directory-based commit) into their bucket
     * directories and commit a snapshot whose manifest records
     * `queryId → epochId`.
     *
-    * Exactly-once: an epoch at or below the recorded high-water is a replay
-    * — its staged files are discarded, nothing commits. A crash AFTER files
-    * were promoted but BEFORE the manifest swap leaves orphans in bucket
-    * dirs; the unconditional [[rollbackTo]](current) here sweeps them
-    * before promoting the retry (idempotent — a no-op when nothing is
-    * orphaned). Single-writer per table, like Iceberg's commit protocol.
+    * Exactly-once: an epoch at or below [[streamEpoch]] is a replay — its
+    * staged files are discarded, nothing commits. A crash AFTER files were
+    * promoted but BEFORE the manifest swap leaves orphans in bucket dirs;
+    * before promoting the retry, this sweeps the live data files that no
+    * current manifest references and whose names carry this query's
+    * `-q<queryId>-` segment (a no-op when nothing is orphaned). Other
+    * writers' uncommitted files are left alone.
     */
-  /** One commit monitor per table path: two streaming queries writing the
-    * same table from one driver must serialize their promote+commit windows
-    * (the rollback sweep would otherwise reap the other query's
-    * just-promoted files). Cross-JVM writers remain single-writer by
-    * contract, like Iceberg's commit protocol.
-    */
-  private val commitLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   def streamCommit(table: String, staged: Seq[(Int, String)],
                    queryId: String, epochId: Long): Unit =
     commitLocks.computeIfAbsent(table, _ => new Object).synchronized {
@@ -1202,14 +1177,14 @@ object IcebergishTable {
       if (Files.exists(stagingQ))
         Files.walk(stagingQ).iterator().asScala.toSeq.reverse.foreach(Files.delete)
     }
-    val m = Manifest.read(table, cur)
-    if (m.epochs.getOrElse(queryId, Long.MinValue) >= epochId) {
+    if (streamEpoch(table, queryId).exists(_ >= epochId)) {
       staged.foreach { case (_, rel) =>
         Files.deleteIfExists(dir(table).resolve(rel))
       }
       sweepStaging() // a replayed epoch's staging leftovers are all garbage
       return
     }
+    val m = Manifest.read(table, cur)
     // Sweep a crashed attempt's promoted-but-uncommitted files — but ONLY
     // this query's own (file names carry a -q<queryId>- segment): a full
     // rollback sweep would also reap a concurrent batch maintenance
@@ -1537,8 +1512,6 @@ object IcebergishTable {
   /** Roll the table back to `snapshot`: delete every data file NOT in that
     * snapshot's manifest and swap VERSION back (atomic). Idempotent — a
     * crash mid-rollback just deletes fewer files and the retry finishes.
-    * The streaming sink uses this to undo an appended-but-unacked batch
-    * before replaying it.
     */
   def rollbackTo(table: String, snapshot: Int): Unit = {
     // Strict decode: a torn manifest read leniently as "no files" would

@@ -4,8 +4,11 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 
 import graft.CheckpointRow
 
@@ -30,55 +33,22 @@ object Checkpoint {
 
   private def logFile(path: String): Path = Paths.get(path, "checkpoint.jsonl")
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
+  private implicit val formats: Formats = DefaultFormats
 
-  private def toJson(r: CheckpointRow): String =
-    s"""{"run_id":"${esc(r.run_id)}","stage":"${esc(r.stage)}","part":${r.part},""" +
-      s""""input_tag":"${esc(r.input_tag)}","input_fingerprint":"${esc(r.input_fingerprint)}",""" +
-      s""""rows_in":${r.rows_in},"rows_out":${r.rows_out},"wall_ms":${r.wall_ms},""" +
-      s""""status":"${esc(r.status)}"}"""
+  /** One row as one compact JSON object per line. */
+  private[graft] def encode(r: CheckpointRow): String = Serialization.write(r)
 
-  private val LineRe =
-    ("""\{"run_id":"((?:[^"\\]|\\.)*)","stage":"((?:[^"\\]|\\.)*)","part":(-?\d+),""" +
-      """"input_tag":"((?:[^"\\]|\\.)*)","input_fingerprint":"((?:[^"\\]|\\.)*)",""" +
-      """"rows_in":(-?\d+),"rows_out":(-?\d+),"wall_ms":(-?\d+),""" +
-      """"status":"((?:[^"\\]|\\.)*)"\}""").r
-
-  private def unesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' if i + 5 < s.length =>
-            b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case e => b.append(e); i += 2
-        }
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
-
-  private def parse(line: String): Option[CheckpointRow] = line match {
-    case LineRe(runId, stage, part, tag, fp, rin, rout, ms, status) =>
-      Some(CheckpointRow(unesc(runId), unesc(stage), part.toInt, unesc(tag),
-        unesc(fp), rin.toLong, rout.toLong, ms.toLong, unesc(status)))
-    case _ => None // torn/foreign line: treat as absent (= not done)
-  }
+  /** A torn or foreign line decodes to None: read as absent (= not done). */
+  private[graft] def decode(line: String): Option[CheckpointRow] =
+    try Some(Serialization.read[CheckpointRow](line))
+    catch { case NonFatal(_) => None }
 
   /** All rows driver-side (bounded: stages × buckets × retries, tiny). */
   def readRows(path: String): Seq[CheckpointRow] = {
     val f = logFile(path)
     if (!Files.exists(f)) Seq.empty
     else Files.readAllLines(f, StandardCharsets.UTF_8).asScala.toSeq
-      .flatMap(parse)
+      .flatMap(decode)
   }
 
   def read(spark: SparkSession, path: String): Dataset[CheckpointRow] = {
@@ -102,7 +72,7 @@ object Checkpoint {
         buf.get(0) != '\n'.toByte
       } finally ch.close()
     }
-    val payload = rows.map(toJson).mkString(if (needsNl) "\n" else "", "\n", "\n")
+    val payload = rows.map(encode).mkString(if (needsNl) "\n" else "", "\n", "\n")
     Files.write(f, payload.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND,
       StandardOpenOption.SYNC) // ack must be durable before we report done

@@ -16,8 +16,9 @@ import graft.io.IcebergishTable
 
 /** Native DSv2 streaming sink for Icebergish tables:
   * `df.writeStream.toTable("graft.edges")` — the one-line streaming twin of
-  * the batch `writeTo` path (ROADMAP: previously only reachable through the
-  * foreachBatch + ack-log pattern in [[graft.streaming.StreamingKg]]).
+  * the batch `writeTo` path. It shares its replay guard, the manifest's
+  * `queryId → epoch` high-water, with the foreachBatch sink
+  * [[graft.streaming.StreamingKg.appendBatch]].
   *
   * Protocol (per micro-batch epoch):
   *  1. executors: each [[GraftStreamingDataWriter]] routes rows to their

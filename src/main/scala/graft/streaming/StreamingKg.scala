@@ -3,18 +3,22 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.storage.StorageLevel
 
-import graft.{Page, Triple}
+import graft.{CheckpointRow, Page, Triple}
 import graft.functions.HtmlExtractExpr.html_extract
+import graft.io.IcebergishTable
+import graft.materialize.{Checkpoint, GraphOut}
 import graft.synth.PageSynth
 import graft.triples.TripleExtract
 
 /** Incremental KG construction: the batch pipeline's narrow scan pass is
   * purely row-local, so it lifts unchanged onto Structured Streaming —
   * new page files appearing under the table become triples exactly as in
-  * batch, with the file-source checkpoint supplying exactly-once progress
-  * (the streaming twin of the reference's batch-ack cursor,
-  * /root/reference/src/sharding.rs:237-271).
+  * batch. The file-source checkpoint supplies progress, and the table's
+  * manifest records each stream's last committed micro-batch in the same
+  * atomic swap that publishes the batch's files — the streaming twin of
+  * the reference's batch-ack cursor (its `src/sharding.rs:237-271`).
   */
 object StreamingKg {
 
@@ -43,83 +47,28 @@ object StreamingKg {
     }
   }
 
-  /** Run the stream until all currently-available files are processed,
-    * appending to a parquet triple table with a durable checkpoint; returns
-    * the materialized triples. Re-invoking after new files land processes
-    * ONLY the new files (file-source exactly-once resume).
-    */
-  def buildIncremental(spark: SparkSession, pagesDataDir: String,
-                       outDir: String, checkpointDir: String,
-                       canon: Map[String, String]): DataFrame = {
-    val q = triplesStream(spark, pagesDataDir, canon).toDF
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
-  }
-
   /** One exactly-once micro-batch append into the bucketed Icebergish
-    * triple table. Two-phase ack around the append closes BOTH crash
-    * windows of a replayed foreachBatch:
+    * triple table. The current manifest's `epochs(queryId)` is the replay
+    * guard: a batch at or below it already committed, so it returns before
+    * running any Spark job. Otherwise the batch is deduped and appended
+    * with `queryId → batchId` in the same commit, so the files and the
+    * epoch publish in one VERSION swap. A crash before that swap leaves
+    * only orphan files no manifest references (invisible to reads,
+    * reclaimed by [[IcebergishTable.removeOrphans]]), and the replay
+    * commits the batch once; a crash after it makes the replay a no-op.
     *
-    *   1. "pending" ack records the pre-append snapshot, THEN the batch's
-    *      deduped rows are appended (committer-atomic) and a new snapshot
-    *      committed, THEN the "done" ack lands.
-    *   2. On replay: done → no-op. Pending-without-done → the previous
-    *      attempt may have appended before crashing; roll the table back
-    *      to the recorded snapshot (delete files outside its manifest) and
-    *      redo. No ack at all → nothing was written; just run.
-    *
-    * Batch ids ride in `input_tag` (a Long — `part` is an Int bucket index
-    * and would truncate). Lineage counts are the BATCH's own deduped rows,
-    * not a whole-table rescan.
+    * A batch that yields no fresh rows commits nothing. Each processed
+    * batch appends one lineage row (`rows_out` = rows committed) to
+    * `$table-acks` after its commit; nothing reads it back for replay.
     */
-  def appendBatch(batch: DataFrame, table: String, batchId: Long,
-                  numParts: Int): Unit = {
-    import graft.io.IcebergishTable
-    import graft.materialize.{Checkpoint, GraphOut}
-    val spark = batch.sparkSession
-    val ackPath = s"$table-acks"
-    val tag = s"batch-$batchId"
-    val acks = Checkpoint.readRows(ackPath)
-      .filter(r => r.run_id == "stream" && r.stage == "append" &&
-        r.input_tag == tag)
-    if (acks.exists(_.status == "done")) return
-    acks.filter(_.status == "pending").lastOption.foreach { p =>
-      // Previous attempt crashed after possibly appending: undo it
-      // UNCONDITIONALLY. Gating on currentSnapshot > snap would miss the
-      // window where the parquet job committed its files into the bucket
-      // dirs but the manifest/VERSION swap never ran (currentSnapshot still
-      // == snap, orphan files on disk) — the redo would then append the
-      // batch twice and the next directory-derived manifest would include
-      // both attempts' files. rollbackTo is idempotent: it deletes exactly
-      // the live files outside `snap`'s manifest (a no-op when the crashed
-      // attempt wrote nothing) and restores VERSION. A pre-append snapshot
-      // of -1 means the crashed attempt CREATED the table — undo is
-      // dropping the directory entirely (including uncommitted orphans).
-      val snap = p.input_fingerprint.toInt
-      if (snap >= 0) IcebergishTable.rollbackTo(table, snap)
-      else IcebergishTable.drop(table)
-    }
-    if (batch.isEmpty) {
-      Checkpoint.append(spark, ackPath, Seq(graft.CheckpointRow(
-        "stream", "append", 0, tag, "-", 0L, 0L, 0L, "done")))
-      return
-    }
-    val preSnapshot = IcebergishTable.currentSnapshot(table)
-    Checkpoint.append(spark, ackPath, Seq(graft.CheckpointRow(
-      "stream", "append", 0, tag, preSnapshot.toString, 0L, 0L, 0L,
-      "pending")))
+  def appendBatch(batch: DataFrame, table: String, queryId: String,
+                  batchId: Long, numParts: Int): Unit = {
+    if (IcebergishTable.streamEpoch(table, queryId).exists(_ >= batchId)) return
     val withPart = batch.withColumn(IcebergishTable.PartCol,
       IcebergishTable.partExpr("subj", numParts))
     val deduped = GraphOut.bucketedDedupPlanAligned(withPart, numParts,
       "subj", Seq("subj", "pred", "obj", "url"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // CROSS-BATCH dedup (late-data semantics): a page re-delivered in a
     // later micro-batch — a duplicated input file, an upstream retry —
     // re-emits triples an earlier batch already committed, and the
@@ -135,25 +84,28 @@ object StreamingKg {
         val batchParts = deduped
           .select(col(IcebergishTable.PartCol)).distinct()
           .collect().map(_.getInt(0)).toSeq
-        val existing = IcebergishTable.read(spark, table)
+        val existing = IcebergishTable.read(batch.sparkSession, table)
           .where(col(IcebergishTable.PartCol).isin(batchParts: _*))
           .select("subj", "pred", "obj", "url")
         deduped.join(existing, Seq("subj", "pred", "obj", "url"), "left_anti")
           .repartition(numParts, col("subj")) // restore bucket alignment
       }
-    ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     val n = fresh.count() // this batch's rows, not a whole-table rescan
     if (n > 0)
-      IcebergishTable.appendPrePartitioned(fresh, table, numParts, "subj")
+      IcebergishTable.appendPrePartitioned(fresh, table, numParts, "subj",
+        queryId, batchId)
     fresh.unpersist(blocking = false)
     deduped.unpersist(blocking = false)
-    Checkpoint.append(spark, ackPath, Seq(graft.CheckpointRow(
-      "stream", "append", 0, tag, preSnapshot.toString, n, n, 0L, "done")))
+    Checkpoint.append(batch.sparkSession, s"$table-acks", Seq(CheckpointRow(
+      "stream", "append", 0, s"batch-$batchId", queryId, n, n, 0L, "done")))
   }
 
   /** Incremental KG straight into the BUCKETED Icebergish edge table —
-    * the production sink shape: streaming-checkpoint replay × per-batch
-    * ack log gives exactly-once at batch granularity, and the output is
+    * the production sink shape: each micro-batch commits once under the
+    * stream's persistent query id (Spark sets `sql.streaming.queryId` on
+    * the micro-batch thread; it lives in the stream checkpoint, so it
+    * survives restarts and a new checkpoint gets a new one). The output is
     * the same snapshot/manifest table format the batch pipeline writes
     * (time-travel, bucket layout, DSv2 catalog all apply).
     */
@@ -164,11 +116,13 @@ object StreamingKg {
     val q = triplesStream(spark, pagesDataDir, canon).toDF
       .writeStream
       .foreachBatch((batch: DataFrame, batchId: Long) =>
-        appendBatch(batch, table, batchId, numParts))
+        appendBatch(batch, table,
+          batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId"),
+          batchId, numParts))
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    graft.io.IcebergishTable.read(spark, table)
+    IcebergishTable.read(spark, table)
   }
 }

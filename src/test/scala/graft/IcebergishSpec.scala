@@ -51,44 +51,6 @@ class IcebergishSpec extends SparkSpec {
     Pipeline.validate(PipelineConfig()) // default is valid
   }
 
-  test("incremental streaming KG: new files yield only new triples; union equals batch") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft-skg").toString
-    val pagesDir = s"$base/pages-data"
-    Files.createDirectories(java.nio.file.Paths.get(pagesDir))
-    val canon = PageSynth.sameAsPairs.map { case (c, d) => d -> c }.toMap
-
-    // Batch 1 of pages lands.
-    PageSynth.pages(spark, 21L, 120L, 2).toDF
-      .write.mode("append").parquet(pagesDir)
-    val out1 = StreamingKg.buildIncremental(spark, pagesDir,
-      s"$base/triples", s"$base/ckpt", canon)
-    val n1 = out1.count()
-    assert(n1 > 0)
-
-    // Batch 2 lands (different seed → different urls); only it is processed.
-    PageSynth.pages(spark, 22L, 80L, 2).toDF
-      .write.mode("append").parquet(pagesDir)
-    val out2 = StreamingKg.buildIncremental(spark, pagesDir,
-      s"$base/triples", s"$base/ckpt", canon)
-    val n2 = out2.count()
-    assert(n2 > n1)
-
-    // Equivalent batch computation over all pages:
-    val pages = spark.read.parquet(pagesDir)
-      .select(col("url"), col("warc_ts"), col("html"),
-        graft.functions.HtmlExtractExpr.html_extract(col("html")).as("text"),
-        col("lang")).as[Page]
-    val batch = graft.triples.TripleExtract.extractDirect(pages,
-        PageSynth.aliasDictionary, PageSynth.relations.toMap)
-      .map(t => (canon.getOrElse(t.subj, t.subj), t.pred,
-        canon.getOrElse(t.obj, t.obj), t.url))
-      .collect().toSet
-    val streamed = out2.select("subj", "pred", "obj", "url")
-      .as[(String, String, String, String)].collect().toSet
-    assert(streamed == batch)
-  }
-
   test("late/duplicated pages converge: incremental build equals batch over unique pages") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft-skgl").toString
@@ -144,8 +106,13 @@ class IcebergishSpec extends SparkSpec {
     assert(n1 > 0)
     val snap1 = graft.io.IcebergishTable.currentSnapshot(table)
 
-    // Replay the SAME micro-batch id directly (crash-between-commits case):
-    // the ack log must make it a no-op — no duplicate files, no new rows.
+    // Replay the SAME micro-batch id of the same stream directly
+    // (crash-between-commits case): the manifest's epoch for the stream's
+    // query id must make it a no-op — no duplicate files, no new rows.
+    val queryId = """"id":"([^"]+)"""".r.findFirstMatchIn(new String(
+      Files.readAllBytes(java.nio.file.Paths.get(base, "ckpt", "metadata")),
+      "UTF-8")).get.group(1)
+    assert(IcebergishTable.streamEpoch(table, queryId) == Some(0L))
     val pages = spark.read.parquet(pagesDir)
       .select(col("url"), col("warc_ts"), col("html"),
         graft.functions.HtmlExtractExpr.html_extract(col("html")).as("text"),
@@ -154,7 +121,10 @@ class IcebergishSpec extends SparkSpec {
         PageSynth.aliasDictionary, PageSynth.relations.toMap)
       .map(t => t.copy(subj = canon.getOrElse(t.subj, t.subj),
         obj = canon.getOrElse(t.obj, t.obj))).toDF
-    StreamingKg.appendBatch(replay, table, batchId = 0L, numParts = 8)
+    val lineage = graft.materialize.Checkpoint.readRows(s"$table-acks")
+    StreamingKg.appendBatch(replay, table, queryId, batchId = 0L, numParts = 8)
+    // Returned before any work: not even a lineage row.
+    assert(graft.materialize.Checkpoint.readRows(s"$table-acks") == lineage)
     assert(graft.io.IcebergishTable.read(spark, table).count() == n1)
     assert(graft.io.IcebergishTable.currentSnapshot(table) == snap1)
 
@@ -248,7 +218,7 @@ class IcebergishSpec extends SparkSpec {
       StreamingKg.appendBatch(
         Seq(Triple(s"A$b", "p", s"B$b", s"u$b", 1.0),
           Triple(s"C$b", "p", s"D$b", s"v$b", 1.0)).toDF,
-        table, b.toLong, 4)
+        table, "q", b.toLong, 4)
     }
     val before = IcebergishTable.read(spark, table)
       .select("subj").as[String].collect().toSet
@@ -345,60 +315,34 @@ class IcebergishSpec extends SparkSpec {
     import graft.io.IcebergishTable
     val base = Files.createTempDirectory("graft-skgc2").toString
     val table = s"$base/edges"
-    StreamingKg.appendBatch(Seq(Triple("A", "p", "B", "u1", 1.0)).toDF, table, 0L, 4)
+    StreamingKg.appendBatch(Seq(Triple("A", "p", "B", "u1", 1.0)).toDF, table, "q", 0L, 4)
     val pre = IcebergishTable.currentSnapshot(table)
 
     // Simulate batch 1 crashing AFTER its parquet job committed files into
     // the bucket dirs but BEFORE commit() wrote the manifest/VERSION:
-    // pending ack + raw file append, no new snapshot. (Round-2 ADVICE high:
-    // the old snapshot-advanced guard missed this window entirely.)
+    // raw file append, no new snapshot. (Round-2 ADVICE high: the old
+    // snapshot-advanced guard missed this window entirely.)
     val b1 = Seq(Triple("C", "p", "D", "u2", 1.0)).toDF
-    graft.materialize.Checkpoint.append(spark, s"$table-acks", Seq(
-      CheckpointRow("stream", "append", 0, "batch-1", pre.toString,
-        0L, 0L, 0L, "pending")))
+    val committed = IcebergishTable.snapshotFiles(table, pre).toSet
     b1.withColumn(IcebergishTable.PartCol, IcebergishTable.partExpr("subj", 4))
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .partitionBy(IcebergishTable.PartCol)
       .parquet(s"$table/data")
     assert(IcebergishTable.currentSnapshot(table) == pre) // no manifest landed
 
-    // Replay must sweep the orphaned first-attempt files, then apply once.
-    StreamingKg.appendBatch(b1, table, 1L, 4)
+    val orphans = IcebergishTable.liveDataFiles(table).toSet -- committed
+    assert(orphans.nonEmpty)
+
+    // Replay commits the batch once: no manifest references the orphans.
+    StreamingKg.appendBatch(b1, table, "q", 1L, 4)
     val rows = IcebergishTable.read(spark, table)
       .select("subj").as[String].collect().toSeq.sorted
     assert(rows == Seq("A", "C"), s"duplicates after replay: $rows")
-  }
-
-  test("streaming append crash window: appended-but-unacked batch rolls back on replay") {
-    import spark.implicits._
-    import graft.io.IcebergishTable
-    val base = Files.createTempDirectory("graft-skgc").toString
-    val table = s"$base/edges"
-    val b0 = Seq(Triple("A", "p", "B", "u1", 1.0)).toDF
-    val b1 = Seq(Triple("C", "p", "D", "u2", 1.0),
-      Triple("E", "p", "F", "u3", 1.0)).toDF
-    StreamingKg.appendBatch(b0, table, 0L, 4)
-    val n0 = IcebergishTable.read(spark, table).count()
-    assert(n0 == 1)
-
-    // Simulate an attempt of batch 1 that crashed AFTER appending its files
-    // but BEFORE writing the done ack: pending ack + raw append, no done.
-    val pre = IcebergishTable.currentSnapshot(table)
-    graft.materialize.Checkpoint.append(spark, s"$table-acks", Seq(
-      CheckpointRow("stream", "append", 0, "batch-1", pre.toString,
-        0L, 0L, 0L, "pending")))
-    val deduped = graft.materialize.GraphOut.bucketedDedupPlanAligned(
-      b1.withColumn(IcebergishTable.PartCol,
-        IcebergishTable.partExpr("subj", 4)), 4, "subj",
-      Seq("subj", "pred", "obj", "url"))
-    IcebergishTable.appendPrePartitioned(deduped, table, 4, "subj")
-    assert(IcebergishTable.read(spark, table).count() == 3) // orphan rows live
-
-    // Replay of batch 1 must roll the orphan append back, then apply once.
-    StreamingKg.appendBatch(b1, table, 1L, 4)
-    val rows = IcebergishTable.read(spark, table)
-      .select("subj").as[String].collect().toSeq.sorted
-    assert(rows == Seq("A", "C", "E"), s"duplicates after replay: $rows")
+    // The vacuum reclaims exactly the first attempt's files; the read holds.
+    assert(IcebergishTable.removeOrphans(table, 0L).toSet == orphans)
+    assert(IcebergishTable.liveDataFiles(table).intersect(orphans).isEmpty)
+    assert(IcebergishTable.read(spark, table)
+      .select("subj").as[String].collect().toSeq.sorted == rows)
   }
 
   test("read() is manifest-based: files landed by an uncommitted write stay invisible") {

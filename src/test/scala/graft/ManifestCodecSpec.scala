@@ -14,6 +14,7 @@ import graft.io.{DataFile, DeleteFile, IcebergishTable, Manifest, RootCommit, Ro
   * characters they hold.
   */
 class ManifestCodecSpec extends SparkSpec {
+  import ManifestCodecSpec.textGen
 
   private def freshDir(prefix: String) = Files.createTempDirectory(prefix)
 
@@ -21,22 +22,6 @@ class ManifestCodecSpec extends SparkSpec {
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(n), prop)
     assert(res.passed, s"$name: $res")
-  }
-
-  /** Strings built from JSON-significant characters, control characters,
-    * BMP text and non-BMP code points (never lone surrogates — those are
-    * not text and cannot survive UTF-8).
-    */
-  private val textGen: Gen[String] = {
-    def cp(lo: Int, hi: Int) =
-      Gen.choose(lo, hi).map(c => new String(Character.toChars(c)))
-    Gen.listOf(Gen.frequency(
-      4 -> Gen.oneOf(",", "]", "}", "\"", "\\", "[", "{", ":", " ", "/"),
-      2 -> cp(0, 0x1f),
-      3 -> Gen.alphaNumChar.map(_.toString),
-      1 -> cp(0x7f, 0xd7ff),
-      1 -> cp(0xe000, 0xffff),
-      2 -> cp(0x10000, 0x10ffff))).map(_.mkString)
   }
 
   private val manifestGen: Gen[Manifest] = for {
@@ -134,5 +119,24 @@ class ManifestCodecSpec extends SparkSpec {
     val bytes = new String(Files.readAllBytes(
       Paths.get(dir.toString, s"root-$r.json")), "UTF-8")
     org.json4s.jackson.JsonMethods.parse(bytes)
+  }
+}
+
+object ManifestCodecSpec {
+
+  /** Strings built from JSON-significant characters, control characters,
+    * BMP text and non-BMP code points (never lone surrogates — those are
+    * not text and cannot survive UTF-8).
+    */
+  val textGen: Gen[String] = {
+    def cp(lo: Int, hi: Int) =
+      Gen.choose(lo, hi).map(c => new String(Character.toChars(c)))
+    Gen.listOf(Gen.frequency(
+      4 -> Gen.oneOf(",", "]", "}", "\"", "\\", "[", "{", ":", " ", "/"),
+      2 -> cp(0, 0x1f),
+      3 -> Gen.alphaNumChar.map(_.toString),
+      1 -> cp(0x7f, 0xd7ff),
+      1 -> cp(0xe000, 0xffff),
+      2 -> cp(0x10000, 0x10ffff))).map(_.mkString)
   }
 }

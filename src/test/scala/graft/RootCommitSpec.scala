@@ -29,7 +29,7 @@ class RootCommitSpec extends SparkSpec {
     // A table advancing WITHOUT a new root (the torn window: edges landed,
     // vertices not yet) stays invisible to consistent readers.
     graft.streaming.StreamingKg.appendBatch(
-      Seq(Triple("ZX", "p", "ZY", "zu", 1.0)).toDF, s"$dir/edges", 99L, 8)
+      Seq(Triple("ZX", "p", "ZY", "zu", 1.0)).toDF, s"$dir/edges", "q", 99L, 8)
     assert(IcebergishTable.read(spark, s"$dir/edges").count() == rows0 + 1)
     val stillOld = RootCommit.readConsistent(spark, dir, "edges")
       .select("subj").as[String].collect().toSet

@@ -105,7 +105,7 @@ class StreamingSpec extends SparkSpec {
     try {
       graft.streaming.StreamingKg.appendBatch(
         Seq(Triple("A", "p", "B", "u1", 1.0),
-          Triple("C", "p", "D", "u2", 1.0)).toDF, table, 0L, 4)
+          Triple("C", "p", "D", "u2", 1.0)).toDF, table, "q", 0L, 4)
 
       val out = s"$base/out"
       def drain(): Set[String] = {
@@ -125,9 +125,9 @@ class StreamingSpec extends SparkSpec {
       assert(drain() == Set("A", "C"))
       // Two more committed snapshots → exactly their rows arrive, once.
       graft.streaming.StreamingKg.appendBatch(
-        Seq(Triple("E", "p", "F", "u3", 1.0)).toDF, table, 1L, 4)
+        Seq(Triple("E", "p", "F", "u3", 1.0)).toDF, table, "q", 1L, 4)
       graft.streaming.StreamingKg.appendBatch(
-        Seq(Triple("G", "p", "H", "u4", 1.0)).toDF, table, 2L, 4)
+        Seq(Triple("G", "p", "H", "u4", 1.0)).toDF, table, "q", 2L, 4)
       val all = drain()
       assert(all == Set("A", "C", "E", "G"), s"got $all")
       // Global dedup sanity: 4 rows total, not 4 + replays.
@@ -154,7 +154,7 @@ class StreamingSpec extends SparkSpec {
       // Downtime backlog: four committed snapshots before the stream starts.
       (0 until 4).foreach { i =>
         graft.streaming.StreamingKg.appendBatch(
-          Seq(Triple(s"S$i", "p", s"O$i", s"u$i", 1.0)).toDF, table, i.toLong, 4)
+          Seq(Triple(s"S$i", "p", s"O$i", s"u$i", 1.0)).toDF, table, "q", i.toLong, 4)
       }
       val out = s"$base/out"
       val q = spark.readStream
