@@ -796,7 +796,7 @@ object IcebergishTable {
     val (added, _) = stagePromote(df, table)
     commitOrCleanup(table, added) {
       commit(table, df.schema.json, 0 until numParts, 0L,
-        bucketKey = if (keyCol.nonEmpty) Some((keyCol, numParts)) else None,
+        bucketKey = Some((keyCol, numParts)),
         epochUpdate = Map(queryId -> epoch), added = added)
     }
   }

@@ -117,7 +117,7 @@ object StreamingKg {
       .writeStream
       .foreachBatch((batch: DataFrame, batchId: Long) =>
         appendBatch(batch, table,
-          batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId"),
+          spark.sparkContext.getLocalProperty("sql.streaming.queryId"),
           batchId, numParts))
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
