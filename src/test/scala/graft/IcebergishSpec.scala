@@ -15,6 +15,11 @@ import graft.synth.PageSynth
   */
 class IcebergishSpec extends SparkSpec {
 
+  /** The persistent query id a stream checkpoint records in `metadata`. */
+  private def streamQueryId(checkpointDir: String): String =
+    """"id":"([^"]+)"""".r.findFirstMatchIn(new String(Files.readAllBytes(
+      java.nio.file.Paths.get(checkpointDir, "metadata")), "UTF-8")).get.group(1)
+
   test("append creates snapshots; readSnapshot time-travels; current read sees all") {
     import spark.implicits._
     val t = Files.createTempDirectory("graft-ice").toString + "/t"
@@ -109,9 +114,7 @@ class IcebergishSpec extends SparkSpec {
     // Replay the SAME micro-batch id of the same stream directly
     // (crash-between-commits case): the manifest's epoch for the stream's
     // query id must make it a no-op — no duplicate files, no new rows.
-    val queryId = """"id":"([^"]+)"""".r.findFirstMatchIn(new String(
-      Files.readAllBytes(java.nio.file.Paths.get(base, "ckpt", "metadata")),
-      "UTF-8")).get.group(1)
+    val queryId = streamQueryId(s"$base/ckpt")
     assert(IcebergishTable.streamEpoch(table, queryId) == Some(0L))
     val pages = spark.read.parquet(pagesDir)
       .select(col("url"), col("warc_ts"), col("html"),
@@ -173,10 +176,7 @@ class IcebergishSpec extends SparkSpec {
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start().awaitTermination()
-      val metadata = new String(Files.readAllBytes(
-        java.nio.file.Paths.get(ckpt, "metadata")), "UTF-8")
-      (seen.asScala.toSet,
-        """"id":"([^"]+)"""".r.findFirstMatchIn(metadata).get.group(1))
+      (seen.asScala.toSet, streamQueryId(ckpt))
     }
     spark.read.parquet(dirA).limit(5).write.parquet(probeDir)
     val (seen1, id1) = probe(s"$base/probe-1")
@@ -320,8 +320,8 @@ class IcebergishSpec extends SparkSpec {
 
     // Simulate batch 1 crashing AFTER its parquet job committed files into
     // the bucket dirs but BEFORE commit() wrote the manifest/VERSION:
-    // raw file append, no new snapshot. (Round-2 ADVICE high: the old
-    // snapshot-advanced guard missed this window entirely.)
+    // raw file append, no new snapshot. (The old snapshot-advanced guard
+    // missed this window entirely.)
     val b1 = Seq(Triple("C", "p", "D", "u2", 1.0)).toDF
     val committed = IcebergishTable.snapshotFiles(table, pre).toSet
     b1.withColumn(IcebergishTable.PartCol, IcebergishTable.partExpr("subj", 4))
