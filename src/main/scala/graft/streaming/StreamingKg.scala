@@ -64,6 +64,7 @@ object StreamingKg {
   def appendBatch(batch: DataFrame, table: String, queryId: String,
                   batchId: Long, numParts: Int): Unit = {
     if (IcebergishTable.streamEpoch(table, queryId).exists(_ >= batchId)) return
+    val spark = batch.sparkSession
     val withPart = batch.withColumn(IcebergishTable.PartCol,
       IcebergishTable.partExpr("subj", numParts))
     val deduped = GraphOut.bucketedDedupPlanAligned(withPart, numParts,
@@ -84,7 +85,7 @@ object StreamingKg {
         val batchParts = deduped
           .select(col(IcebergishTable.PartCol)).distinct()
           .collect().map(_.getInt(0)).toSeq
-        val existing = IcebergishTable.read(batch.sparkSession, table)
+        val existing = IcebergishTable.read(spark, table)
           .where(col(IcebergishTable.PartCol).isin(batchParts: _*))
           .select("subj", "pred", "obj", "url")
         deduped.join(existing, Seq("subj", "pred", "obj", "url"), "left_anti")
@@ -97,7 +98,7 @@ object StreamingKg {
         queryId, batchId)
     fresh.unpersist(blocking = false)
     deduped.unpersist(blocking = false)
-    Checkpoint.append(batch.sparkSession, s"$table-acks", Seq(CheckpointRow(
+    Checkpoint.append(spark, s"$table-acks", Seq(CheckpointRow(
       "stream", "append", 0, s"batch-$batchId", queryId, n, n, 0L, "done")))
   }
 
