@@ -604,11 +604,11 @@ object SparkEntry {
     }),
     "kg_compact" -> ((s, _) => {
       // Table-maintenance round trip, oracle-verified: three bucketed
-      // appends (3 file sets per bucket), then compact (tombstone the
-      // inputs, rewrite one file set per bucket) and expire the old
-      // snapshots (physically reclaim). DuckDB recomputes the aggregate
+      // appends (3 file sets per bucket), then compact (rewrite one file
+      // set per bucket) and expire the old snapshots (physically reclaim
+      // the files only they reference). DuckDB recomputes the aggregate
       // from range() — any row lost or duplicated by the rewrite or by
-      // tombstone/expiry bookkeeping breaks the hash compare.
+      // expiry breaks the hash compare.
       val dir = java.nio.file.Files.createTempDirectory("graft-cp").toString
       val t = s"$dir/t"
       def slice(a: Long, b: Long): DataFrame = s.range(a, b)

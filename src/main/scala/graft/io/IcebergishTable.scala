@@ -19,6 +19,7 @@ import org.apache.spark.sql.functions._
   *
   *   table/
   *     data/part=<k>/ *.parquet     (hash(bucket key) % numParts)
+  *     deletes/ *.tsv               (position and equality delete files)
   *     snap-<n>.json                (snapshot n's [[Manifest]])
   *     VERSION                      (current snapshot number; atomic rename)
   *
@@ -202,38 +203,6 @@ object IcebergishTable {
     else -1
   }
 
-  /** Files superseded by compaction: still on disk for older snapshots'
-    * time travel, but no longer part of the CURRENT table state. One
-    * relative path per line; [[expireSnapshots]] reclaims them.
-    */
-  private def tombstones(table: String): Set[String] = {
-    val t = dir(table).resolve("TOMBSTONES")
-    if (!Files.exists(t)) Set.empty
-    else new String(Files.readAllBytes(t), StandardCharsets.UTF_8)
-      .linesIterator.filter(_.nonEmpty).toSet
-  }
-
-  private def writeTombstones(table: String, files: Set[String]): Unit = {
-    val t = dir(table).resolve("TOMBSTONES")
-    if (files.isEmpty) Files.deleteIfExists(t)
-    else Files.write(t,
-      files.toSeq.sorted.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-  }
-
-  /** Append to the tombstone ledger under the table's commit monitor: two
-    * in-JVM writers tombstoning concurrently (e.g. partition overwrites of
-    * disjoint buckets) would otherwise race the read-modify-write and lose
-    * entries — a pure space leak (the files stay referenced by old
-    * manifests, so neither vacuum nor expiry would ever reclaim them), but
-    * a permanent one. Cross-JVM tombstone appends remain last-writer-wins:
-    * same leak-only blast radius, documented with the maintenance ops.
-    */
-  private def addTombstones(table: String, files: Seq[String]): Unit =
-    if (files.nonEmpty)
-      commitLocks.computeIfAbsent(table, _ => new Object).synchronized {
-        writeTombstones(table, tombstones(table) ++ files)
-      }
-
   /** True when any component of the (relative) path is hidden by Hadoop
     * convention: the output committer stages task files under `_temporary`
     * (and writes `.`-prefixed CRCs). A crashed or concurrent write leaves
@@ -246,22 +215,20 @@ object IcebergishTable {
       s.startsWith("_") || s.startsWith(".")
     }
 
-  /** CURRENT data files (relative paths, sorted): on disk minus
-    * compaction tombstones minus committer staging/hidden paths.
+  /** Data files on disk (relative paths, sorted), minus committer
+    * staging/hidden paths. Never what a table contains — that is its
+    * manifest — only what garbage sweeps and a re-create's commit start
+    * from.
     */
   private def listDataFiles(table: String): Seq[String] = {
     val data = dir(table).resolve("data")
     if (!Files.exists(data)) Seq.empty
-    else {
-      val dead = tombstones(table)
-      Files.walk(data).iterator().asScala
-        .filter(p => p.toString.endsWith(".parquet"))
-        .map(p => dir(table).relativize(p))
-        .filterNot(isHiddenPath)
-        .map(_.toString)
-        .filterNot(dead)
-        .toSeq.sorted
-    }
+    else Files.walk(data).iterator().asScala
+      .filter(p => p.toString.endsWith(".parquet"))
+      .map(p => dir(table).relativize(p))
+      .filterNot(isHiddenPath)
+      .map(_.toString)
+      .toSeq.sorted
   }
 
   /** Commit a snapshot with an EXPLICIT file delta — real Iceberg
@@ -630,8 +597,8 @@ object IcebergishTable {
     * promote and commit leaves orphans that no manifest references —
     * invisible to reads; [[removeOrphans]] + [[expireSnapshots]] reclaim.
     * Committed files of the touched buckets are NEVER touched here:
-    * partition-overwrite callers drop them from the manifest and tombstone
-    * them after their commit (time travel keeps working).
+    * partition-overwrite callers drop them from the manifest, and they
+    * stay on disk until expiry (time travel keeps working).
     */
   private def stagePromote(df: DataFrame, table: String,
                            alsoReplace: Seq[Int] = Seq.empty)
@@ -691,8 +658,8 @@ object IcebergishTable {
 
   /** Write `df` hash-bucketed on `keyCol` into `numParts` partitions,
     * creating a new snapshot. `mode` Overwrite replaces the whole table
-    * (including any compaction tombstones — it is a re-create, EXCLUSIVE
-    * with every other writer by nature: the data directory is wiped);
+    * (it is a re-create, EXCLUSIVE with every other writer by nature: the
+    * data directory is wiped);
     * Append stages + promotes new files beside existing ones and commits
     * an explicit file delta — safe under concurrent appends (threads or
     * JVMs), per the commit protocol above. Appends must match the
@@ -722,10 +689,6 @@ object IcebergishTable {
         .mode(mode)
         .partitionBy(PartCol)
         .parquet(dir(table).resolve("data").toString)
-      // Overwrite is a re-create: clear the tombstone ledger only AFTER the
-      // write succeeded (clearing first would resurrect compacted-away
-      // duplicates if the job failed).
-      writeTombstones(table, Set.empty)
       val prior = currentSnapshot(table)
       // The wiped-and-rewritten directory holds exactly this write's files.
       commit(table, withPart.schema.json, 0 until numParts, 0L,
@@ -748,17 +711,16 @@ object IcebergishTable {
     * records the bucket spec in the manifest (the caller bucketed on it
     * upstream). `replaceParts` marks buckets the caller is REWRITING even
     * if the new input yields zero rows for them (their parent-manifest
-    * files must leave the new manifest, or the commit would reference
-    * files the caller already cleared).
+    * files must leave the new manifest, or their stale rows would stay
+    * visible).
     *
     * Concurrency contract (same as [[deleteWhere]]/[[mergeRows]]): the
     * parent snapshot is pinned BEFORE staging, and any other commit landing
     * in between aborts this write with a typed [[graft.CommitConflict]]
     * (promoted files cleaned up) — a partition-overwrite merged blindly
     * onto an unseen parent would silently drop a concurrent append's files
-    * from the touched buckets. Replaced files are TOMBSTONED after the
-    * commit, never deleted: older snapshots keep time-traveling;
-    * [[expireSnapshots]] reclaims.
+    * from the touched buckets. Replaced files stay on disk, so older
+    * snapshots keep time-traveling; [[expireSnapshots]] reclaims them.
     */
   def writePrePartitioned(df0: DataFrame, table: String, numParts: Int,
                           keyCol: String = "",
@@ -766,8 +728,6 @@ object IcebergishTable {
     val df = withFieldIds(df0, table)
     validateAppend(table, keyCol, numParts, df.schema)
     val base = currentSnapshot(table) // pin before staging (see contract)
-    val baseFiles: Seq[String] =
-      if (base < 0) Seq.empty else Manifest.read(table, base).paths
     val (added, touched) =
       stagePromote(df, table, alsoReplace = replaceParts)
     val touchedSet = touched.toSet
@@ -778,8 +738,6 @@ object IcebergishTable {
         dropParent = f => touchedSet.contains(bucketOfPath(f)),
         expectedParent = Some(base))
     }
-    addTombstones(table,
-      baseFiles.filter(f => touchedSet.contains(bucketOfPath(f))))
   }
 
   /** APPEND a DataFrame that is already hash-partitioned on `PartCol` into
@@ -844,14 +802,6 @@ object IcebergishTable {
     */
   def snapshotGhostNames(table: String, snapshot: Int): Seq[String] =
     tryLoad(table, snapshot).fold(Seq.empty[String])(_.ghosts)
-
-  /** Delete-file sequence numbers of a snapshot. Pre-delseq manifests can
-    * only contain POSITION delete files (equality deletes arrived with
-    * delseqs), which never consult their seq — 0 keeps the map total.
-    */
-  def snapshotDeleteSeqs(table: String, snapshot: Int): Map[String, Long] =
-    tryLoad(table, snapshot).fold(Map.empty[String, Long])(
-      _.deletes.map(x => x.path -> x.seq).toMap)
 
   /** Position-delete files recorded in a snapshot's manifest (relative
     * paths under `deletes/`). Empty when the snapshot predates MOR deletes
@@ -976,7 +926,7 @@ object IcebergishTable {
     s.replace("\\", "\\\\").replace("\t", "\\t")
       .replace("\n", "\\n").replace("\r", "\\r")
 
-  private def unescTsv(s: String): String = {
+  private[graft] def unescTsv(s: String): String = {
     val b = new StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
@@ -1156,10 +1106,13 @@ object IcebergishTable {
     * Exactly-once: an epoch at or below [[streamEpoch]] is a replay — its
     * staged files are discarded, nothing commits. A crash AFTER files were
     * promoted but BEFORE the manifest swap leaves orphans in bucket dirs;
-    * before promoting the retry, this sweeps the live data files that no
-    * current manifest references and whose names carry this query's
-    * `-q<queryId>-` segment (a no-op when nothing is orphaned). Other
-    * writers' uncommitted files are left alone.
+    * before promoting the retry, this sweeps the data files that the
+    * current manifest does not reference and whose names carry this
+    * epoch's `-q<queryId>-e<epochId>-` segment (a no-op when nothing is
+    * orphaned). Micro-batches run one at a time, so only an uncommitted
+    * attempt of this epoch can have left such files; earlier epochs' files
+    * that a compaction replaced stay for time travel, and other writers'
+    * uncommitted files are left alone.
     */
   def streamCommit(table: String, staged: Seq[(Int, String)],
                    queryId: String, epochId: Long): Unit =
@@ -1186,14 +1139,14 @@ object IcebergishTable {
     }
     val m = Manifest.read(table, cur)
     // Sweep a crashed attempt's promoted-but-uncommitted files — but ONLY
-    // this query's own (file names carry a -q<queryId>- segment): a full
-    // rollback sweep would also reap a concurrent batch maintenance
-    // writer's (e.g. compact's) job-committed-but-not-yet-manifest-
-    // committed files in its promote window.
+    // this epoch's own (file names carry a -q<queryId>-e<epochId>-
+    // segment): a wider sweep would also reap a concurrent maintenance
+    // writer's (e.g. compact's) files in its promote window, or earlier
+    // epochs' files that a compaction replaced but older snapshots read.
     val committed = m.paths.toSet
     listDataFiles(table)
       .filterNot(committed)
-      .filter(_.contains(s"-q$queryId-"))
+      .filter(_.contains(s"-q$queryId-e$epochId-"))
       .foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
     val promoted = staged.map { case (b, rel) =>
       val src = dir(table).resolve(rel)
@@ -1215,13 +1168,10 @@ object IcebergishTable {
     sweepStaging()
   }
 
-  /** Remove the data directories of the given buckets. Dynamic partition
-    * overwrite only replaces partitions PRESENT in the written data — a
-    * recomputed bucket that now holds zero rows would otherwise keep its
-    * stale files on disk (and be re-counted as current by any read-back).
-    * Callers delete the pending buckets they are about to (re)write; those
-    * buckets are unacked by definition, so a crash after the delete simply
-    * recomputes them on resume.
+  /** Remove the data directories of the given buckets, bypassing the
+    * manifests: the committed files there go missing under the current
+    * snapshot. No write path calls this; specs use it to tamper with a
+    * table (a deleted bucket must fail resume verification and recompute).
     */
   def deletePartitionDirs(table: String, parts: Seq[Int]): Unit =
     parts.foreach { p =>
@@ -1277,11 +1227,6 @@ object IcebergishTable {
   private def structOf(schemaJson: String): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-
-  /** Live (non-tombstoned) data files, relative to the table root — the
-    * DSv2 scan filters its bucket-directory listings against this.
-    */
-  def liveDataFiles(table: String): Set[String] = listDataFiles(table).toSet
 
   /** All position-delete files on disk (relative paths). */
   private def listDeleteFiles(table: String): Seq[String] = {
@@ -1503,46 +1448,30 @@ object IcebergishTable {
   def exists(table: String): Boolean =
     Files.exists(dir(table).resolve("VERSION"))
 
-  /** True when the table currently has no data files at all (e.g. only a
-    * committer _SUCCESS marker) — readers must not assume parquet schema
-    * inference will work.
-    */
-  def hasNoDataFiles(table: String): Boolean = listDataFiles(table).isEmpty
-
-  /** Roll the table back to `snapshot`: delete every data file NOT in that
-    * snapshot's manifest and swap VERSION back (atomic). Idempotent — a
-    * crash mid-rollback just deletes fewer files and the retry finishes.
+  /** Roll the table back to `snapshot`: delete every data and delete file
+    * that no surviving manifest (snapshots <= `snapshot`) references and
+    * swap VERSION back (atomic). Older snapshots keep time-traveling — a
+    * compaction's inputs are the restored snapshot's files, and earlier
+    * manifests still reference the delete files a replace-all dropped.
+    * Idempotent — a crash mid-rollback just deletes fewer files and the
+    * retry finishes.
     */
   def rollbackTo(table: String, snapshot: Int): Unit = {
-    // Strict decode: a torn manifest read leniently as "no files" would
-    // make the loop below delete every live data file.
-    val keep = Manifest.load(table, snapshot).getOrElse(
-      throw new graft.SnapshotNotFound(table, snapshot)).paths.toSet
+    // Strict decode: a torn surviving manifest read leniently as "no
+    // files" would make the sweep below delete files it still needs.
+    val surviving = manifestsOnDisk(table, strict = _ <= snapshot)
+      .filter(_.snapshot <= snapshot)
+    if (!surviving.exists(_.snapshot == snapshot))
+      throw new graft.SnapshotNotFound(table, snapshot)
     val priorCurrent = currentSnapshot(table)
+    val keep = surviving.flatMap(_.paths).toSet
     listDataFiles(table).filterNot(keep).foreach { f =>
       Files.deleteIfExists(dir(table).resolve(f))
     }
-    // Delete files: the target manifest's deletes list is the post-rollback
-    // CURRENT state, but manifests OLDER than the target can still
-    // reference delete files the target dropped — an intervening
-    // replace-all (compact/overwrite) resets the carried deletes list, yet
-    // the pre-compact snapshots survive the rollback and time travel
-    // through them must keep resolving their tombstones. Keep the union
-    // over every surviving manifest (snapshots <= target), mirroring
-    // expireSnapshots' retainedDeletes — data files already get the
-    // equivalent protection from tombstone-aware listDataFiles.
-    val keepDeletes = (0 to snapshot)
-      .flatMap(snapshotDeleteFiles(table, _)).toSet
+    val keepDeletes = surviving.flatMap(_.deletes.map(_.path)).toSet
     listDeleteFiles(table).filterNot(keepDeletes).foreach { f =>
       Files.deleteIfExists(dir(table).resolve(f))
     }
-    // Tombstone bookkeeping must follow the table back in time: rolling
-    // back over a compaction lands on a manifest whose files ARE the
-    // tombstoned ones — leaving them in TOMBSTONES would make the restored
-    // state read back empty/partial (read(), DSv2 scans, and every later
-    // directory-derived commit exclude tombstoned files). Files the target
-    // manifest references are live again by definition.
-    writeTombstones(table, tombstones(table) -- keep)
     // Rollback deliberately moves the pointer BACKWARDS (exclusive
     // maintenance op) — direct swap, but with a unique temp name so no
     // other writer's half-moved temp can ever be truncated.
@@ -1560,10 +1489,10 @@ object IcebergishTable {
   }
 
   /** Compact the table: rewrite current content as one fresh file set per
-    * bucket, TOMBSTONE every superseded file (still on disk — earlier
-    * snapshots keep time-traveling), and commit a new snapshot over the
-    * fresh files only. Reclaim tombstoned files with [[expireSnapshots]]
-    * (Iceberg's rewrite_data_files + expire_snapshots split). The
+    * bucket and commit a new snapshot over the fresh files only. The
+    * superseded files stay on disk — earlier snapshots keep time-traveling
+    * — until [[expireSnapshots]] reclaims them (Iceberg's
+    * rewrite_data_files + expire_snapshots split). The
     * streaming sink's maintenance valve: each micro-batch appends one file
     * set per bucket, and unbounded appends otherwise degrade scans into
     * small-file storms.
@@ -1590,7 +1519,6 @@ object IcebergishTable {
     val startSnap = currentSnapshot(table)
     if (startSnap < 0) throw new graft.TableNotFound(table)
     val m = Manifest.read(table, startSnap)
-    val prevFiles = m.paths.toSet
     val current = readManifest(spark, table, m)
       .repartition(numParts, col(PartCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1615,21 +1543,15 @@ object IcebergishTable {
         fresh.foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
         throw e
     }
-    // Supersede the inputs only AFTER the commit is durable (tombstoning
-    // first would mark still-current files dead across a crash window).
-    // Tombstones are pure space-reclaim bookkeeping now — commits no longer
-    // consult them — and [[expireSnapshots]] deletes them once no retained
-    // snapshot references them.
-    addTombstones(table, prevFiles.toSeq)
   }
 
   /** PARTITION-SPEC EVOLUTION: rewrite the table under a new bucket
     * layout (different key and/or bucket count) in one replace-all commit
     * — the Iceberg `REPLACE PARTITION FIELD` analog for a hash-bucketed
     * format whose layout IS physical. History is preserved: superseded
-    * files are tombstoned (old snapshots keep time-traveling under the
-    * OLD spec — era metadata, like era schemas) and [[expireSnapshots]]
-    * reclaims. After the commit the catalog reports the new
+    * files stay on disk (old snapshots keep time-traveling under the OLD
+    * spec — era metadata, like era schemas) until [[expireSnapshots]]
+    * reclaims them. After the commit the catalog reports the new
     * `bucket(newNumParts, newKey)` transform, appends validate against
     * the new spec, and storage-partitioned joins co-partition on it.
     * Pinned + typed [[graft.CommitConflict]] like every replace-type
@@ -1645,7 +1567,6 @@ object IcebergishTable {
     if (!dataCols.contains(newKey))
       throw new graft.InvalidConfig(
         s"new bucket key '$newKey' is not a column of ${dataCols.mkString(",")}")
-    val prevFiles = m.paths.toSet
     val rewritten = withFieldIds(readManifest(spark, table, m)
       .drop(PartCol)
       .withColumn(PartCol, partExpr(newKey, newNumParts))
@@ -1664,7 +1585,6 @@ object IcebergishTable {
         fresh.foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
         throw e
     }
-    addTombstones(table, prevFiles.toSeq)
   }
 
   /** Row-level DELETE. Two physical strategies behind one semantic:
@@ -1905,15 +1825,13 @@ object IcebergishTable {
 
   /** Shared COW core of [[deleteWhere]]/[[mergeRows]]: stage + promote the
     * replacement rows of `touched` buckets, commit them over exactly those
-    * buckets' parent files (pinned to `startSnap`), tombstone the replaced
-    * files for expiry. Conflict → fresh files cleaned, typed rethrow.
+    * buckets' parent files (pinned to `startSnap`); the replaced files
+    * stay on disk for expiry. Conflict → fresh files cleaned, typed rethrow.
     */
   private def rewriteBuckets(table: String, startSnap: Int,
                              schemaJson: String,
                              spec: Option[(String, Int)],
                              touched: Set[Int], replacement: DataFrame): Unit = {
-    val replacedFiles = snapshotFiles(table, startSnap)
-      .filter(f => touched.contains(bucketOfPath(f)))
     // Re-annotate: unionByName/joins in the replacement plan may have
     // dropped the field-id metadata the fresh files must embed.
     val (fresh, _) = stagePromote(withFieldIds(replacement, table), table)
@@ -1927,7 +1845,6 @@ object IcebergishTable {
         fresh.foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
         throw e
     }
-    addTombstones(table, replacedFiles)
   }
 
   /** Delete data files referenced by NO existing snapshot manifest — the
@@ -1942,26 +1859,8 @@ object IcebergishTable {
     */
   def removeOrphans(table: String, olderThanMs: Long = 3600000L): Seq[String] = {
     val d = dir(table)
-    if (!exists(table)) throw new graft.TableNotFound(table)
     val cur = currentSnapshot(table)
-    val manifests: Seq[Manifest] = {
-      val s = Files.list(d)
-      val snaps =
-        try s.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.matches("snap-\\d+\\.json"))
-          .map(_.stripPrefix("snap-").stripSuffix(".json").toInt).toSeq
-        finally s.close()
-      // An undecodable NON-current manifest (external corruption — the
-      // commit protocol publishes complete-or-nothing) contributes no
-      // files and must not wedge the vacuum forever; a corrupt CURRENT
-      // manifest stays loud (deleting against it could reap live data).
-      snaps.flatMap { snap =>
-        try Manifest.load(table, snap)
-        catch {
-          case e: graft.ManifestCorrupted => if (snap == cur) throw e else None
-        }
-      }
-    }
+    val manifests = manifestsOnDisk(table, strict = _ == cur)
     val referenced = manifests.flatMap(_.paths).toSet
     val data = d.resolve("data")
     if (!Files.exists(data)) return Seq.empty
@@ -1986,21 +1885,45 @@ object IcebergishTable {
     candidates.map(_._1.toString) ++ orphanDeletes
   }
 
-  /** Physically delete tombstoned files referenced by NO retained snapshot
-    * and drop the expired manifests. The `keepLast` most recent snapshots
-    * survive (and keep time-traveling); older `readSnapshot` calls fail
-    * loudly afterwards — exactly Iceberg's expired-snapshot behavior.
+  /** Every snapshot manifest on disk, decoded — the reachability set space
+    * reclaim is decided from. An undecodable manifest (external corruption
+    * — the commit protocol publishes complete-or-nothing) for which
+    * `strict` is false contributes no files, so it cannot wedge a sweep
+    * forever; one for which `strict` holds stays loud (deleting against it
+    * could reap files it references).
+    */
+  private def manifestsOnDisk(table: String, strict: Int => Boolean): Seq[Manifest] = {
+    if (!exists(table)) throw new graft.TableNotFound(table)
+    val s = Files.list(dir(table))
+    val snaps =
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches("snap-\\d+\\.json"))
+        .map(_.stripPrefix("snap-").stripSuffix(".json").toInt).toSeq.sorted
+      finally s.close()
+    snaps.flatMap { snap =>
+      try Manifest.load(table, snap)
+      catch {
+        case e: graft.ManifestCorrupted => if (strict(snap)) throw e else None
+      }
+    }
+  }
+
+  /** Drop the manifests of all but the `keepLast` most recent snapshots and
+    * physically delete the data files they reference that no retained
+    * snapshot does. Retained snapshots keep time-traveling; older
+    * `readSnapshot` calls fail loudly afterwards — exactly Iceberg's
+    * expired-snapshot behavior. Files go before manifests, so a crashed
+    * expiry re-runs cleanly.
     */
   def expireSnapshots(table: String, keepLast: Int = 1): Unit = {
     require(keepLast >= 1, "must retain at least the current snapshot")
     val cur = currentSnapshot(table)
     val keepFrom = math.max(0, cur - keepLast + 1)
-    val kept = (keepFrom to cur).flatMap(Manifest.load(table, _))
+    val (kept, expired) = manifestsOnDisk(table, strict = _ >= keepFrom)
+      .partition(_.snapshot >= keepFrom)
     val retained = kept.flatMap(_.paths).toSet
-    val (reclaimable, stillNeeded) = tombstones(table)
-      .partition(f => !retained.contains(f))
-    reclaimable.foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
-    writeTombstones(table, stillNeeded)
+    expired.flatMap(_.paths).distinct.filterNot(retained)
+      .foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
     // Position-delete files referenced by NO retained snapshot (e.g. after
     // a compact folded them into data) reclaim with the manifests that
     // referenced them.
@@ -2011,17 +1934,6 @@ object IcebergishTable {
       Files.deleteIfExists(dir(table).resolve(s"snap-$s.json"))
     }
   }
-
-  /** (relative path, size) pairs from a snapshot's manifest, when it
-    * carries sizes (tables committed before the feature return None →
-    * callers fall back to directory stat). Enables metadata-only scan
-    * planning: zero filesystem calls on the plan path.
-    */
-  def snapshotFilesWithSizes(table: String,
-                             snapshot: Int): Option[Seq[(String, Long)]] =
-    Manifest.load(table, snapshot).flatMap(m =>
-      Option.when(m.files.forall(_.size.isDefined))(
-        m.files.map(f => f.path -> f.size.get)))
 
   /** Everything a metadata-aggregation decision needs from ONE manifest
     * read: live files, per-file row counts (-1 where untracked), delete
@@ -2041,13 +1953,6 @@ object IcebergishTable {
       Some(m.files.map(f => f.path -> f.rows).toMap), m.deletes.map(_.path),
       m.ghosts, m.files.map(f => f.path -> f.stats).toMap))
 
-  /** (file → data sequence number) of a snapshot: the snapshot id that
-    * added each file. Files from pre-seq manifests map to 0.
-    */
-  def snapshotFileSeqs(table: String, snapshot: Int): Map[String, Long] =
-    Manifest.load(table, snapshot).fold(Map.empty[String, Long])(
-      _.files.map(f => f.path -> f.seq).toMap)
-
   /** Relative data-file list of a snapshot manifest, distinguishing a
     * MISSING/expired manifest (None — callers usually fail loudly) from a
     * legitimately empty one (Some(empty) — createEmpty/CTAS state). One
@@ -2056,14 +1961,6 @@ object IcebergishTable {
     */
   def snapshotFilesOpt(table: String, snapshot: Int): Option[Seq[String]] =
     Manifest.load(table, snapshot).map(_.paths)
-
-  /** Relative data-file list recorded in a snapshot's manifest (empty when
-    * the manifest is missing/expired — use [[snapshotFilesOpt]] where the
-    * two cases must not be conflated). Public for the DSv2 catalog's
-    * time-travel reads.
-    */
-  def snapshotFiles(table: String, snapshot: Int): Seq[String] =
-    snapshotFilesOpt(table, snapshot).getOrElse(Seq.empty)
 
   /** Run `body`, retrying up to `attempts` times on [[graft.CommitConflict]]
     * with exponential backoff + jitter — the commit-layer twin of the

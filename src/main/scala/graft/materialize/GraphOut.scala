@@ -46,15 +46,11 @@ object GraphOut {
     val expected: Map[Int, String] =
       rows.groupBy(_.part).view.mapValues(_.last.input_fingerprint).toMap
     val done = expected.keySet
-    // A table with NO data files at all (zero-row run, or a wholesale
-    // delete behind the checkpoint's back) must not crash schema inference:
-    // verify against an empty read-back — zero-row acks (fp "0") stay done,
-    // anything else demotes to pending and recomputes.
-    if (IcebergishTable.hasNoDataFiles(table))
-      return done.filter(p => expected(p) == "0")
     // Tamper-tolerant read: a deleted acked file must surface as a
     // fingerprint mismatch below (→ demote to pending and recompute),
-    // not abort the verification with a missing-path error.
+    // not abort the verification with a missing-path error. A table with
+    // no readable data files reads as a schema-typed empty frame, so only
+    // zero-row acks (fp "0") stay done.
     val actual = IcebergishTable.readVerification(spark, table)
       .where(col(IcebergishTable.PartCol).isin(done.toSeq: _*))
       .groupBy(col(IcebergishTable.PartCol))
@@ -66,8 +62,8 @@ object GraphOut {
   }
 
   /** Shared grouped-write core: for each group of pending buckets, build the
-    * group's pre-partitioned plan, clear the group's (possibly stale) bucket
-    * dirs, write, then ack with lineage. `plan(group)` must return
+    * group's pre-partitioned plan, write it over the group's buckets, then
+    * ack with lineage. `plan(group)` must return
     * a DataFrame already exchange-partitioned on [[IcebergishTable.PartCol]]
     * (each task holds exactly one bucket).
     *
@@ -108,10 +104,9 @@ object GraphOut {
       }
       val deduped = plan(group)
         .observe(obs, metricCols.head, metricCols.tail: _*)
-      // replaceParts = the WHOLE group: writePrePartitioned clears the
-      // group's (possibly stale) bucket dirs itself before promoting, and
-      // a rewritten bucket that came out empty still leaves the parent
-      // manifest.
+      // replaceParts = the WHOLE group: every bucket of the group leaves
+      // the parent manifest, a rewritten bucket that came out empty
+      // included. The replaced files stay on disk until expiry.
       IcebergishTable.writePrePartitioned(deduped, table, numParts, keyCol,
         replaceParts = group)
       val wallMs = (System.nanoTime() - t0) / 1000000L

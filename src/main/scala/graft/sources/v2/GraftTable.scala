@@ -2,8 +2,6 @@ package graft.sources.v2
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -19,7 +17,7 @@ import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, In, Inserta
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.io.IcebergishTable
+import graft.io.{IcebergishTable, Manifest}
 
 /** One Icebergish table exposed through DataSource V2 (see [[GraftCatalog]]).
   *
@@ -491,28 +489,28 @@ final class GraftScan(path: String, dataSchema: StructType,
       case None => plannedPartitions
     }
 
-  /** The snapshot this scan reads — resolved ONCE so partition planning,
-    * delete metadata, and the reader factory agree even if the table
-    * advances mid-planning.
+  /** The manifest of the snapshot this scan reads — decoded ONCE so
+    * partition planning, delete metadata, and the reader factory agree
+    * even if the table advances mid-planning. An expired pinned snapshot
+    * fails loudly.
     */
-  private lazy val resolvedSnap: Int =
-    snapshot.getOrElse(IcebergishTable.currentSnapshot(path))
+  private lazy val manifest: Manifest = Manifest.read(path,
+    snapshot.getOrElse(IcebergishTable.currentSnapshot(path)))
 
   /** Equality-delete groups of the snapshot (raw cells; executor types
     * them against the read schema).
     */
   private lazy val eqGroups: Seq[GraftEqGroup] = {
-    val delseqs = IcebergishTable.snapshotDeleteSeqs(path, resolvedSnap)
     val schema = StructType(dataSchema.fields ++
       Seq(StructField(IcebergishTable.PartCol, IntegerType, nullable = false)))
-    IcebergishTable.snapshotDeleteFiles(path, resolvedSnap)
-      .filter(IcebergishTable.isEqDeleteFile)
-      .flatMap { f =>
-        IcebergishTable.readEqDeleteFile(path, f).map { case (cols, ids, rows) =>
+    manifest.deletes
+      .filter(d => IcebergishTable.isEqDeleteFile(d.path))
+      .flatMap { d =>
+        IcebergishTable.readEqDeleteFile(path, d.path).map { case (cols, ids, rows) =>
           // Resolve by field id first: the tombstone survives key-column
           // renames since it was written.
           (IcebergishTable.resolveEqCols(path, schema, cols, ids),
-            rows.map(r => (r, delseqs.getOrElse(f, 0L))))
+            rows.map(r => (r, d.seq)))
         }
       }
       .groupBy(_._1)
@@ -523,123 +521,53 @@ final class GraftScan(path: String, dataSchema: StructType,
 
   private def planPartitions(): Array[InputPartition] = {
     val root = java.nio.file.Paths.get(path)
-    val snap = resolvedSnap
-    // METADATA-ONLY planning: the manifest records every live file WITH its
-    // size, so planning makes zero filesystem calls — at 10^5 buckets the
-    // old walk (one listing + one stat per file, driver-side) was the plan
-    // path's scale limit, exactly the problem Iceberg manifests solve.
-    // Commits derive the manifest from the live set, so current-state reads
-    // through the manifest equal the old directory view (minus any crashed
-    // writer's orphans, which the manifest correctly excludes).
-    IcebergishTable.snapshotFilesWithSizes(path, snap) match {
-      case Some(withSizes) =>
-        // FILE-LEVEL DATA SKIPPING: manifest zone maps (per-file column
-        // min/max) drop files whose ranges cannot satisfy the pushed data
-        // filters — before bucket grouping, before any footer or data
-        // read. Conservative: files without stats always survive, and the
-        // same filters still reach the parquet reader for row-group
-        // pruning inside surviving files.
-        val statPreds = dataFilters.toSeq
-          .flatMap(f => graft.io.ManifestStats.fromFilter(f, dataSchema))
-        val skipped: Set[String] =
-          if (statPreds.isEmpty) Set.empty
-          else {
-            val all = withSizes.map(_._1)
-            all.toSet -- graft.io.ManifestStats.prune(
-              path, snap, dataSchema, statPreds, all)
-          }
-        // MERGE-ON-READ: position-delete ordinals per data file, merged
-        // across the snapshot's POSITION delete files at plan time (delete
-        // sets are driver-small by the MOR write path's own threshold);
-        // equality deletes ride separately (eqGroups + per-file seqs).
-        val delByFile: Map[String, Array[Long]] =
-          IcebergishTable.snapshotDeleteFiles(path, snap)
-            .filterNot(IcebergishTable.isEqDeleteFile)
-            .flatMap(IcebergishTable.readDeleteFile(path, _))
-            .groupBy(_._1)
-            .map { case (f, ps) => f -> ps.map(_._2).distinct.sorted.toArray }
-        val fileSeqs: Map[String, Long] =
-          if (eqGroups.isEmpty) Map.empty
-          else IcebergishTable.snapshotFileSeqs(path, snap)
-        withSizes
-          .filterNot { case (rel, _) => skipped.contains(rel) }
-          .map { case (rel, size) =>
-            (IcebergishTable.bucketOfPath(rel), rel, size) }
-          .filter { case (b, _, _) => prunedBuckets.forall(_.contains(b)) }
-          .groupBy(_._1).toSeq.sortBy(_._1)
-          .map { case (b, files) =>
-            val partValues: InternalRow =
-              if (needsPart) new GenericInternalRow(Array[Any](b))
-              else InternalRow.empty
-            val sorted = files.sortBy(_._2)
-            GraftBucketPartition(b,
-              sorted.map { case (_, rel, size) =>
-                PartitionedFile(partValues,
-                  SparkPath.fromPathString(root.resolve(rel).toAbsolutePath.toString),
-                  0L, size, Array.empty, 0L, size)
-              }.toArray,
-              sorted.map { case (_, rel, _) =>
-                delByFile.getOrElse(rel, Array.empty[Long])
-              }.toArray,
-              sorted.map { case (_, rel, _) =>
-                fileSeqs.getOrElse(rel, 0L)
-              }.toArray): InputPartition
-          }
-          .toArray
-      case None =>
-        planPartitionsByWalk() // pre-"sizes" manifests: stat fallback
-    }
-  }
-
-  /** Directory-walk fallback for tables committed before manifests carried
-    * file sizes: lists bucket dirs and stats each live file (pinned reads
-    * keep their exact manifest file list; expired pins fail loudly).
-    */
-  private def planPartitionsByWalk(): Array[InputPartition] = {
-    val dataDir = java.nio.file.Paths.get(path, "data")
-    if (!java.nio.file.Files.isDirectory(dataDir)) return Array.empty
-    val root = java.nio.file.Paths.get(path)
-    val live: Set[String] = snapshot match {
-      case Some(s) =>
-        // ONE manifest read: EXPIRED (manifest gone → fail loudly) vs a
-        // legitimately empty snapshot (createEmpty/CTAS → empty scan) —
-        // an exists-then-reread pair would race concurrent expiry into a
-        // silent empty result.
-        IcebergishTable.snapshotFilesOpt(path, s)
-          .getOrElse(throw new graft.SnapshotNotFound(path, s)).toSet
-      case None => IcebergishTable.liveDataFiles(path)
-    }
-    val bucketDirs = {
-      val s = java.nio.file.Files.list(dataDir)
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith(
-          IcebergishTable.PartCol + "="))
-        .toSeq
-      finally s.close()
-    }
-    bucketDirs
-      .map(d => d.getFileName.toString
-        .stripPrefix(IcebergishTable.PartCol + "=").toInt -> d)
-      .filter { case (b, _) => prunedBuckets.forall(_.contains(b)) }
-      .sortBy(_._1)
-      .map { case (b, d) =>
+    val m = manifest
+    // METADATA-ONLY planning: the manifest records every file of the
+    // snapshot WITH its size, so planning makes zero filesystem calls — at
+    // 10^5 buckets a directory walk (one listing + one stat per file,
+    // driver-side) would be the plan path's scale limit, exactly the
+    // problem Iceberg manifests solve. Manifests written before sizes were
+    // recorded stat each file instead.
+    //
+    // FILE-LEVEL DATA SKIPPING: manifest zone maps (per-file column
+    // min/max) drop files whose ranges cannot satisfy the pushed data
+    // filters — before bucket grouping, before any footer or data read.
+    // Conservative: files without stats always survive, and the same
+    // filters still reach the parquet reader for row-group pruning inside
+    // surviving files.
+    val statPreds = dataFilters.toSeq
+      .flatMap(f => graft.io.ManifestStats.fromFilter(f, dataSchema))
+    // MERGE-ON-READ: position-delete ordinals per data file, merged across
+    // the snapshot's POSITION delete files at plan time (delete sets are
+    // driver-small by the MOR write path's own threshold); equality
+    // deletes ride separately (eqGroups + per-file seqs).
+    val delByFile: Map[String, Array[Long]] =
+      m.deletes.map(_.path)
+        .filterNot(IcebergishTable.isEqDeleteFile)
+        .flatMap(IcebergishTable.readDeleteFile(path, _))
+        .groupBy(_._1)
+        .map { case (f, ps) => f -> ps.map(_._2).distinct.sorted.toArray }
+    val kept = graft.io.ManifestStats.prune(path, m.snapshot, dataSchema,
+      statPreds, m.paths).toSet
+    m.files
+      .filter(f => kept(f.path))
+      .filter(f => prunedBuckets.forall(_.contains(
+        IcebergishTable.bucketOfPath(f.path))))
+      .groupBy(f => IcebergishTable.bucketOfPath(f.path)).toSeq.sortBy(_._1)
+      .map { case (b, files) =>
         val partValues: InternalRow =
           if (needsPart) new GenericInternalRow(Array[Any](b))
           else InternalRow.empty
-        val s = java.nio.file.Files.list(d)
-        val files = try s.iterator().asScala
-          .filter(_.toString.endsWith(".parquet"))
-          .filter(f => live.contains(root.relativize(f).toString))
-          .toArray.sortBy(_.toString)
-          .map { f =>
-            val size = java.nio.file.Files.size(f)
+        val sorted = files.sortBy(_.path)
+        GraftBucketPartition(b,
+          sorted.map { f =>
+            val abs = root.resolve(f.path).toAbsolutePath
+            val size = f.size.getOrElse(java.nio.file.Files.size(abs))
             PartitionedFile(partValues,
-              SparkPath.fromPathString(f.toAbsolutePath.toString),
-              0L, size, Array.empty,
-              java.nio.file.Files.getLastModifiedTime(f).toMillis, size)
-          }
-        finally s.close()
-        GraftBucketPartition(b, files): InputPartition
+              SparkPath.fromPathString(abs.toString), 0L, size, Array.empty, 0L, size)
+          }.toArray,
+          sorted.map(f => delByFile.getOrElse(f.path, Array.empty[Long])).toArray,
+          sorted.map(_.seq).toArray): InputPartition
       }
       .toArray
   }
@@ -663,7 +591,7 @@ final class GraftScan(path: String, dataSchema: StructType,
     // Ghost names (drop/rename name reuse) additionally suppress by-name
     // parquet filter pushdown on the clone — see readSession's doc.
     val session = IcebergishTable.readSession(SparkSession.active,
-      readDataSchema, IcebergishTable.snapshotGhostNames(path, resolvedSnap))
+      readDataSchema, manifest.ghosts)
     val hadoopConf = session.sessionState.newHadoopConf()
     val fileIndex = new InMemoryFileIndex(session, Seq.empty, Map.empty, None)
     val inner = ParquetScan(session, hadoopConf, fileIndex, dataSchema,
@@ -850,9 +778,8 @@ final class GraftMicroBatchStream(path: String, dataSchema: StructType,
     val s = start.asInstanceOf[GraftSnapshotOffset].snapshot
     val e = end.asInstanceOf[GraftSnapshotOffset].snapshot
     if (e <= s) return Array.empty
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(path, s"snap-$e.json")))
-      throw new graft.SnapshotNotFound(path, e) // expired under the stream
+    val after = Manifest.load(path, e)
+      .getOrElse(throw new graft.SnapshotNotFound(path, e)) // expired under the stream
     val before: Set[String] =
       if (s < 0) Set.empty
       else IcebergishTable.snapshotFilesOpt(path, s)
@@ -860,16 +787,9 @@ final class GraftMicroBatchStream(path: String, dataSchema: StructType,
         // as "no prior files" would re-emit the whole table as one giant
         // duplicate batch after an expiry during stream downtime.
         .getOrElse(throw new graft.SnapshotNotFound(path, s)).toSet
-    // Manifest-recorded sizes (present on every current-format commit)
-    // make batch planning metadata-only; pre-"sizes" manifests stat.
-    val sizeOf: Map[String, Long] =
-      IcebergishTable.snapshotFilesWithSizes(path, e)
-        .map(_.toMap).getOrElse(Map.empty)
-    val after = IcebergishTable.snapshotFiles(path, e)
     val root = java.nio.file.Paths.get(path)
-    val added = after.filterNot(before)
-    added
-      .groupBy(IcebergishTable.bucketOfPath)
+    after.files.filterNot(f => before(f.path))
+      .groupBy(f => IcebergishTable.bucketOfPath(f.path))
       // The ScanBuilder is shared between batch and streaming: pushFilters
       // consumes part-column predicates as fully-handled (non-residual), so
       // the stream MUST honor the same pruning — dropping it here would
@@ -877,18 +797,20 @@ final class GraftMicroBatchStream(path: String, dataSchema: StructType,
       // pushdown on a streaming scan.
       .filter { case (b, _) => prunedBuckets.forall(_.contains(b)) }
       .toSeq.sortBy(_._1)
-      .map { case (b, rels) =>
+      .map { case (b, added) =>
         val partValues: InternalRow =
           if (needsPart) new GenericInternalRow(Array[Any](b))
           else InternalRow.empty
-        val files = rels.sorted.map { rel =>
-          val f = root.resolve(rel)
+        val files = added.sortBy(_.path).map { df =>
+          val f = root.resolve(df.path)
           // Unlike batch planning, keep the existence probe: a micro-batch
           // reads few files, and "compacted/expired under the stream" must
           // surface at plan time, not as a mid-task read failure.
           if (!java.nio.file.Files.exists(f))
             throw new graft.SnapshotNotFound(path, e)
-          val size = sizeOf.getOrElse(rel, java.nio.file.Files.size(f))
+          // Manifest-recorded sizes make planning metadata-only; manifests
+          // written before sizes were recorded stat.
+          val size = df.size.getOrElse(java.nio.file.Files.size(f))
           PartitionedFile(partValues,
             SparkPath.fromPathString(f.toAbsolutePath.toString),
             0L, size, Array.empty, 0L, size)
@@ -984,7 +906,7 @@ final class GraftMorReader(part: GraftBucketPartition,
       val types = ords.map(rowSchema(_).dataType)
       val entries = g.entries.map { case (cells, sq) =>
         (cells.toSeq.zip(types.toSeq).map[Any] { case (cell, dt) => dt match {
-          case StringType => unescTsvCell(cell)
+          case StringType => IcebergishTable.unescTsv(cell)
           case LongType | IntegerType | ShortType | ByteType =>
             java.lang.Long.valueOf(cell.toLong)
           case other => throw new IllegalStateException(
@@ -993,22 +915,6 @@ final class GraftMorReader(part: GraftBucketPartition,
       }
       (ords, types, entries)
     }
-
-  private def unescTsvCell(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 't' => b.append('\t'); case 'n' => b.append('\n')
-          case 'r' => b.append('\r'); case o => b.append(o)
-        }
-        i += 2
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
 
   private var idx = -1
   private var cur: PartitionReader[InternalRow] = _

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.io.IcebergishTable
+import graft.io.{IcebergishTable, Manifest}
 
 /** Round-5 equality deletes (Iceberg v2 equality-delete files): blind
   * delete-by-key with NO data scan, scoped by per-file sequence numbers so
@@ -25,7 +25,7 @@ class EqualityDeleteSpec extends SparkSpec {
     import spark.implicits._
     val t = seed("graft-eq")
     val s0 = IcebergishTable.currentSnapshot(t)
-    val files0 = IcebergishTable.snapshotFiles(t, s0)
+    val files0 = Manifest.read(t, s0).paths
     val mtimes0 = files0.map(f => f ->
       Files.getLastModifiedTime(java.nio.file.Paths.get(t).resolve(f))).toMap
 
@@ -33,7 +33,7 @@ class EqualityDeleteSpec extends SparkSpec {
       Seq("k3", "k77", "kNoSuch").toDF("k"), Seq("k"))
 
     val s1 = IcebergishTable.currentSnapshot(t)
-    assert(IcebergishTable.snapshotFiles(t, s1) == files0)
+    assert(Manifest.read(t, s1).paths == files0)
     files0.foreach { f =>
       assert(Files.getLastModifiedTime(
         java.nio.file.Paths.get(t).resolve(f)) == mtimes0(f), s"$f touched")
@@ -104,7 +104,7 @@ class EqualityDeleteSpec extends SparkSpec {
     assert(IcebergishTable.read(spark, t).count() == 98)
     // Compacted files carry a NEW seq: a stale eq tombstone could never
     // re-apply to them even if it survived (it did not).
-    assert(IcebergishTable.snapshotFileSeqs(t, cur).values.forall(_ == cur))
+    assert(Manifest.read(t, cur).files.map(_.seq).forall(_ == cur))
 
     // Rollback over an eq delete restores the rows and reclaims the file.
     val t2 = seed("graft-eq-rb")

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.io.IcebergishTable
+import graft.io.{IcebergishTable, Manifest}
 
 /** DSv2 catalog: correctness, pushdown, bucket pruning, and the headline —
   * a bucket-key join between co-bucketed tables plans storage-partitioned
@@ -210,6 +210,29 @@ class GraftCatalogSpec extends SparkSpec {
     assert(!IcebergishTable.exists(s"$warehouse/ranks"))
   }
 
+  test("manifests without file sizes plan from the manifest: catalog reads equal the table reads") {
+    warehouse
+    import spark.implicits._
+    val table = s"$warehouse/presizes"
+    IcebergishTable.write(
+      (0 until 20).map(i => (s"k$i", i.toLong)).toDF("k", "v"), table, "k", 4)
+    val s0 = IcebergishTable.currentSnapshot(table)
+    IcebergishTable.deleteWhere(spark, table, col("v") < 3L, morMaxRows = 10L)
+    // Re-encode every manifest as a writer from before sizes were recorded.
+    (s0 to IcebergishTable.currentSnapshot(table)).foreach { s =>
+      val m = Manifest.read(table, s)
+      Files.write(Manifest.path(table, s),
+        m.copy(files = m.files.map(_.copy(size = None))).encode.getBytes("UTF-8"))
+    }
+    def rows(df: DataFrame): Seq[(String, Long)] =
+      df.select("k", "v").as[(String, Long)].collect().toSeq.sorted
+    val current = rows(IcebergishTable.read(spark, table))
+    assert(current.size == 17)
+    assert(rows(spark.table("graft.presizes")) == current)
+    assert(rows(spark.sql(s"SELECT * FROM graft.presizes VERSION AS OF $s0")) ==
+      rows(IcebergishTable.readSnapshot(spark, table, s0)))
+  }
+
   test("scan planning is metadata-only: manifest sizes, zero filesystem calls") {
     val dir = Files.createTempDirectory("graft-meta-plan").toString
     import spark.implicits._
@@ -219,9 +242,9 @@ class GraftCatalogSpec extends SparkSpec {
 
     // The manifest records one size per file, and they match the files.
     val snap = IcebergishTable.currentSnapshot(s"$dir/t")
-    val withSizes = IcebergishTable.snapshotFilesWithSizes(s"$dir/t", snap)
-    assert(withSizes.isDefined, "manifest missing the sizes array")
-    withSizes.get.foreach { case (rel, size) =>
+    val files = Manifest.read(s"$dir/t", snap).files
+    assert(files.forall(_.size.isDefined), "manifest missing the sizes array")
+    files.map(f => f.path -> f.size.get).foreach { case (rel, size) =>
       assert(Files.size(java.nio.file.Paths.get(s"$dir/t").resolve(rel)) == size,
         s"manifest size wrong for $rel")
     }
@@ -239,7 +262,7 @@ class GraftCatalogSpec extends SparkSpec {
       val planned = parts.collect {
         case p: graft.sources.v2.GraftBucketPartition => p.files.length
       }.sum
-      assert(planned == withSizes.get.size, "planned file count != manifest")
+      assert(planned == files.size, "planned file count != manifest")
     } finally Files.move(hidden, dataDir)
 
     // And the planned scan actually reads correctly.

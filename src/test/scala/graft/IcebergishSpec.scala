@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.io.IcebergishTable
+import graft.io.{IcebergishTable, Manifest}
 import graft.streaming.StreamingKg
 import graft.synth.PageSynth
 
@@ -242,7 +242,7 @@ class IcebergishSpec extends SparkSpec {
       .select("subj").as[String].collect().toSet
     assert(before.size == 6)
     val preSnap = IcebergishTable.currentSnapshot(table)
-    val filesBefore = IcebergishTable.liveDataFiles(table).size
+    val filesBefore = Manifest.read(table, preSnap).paths.size
     assert(filesBefore > 4, s"appends should accumulate files: $filesBefore")
 
     IcebergishTable.compact(spark, table, 4, "subj")
@@ -250,14 +250,14 @@ class IcebergishSpec extends SparkSpec {
     val after = IcebergishTable.read(spark, table)
       .select("subj").as[String].collect().toSet
     assert(after == before)
-    assert(IcebergishTable.liveDataFiles(table).size <= 4)
-    // Pre-compaction snapshot still time-travels (old files tombstoned,
-    // not deleted).
+    assert(Manifest.read(table, IcebergishTable.currentSnapshot(table)).paths.size <= 4)
+    // Pre-compaction snapshot still time-travels (old files replaced in
+    // the manifest, not deleted).
     val travel = IcebergishTable.readSnapshot(spark, table, preSnap)
       .select("subj").as[String].collect().toSet
     assert(travel == before)
 
-    // Expiry reclaims the tombstoned files; current read unaffected,
+    // Expiry reclaims the replaced files; current read unaffected,
     // expired manifests gone.
     IcebergishTable.expireSnapshots(table, keepLast = 1)
     assert(IcebergishTable.read(spark, table)
@@ -277,7 +277,7 @@ class IcebergishSpec extends SparkSpec {
 
     // Plant a staged task file the way a crashed/concurrent write would
     // leave it: a real parquet file under data/part=0/_temporary/... .
-    val live = IcebergishTable.liveDataFiles(table).head
+    val live = Manifest.read(table, IcebergishTable.currentSnapshot(table)).paths.head
     val staged = java.nio.file.Paths.get(table,
       "data", s"${IcebergishTable.PartCol}=0", "_temporary", "0",
       "task_000", "part-staged.parquet")
@@ -291,7 +291,7 @@ class IcebergishSpec extends SparkSpec {
       org.apache.spark.sql.SaveMode.Append)
     assert(IcebergishTable.read(spark, table).count() == n0 + 1)
     val snap = IcebergishTable.currentSnapshot(table)
-    assert(!IcebergishTable.snapshotFiles(table, snap)
+    assert(!Manifest.read(table, snap).paths
       .exists(_.contains("_temporary")),
       "staged file leaked into the snapshot manifest")
   }
@@ -310,9 +310,9 @@ class IcebergishSpec extends SparkSpec {
       org.apache.spark.sql.SaveMode.Append)
     val top = IcebergishTable.currentSnapshot(table)
 
-    // Roll back BEHIND the compaction: its input files were tombstoned,
-    // but they ARE the restored snapshot's live set — read() must see them
-    // again (round-2 ADVICE: stale TOMBSTONES made the table read empty).
+    // Roll back BEHIND the compaction: its input files were replaced, but
+    // they ARE the restored snapshot's live set — read() must see them
+    // again.
     IcebergishTable.rollbackTo(table, preCompact)
     assert(IcebergishTable.currentSnapshot(table) == preCompact)
     val got = IcebergishTable.read(spark, table)
@@ -341,14 +341,14 @@ class IcebergishSpec extends SparkSpec {
     // raw file append, no new snapshot. (The old snapshot-advanced guard
     // missed this window entirely.)
     val b1 = Seq(Triple("C", "p", "D", "u2", 1.0)).toDF
-    val committed = IcebergishTable.snapshotFiles(table, pre).toSet
+    val committed = Manifest.read(table, pre).paths.toSet
     b1.withColumn(IcebergishTable.PartCol, IcebergishTable.partExpr("subj", 4))
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .partitionBy(IcebergishTable.PartCol)
       .parquet(s"$table/data")
     assert(IcebergishTable.currentSnapshot(table) == pre) // no manifest landed
 
-    val orphans = IcebergishTable.liveDataFiles(table).toSet -- committed
+    val orphans = dataFilesOnDisk(table) -- committed
     assert(orphans.nonEmpty)
 
     // Replay commits the batch once: no manifest references the orphans.
@@ -358,7 +358,7 @@ class IcebergishSpec extends SparkSpec {
     assert(rows == Seq("A", "C"), s"duplicates after replay: $rows")
     // The vacuum reclaims exactly the first attempt's files; the read holds.
     assert(IcebergishTable.removeOrphans(table, 0L).toSet == orphans)
-    assert(IcebergishTable.liveDataFiles(table).intersect(orphans).isEmpty)
+    assert(dataFilesOnDisk(table).intersect(orphans).isEmpty)
     assert(IcebergishTable.read(spark, table)
       .select("subj").as[String].collect().toSeq.sorted == rows)
   }
@@ -501,7 +501,7 @@ class IcebergishSpec extends SparkSpec {
     val rowsBefore = IcebergishTable.read(spark, table).count()
     // Any committed data file serves as the seed payload each child
     // re-commits under fresh names (into its own source bucket).
-    val seedRel = IcebergishTable.snapshotFiles(table, s0).headOption
+    val seedRel = Manifest.read(table, s0).paths.headOption
       .getOrElse(fail("no committed data file"))
     val seedBucket = IcebergishTable.bucketOfPath(seedRel)
     val seedRows = spark.read.parquet(s"$table/$seedRel").count()
@@ -521,8 +521,8 @@ class IcebergishSpec extends SparkSpec {
     // Both JVMs' commits all survived: 10 contiguous snapshots, every file
     // referenced, full union readable.
     assert(IcebergishTable.currentSnapshot(table) == s0 + 10)
-    val finalFiles = IcebergishTable.snapshotFiles(
-      table, IcebergishTable.currentSnapshot(table))
+    val finalFiles = Manifest.read(
+      table, IcebergishTable.currentSnapshot(table)).paths
     assert(finalFiles.count(_.contains("race-jvmA")) == perChild)
     assert(finalFiles.count(_.contains("race-jvmB")) == perChild)
     finalFiles.foreach(f => assert(
@@ -561,7 +561,7 @@ class IcebergishSpec extends SparkSpec {
       (0 until 64).map(i => (s"k${i % 16}", i.toLong)).toDF("k", "v"),
       table, "k", 8)
     val s0 = IcebergishTable.currentSnapshot(table)
-    val before = IcebergishTable.snapshotFiles(table, s0)
+    val before = Manifest.read(table, s0).paths
 
     // Delete one key's rows (4 of 64). NULL-eval rows must survive: the
     // condition is null for v = 63 (planted via nullif) — not deleted.
@@ -577,8 +577,8 @@ class IcebergishSpec extends SparkSpec {
     // forward BYTE-IDENTICAL (same relative paths).
     val hitBucket = Seq(("k3", 1)).toDF("k", "x")
       .select(IcebergishTable.partExpr("k", 8)).head().getInt(0)
-    val after = IcebergishTable.snapshotFiles(
-      table, IcebergishTable.currentSnapshot(table))
+    val after = Manifest.read(
+      table, IcebergishTable.currentSnapshot(table)).paths
     val untouchedBefore = before.filterNot(f =>
       IcebergishTable.bucketOfPath(f) == hitBucket).toSet
     assert(untouchedBefore.subsetOf(after.toSet),
@@ -647,8 +647,8 @@ class IcebergishSpec extends SparkSpec {
     val table = Files.createTempDirectory("graft-orph").toString + "/t"
     IcebergishTable.write(
       (0 until 8).map(i => (s"k$i", i.toLong)).toDF("k", "v"), table, "k", 4)
-    val seed = IcebergishTable.snapshotFiles(
-      table, IcebergishTable.currentSnapshot(table)).head
+    val seed = Manifest.read(
+      table, IcebergishTable.currentSnapshot(table)).paths.head
     val bucket = IcebergishTable.bucketOfPath(seed)
     def plantAged(rel: String): java.nio.file.Path = {
       val p = java.nio.file.Paths.get(table, rel)
@@ -672,7 +672,7 @@ class IcebergishSpec extends SparkSpec {
     assert(!Files.exists(orphan))
     assert(Files.exists(staged) && Files.exists(fresh))
     // Every committed file untouched; reads unaffected.
-    IcebergishTable.snapshotFiles(table, IcebergishTable.currentSnapshot(table))
+    Manifest.read(table, IcebergishTable.currentSnapshot(table)).paths
       .foreach(f => assert(Files.exists(java.nio.file.Paths.get(table, f))))
     assert(IcebergishTable.read(spark, table).count() == 8)
   }
@@ -682,8 +682,8 @@ class IcebergishSpec extends SparkSpec {
     val table = Files.createTempDirectory("graft-slowstage").toString + "/t"
     IcebergishTable.write(
       (0 until 8).map(i => (s"k$i", i.toLong)).toDF("k", "v"), table, "k", 4)
-    val seed = IcebergishTable.snapshotFiles(
-      table, IcebergishTable.currentSnapshot(table)).head
+    val seed = Manifest.read(
+      table, IcebergishTable.currentSnapshot(table)).paths.head
     val bucket = IcebergishTable.bucketOfPath(seed)
     // A writer that STAGED two hours ago (longer than the vacuum grace)
     // and only now promotes: Files.move preserves mtime, so without the
@@ -718,7 +718,7 @@ class IcebergishSpec extends SparkSpec {
     IcebergishTable.write(
       (0 until 8).map(i => (s"k$i", i.toLong)).toDF("k", "v"), table, "k", 4)
     val s0 = IcebergishTable.currentSnapshot(table)
-    val seed = IcebergishTable.snapshotFiles(table, s0).head
+    val seed = Manifest.read(table, s0).paths.head
     def plant(name: String): String = {
       val rel = s"data/part=${IcebergishTable.bucketOfPath(seed)}/$name"
       Files.copy(java.nio.file.Paths.get(table, seed),
@@ -825,10 +825,89 @@ class IcebergishSpec extends SparkSpec {
     // write leaves: no record of the replaced files outside the manifests.
     Files.deleteIfExists(java.nio.file.Paths.get(table, "TOMBSTONES"))
     IcebergishTable.expireSnapshots(table, keepLast = 1)
-    val current = graft.io.Manifest.read(table,
-      IcebergishTable.currentSnapshot(table)).paths.toSet
+    val current = Manifest.read(table, IcebergishTable.currentSnapshot(table)).paths.toSet
     assert(dataFilesOnDisk(table) == current,
       s"leaked past expiry: ${dataFilesOnDisk(table) -- current}")
     assert(IcebergishTable.read(spark, table).as[(String, Long, Int)].collect().toSet == before)
+  }
+
+  test("a stream epoch's commit sweeps only that epoch's crashed promote") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("graft-sweep").toString + "/t"
+    val root = java.nio.file.Paths.get(table)
+    IcebergishTable.createEmpty(table,
+      Seq(Triple("A", "p", "B", "u", 1.0)).toDF.schema, "subj", 4)
+    val q = "q1"
+    // One parquet file staged the way the streaming writer stages it.
+    def stage(epoch: Long, subj: String, task: Int): (Int, String) = {
+      val rows = Seq(Triple(subj, "p", "B", s"u-$subj", 1.0)).toDF
+      val b = Seq(subj).toDF("k").select(IcebergishTable.partExpr("k", 4)).head().getInt(0)
+      val tmp = Files.createTempDirectory("graft-sweep-stage")
+      spark.createDataFrame(rows.rdd, IcebergishTable.annotateFieldIds(table, rows.schema))
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val written = Files.list(tmp).iterator().asScala
+        .find(_.toString.endsWith(".parquet")).get
+      val rel = s"data/_staging/q-$q/epoch-$epoch/b$b-q$q-e$epoch-p0-t$task.parquet"
+      Files.createDirectories(root.resolve(rel).getParent)
+      Files.move(written, root.resolve(rel))
+      (b, rel)
+    }
+    def subjects(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("subj").as[String].collect().toSeq.sorted
+    IcebergishTable.streamCommit(table, Seq(stage(0, "A", 0)), q, 0L)
+    IcebergishTable.streamCommit(table, Seq(stage(1, "C", 0)), q, 1L)
+
+    // Epoch 2 promotes its file into the bucket dir, then crashes before
+    // the manifest swap; its retry sweeps that file and commits once.
+    val (b, staged) = stage(2, "E", 0)
+    val orphan = s"data/part=$b/${java.nio.file.Paths.get(staged).getFileName}"
+    Files.createDirectories(root.resolve(orphan).getParent)
+    Files.move(root.resolve(staged), root.resolve(orphan))
+    IcebergishTable.streamCommit(table, Seq(stage(2, "E", 1)), q, 2L)
+    assert(!Files.exists(root.resolve(orphan)), "crashed promote not swept")
+    assert(subjects(IcebergishTable.read(spark, table)) == Seq("A", "C", "E"))
+
+    // After a compaction, the next epoch's sweep leaves the replaced files
+    // of earlier epochs alone: the pre-compaction snapshot still reads.
+    val preCompact = IcebergishTable.currentSnapshot(table)
+    IcebergishTable.compact(spark, table, 4, "subj")
+    IcebergishTable.streamCommit(table, Seq(stage(3, "G", 0)), q, 3L)
+    Manifest.read(table, preCompact).paths.foreach { f =>
+      assert(Files.exists(root.resolve(f)), s"replaced file of an earlier epoch swept: $f")
+    }
+    assert(subjects(IcebergishTable.readSnapshot(spark, table, preCompact)) ==
+      Seq("A", "C", "E"))
+    assert(subjects(IcebergishTable.read(spark, table)) == Seq("A", "C", "E", "G"))
+  }
+
+  test("rollback behind a compaction, then expiry, keeps every file a surviving manifest references") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("graft-rbexp").toString + "/t"
+    def keys(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("k").as[String].collect().toSeq.sorted
+    IcebergishTable.write(
+      (0 until 20).map(i => (s"k$i", i.toLong)).toDF("k", "v"), table, "k", 4)
+    val s0 = IcebergishTable.currentSnapshot(table)
+    // A copy-on-write delete: s0 references files that s1 does not.
+    IcebergishTable.deleteWhere(spark, table, col("v") < 5L)
+    val s1 = IcebergishTable.currentSnapshot(table)
+    val all0 = keys(IcebergishTable.readSnapshot(spark, table, s0))
+    val all1 = keys(IcebergishTable.read(spark, table))
+    assert(all0.size == 20 && all1.size == 15)
+    val (files0, files1) =
+      (Manifest.read(table, s0).paths.toSet, Manifest.read(table, s1).paths.toSet)
+    assert((files0 -- files1).nonEmpty)
+    IcebergishTable.compact(spark, table, 4, "k")
+    IcebergishTable.write(Seq(("z", 99L)).toDF("k", "v"), table, "k", 4,
+      org.apache.spark.sql.SaveMode.Append)
+
+    IcebergishTable.rollbackTo(table, s1)
+    assert(dataFilesOnDisk(table) == files0 ++ files1)
+    assert(keys(IcebergishTable.readSnapshot(spark, table, s0)) == all0)
+    assert(keys(IcebergishTable.read(spark, table)) == all1)
+
+    IcebergishTable.expireSnapshots(table, keepLast = 1)
+    assert(dataFilesOnDisk(table) == files1)
+    assert(keys(IcebergishTable.read(spark, table)) == all1)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.io.{IcebergishTable, ManifestStats}
+import graft.io.{IcebergishTable, Manifest, ManifestStats}
 
 /** Writes the committed backward-compatibility fixture read by
   * [[ManifestFixtureSpec]]: a small table whose manifest chain carries
@@ -61,7 +61,7 @@ object ManifestFixtureGen {
     val spark = SparkSpec.session
     val cur = IcebergishTable.currentSnapshot(t)
     (0 to cur).flatMap { s =>
-      val files = IcebergishTable.snapshotFiles(t, s)
+      val files = Manifest.read(t, s).paths
       val schema = IcebergishTable.readSnapshot(spark, t, s).schema
       val kept = ManifestStats.prune(t, s, schema,
         ManifestStats.fromColumn(PrunePredicate, schema), files)

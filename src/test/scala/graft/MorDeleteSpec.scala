@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.io.IcebergishTable
+import graft.io.{IcebergishTable, Manifest}
 
 /** Round-5 merge-on-read position deletes: small deletes write a
   * (file, row-ordinal) tombstone file instead of rewriting buckets; every
@@ -26,7 +26,7 @@ class MorDeleteSpec extends SparkSpec {
     import spark.implicits._
     val t = seed("graft-mor")
     val s0 = IcebergishTable.currentSnapshot(t)
-    val files0 = IcebergishTable.snapshotFiles(t, s0)
+    val files0 = Manifest.read(t, s0).paths
     val mtimes0 = files0.map(f => f ->
       Files.getLastModifiedTime(java.nio.file.Paths.get(t).resolve(f))).toMap
 
@@ -37,7 +37,7 @@ class MorDeleteSpec extends SparkSpec {
     // FILE-LIST assert: same data files, byte-identical (mtimes unmoved);
     // the new snapshot only adds a delete entry.
     val s1 = IcebergishTable.currentSnapshot(t)
-    assert(IcebergishTable.snapshotFiles(t, s1) == files0)
+    assert(Manifest.read(t, s1).paths == files0)
     files0.foreach { f =>
       assert(Files.getLastModifiedTime(
         java.nio.file.Paths.get(t).resolve(f)) == mtimes0(f), s"$f rewritten")
@@ -56,12 +56,12 @@ class MorDeleteSpec extends SparkSpec {
     assert(IcebergishTable.read(spark, t).count() == 196)
 
     // Above the threshold → COW (files rewritten, delete list carried).
-    val before = IcebergishTable.snapshotFiles(t,
-      IcebergishTable.currentSnapshot(t))
+    val before = Manifest.read(t,
+      IcebergishTable.currentSnapshot(t)).paths
     assert(IcebergishTable.deleteWhere(spark, t, col("v") < 50L,
       morMaxRows = 10L) == 48L) // 0..49 minus the two already-MOR-deleted
-    assert(IcebergishTable.snapshotFiles(t,
-      IcebergishTable.currentSnapshot(t)) != before)
+    assert(Manifest.read(t,
+      IcebergishTable.currentSnapshot(t)).paths != before)
     assert(IcebergishTable.read(spark, t).count() == 148)
     assert(IcebergishTable.read(spark, t).agg(min("v")).as[Long].head() == 50L)
   }
@@ -131,7 +131,7 @@ class MorDeleteSpec extends SparkSpec {
     import spark.implicits._
     val t = seed("graft-mor-merge")
     val s0 = IcebergishTable.currentSnapshot(t)
-    val files0 = IcebergishTable.snapshotFiles(t, s0)
+    val files0 = Manifest.read(t, s0).paths
     val mtimes0 = files0.map(f => f ->
       Files.getLastModifiedTime(java.nio.file.Paths.get(t).resolve(f))).toMap
 
@@ -144,11 +144,11 @@ class MorDeleteSpec extends SparkSpec {
     // Every SEED file untouched (same mtime); updates arrived as NEW files;
     // one tombstone masks the two replaced rows — all in ONE commit.
     files0.foreach { f =>
-      assert(IcebergishTable.snapshotFiles(t, s1).contains(f))
+      assert(Manifest.read(t, s1).paths.contains(f))
       assert(Files.getLastModifiedTime(
         java.nio.file.Paths.get(t).resolve(f)) == mtimes0(f), s"$f rewritten")
     }
-    assert(IcebergishTable.snapshotFiles(t, s1).size > files0.size)
+    assert(Manifest.read(t, s1).paths.size > files0.size)
     assert(IcebergishTable.snapshotDeleteFiles(t, s1).size == 1)
     val got = IcebergishTable.read(spark, t)
       .where(col("k").isin("k3", "k7", "knew"))
@@ -163,8 +163,8 @@ class MorDeleteSpec extends SparkSpec {
     IcebergishTable.mergeRows(t,
       (0 until 50).map(i => (s"k$i", 50000L + i)).toDF("k", "v"),
       Seq("k"), morMaxRows = 10L)
-    assert(IcebergishTable.snapshotFiles(t,
-      IcebergishTable.currentSnapshot(t)).intersect(files0).isEmpty ||
+    assert(Manifest.read(t,
+      IcebergishTable.currentSnapshot(t)).paths.intersect(files0).isEmpty ||
       IcebergishTable.read(spark, t).where(col("v") >= 50000L).count() == 50)
     assert(IcebergishTable.read(spark, t).count() == 201)
   }

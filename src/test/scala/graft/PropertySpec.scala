@@ -27,14 +27,21 @@ class PropertySpec extends AnyFunSuite {
       val c = HtmlText.extract(b)
       a == c
     })
-    // extract over already-extracted text (no tags left) is stable modulo
-    // re-collapse: extracting plain extracted text returns it unchanged
-    // when it contains no '<' or '&'.
-    check("idempotence", Prop.forAll(bytesGen) { b =>
+    // extract over already-extracted text (no '<' or '&' left) is stable
+    // modulo re-collapse: the text re-scans as ONE block, so each '\n' that
+    // joined two blocks collapses to a space (spec rule 4) and nothing else
+    // changes.
+    def reExtracts(b: Array[Byte]): Boolean = {
       val once = HtmlText.extract(b)
       !(!once.contains('<') && !once.contains('&')) ||
-        HtmlText.extract(once.getBytes("UTF-8")) == once
-    })
+        HtmlText.extract(once.getBytes("UTF-8")) == once.replace('\n', ' ')
+    }
+    // A recorded input whose extraction joins blocks with '\n'.
+    val joined = "42fc55e9b24aa2fc3c701b05977f74a43e711085e6111d3101921787"
+      .grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+    assert(HtmlText.extract(joined).contains('\n'))
+    assert(reExtracts(joined))
+    check("idempotence", Prop.forAll(bytesGen)(reExtracts))
   }
 
   test("synthesized page extraction is byte-identical over random (seed, i, size)") {

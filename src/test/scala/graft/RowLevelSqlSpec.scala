@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.io.IcebergishTable
+import graft.io.{IcebergishTable, Manifest}
 
 /** SQL DELETE FROM / MERGE INTO over graft catalog tables — rewritten by
   * [[graft.plans.GraftRowLevelSql]] into the engine's COW/MOR machinery,
@@ -30,13 +30,13 @@ class RowLevelSqlSpec extends SparkSpec {
 
   test("DELETE FROM with WHERE: small predicate takes the MOR path") {
     val t = seed("del1")
-    val files0 = IcebergishTable.snapshotFiles(t,
-      IcebergishTable.currentSnapshot(t))
+    val files0 = Manifest.read(t,
+      IcebergishTable.currentSnapshot(t)).paths
     spark.sql("DELETE FROM graft_q.del1 WHERE v IN (5, 6, 7)")
     // Same committed state as the API call — and the same strategy: data
     // files untouched, a delete entry committed (default morMaxRows 10k).
     val cur = IcebergishTable.currentSnapshot(t)
-    assert(IcebergishTable.snapshotFiles(t, cur) == files0)
+    assert(Manifest.read(t, cur).paths == files0)
     assert(IcebergishTable.snapshotDeleteFiles(t, cur).size == 1)
     assert(spark.table("graft_q.del1").count() == 197)
     assert(spark.table("graft_q.del1").where(col("v") === 6L).count() == 0)
@@ -46,11 +46,11 @@ class RowLevelSqlSpec extends SparkSpec {
     val t = seed("del2")
     spark.conf.set("spark.graft.delete.morMaxRows", "3")
     try {
-      val files0 = IcebergishTable.snapshotFiles(t,
-        IcebergishTable.currentSnapshot(t))
+      val files0 = Manifest.read(t,
+        IcebergishTable.currentSnapshot(t)).paths
       spark.sql("DELETE FROM graft_q.del2 WHERE v < 100")
       val cur = IcebergishTable.currentSnapshot(t)
-      assert(IcebergishTable.snapshotFiles(t, cur) != files0)
+      assert(Manifest.read(t, cur).paths != files0)
       assert(IcebergishTable.snapshotDeleteFiles(t, cur).isEmpty)
       assert(spark.table("graft_q.del2").count() == 100)
     } finally spark.conf.unset("spark.graft.delete.morMaxRows")

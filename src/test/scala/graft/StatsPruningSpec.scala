@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.io.{IcebergishTable, ManifestStats}
+import graft.io.{IcebergishTable, Manifest, ManifestStats}
 
 /** Round-5 manifest zone maps: per-file column min/max recorded at commit,
   * file-level skipping in DSv2 scan planning and deleteWhere's predicate
@@ -32,7 +32,7 @@ class StatsPruningSpec extends SparkSpec {
   test("commit records per-file min/max; carry-forward across appends") {
     val (t, snap) = twoEraTable("graft-stats")
     val stats = ManifestStats.fileStatsOf(t, snap)
-    val files = IcebergishTable.snapshotFiles(t, snap)
+    val files = Manifest.read(t, snap).paths
     assert(files.nonEmpty && stats.keySet == files.toSet)
     // Every file has a v range entirely inside one era.
     val vRanges = files.map(f => stats(f)("v"))
@@ -46,7 +46,7 @@ class StatsPruningSpec extends SparkSpec {
 
   test("DSv2 scan plans only files whose range can match the pushed filter") {
     val (t, snap) = twoEraTable("graft-stats-scan")
-    val allFiles = IcebergishTable.snapshotFiles(t, snap).size
+    val allFiles = Manifest.read(t, snap).paths.size
 
     def plannedFiles(filters: Array[org.apache.spark.sql.sources.Filter]): Int = {
       val tbl = new graft.sources.v2.GraftTable("t", t)
@@ -82,7 +82,7 @@ class StatsPruningSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.DataType
       .fromJson(IcebergishTable.manifestMeta(t)._1)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val all = IcebergishTable.snapshotFiles(t, snap)
+    val all = Manifest.read(t, snap).paths
     val preds = ManifestStats.fromColumn(col("v") >= lit(1000L), schema)
     assert(preds.nonEmpty, "Column condition did not translate to StatPreds")
     val cand = ManifestStats.prune(t, snap, schema, preds, all)
@@ -146,7 +146,7 @@ class StatsPruningSpec extends SparkSpec {
     IcebergishTable.write(batch(0), t, "k", 4)
     IcebergishTable.write(batch(30), t, "k", 4, SaveMode.Append)
     val snap = IcebergishTable.currentSnapshot(t)
-    val all = IcebergishTable.snapshotFiles(t, snap)
+    val all = Manifest.read(t, snap).paths
     val cutoff = java.sql.Timestamp.from(base.plusSeconds(15 * 86400L))
     val preds = ManifestStats.fromFilter(
       org.apache.spark.sql.sources.GreaterThan("ts", cutoff),
@@ -173,7 +173,7 @@ class StatsPruningSpec extends SparkSpec {
     IcebergishTable.write(lo.toDF("k", "files", "a b"), t, "k", 4)
     IcebergishTable.write(hi.toDF("k", "files", "a b"), t, "k", 4, SaveMode.Append)
     val snap = IcebergishTable.currentSnapshot(t)
-    val all = IcebergishTable.snapshotFiles(t, snap)
+    val all = Manifest.read(t, snap).paths
     val stats = ManifestStats.fileStatsOf(t, snap)
     assert(all.forall(f => stats(f).contains("files") && stats(f).contains("a b")))
     val schema = IcebergishTable.read(spark, t).schema

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.io.{IcebergishTable, ManifestStats}
+import graft.io.{IcebergishTable, Manifest, ManifestStats}
 
 /** Feature INTERACTIONS on one table: zone maps × column rename × MOR
   * deletes × partition-spec evolution × compaction — the places where
@@ -29,7 +29,7 @@ class TableFeatureInteractionSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.DataType
       .fromJson(IcebergishTable.manifestMeta(t)._1)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val all = IcebergishTable.snapshotFiles(t, snap)
+    val all = Manifest.read(t, snap).paths
     val preds = ManifestStats.fromColumn(col("value") >= 1000L, schema)
     val cand = ManifestStats.prune(t, snap, schema, preds, all)
     // Stats follow the FIELD through the rename (the rename commit re-keys
@@ -72,7 +72,7 @@ class TableFeatureInteractionSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.DataType
       .fromJson(IcebergishTable.manifestMeta(t)._1)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val all = IcebergishTable.snapshotFiles(t, snap)
+    val all = Manifest.read(t, snap).paths
     val cand = ManifestStats.prune(t, snap, schema,
       ManifestStats.fromColumn(col("x") >= 500L, schema), all)
     assert(cand.size == all.size,
