@@ -270,11 +270,12 @@ object IcebergishTable {
                      schemaEvolution: Boolean = false,
                      addedDeletes: Seq[String] = Seq.empty,
                      statsRekey: Map[String, Option[String]] = Map.empty,
-                     addedGhosts: Seq[String] = Seq.empty): Int =
+                     addedGhosts: Seq[String] = Seq.empty,
+                     footers: Map[String, (ManifestStats.FileStats, Long)] = Map.empty): Int =
     commitLocks.computeIfAbsent(table, _ => new Object).synchronized {
       commitLocked(table, schemaJson, parts, rows, bucketKey,
         epochUpdate, added, dropParent, replaceAll, expectedParent,
-        schemaEvolution, addedDeletes, statsRekey, addedGhosts)
+        schemaEvolution, addedDeletes, statsRekey, addedGhosts, footers)
     }
 
   /** Append-type commits resolve their schema against the parent's: a
@@ -311,8 +312,9 @@ object IcebergishTable {
                            expectedParent: Option[Int],
                            schemaEvolution: Boolean = false,
                            addedDeletes: Seq[String] = Seq.empty,
-                           statsRekey: Map[String, Option[String]] = Map.empty,
-                           addedGhosts: Seq[String] = Seq.empty)
+                           statsRekey: Map[String, Option[String]],
+                           addedGhosts: Seq[String],
+                           footers: Map[String, (ManifestStats.FileStats, Long)])
       : Int = {
     val d = dir(table)
     Files.createDirectories(d)
@@ -324,29 +326,10 @@ object IcebergishTable {
     var base = currentSnapshot(table)
     var target = base + 1
     var committed = -1
-    // Column zone maps for THIS writer's own files, read once from their
-    // parquet footers (same O(added) cost class as the size stat; a CAS
-    // retry re-merges metadata but never re-reads footers). Existing
-    // files' entries carry forward from the parent manifest like sizes.
-    // Footer reads are independent ~ms I/O — a parallel map keeps a
-    // many-file commit's stats pass off the serial driver path.
-    // Per-file (stats, exact row count), ONE footer open per file.
-    // Row counts feed metadata-only aggregation (COUNT/MIN/MAX answered
-    // from the manifest); -1 (unreadable footer) refuses that path for the
-    // affected snapshot rather than corrupting it.
-    val addedStats: Map[String, (ManifestStats.FileStats, Long)] = {
-      val distinctAdded = added.distinct
-      if (distinctAdded.size <= 4)
-        distinctAdded.map(f => f -> ManifestStats.statsAndCount(d.resolve(f))).toMap
-      else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(Future.traverse(distinctAdded)(f =>
-          Future(f -> ManifestStats.statsAndCount(d.resolve(f)))), Duration.Inf)
-          .toMap
-      }
-    }
+    // Zone maps and row counts of THIS writer's own files, read once from
+    // their footers unless the caller already did (`footers`); a CAS retry
+    // never re-reads them. Existing files' entries carry forward.
+    val addedStats = footers ++ footerStats(table, added.distinct.filterNot(footers.contains))
     val addedSet = added.toSet
     val addedDeletesSet = addedDeletes.toSet
     while (committed < 0) {
@@ -464,6 +447,20 @@ object IcebergishTable {
     }
     advanceVersionTo(table, d, committed)
     committed
+  }
+
+  /** Per-file (column stats, exact row count), ONE footer open per file.
+    * Row counts feed metadata-only aggregation; -1 (unreadable footer)
+    * refuses that path rather than corrupting it. Reads are independent ~ms
+    * I/O, so the files are read in parallel.
+    */
+  private def footerStats(table: String, files: Seq[String])
+      : Map[String, (ManifestStats.FileStats, Long)] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future.traverse(files)(f =>
+      Future(f -> ManifestStats.statsAndCount(dir(table).resolve(f)))), Duration.Inf).toMap
   }
 
   /** Write `bytes` under `name` atomically-or-not-at-all: full content to
@@ -745,18 +742,23 @@ object IcebergishTable {
     * new snapshot with an explicit file delta — safe under concurrent
     * appends. The streaming micro-batch sink's unit: the commit records
     * `queryId → epoch` in the same VERSION swap that publishes the files,
-    * and the caller skips any epoch at or below [[streamEpoch]].
+    * and the caller skips any epoch at or below [[streamEpoch]]. A write
+    * that stages no files commits nothing. Returns the rows committed, from
+    * the footers the manifest's entries are built from.
     */
   def appendPrePartitioned(df0: DataFrame, table: String, numParts: Int,
-                           keyCol: String, queryId: String, epoch: Long): Unit = {
+                           keyCol: String, queryId: String, epoch: Long): Long = {
     val df = withFieldIds(df0, table)
     validateAppend(table, keyCol, numParts, df.schema)
     val (added, _) = stagePromote(df, table)
+    if (added.isEmpty) return 0L
+    val footers = footerStats(table, added)
     commitOrCleanup(table, added) {
       commit(table, df.schema.json, 0 until numParts, 0L,
         bucketKey = Some((keyCol, numParts)),
-        epochUpdate = Map(queryId -> epoch), added = added)
+        epochUpdate = Map(queryId -> epoch), added = added, footers = footers)
     }
+    footers.valuesIterator.map(_._2).sum
   }
 
   /** Parsed current-snapshot manifest metadata for the DSv2 catalog:

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.StructType
 
 import graft.{CheckpointRow, Page, Triple}
 import graft.functions.HtmlExtractExpr.html_extract
@@ -18,9 +18,15 @@ import graft.triples.TripleExtract
   * batch. The file-source checkpoint supplies progress, and the table's
   * manifest records each stream's last committed micro-batch in the same
   * atomic swap that publishes the batch's files — the streaming twin of
-  * the reference's batch-ack cursor (its `src/sharding.rs:237-271`).
+  * the reference's batch-ack cursor (its `src/sharding.rs:237-271`), and
+  * like that cursor a micro-batch is one pass: one dataflow, one commit.
   */
 object StreamingKg {
+
+  /** The source columns, typed as in [[graft.Page]]: inferring them would
+    * cost a job over a directory that grows with every landed batch. */
+  private val PageSchema = StructType(Encoders.product[Page].schema
+    .filter(f => Seq("url", "warc_ts", "html", "lang").contains(f.name)))
 
   /** Streaming triples from a pages directory (parquet files appear over
     * time). Canonicalization of the dictionary-derived sameAs graph is a
@@ -29,9 +35,8 @@ object StreamingKg {
   def triplesStream(spark: SparkSession, pagesDataDir: String,
                     canon: Map[String, String]): Dataset[Triple] = {
     import spark.implicits._
-    val schema = spark.read.parquet(pagesDataDir).schema
     val pages = spark.readStream
-      .schema(schema)
+      .schema(PageSchema)
       .option("maxFilesPerTrigger", "8")
       .parquet(pagesDataDir)
       .select(col("url"), col("warc_ts"), col("html"),
@@ -50,54 +55,47 @@ object StreamingKg {
   /** One exactly-once micro-batch append into the bucketed Icebergish
     * triple table. The current manifest's `epochs(queryId)` is the replay
     * guard: a batch at or below it already committed, so it returns before
-    * running any Spark job. Otherwise the batch is deduped and appended
-    * with `queryId → batchId` in the same commit, so the files and the
-    * epoch publish in one VERSION swap. A crash before that swap leaves
-    * only orphan files no manifest references (invisible to reads,
-    * reclaimed by [[IcebergishTable.removeOrphans]]), and the replay
-    * commits the batch once; a crash after it makes the replay a no-op.
+    * running any Spark job. Otherwise the batch is deduped against itself
+    * and the committed table, then appended with `queryId → batchId` in the
+    * same commit: the files and the epoch publish in one VERSION swap. A
+    * crash before that swap leaves only orphan files no manifest references
+    * (invisible to reads, reclaimed by [[IcebergishTable.removeOrphans]]),
+    * and the replay commits the batch once; after it, the replay is a no-op.
     *
-    * A batch that yields no fresh rows commits nothing. Each processed
-    * batch appends one lineage row (`rows_out` = rows committed) to
-    * `$table-acks` after its commit; nothing reads it back for replay.
+    * The batch is ONE dataflow that only the append's write consumes:
+    * nothing is cached, collected or counted on the way. A batch with no
+    * fresh rows stages no files and commits nothing. Each processed batch
+    * then appends one lineage row to `$table-acks` whose `rows_out` is the
+    * commit's footer row count; nothing reads it back for replay.
     */
   def appendBatch(batch: DataFrame, table: String, queryId: String,
                   batchId: Long, numParts: Int): Unit = {
     if (IcebergishTable.streamEpoch(table, queryId).exists(_ >= batchId)) return
     val spark = batch.sparkSession
+    val key = Seq("subj", "pred", "obj", "url")
     val withPart = batch.withColumn(IcebergishTable.PartCol,
       IcebergishTable.partExpr("subj", numParts))
-    val deduped = GraphOut.bucketedDedupPlanAligned(withPart, numParts,
-      "subj", Seq("subj", "pred", "obj", "url"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val deduped = GraphOut.bucketedDedupPlanAligned(withPart, numParts, "subj", key)
     // CROSS-BATCH dedup (late-data semantics): a page re-delivered in a
     // later micro-batch — a duplicated input file, an upstream retry —
-    // re-emits triples an earlier batch already committed, and the
-    // in-batch dedup cannot see them. Anti-join the batch against the
-    // table's CURRENT committed state on the dedup key, reading ONLY the
-    // buckets this batch touches (both sides are bucketed on subj, and the
-    // batch's bucket list is bounded by numParts). The incremental build
-    // therefore converges to the batch build's table for ANY partitioning,
-    // ordering, or duplication of the same logical pages.
-    val fresh = (
+    // re-emits triples an earlier batch already committed, which the
+    // in-batch dedup cannot see. Anti-joining the table's committed state
+    // on the dedup key makes the incremental build converge to the batch
+    // build for ANY partitioning, ordering or duplication of the same
+    // pages. The probe reads the whole table: picking the batch's buckets
+    // first would cost a driver collect (a job over the source, extraction
+    // and dedup shuffle), and a batch of thousands of rows touches every
+    // bucket anyway. The write below cannot feed its own probe:
+    // `IcebergishTable.read` fixes its file list when the read is planned.
+    val fresh =
       if (!IcebergishTable.exists(table)) deduped
-      else {
-        val batchParts = deduped
-          .select(col(IcebergishTable.PartCol)).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val existing = IcebergishTable.read(spark, table)
-          .where(col(IcebergishTable.PartCol).isin(batchParts: _*))
-          .select("subj", "pred", "obj", "url")
-        deduped.join(existing, Seq("subj", "pred", "obj", "url"), "left_anti")
-          .repartition(numParts, col("subj")) // restore bucket alignment
-      }
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    val n = fresh.count() // this batch's rows, not a whole-table rescan
-    if (n > 0)
-      IcebergishTable.appendPrePartitioned(fresh, table, numParts, "subj",
-        queryId, batchId)
-    fresh.unpersist(blocking = false)
-    deduped.unpersist(blocking = false)
+      else deduped
+        .join(IcebergishTable.read(spark, table).select(key.map(col): _*), key, "left_anti")
+        // Restore bucket alignment: free after a broadcast anti-join, one
+        // file per bucket after a sort-merge one (hashed on the full key).
+        .repartition(numParts, col("subj"))
+    val n = IcebergishTable.appendPrePartitioned(fresh, table, numParts, "subj",
+      queryId, batchId)
     Checkpoint.append(spark, s"$table-acks", Seq(CheckpointRow(
       "stream", "append", 0, s"batch-$batchId", queryId, n, n, 0L, "done")))
   }
