@@ -421,27 +421,24 @@ object SparkEntry {
         .select(col("id"), col("label"),
           col("props")("degree").cast("long").as("degree"))),
     "kg_spj" -> ((s, _) => {
-      // Storage-partitioned join through the DSv2 catalog: build a small
-      // KG, register the workDir as a catalog warehouse, join edges to
-      // vertices on the bucket key (plans with zero exchanges — asserted
-      // in GraftCatalogSpec; here the driver checks the result shape).
-      // Session hygiene: the catalog/bucketing confs are restored to what
-      // they were — materialize eagerly (localCheckpoint) first, so the
-      // restore cannot re-plan the query.
+      // Storage-partitioned join of two table reads: build a small KG,
+      // read edges and vertices by path (no session catalog), join them on
+      // the bucket key (plans with zero exchanges — the catalog twin is
+      // asserted in GraftCatalogSpec; here the driver checks the result
+      // shape). Session hygiene: the bucketing conf, and the broadcast
+      // threshold that would otherwise turn these small tables' join into
+      // a broadcast, are restored to what they were — materialize eagerly
+      // (localCheckpoint) first, so the restore cannot re-plan the query.
       val dir = java.nio.file.Files.createTempDirectory("graft-spj").toString
       Pipeline.build(s, PipelineConfig(seed = 42L, nPages = 200L,
         partitions = 4, outputBuckets = 8, workDir = dir, runId = "spj"))
-      val touched = Seq("spark.sql.catalog.graft_q",
-        "spark.sql.catalog.graft_q.warehouse",
-        "spark.sql.sources.v2.bucketing.enabled")
-      val saved = touched.map(k => k -> s.conf.getOption(k))
-      s.conf.set("spark.sql.catalog.graft_q",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft_q.warehouse", dir)
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      val scoped = Seq("spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      val saved = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
+      scoped.foreach { case (k, v) => s.conf.set(k, v) }
       try {
-        val e = s.table("graft_q.edges")
-        val v = s.table("graft_q.vertices")
+        val e = graft.io.IcebergishTable.read(s, s"$dir/edges")
+        val v = graft.io.IcebergishTable.read(s, s"$dir/vertices")
         e.join(v, e("subj") === v("id"))
           .groupBy(v("id").as("id"))
           .agg(count(lit(1)).as("out_triples"),

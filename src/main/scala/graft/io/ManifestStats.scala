@@ -440,8 +440,8 @@ object ManifestStats {
     * predates colstats; empty when it is missing or undecodable).
     */
   def fileStatsOf(table: String, snapshot: Int): Map[String, FileStats] =
-    IcebergishTable.snapshotAggMeta(table, snapshot).fold(
-      Map.empty[String, FileStats])(_.colStats)
+    scala.util.Try(Manifest.load(table, snapshot)).toOption.flatten
+      .fold(Map.empty[String, FileStats])(_.files.map(f => f.path -> f.stats).toMap)
 
   /** Metadata MIN/MAX support for a column type: (decode an encoded bound
     * into Spark's INTERNAL value, compare two encoded bounds). Floats and
@@ -469,17 +469,20 @@ object ManifestStats {
     }
   }
 
-  /** The subset of `files` a scan with `preds` must read (zone-map
-    * pruning; files without stats always survive).
+  /** The files of `m` a scan with `preds` must read (zone-map pruning;
+    * files without stats always survive).
     */
+  def prune(m: Manifest, schema: StructType, preds: Seq[StatPred]): Seq[DataFile] =
+    m.files.filter(f => mayMatchAll(f.stats, schema, preds))
+
+  /** The subset of `files` a scan of `snapshot` with `preds` must read. */
   def prune(table: String, snapshot: Int, schema: StructType,
             preds: Seq[StatPred], files: Seq[String]): Seq[String] = {
-    if (preds.isEmpty) return files
     val statsMap = fileStatsOf(table, snapshot)
-    if (statsMap.isEmpty) return files
-    files.filter { f =>
-      val st = statsMap.getOrElse(f, Map.empty)
-      st.isEmpty || preds.forall(p => mayMatch(st, schema, p))
-    }
+    files.filter(f => mayMatchAll(statsMap.getOrElse(f, Map.empty), schema, preds))
   }
+
+  private def mayMatchAll(stats: FileStats, schema: StructType,
+                          preds: Seq[StatPred]): Boolean =
+    stats.isEmpty || preds.forall(p => mayMatch(stats, schema, p))
 }

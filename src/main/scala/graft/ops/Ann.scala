@@ -208,6 +208,13 @@ object Ann {
   /** Probe a [[writeLshIndex]] index: scans ONLY the probed buckets'
     * partitions (the 1-bit multiprobe neighborhood), ranks by exact cosine.
     * Same results as [[lshTopK]] on the same parameters.
+    *
+    * The query vector and bucket come from the FIRST index row with id
+    * `queryId` that the lookup scan returns. Ids are unique in an index
+    * [[lshBuckets]] built; in one that repeats an id, which of its rows
+    * serves as the query depends on file order, and every row with that id
+    * is left out of the result. An id absent from the index throws
+    * `NoSuchElementException`.
     */
   def lshTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                      queryId: Long, k: Int, nBits: Int = 10,

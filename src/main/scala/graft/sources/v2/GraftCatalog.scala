@@ -230,6 +230,24 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
   // ---- FunctionCatalog ----------------------------------------------------
 
   override def listFunctions(namespace: Array[String]): Array[Identifier] =
+    GraftFunctions.listFunctions(namespace)
+
+  override def loadFunction(ident: Identifier): UnboundFunction =
+    GraftFunctions.loadFunction(ident)
+}
+
+/** The functions a graft relation's partitioning needs — the bucket
+  * transform's. Catalyst resolves a scan's `bucket(n, key)` partitioning
+  * through the relation's function catalog, so the catalog serves these,
+  * and a catalog-free relation ([[GraftTable.frame]]) carries this object
+  * to keep its storage-partitioned joins.
+  */
+object GraftFunctions extends FunctionCatalog {
+  override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = ()
+
+  override def name(): String = "graft"
+
+  override def listFunctions(namespace: Array[String]): Array[Identifier] =
     Array(Identifier.of(namespace, "bucket"))
 
   override def loadFunction(ident: Identifier): UnboundFunction =
@@ -255,28 +273,29 @@ object GraftBucketFunction extends UnboundFunction {
 
   override def bind(inputType: StructType): BoundFunction = {
     require(inputType.fields.length == 2 &&
-      inputType.fields(0).dataType == IntegerType &&
-      inputType.fields(1).dataType == StringType,
-      s"bucket expects (int, string), got $inputType")
-    GraftBucketBound
+      inputType.fields(0).dataType == IntegerType,
+      s"bucket expects (int, key), got $inputType")
+    GraftBucketBound(inputType.fields(1).dataType)
   }
 }
 
-object GraftBucketBound extends ScalarFunction[Integer] {
-  override def inputTypes(): Array[DataType] = Array(IntegerType, StringType)
+/** [[GraftBucketFunction]] bound to a key type: a bucket key may be any
+  * column Spark's `hash()` takes.
+  */
+final case class GraftBucketBound(keyType: DataType) extends ScalarFunction[Integer] {
+  override def inputTypes(): Array[DataType] = Array(IntegerType, keyType)
   override def resultType(): DataType = IntegerType
   override def name(): String = "bucket"
   // Canonical identity drives storage-partitioned-join compatibility: two
   // scans whose transforms share this name + bucket count are co-partitioned.
-  override def canonicalName(): String = "graft.bucket.murmur3"
+  override def canonicalName(): String = s"graft.bucket.murmur3(${keyType.simpleString})"
   override def isResultNullable: Boolean = false
 
   override def produceResult(input: InternalRow): Integer = {
     val n = input.getInt(0)
-    val key = input.getUTF8String(1)
-    // Spark's hash() over a string column: Murmur3 (32-bit), seed 42 —
+    // Spark's hash() over the key column: Murmur3 (32-bit), seed 42 —
     // identical to HashPartitioning's partition-id hash.
-    val h = Murmur3HashFunction.hash(key, StringType, 42L).toInt
+    val h = Murmur3HashFunction.hash(input.get(1, keyType), keyType, 42L).toInt
     ((h % n) + n) % n
   }
 }

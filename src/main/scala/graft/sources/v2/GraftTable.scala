@@ -5,23 +5,28 @@ import java.util
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetPartitionReaderFactory, ParquetScan}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, In, InsertableRelation}
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.io.{IcebergishTable, Manifest}
+import graft.io.{DataFile, IcebergishTable, Manifest, ManifestStats}
 
 /** One Icebergish table exposed through DataSource V2 (see [[GraftCatalog]]).
   *
-  * - Schema comes from the current snapshot manifest, not file listing.
+  * - Schema comes from a snapshot manifest, decoded once here, not from a
+  *   file listing.
   * - `partitioning()` reports the writer's hash-bucket layout as a
   *   `bucket(n, key)` transform → storage-partitioned joins.
   * - Scans prune columns (`SupportsPushDownRequiredColumns`), prune buckets
@@ -36,12 +41,29 @@ import graft.io.{IcebergishTable, Manifest}
   *   not in `schema()` (so writers never supply it — the engine derives it
   *   from the bucket key), but reads can still select/filter it as a
   *   METADATA column (`SELECT part FROM graft.edges`), which keeps exact
-  *   bucket pruning available.
+  *   bucket pruning available. Two more metadata columns give each row's
+  *   data file and row ordinal — what the row-level rewrites tombstone.
+  * - Columns read as nullable, as parquet relations read them.
+  *
+  * `manifest` is the snapshot the table was resolved at; `pinned` tables
+  * (VERSION AS OF, and every [[GraftTable.frame]]) scan exactly it.
+  * `lenient` scans skip missing delete files (resume verification).
   */
-final class GraftTable(ident: String, path: String,
-                       pinned: Option[Int] = None)
+final class GraftTable private (ident: String, path: String,
+                                manifest: Manifest, pinned: Boolean,
+                                lenient: Boolean)
     extends Table with SupportsRead with SupportsWrite
     with SupportsMetadataColumns {
+
+  /** A catalog table at the current snapshot, or pinned at snapshot
+    * `pinned` (VERSION AS OF: that era's files and schema).
+    */
+  def this(ident: String, path: String, pinned: Option[Int] = None) =
+    this(ident, path, Manifest.read(path, pinned.getOrElse {
+      val cur = IcebergishTable.currentSnapshot(path)
+      if (cur < 0) throw new graft.TableNotFound(path)
+      cur
+    }), pinned.isDefined, lenient = false)
 
   /** Filesystem path of the backing Icebergish table — the SQL row-level
     * command rewrites ([[graft.plans.GraftRowLevelSql]]) route DELETE/MERGE
@@ -52,18 +74,13 @@ final class GraftTable(ident: String, path: String,
   /** True for plain (non-time-travel) relations — row-level SQL ops must
     * refuse to mutate a pinned historical view.
     */
-  def isCurrentVersion: Boolean = pinned.isEmpty
+  def isCurrentVersion: Boolean = !pinned
 
-  // A VERSION-AS-OF table resolves schema + spec from the era it pins —
-  // time travel across a schema evolution sees the schema of its era.
-  private val (schemaJson, bucketSpec) = pinned match {
-    case Some(s) => IcebergishTable.manifestMetaAt(path, s)
-    case None => IcebergishTable.manifestMeta(path)
-  }
+  private val bucketSpec = manifest.bucket
 
   /** Full physical schema (data columns + the part column, as written). */
   private val tableSchema: StructType =
-    DataType.fromJson(schemaJson).asInstanceOf[StructType]
+    org.apache.spark.sql.GraftColumnBridge.nullable(manifest.schema)
 
   private val dataSchema: StructType =
     StructType(tableSchema.filterNot(_.name == IcebergishTable.PartCol))
@@ -74,7 +91,7 @@ final class GraftTable(ident: String, path: String,
   override def schema(): StructType = dataSchema
 
   override def metadataColumns(): Array[MetadataColumn] =
-    Array(GraftPartMetadataColumn)
+    GraftMetadataColumn.all
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
@@ -89,32 +106,74 @@ final class GraftTable(ident: String, path: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     // Time travel: .option("snapshot", n) pins the scan to that manifest's
-    // file list (expired snapshots fail loudly at planning); a
-    // VERSION-AS-OF table is pinned wholesale.
-    val snapshot = Option(options.get("snapshot")).map(_.toInt).orElse(pinned)
+    // file list (expired snapshots fail loudly at planning); a pinned
+    // table scans its own snapshot; otherwise the scan reads the snapshot
+    // current when it is planned. The table's decode is reused whenever
+    // it is that snapshot.
+    val snapshot = Option(options.get("snapshot")).map(_.toInt)
+    def scanned: Manifest = {
+      val s = snapshot.getOrElse(
+        if (pinned) manifest.snapshot else IcebergishTable.currentSnapshot(path))
+      if (s == manifest.snapshot) manifest else Manifest.read(path, s)
+    }
     // Streaming admission control knobs (readStream options): cap how much
     // backlog one micro-batch may plan after downtime.
     val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
     val maxSnaps = Option(options.get("maxSnapshotsPerTrigger")).map(_.toInt)
-    new GraftScanBuilder(path, tableSchema, dataSchema, bucketSpec, snapshot,
-      maxFiles, maxSnaps)
+    new GraftScanBuilder(path, tableSchema, dataSchema, bucketSpec, () => scanned,
+      lenient, maxFiles, maxSnaps)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftWriteBuilder(path, bucketSpec, info)
 }
 
-/** `part` exposed Iceberg-style as a metadata column: selectable and
-  * filterable on read (bucket pruning still applies — Spark extends the
-  * relation output with requested metadata columns, so part predicates
-  * reach `pushFilters` unchanged), but never part of the write schema.
+object GraftTable {
+
+  /** The rows of snapshot `m` of the table at `path`, as a DataFrame over
+    * a DSv2 relation: no catalog, no session conf change, and one planner
+    * with the catalog reads ([[GraftScan]]: merge-on-read deletes, zone
+    * maps, bucket pruning, field ids). The output is `m`'s schema with
+    * `part` as an ordinary column; the relation carries [[GraftFunctions]]
+    * so two bucket-aligned frames join storage-partitioned. `m` may list a
+    * subset of its snapshot's files: only those are read, still under the
+    * snapshot's deletes. `lenient` skips missing delete files.
+    */
+  private[graft] def frame(spark: SparkSession, path: String, m: Manifest,
+                           lenient: Boolean = false): DataFrame = {
+    val table = new GraftTable(path, path, m, pinned = true, lenient)
+    org.apache.spark.sql.GraftColumnBridge.dfOf(spark, DataSourceV2Relation(table,
+      DataTypeUtils.toAttributes(table.tableSchema), Some(GraftFunctions), None,
+      CaseInsensitiveStringMap.empty()))
+  }
+}
+
+/** The hidden metadata columns: `part` is exposed Iceberg-style —
+  * selectable and filterable on read (bucket pruning still applies: Spark
+  * extends the relation output with requested metadata columns, so part
+  * predicates reach `pushFilters` unchanged), never part of the write
+  * schema. The file and ordinal columns identify a row for the row-level
+  * rewrites' position deletes; reading them reads row by row.
   */
-object GraftPartMetadataColumn extends MetadataColumn {
-  override def name(): String = IcebergishTable.PartCol
-  override def dataType(): DataType = IntegerType
+final case class GraftMetadataColumn(name: String, dataType: DataType,
+                                     override val comment: String)
+    extends MetadataColumn {
   override def isNullable: Boolean = false
-  override def comment(): String =
-    "hash bucket index: pmod(murmur3(bucket key), buckets)"
+}
+
+object GraftMetadataColumn {
+  val all: Array[MetadataColumn] = Array(
+    GraftMetadataColumn(IcebergishTable.PartCol, IntegerType,
+      "hash bucket index: pmod(murmur3(bucket key), buckets)"),
+    GraftMetadataColumn(IcebergishTable.FileCol, StringType,
+      "table-relative data file of the row"),
+    GraftMetadataColumn(IcebergishTable.PosCol, LongType,
+      "row ordinal within its data file"))
+
+  /** The file/ordinal columns, in the order a scan appends them. */
+  val positions: StructType = StructType(Seq(
+    StructField(IcebergishTable.FileCol, StringType, nullable = false),
+    StructField(IcebergishTable.PosCol, LongType, nullable = false)))
 }
 
 /** V1Write bridge: the insert re-enters [[IcebergishTable.write]], which
@@ -160,7 +219,8 @@ final class GraftWriteBuilder(path: String, bucketSpec: Option[(String, Int)],
 final class GraftScanBuilder(path: String, tableSchema: StructType,
                              dataSchema: StructType,
                              bucketSpec: Option[(String, Int)],
-                             snapshot: Option[Int] = None,
+                             scanned: () => Manifest,
+                             lenient: Boolean = false,
                              maxFilesPerTrigger: Option[Int] = None,
                              maxSnapshotsPerTrigger: Option[Int] = None)
     extends ScanBuilder
@@ -172,34 +232,26 @@ final class GraftScanBuilder(path: String, tableSchema: StructType,
   private var prunedBuckets: Option[Set[Int]] = None
   private var aggResult: Option[(StructType, Array[Any])] = None
 
-  /** The snapshot this builder's scan will read — resolved ONCE, here, and
-    * passed pinned into [[GraftScan]]: eq-delete key discovery (below) and
-    * the scan's own planning must see the SAME snapshot, or an equality
-    * delete committed between pruneColumns and plan time could introduce a
-    * key column missing from the read schema (executor fieldIndex throw).
+  /** The manifest this builder's scan will read — decoded ONCE, here, and
+    * handed to [[GraftScan]]: eq-delete key discovery (below), metadata
+    * aggregation and the scan's own planning must see the SAME snapshot,
+    * or an equality delete committed between pruneColumns and plan time
+    * could introduce a key column missing from the read schema (executor
+    * fieldIndex throw).
     */
-  private lazy val pinnedSnap: Int =
-    snapshot.getOrElse(IcebergishTable.currentSnapshot(path))
+  private lazy val manifest: Manifest = scanned()
 
-  /** Key columns of the snapshot's EQUALITY delete files: they must ride
-    * every scan's read schema (the eq filter extracts them from each row)
-    * even when the query's projection pruned them.
-    */
-  private lazy val eqKeyCols: Set[String] = {
-    val snap = pinnedSnap
-    IcebergishTable.snapshotDeleteFiles(path, snap)
-      .filter(IcebergishTable.isEqDeleteFile)
-      .flatMap(f => IcebergishTable.readEqDeleteFile(path, f, lenient = true))
-      .flatMap { case (cols, ids, _) =>
-        IcebergishTable.resolveEqCols(path, tableSchema, cols, ids)
-      }.toSet
-  }
+  private lazy val eqGroups: Seq[GraftEqGroup] =
+    GraftRead.eqGroups(path, manifest, tableSchema, lenient)
 
   override def pruneColumns(required: StructType): Unit = {
     // Preserve table column order (parquet factory appends partition cols
-    // last); `required` may arrive in arbitrary order.
-    val names = required.fieldNames.toSet ++ eqKeyCols
-    requiredSchema = StructType(tableSchema.filter(f => names.contains(f.name)))
+    // last); `required` may arrive in arbitrary order. Key columns of the
+    // snapshot's EQUALITY deletes ride every read schema (the eq filter
+    // extracts them from each row) even when the query pruned them.
+    val names = required.fieldNames.toSet ++ eqGroups.flatMap(_.keyCols)
+    requiredSchema = StructType((tableSchema ++ GraftMetadataColumn.positions)
+      .filter(f => names.contains(f.name)))
   }
 
   /** Bucket pruning from part-column predicates is EXACT (directory layout),
@@ -258,29 +310,20 @@ final class GraftScanBuilder(path: String, tableSchema: StructType,
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
     if (agg.groupByExpressions().nonEmpty) return None
     if (dataFilters.nonEmpty) return None
-    val snap = pinnedSnap
-    if (snap < 0) return None
-    // ONE manifest read feeds every exactness check below.
-    val meta = IcebergishTable.snapshotAggMeta(path, snap).getOrElse(return None)
-    if (meta.deleteFiles.nonEmpty) return None
-    val rowsByFile = meta.fileRows.getOrElse(return None)
-    val live = meta.files
-      .filter(f => prunedBuckets.forall(_.contains(
-        IcebergishTable.bucketOfPath(f))))
-    val rows = live.map(f => rowsByFile.getOrElse(f, -1L))
-    if (rows.exists(_ < 0)) return None
-    val ghosts = meta.ghosts.toSet
-    val statsMap = meta.colStats
+    if (manifest.deletes.nonEmpty) return None
+    val live = manifest.files.filter(f => prunedBuckets.forall(_.contains(
+      IcebergishTable.bucketOfPath(f.path))))
+    if (live.exists(_.rows < 0)) return None
+    val ghosts = manifest.ghosts.toSet
 
     def bound(colName: String, wantMin: Boolean): Option[Option[Any]] = {
       // Outer None = refuse pushdown; inner None = SQL NULL (no rows).
       if (ghosts.contains(colName)) return None
       val fld = tableSchema.fields.find(_.name == colName).getOrElse(return None)
-      val (decode, cmp) = graft.io.ManifestStats.minMaxSupport(fld.dataType)
+      val (decode, cmp) = ManifestStats.minMaxSupport(fld.dataType)
         .getOrElse(return None)
-      val withRows = live.zip(rows).filter(_._2 > 0).map(_._1)
-      val entries = withRows.map(f => statsMap.getOrElse(f, Map.empty)
-        .get(colName).getOrElse(return None))
+      val entries = live.filter(_.rows > 0)
+        .map(f => f.stats.getOrElse(colName, return None))
       if (entries.isEmpty) Some(None)
       else {
         val encoded = entries.map(e => if (wantMin) e._1 else e._2)
@@ -293,8 +336,8 @@ final class GraftScanBuilder(path: String, tableSchema: StructType,
 
     val out = agg.aggregateExpressions().map {
       case _: CountStar =>
-        (StructField("count(*)", org.apache.spark.sql.types.LongType,
-          nullable = false), rows.sum.asInstanceOf[Any])
+        (StructField("count(*)", LongType, nullable = false),
+          live.map(_.rows).sum.asInstanceOf[Any])
       case m: Min => m.column() match {
         case nr: NamedReference if nr.fieldNames().length == 1 =>
           val name = nr.fieldNames()(0)
@@ -318,16 +361,11 @@ final class GraftScanBuilder(path: String, tableSchema: StructType,
     Some((StructType(out.map(_._1)), out.map(_._2)))
   }
 
-  // The scan gets the BUILDER's pinned snapshot (never re-resolves): eq
-  // metadata captured at pruneColumns time and file planning then agree.
-  // A not-yet-committed table (pinnedSnap -1) stays unpinned — the scan
-  // resolves current state exactly as before.
   override def build(): Scan = aggResult match {
     case Some((schema, values)) => new GraftMetaAggScan(schema, values)
     case None =>
-      new GraftScan(path, dataSchema, requiredSchema, bucketSpec,
-        prunedBuckets, dataFilters,
-        if (pinnedSnap >= 0) Some(pinnedSnap) else snapshot,
+      new GraftScan(path, manifest, dataSchema, requiredSchema, bucketSpec,
+        prunedBuckets, dataFilters, eqGroups, lenient,
         maxFilesPerTrigger, maxSnapshotsPerTrigger)
   }
 }
@@ -396,21 +434,19 @@ private[v2] object PartFilters {
   }
 }
 
-/** A bucket's worth of files, keyed for storage-partitioned joins.
-  * `deletes` (aligned with `files`; empty array = none) carries each
-  * file's merge-on-read position-delete ordinals, sorted ascending — the
-  * reader factory skips exactly those rows. `seqs` (aligned) carries each
-  * file's data sequence number, which scopes equality deletes.
+/** One data file of a planned scan: its table-relative path, its data
+  * sequence number (which scopes equality deletes), and its merge-on-read
+  * position-delete ordinals, sorted ascending (empty = none).
   */
-final case class GraftBucketPartition(bucket: Int,
-                                      files: Array[PartitionedFile],
-                                      deletes: Array[Array[Long]] = Array.empty,
-                                      seqs: Array[Long] = Array.empty)
+final case class GraftFile(file: PartitionedFile, rel: String, seq: Long,
+                           deletes: Array[Long])
+
+/** A bucket's worth of files, keyed for storage-partitioned joins. */
+final case class GraftBucketPartition(bucket: Int, files: Array[GraftFile])
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucket))
-  def hasDeletes: Boolean = deletes.exists(_.nonEmpty)
-  def seqOf(idx: Int): Long = if (idx < seqs.length) seqs(idx) else 0L
+  def hasDeletes: Boolean = files.exists(_.deletes.nonEmpty)
 }
 
 /** One equality-delete key-column group shipped to readers: raw TSV cells
@@ -421,16 +457,121 @@ final case class GraftBucketPartition(bucket: Int,
 final case class GraftEqGroup(keyCols: Seq[String],
                               entries: Array[(Array[String], Long)])
 
-final class GraftScan(path: String, dataSchema: StructType,
+/** The per-file planning every read shares — batch scans, micro-batches,
+  * and through [[GraftTable.frame]] every `IcebergishTable` read and
+  * rewrite scan: one decoded manifest gives the files, their sizes and
+  * buckets, position-delete ordinals, equality groups, sequence numbers
+  * and ghost names — one planner, so no two reads of a snapshot can
+  * disagree about which rows it holds.
+  */
+private[v2] object GraftRead {
+
+  /** Equality-delete groups of `m`, key columns resolved against `schema`
+    * by field id first (the tombstone survives key-column renames since it
+    * was written).
+    */
+  def eqGroups(path: String, m: Manifest, schema: StructType,
+               lenient: Boolean): Seq[GraftEqGroup] =
+    m.deletes
+      .filter(d => IcebergishTable.isEqDeleteFile(d.path))
+      .flatMap { d =>
+        IcebergishTable.readEqDeleteFile(path, d.path, lenient).map {
+          case (cols, ids, rows) =>
+            (IcebergishTable.resolveEqCols(path, schema, cols, ids),
+              rows.map(r => (r, d.seq)))
+        }
+      }
+      .groupBy(_._1)
+      .map { case (cols, group) =>
+        GraftEqGroup(cols, group.flatMap(_._2).toArray)
+      }.toSeq
+
+  /** One InputPartition per bucket of `files` (a subset of `m`'s), each
+    * file with its sequence number and the position-delete ordinals `m`'s
+    * delete files list for it. METADATA-ONLY: manifest-recorded sizes make
+    * planning zero filesystem calls (at 10^5 buckets a directory walk would
+    * be the plan path's scale limit — the problem Iceberg manifests
+    * solve); manifests written before sizes were recorded stat each file.
+    * Delete sets are driver-small by the MOR write paths' own thresholds.
+    */
+  def partitions(path: String, m: Manifest, files: Seq[DataFile],
+                 needsPart: Boolean, lenient: Boolean): Array[InputPartition] = {
+    val root = java.nio.file.Paths.get(path)
+    val delByFile: Map[String, Array[Long]] =
+      m.deletes.map(_.path)
+        .filterNot(IcebergishTable.isEqDeleteFile)
+        .flatMap(IcebergishTable.readDeleteFile(path, _, lenient))
+        .groupBy(_._1)
+        .map { case (f, ps) => f -> ps.map(_._2).distinct.sorted.toArray }
+    files
+      .groupBy(f => IcebergishTable.bucketOfPath(f.path)).toSeq.sortBy(_._1)
+      .map { case (b, inBucket) =>
+        val partValues: InternalRow =
+          if (needsPart) new GenericInternalRow(Array[Any](b))
+          else InternalRow.empty
+        GraftBucketPartition(b, inBucket.sortBy(_.path).map { f =>
+          val abs = root.resolve(f.path).toAbsolutePath
+          val size = f.size.getOrElse(java.nio.file.Files.size(abs))
+          GraftFile(PartitionedFile(partValues,
+            SparkPath.fromPathString(abs.toString), 0L, size, Array.empty, 0L, size),
+            f.path, f.seq, delByFile.getOrElse(f.path, Array.empty[Long]))
+        }.toArray): InputPartition
+      }
+      .toArray
+  }
+
+  /** The reader factory of a scan over `parts`. Spark's own ParquetScan
+    * supplies the per-file readers: it wires the full hadoopConf contract
+    * (ReadSupport class, requested-schema JSON, rebase modes, …); its file
+    * index is empty on purpose — planning stays ours. Rename-safe reads:
+    * id-aware schemas resolve file columns by field id — via a
+    * field-id-enabled session CLONE, never by mutating the caller's
+    * session conf (the ParquetScan captures the clone). Ghost names
+    * (drop/rename name reuse) additionally suppress by-name parquet filter
+    * pushdown on the clone — see readSession's doc.
+    *
+    * MERGE-ON-READ and row positions: files carrying position deletes, and
+    * every file of a scan that outputs the file/ordinal columns, read
+    * through an UNFILTERED factory (row-group pruning would shift row
+    * ordinals; the pushed filters are residual anyway — Spark re-applies
+    * them above the scan) with ordinal-counting readers. Other files keep
+    * the filtered path — equality deletes are value-based, so row-group
+    * pruning stays legal for them.
+    */
+  def readerFactory(dataSchema: StructType, readDataSchema: StructType,
+                    partitionSchema: StructType, dataFilters: Array[Filter],
+                    ghosts: Seq[String], parts: Array[InputPartition],
+                    eqGroups: Seq[GraftEqGroup],
+                    withPos: Boolean): PartitionReaderFactory = {
+    val session = IcebergishTable.readSession(SparkSession.active,
+      readDataSchema, ghosts)
+    val hadoopConf = session.sessionState.newHadoopConf()
+    val fileIndex = new InMemoryFileIndex(session, Seq.empty, Map.empty, None)
+    def parquet(filters: Array[Filter]): ParquetPartitionReaderFactory =
+      ParquetScan(session, hadoopConf, fileIndex, dataSchema, readDataSchema,
+        partitionSchema, filters, CaseInsensitiveStringMap.empty())
+        .createReaderFactory().asInstanceOf[ParquetPartitionReaderFactory]
+    val countsOrdinals = withPos || parts.exists {
+      case p: GraftBucketPartition => p.hasDeletes
+      case _ => false
+    }
+    GraftReaderFactory(parquet(dataFilters),
+      if (countsOrdinals) Some(parquet(Array.empty)) else None,
+      eqGroups, StructType(readDataSchema ++ partitionSchema), withPos)
+  }
+}
+
+final class GraftScan(path: String, manifest: Manifest, dataSchema: StructType,
                       requiredSchema: StructType,
                       bucketSpec: Option[(String, Int)],
                       prunedBuckets: Option[Set[Int]],
                       dataFilters: Array[Filter],
-                      snapshot: Option[Int] = None,
+                      eqGroups: Seq[GraftEqGroup],
+                      lenient: Boolean,
                       maxFilesPerTrigger: Option[Int] = None,
                       maxSnapshotsPerTrigger: Option[Int] = None)
     extends Scan with Batch with SupportsReportPartitioning
-    with SupportsRuntimeFiltering {
+    with SupportsReportStatistics with SupportsRuntimeFiltering {
 
   /** RUNTIME bucket pruning (dynamic partition pruning, DSv2 flavor): a
     * join whose build side constrains `part` hands this scan an IN-list
@@ -457,24 +598,39 @@ final class GraftScan(path: String, dataSchema: StructType,
 
   private val needsPart =
     requiredSchema.fieldNames.contains(IcebergishTable.PartCol)
-  private val readDataSchema: StructType =
-    StructType(requiredSchema.filterNot(_.name == IcebergishTable.PartCol))
+  private val posSchema: StructType = StructType(
+    GraftMetadataColumn.positions.filter(f => requiredSchema.fieldNames.contains(f.name)))
+  private val readDataSchema: StructType = StructType(requiredSchema.filterNot(f =>
+    f.name == IcebergishTable.PartCol || posSchema.fieldNames.contains(f.name)))
   private val partitionSchema: StructType =
     if (needsPart) StructType(Seq(StructField(IcebergishTable.PartCol,
-      IntegerType, nullable = false)))
+      IntegerType, nullable = true)))
     else new StructType()
 
   override def readSchema(): StructType =
-    StructType(readDataSchema ++ partitionSchema)
+    StructType(readDataSchema ++ partitionSchema ++ posSchema)
 
   override def toBatch: Batch = this
 
-  /** One InputPartition per (non-pruned, non-empty) bucket directory.
-    * Planned once per scan — `outputPartitioning` and Spark's own
-    * `planInputPartitions` call would otherwise re-walk every bucket dir
-    * and re-stat every file (and could disagree if files changed between).
+  /** The files this scan reads: FILE-LEVEL DATA SKIPPING first — manifest
+    * zone maps (per-file column min/max) drop files whose ranges cannot
+    * satisfy the pushed data filters, before bucket grouping and before
+    * any footer or data read. Conservative: files without stats always
+    * survive, and the same filters still reach the parquet reader for
+    * row-group pruning inside surviving files.
     */
-  private lazy val plannedPartitions: Array[InputPartition] = planPartitions()
+  private lazy val files: Seq[DataFile] =
+    ManifestStats.prune(manifest, dataSchema, dataFilters.toSeq
+      .flatMap(f => ManifestStats.fromFilter(f, dataSchema)))
+      .filter(f => prunedBuckets.forall(_.contains(
+        IcebergishTable.bucketOfPath(f.path))))
+
+  /** One InputPartition per (non-pruned, non-empty) bucket. Planned once
+    * per scan — statistics, `outputPartitioning` and Spark's own
+    * `planInputPartitions` call all read this one plan.
+    */
+  private lazy val plannedPartitions: Array[InputPartition] =
+    GraftRead.partitions(path, manifest, files, needsPart, lenient)
 
   // Runtime filter applied ON TOP of the cached plan: `plannedPartitions`
   // may already be forced (outputPartitioning runs at planning time,
@@ -489,89 +645,6 @@ final class GraftScan(path: String, dataSchema: StructType,
       case None => plannedPartitions
     }
 
-  /** The manifest of the snapshot this scan reads — decoded ONCE so
-    * partition planning, delete metadata, and the reader factory agree
-    * even if the table advances mid-planning. An expired pinned snapshot
-    * fails loudly.
-    */
-  private lazy val manifest: Manifest = Manifest.read(path,
-    snapshot.getOrElse(IcebergishTable.currentSnapshot(path)))
-
-  /** Equality-delete groups of the snapshot (raw cells; executor types
-    * them against the read schema).
-    */
-  private lazy val eqGroups: Seq[GraftEqGroup] = {
-    val schema = StructType(dataSchema.fields ++
-      Seq(StructField(IcebergishTable.PartCol, IntegerType, nullable = false)))
-    manifest.deletes
-      .filter(d => IcebergishTable.isEqDeleteFile(d.path))
-      .flatMap { d =>
-        IcebergishTable.readEqDeleteFile(path, d.path).map { case (cols, ids, rows) =>
-          // Resolve by field id first: the tombstone survives key-column
-          // renames since it was written.
-          (IcebergishTable.resolveEqCols(path, schema, cols, ids),
-            rows.map(r => (r, d.seq)))
-        }
-      }
-      .groupBy(_._1)
-      .map { case (cols, group) =>
-        GraftEqGroup(cols, group.flatMap(_._2).toArray)
-      }.toSeq
-  }
-
-  private def planPartitions(): Array[InputPartition] = {
-    val root = java.nio.file.Paths.get(path)
-    val m = manifest
-    // METADATA-ONLY planning: the manifest records every file of the
-    // snapshot WITH its size, so planning makes zero filesystem calls — at
-    // 10^5 buckets a directory walk (one listing + one stat per file,
-    // driver-side) would be the plan path's scale limit, exactly the
-    // problem Iceberg manifests solve. Manifests written before sizes were
-    // recorded stat each file instead.
-    //
-    // FILE-LEVEL DATA SKIPPING: manifest zone maps (per-file column
-    // min/max) drop files whose ranges cannot satisfy the pushed data
-    // filters — before bucket grouping, before any footer or data read.
-    // Conservative: files without stats always survive, and the same
-    // filters still reach the parquet reader for row-group pruning inside
-    // surviving files.
-    val statPreds = dataFilters.toSeq
-      .flatMap(f => graft.io.ManifestStats.fromFilter(f, dataSchema))
-    // MERGE-ON-READ: position-delete ordinals per data file, merged across
-    // the snapshot's POSITION delete files at plan time (delete sets are
-    // driver-small by the MOR write path's own threshold); equality
-    // deletes ride separately (eqGroups + per-file seqs).
-    val delByFile: Map[String, Array[Long]] =
-      m.deletes.map(_.path)
-        .filterNot(IcebergishTable.isEqDeleteFile)
-        .flatMap(IcebergishTable.readDeleteFile(path, _))
-        .groupBy(_._1)
-        .map { case (f, ps) => f -> ps.map(_._2).distinct.sorted.toArray }
-    val kept = graft.io.ManifestStats.prune(path, m.snapshot, dataSchema,
-      statPreds, m.paths).toSet
-    m.files
-      .filter(f => kept(f.path))
-      .filter(f => prunedBuckets.forall(_.contains(
-        IcebergishTable.bucketOfPath(f.path))))
-      .groupBy(f => IcebergishTable.bucketOfPath(f.path)).toSeq.sortBy(_._1)
-      .map { case (b, files) =>
-        val partValues: InternalRow =
-          if (needsPart) new GenericInternalRow(Array[Any](b))
-          else InternalRow.empty
-        val sorted = files.sortBy(_.path)
-        GraftBucketPartition(b,
-          sorted.map { f =>
-            val abs = root.resolve(f.path).toAbsolutePath
-            val size = f.size.getOrElse(java.nio.file.Files.size(abs))
-            PartitionedFile(partValues,
-              SparkPath.fromPathString(abs.toString), 0L, size, Array.empty, 0L, size)
-          }.toArray,
-          sorted.map(f => delByFile.getOrElse(f.path, Array.empty[Long])).toArray,
-          sorted.map(_.seq).toArray): InputPartition
-      }
-      .toArray
-  }
-
   override def outputPartitioning(): Partitioning = bucketSpec match {
     case Some((key, n)) =>
       new KeyGroupedPartitioning(Array(Expressions.bucket(n, key)),
@@ -579,45 +652,32 @@ final class GraftScan(path: String, dataSchema: StructType,
     case None => new UnknownPartitioning(plannedPartitions.length)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // Delegate to Spark's own ParquetScan for the reader factory: it wires
-    // the full hadoopConf contract (ReadSupport class, requested-schema
-    // JSON, rebase modes, …) that the factory's readers expect. The file
-    // index is empty on purpose — planning stays ours (bucket-grouped
-    // partitions above); only the per-file reading machinery is borrowed.
-    // Rename-safe reads: id-aware schemas resolve file columns by field id
-    // — via a field-id-enabled session CLONE, never by mutating the
-    // caller's session conf (the ParquetScan below captures the clone).
-    // Ghost names (drop/rename name reuse) additionally suppress by-name
-    // parquet filter pushdown on the clone — see readSession's doc.
-    val session = IcebergishTable.readSession(SparkSession.active,
-      readDataSchema, manifest.ghosts)
-    val hadoopConf = session.sessionState.newHadoopConf()
-    val fileIndex = new InMemoryFileIndex(session, Seq.empty, Map.empty, None)
-    val inner = ParquetScan(session, hadoopConf, fileIndex, dataSchema,
-      readDataSchema, partitionSchema, dataFilters,
-      CaseInsensitiveStringMap.empty())
-    // MERGE-ON-READ: files carrying position deletes are read through an
-    // UNFILTERED factory (row-group pruning would shift row ordinals and
-    // desynchronize the skip list; the pushed filters are residual anyway
-    // — Spark re-applies them above the scan) with ordinal-skipping
-    // readers. Files without position deletes keep the filtered path —
-    // equality deletes are value-based, so row-group pruning stays legal
-    // for them. Either delete kind forces row-based reads scan-wide.
-    val needsMor = plannedPartitions.exists {
-      case p: GraftBucketPartition => p.hasDeletes
-      case _ => false
+  /** What the file source reports for the same files: their bytes scaled
+    * to the read schema's share of the row width — so join planning
+    * (broadcast vs. shuffle) sees the table's size, not
+    * `spark.sql.defaultSizeInBytes` — plus the manifest's exact row counts.
+    */
+  override def estimateStatistics(): Statistics = {
+    val bytes = plannedPartitions.iterator.collect {
+      case p: GraftBucketPartition => p.files.iterator.map(_.file.fileSize).sum
+    }.sum
+    val fullWidth = dataSchema.defaultSize + IntegerType.defaultSize
+    val size = (SQLConf.get.fileCompressionFactor * bytes *
+      readSchema().defaultSize / fullWidth).toLong
+    val rows = files.map(_.rows)
+    new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        java.util.OptionalLong.of(size)
+      override def numRows(): java.util.OptionalLong =
+        if (rows.exists(_ < 0)) java.util.OptionalLong.empty()
+        else java.util.OptionalLong.of(rows.sum)
     }
-    val unfiltered =
-      if (!needsMor) None
-      else Some(ParquetScan(session, hadoopConf, fileIndex, dataSchema,
-        readDataSchema, partitionSchema, Array.empty[Filter],
-        CaseInsensitiveStringMap.empty()).createReaderFactory()
-        .asInstanceOf[ParquetPartitionReaderFactory])
-    GraftReaderFactory(inner.createReaderFactory()
-      .asInstanceOf[ParquetPartitionReaderFactory], unfiltered,
-      eqGroups, readSchema())
   }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftRead.readerFactory(dataSchema, readDataSchema, partitionSchema,
+      dataFilters, manifest.ghosts, plannedPartitions, eqGroups,
+      withPos = posSchema.nonEmpty)
 
   override def description(): String =
     s"GraftScan(path=$path, buckets=${prunedBuckets.map(_.toSeq.sorted)
@@ -643,16 +703,20 @@ final case class GraftSnapshotOffset(snapshot: Int)
 
 /** MicroBatchStream over an Icebergish table: `latestOffset` is the
   * current committed snapshot; `planInputPartitions(a, b)` reads exactly
-  * the files snapshot b's manifest added over snapshot a's, grouped by
-  * bucket. The stream therefore follows APPENDS exactly-once (offsets ride
-  * Spark's streaming checkpoint; manifests are immutable); a compaction or
-  * rollback inside a planned range surfaces loudly (manifest diff contains
-  * rewritten files / the range reads fewer files than the live set), the
-  * same restriction Iceberg documents for its append-only streaming reads.
-  * Merge-on-read position deletes are likewise append-stream semantics: a
-  * MOR delete commit adds no data files (empty batch), and tombstones are
-  * NOT retro-applied to rows already emitted — a MOR merge's batch emits
-  * exactly its appended update rows. Consumers needing delete-aware
+  * the files snapshot b's manifest added over snapshot a's, planned by the
+  * batch scans' own [[GraftRead]] from b's manifest. The stream therefore
+  * follows APPENDS exactly-once (offsets ride Spark's streaming checkpoint;
+  * manifests are immutable); a compaction or rollback inside a planned
+  * range surfaces loudly (manifest diff contains rewritten files / the
+  * range reads fewer files than the live set), the same restriction
+  * Iceberg documents for its append-only streaming reads.
+  *
+  * Merge-on-read deletes: a batch reads its added files minus the END
+  * snapshot's position and equality deletes, under the end snapshot's
+  * ghost names — a row appended and MOR-deleted inside one offset range is
+  * never emitted. A delete commit adds no data files, and rows already
+  * emitted by an earlier batch are not retracted: a MOR merge's batch
+  * emits exactly its appended update rows. Consumers needing delete-aware
   * replays read batch snapshots instead.
   */
 final class GraftMicroBatchStream(path: String, dataSchema: StructType,
@@ -774,10 +838,21 @@ final class GraftMicroBatchStream(path: String, dataSchema: StructType,
 
   override def stop(): Unit = ()
 
+  /** What the reader factory of the last planned batch serves: the end
+    * manifest's ghosts and equality groups and the batch's partitions.
+    * Spark plans a micro-batch's partitions before it asks for its reader
+    * factory, and runs micro-batches one at a time.
+    */
+  @volatile private var planned: (Seq[String], Seq[GraftEqGroup], Array[InputPartition]) =
+    (Seq.empty, Seq.empty, Array.empty)
+
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GraftSnapshotOffset].snapshot
     val e = end.asInstanceOf[GraftSnapshotOffset].snapshot
-    if (e <= s) return Array.empty
+    if (e <= s) {
+      planned = (Seq.empty, Seq.empty, Array.empty)
+      return Array.empty
+    }
     val after = Manifest.load(path, e)
       .getOrElse(throw new graft.SnapshotNotFound(path, e)) // expired under the stream
     val before: Set[String] =
@@ -787,81 +862,61 @@ final class GraftMicroBatchStream(path: String, dataSchema: StructType,
         // as "no prior files" would re-emit the whole table as one giant
         // duplicate batch after an expiry during stream downtime.
         .getOrElse(throw new graft.SnapshotNotFound(path, s)).toSet
-    val root = java.nio.file.Paths.get(path)
-    after.files.filterNot(f => before(f.path))
-      .groupBy(f => IcebergishTable.bucketOfPath(f.path))
+    val added = after.files.filterNot(f => before(f.path))
       // The ScanBuilder is shared between batch and streaming: pushFilters
       // consumes part-column predicates as fully-handled (non-residual), so
       // the stream MUST honor the same pruning — dropping it here would
       // silently return rows from every bucket if Spark ever exercises
       // pushdown on a streaming scan.
-      .filter { case (b, _) => prunedBuckets.forall(_.contains(b)) }
-      .toSeq.sortBy(_._1)
-      .map { case (b, added) =>
-        val partValues: InternalRow =
-          if (needsPart) new GenericInternalRow(Array[Any](b))
-          else InternalRow.empty
-        val files = added.sortBy(_.path).map { df =>
-          val f = root.resolve(df.path)
-          // Unlike batch planning, keep the existence probe: a micro-batch
-          // reads few files, and "compacted/expired under the stream" must
-          // surface at plan time, not as a mid-task read failure.
-          if (!java.nio.file.Files.exists(f))
-            throw new graft.SnapshotNotFound(path, e)
-          // Manifest-recorded sizes make planning metadata-only; manifests
-          // written before sizes were recorded stat.
-          val size = df.size.getOrElse(java.nio.file.Files.size(f))
-          PartitionedFile(partValues,
-            SparkPath.fromPathString(f.toAbsolutePath.toString),
-            0L, size, Array.empty, 0L, size)
-        }.toArray
-        GraftBucketPartition(b, files): InputPartition
-      }
-      .toArray
+      .filter(f => prunedBuckets.forall(_.contains(IcebergishTable.bucketOfPath(f.path))))
+    // Unlike batch planning, keep the existence probe: a micro-batch reads
+    // few files, and "compacted/expired under the stream" must surface at
+    // plan time, not as a mid-task read failure.
+    if (added.exists(f => !java.nio.file.Files.exists(java.nio.file.Paths.get(path, f.path))))
+      throw new graft.SnapshotNotFound(path, e)
+    val parts = GraftRead.partitions(path, after, added, needsPart, lenient = false)
+    planned = (after.ghosts, GraftRead.eqGroups(path, after,
+      StructType(dataSchema :+ StructField(IcebergishTable.PartCol, IntegerType)),
+      lenient = false), parts)
+    parts
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val session = IcebergishTable.readSession(SparkSession.active,
-      readDataSchema, IcebergishTable.snapshotGhostNames(path,
-        IcebergishTable.currentSnapshot(path)))
-    val hadoopConf = session.sessionState.newHadoopConf()
-    val fileIndex = new InMemoryFileIndex(session, Seq.empty, Map.empty, None)
-    val inner = ParquetScan(session, hadoopConf, fileIndex, dataSchema,
-      readDataSchema, partitionSchema, dataFilters,
-      CaseInsensitiveStringMap.empty())
-    GraftReaderFactory(inner.createReaderFactory()
-      .asInstanceOf[ParquetPartitionReaderFactory])
+    val (ghosts, eqGroups, parts) = planned
+    GraftRead.readerFactory(dataSchema, readDataSchema, partitionSchema,
+      dataFilters, ghosts, parts, eqGroups, withPos = false)
   }
 }
 
 /** Adapts [[GraftBucketPartition]] to Spark's parquet reader factory (which
-  * expects [[FilePartition]]s). Partitions carrying merge-on-read deletes
-  * route to the row-based [[GraftMorReader]] instead (`unfiltered` factory
-  * required — plan-time invariant).
+  * expects [[FilePartition]]s). Partitions carrying merge-on-read deletes,
+  * and every partition of a scan with equality deletes or row positions,
+  * route to the row-based [[GraftMorReader]] instead (`ordinals` factory
+  * required for deletes and positions — plan-time invariant).
   */
 final case class GraftReaderFactory(inner: ParquetPartitionReaderFactory,
-                                    unfiltered: Option[ParquetPartitionReaderFactory] = None,
-                                    eqGroups: Seq[GraftEqGroup] = Seq.empty,
-                                    rowSchema: StructType = new StructType())
+                                    ordinals: Option[ParquetPartitionReaderFactory],
+                                    eqGroups: Seq[GraftEqGroup],
+                                    rowSchema: StructType,
+                                    withPos: Boolean)
     extends PartitionReaderFactory {
 
   private def asFilePartition(p: InputPartition): FilePartition = p match {
-    case g: GraftBucketPartition => FilePartition(g.bucket, g.files)
+    case g: GraftBucketPartition => FilePartition(g.bucket, g.files.map(_.file))
     case other => throw new IllegalArgumentException(other.toString)
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
-      case g: GraftBucketPartition if g.hasDeletes || eqGroups.nonEmpty =>
-        new GraftMorReader(g,
-          inner,
-          // The unfiltered factory is only REQUIRED for ordinal skipping;
-          // equality-only scans never consult it.
-          if (g.hasDeletes) unfiltered.getOrElse(
+      case g: GraftBucketPartition if withPos || g.hasDeletes || eqGroups.nonEmpty =>
+        new GraftMorReader(g, inner,
+          // The ordinal-counting factory is only REQUIRED for position
+          // deletes and positions; equality-only scans never consult it.
+          if (withPos || g.hasDeletes) ordinals.getOrElse(
             throw new IllegalStateException(
               "MOR partition planned without an unfiltered reader factory"))
           else inner,
-          eqGroups, rowSchema)
+          eqGroups, rowSchema, withPos)
       case _ => inner.createReader(asFilePartition(p))
     }
 
@@ -871,27 +926,30 @@ final case class GraftReaderFactory(inner: ParquetPartitionReaderFactory,
 
   // Row-level filtering needs the row-by-row path, and Spark requires ONE
   // input mode per scan ("Cannot mix row-based and columnar") — so a scan
-  // over any delete-carrying snapshot reads all partitions row-based
-  // (costs vectorization only while tombstones exist; compact restores it).
+  // over any delete-carrying snapshot, or one reading positions, reads all
+  // partitions row-based (costs vectorization only while tombstones exist;
+  // compact restores it).
   override def supportColumnarReads(p: InputPartition): Boolean =
-    unfiltered.isEmpty && eqGroups.isEmpty &&
+    ordinals.isEmpty && eqGroups.isEmpty &&
       inner.supportColumnarReads(asFilePartition(p))
 }
 
 /** Row reader applying merge-on-read deletes: files are read one at a
   * time. POSITION deletes: a file with delete ordinals uses the
   * UNFILTERED factory (no row-group pruning → the sequential row count IS
-  * `_metadata.row_index`) and skips exactly the listed ordinals; files
-  * without them use the normal filtered factory (row-group pruning stays
-  * legal — equality filtering is value-based). EQUALITY deletes: per
-  * file, the entries whose delete sequence EXCEEDS the file's data
-  * sequence form a key-tuple hash set; matching rows are dropped.
+  * the row ordinal) and skips exactly the listed ordinals; files without
+  * them use the normal filtered factory (row-group pruning stays legal —
+  * equality filtering is value-based). EQUALITY deletes: per file, the
+  * entries whose delete sequence EXCEEDS the file's data sequence form a
+  * key-tuple hash set; matching rows are dropped. `withPos` reads every
+  * file unfiltered and appends each row's (file, ordinal).
   */
 final class GraftMorReader(part: GraftBucketPartition,
                            filtered: ParquetPartitionReaderFactory,
                            unfiltered: ParquetPartitionReaderFactory,
-                           eqGroups: Seq[GraftEqGroup] = Seq.empty,
-                           rowSchema: StructType = new StructType())
+                           eqGroups: Seq[GraftEqGroup],
+                           rowSchema: StructType,
+                           withPos: Boolean)
     extends PartitionReader[InternalRow] {
 
   import org.apache.spark.sql.types._
@@ -924,6 +982,9 @@ final class GraftMorReader(part: GraftBucketPartition,
   // Applicable equality sets for the CURRENT file (delseq > fileSeq).
   private var curEq: Seq[(Array[Int], Array[DataType], java.util.HashSet[Seq[Any]])] =
     Seq.empty
+  // The appended (file, ordinal) columns of the current row.
+  private val posRow = new GenericInternalRow(2)
+  private val joined = new JoinedRow()
 
   private def eqDropped(row: InternalRow): Boolean = {
     var i = 0
@@ -955,13 +1016,13 @@ final class GraftMorReader(part: GraftBucketPartition,
       if (cur == null) {
         idx += 1
         if (idx >= part.files.length) return false
-        curDel = if (idx < part.deletes.length) part.deletes(idx)
-          else Array.empty[Long]
+        val f = part.files(idx)
+        curDel = f.deletes
         delPtr = 0
         pos = -1L
-        val fileSeq = part.seqOf(idx)
+        posRow.update(0, UTF8String.fromString(f.rel))
         curEq = typedGroups.flatMap { case (ords, types, entries) =>
-          val applicable = entries.filter(_._2 > fileSeq)
+          val applicable = entries.filter(_._2 > f.seq)
           if (applicable.isEmpty) None
           else {
             val set = new java.util.HashSet[Seq[Any]](applicable.length * 2)
@@ -969,9 +1030,8 @@ final class GraftMorReader(part: GraftBucketPartition,
             Some((ords, types, set))
           }
         }
-        val fac = if (curDel.isEmpty) filtered else unfiltered
-        cur = fac.createReader(FilePartition(part.bucket,
-          Array(part.files(idx))))
+        val fac = if (curDel.isEmpty && !withPos) filtered else unfiltered
+        cur = fac.createReader(FilePartition(part.bucket, Array(f.file)))
       } else if (cur.next()) {
         pos += 1
         if (delPtr < curDel.length && curDel(delPtr) == pos) delPtr += 1
@@ -987,7 +1047,12 @@ final class GraftMorReader(part: GraftBucketPartition,
     false // unreachable
   }
 
-  override def get(): InternalRow = cur.get()
+  override def get(): InternalRow =
+    if (!withPos) cur.get()
+    else {
+      posRow.setLong(1, pos)
+      joined(cur.get(), posRow)
+    }
 
   override def close(): Unit = if (cur != null) cur.close()
 }

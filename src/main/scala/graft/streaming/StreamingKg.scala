@@ -86,7 +86,9 @@ object StreamingKg {
     // first would cost a driver collect (a job over the source, extraction
     // and dedup shuffle), and a batch of thousands of rows touches every
     // bucket anyway. The write below cannot feed its own probe:
-    // `IcebergishTable.read` fixes its file list when the read is planned.
+    // `IcebergishTable.read` pins the current snapshot when it is called,
+    // and its scan reports the snapshot's bytes and row counts, so a table
+    // under the broadcast threshold is broadcast, not shuffled.
     val fresh =
       if (!IcebergishTable.exists(table)) deduped
       else deduped

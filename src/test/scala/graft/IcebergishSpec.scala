@@ -544,14 +544,16 @@ class IcebergishSpec extends SparkSpec {
     // metrics from the same plan instance.
     assert(pruned.collect().length > 0)
     val scan = pruned.queryExecution.executedPlan.collectLeaves()
-      .collectFirst { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-      .getOrElse(fail("no file scan in plan"))
-    assert(scan.toString.contains("PartitionFilters: ["), scan.toString.take(400))
+      .collectFirst { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
+      .getOrElse(fail("no batch scan in plan"))
+    assert(scan.toString.contains("buckets=List(2, 5)"), scan.toString.take(400))
     // Only the two requested buckets' files are read — deleteWhere/
     // mergeRows/the streaming anti-join read exactly the buckets they
     // touch, not the table. (One file per bucket by construction.)
-    assert(scan.metrics("numFiles").value == 2,
-      s"files read: ${scan.metrics("numFiles").value}")
+    val files = scan.inputPartitions.collect {
+      case p: graft.sources.v2.GraftBucketPartition => p.files.length
+    }.sum
+    assert(files == 2, s"files read: $files")
   }
 
   test("COW deleteWhere rewrites only touched buckets; time travel keeps deleted rows") {
