@@ -219,8 +219,9 @@ object IcebergishTable {
     *   parent.files.filterNot(dropParent) ++ added      (replaceAll drops
     *                                                     every parent file)
     *
-    * where `added` are table-relative paths this writer alone produced
-    * (staged + promoted, or freshly written). Because each commit records
+    * where `added` are table-relative files this writer alone produced
+    * (staged + promoted), with the bounds and row counts their writing
+    * tasks read back (none for caller-staged files). Because each commit records
     * only its own delta over a concrete parent manifest, two writers
     * appending CONCURRENTLY — other threads or other JVMs — are both safe:
     * the manifest NAME is claimed with a kernel-atomic hard link over
@@ -245,19 +246,18 @@ object IcebergishTable {
                      parts: Seq[Int], rows: Long,
                      bucketKey: Option[(String, Int)] = None,
                      epochUpdate: Map[String, Long] = Map.empty,
-                     added: Seq[String] = Seq.empty,
+                     added: Seq[WrittenFile] = Seq.empty,
                      dropParent: String => Boolean = _ => false,
                      replaceAll: Boolean = false,
                      expectedParent: Option[Int] = None,
                      schemaEvolution: Boolean = false,
                      addedDeletes: Seq[String] = Seq.empty,
                      statsRekey: Map[String, Option[String]] = Map.empty,
-                     addedGhosts: Seq[String] = Seq.empty,
-                     footers: Map[String, (ManifestStats.FileStats, Long)] = Map.empty): Int =
+                     addedGhosts: Seq[String] = Seq.empty): Int =
     commitLocks.computeIfAbsent(table, _ => new Object).synchronized {
       commitLocked(table, schemaJson, parts, rows, bucketKey,
         epochUpdate, added, dropParent, replaceAll, expectedParent,
-        schemaEvolution, addedDeletes, statsRekey, addedGhosts, footers)
+        schemaEvolution, addedDeletes, statsRekey, addedGhosts)
     }
 
   /** Append-type commits resolve their schema against the parent's: a
@@ -288,15 +288,14 @@ object IcebergishTable {
                            parts: Seq[Int], rows: Long,
                            bucketKey: Option[(String, Int)],
                            epochUpdate: Map[String, Long],
-                           added: Seq[String],
+                           added: Seq[WrittenFile],
                            dropParent: String => Boolean,
                            replaceAll: Boolean,
                            expectedParent: Option[Int],
                            schemaEvolution: Boolean = false,
                            addedDeletes: Seq[String] = Seq.empty,
                            statsRekey: Map[String, Option[String]],
-                           addedGhosts: Seq[String],
-                           footers: Map[String, (ManifestStats.FileStats, Long)])
+                           addedGhosts: Seq[String])
       : Int = {
     val d = dir(table)
     Files.createDirectories(d)
@@ -308,11 +307,10 @@ object IcebergishTable {
     var base = currentSnapshot(table)
     var target = base + 1
     var committed = -1
-    // Zone maps and row counts of THIS writer's own files, read once from
-    // their footers unless the caller already did (`footers`); a CAS retry
-    // never re-reads them. Existing files' entries carry forward.
-    val addedStats = footers ++ footerStats(table, added.distinct.filterNot(footers.contains))
-    val addedSet = added.toSet
+    // Zone maps and row counts of THIS writer's own files, as their
+    // writing tasks read them back. Existing files' entries carry forward.
+    val addedStats = added.map(f => f.path -> (f.stats, f.rows)).toMap
+    val addedSet = addedStats.keySet
     val addedDeletesSet = addedDeletes.toSet
     while (committed < 0) {
       expectedParent.foreach { exp =>
@@ -342,15 +340,15 @@ object IcebergishTable {
       //    rows in files appended (or rewritten) later carry a higher seq
       //    and are exempt, which is exactly how a deleted key legally
       //    re-inserts. Pre-seq files keep seq 0 (every eq delete applies).
-      //  - COLUMN STATS and exact ROW COUNT: own files from the footer
-      //    reads above, inherited files carried forward (pre-feature
+      //  - COLUMN STATS and exact ROW COUNT: own files from their writing
+      //    tasks' footer reads, inherited files carried forward (pre-feature
       //    parents degrade to no stats / -1 rows). Rename/drop commits
       //    RE-KEY carried-forward stats: they follow the field's identity
       //    (id), not its write-time name. Without this, after DROP x;
       //    RENAME y TO x, old files' stale x-entries would be consulted for
       //    predicates on the NEW x and could skip files that match —
       //    Iceberg keys bounds by field id for exactly this reason.
-      val files = (kept ++ added).distinct.sorted.map { f =>
+      val files = (kept ++ added.map(_.path)).distinct.sorted.map { f =>
         val prev = prevFiles.get(f)
         val (stats, fileRows) = addedStats.getOrElse(f,
           (ManifestStats.rekey(prev.fold(Map.empty: ManifestStats.FileStats)(_.stats),
@@ -429,20 +427,6 @@ object IcebergishTable {
     }
     advanceVersionTo(table, d, committed)
     committed
-  }
-
-  /** Per-file (column stats, exact row count), ONE footer open per file.
-    * Row counts feed metadata-only aggregation; -1 (unreadable footer)
-    * refuses that path rather than corrupting it. Reads are independent ~ms
-    * I/O, so the files are read in parallel.
-    */
-  private def footerStats(table: String, files: Seq[String])
-      : Map[String, (ManifestStats.FileStats, Long)] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.traverse(files)(f =>
-      Future(f -> ManifestStats.statsAndCount(dir(table).resolve(f)))), Duration.Inf).toMap
   }
 
   /** Write `bytes` under `name` atomically-or-not-at-all: full content to
@@ -566,79 +550,91 @@ object IcebergishTable {
     * the batch twin of the streaming sink's stage-then-promote. This is
     * what gives every batch write an EXPLICIT file list for its manifest
     * (commit records exactly these paths + the parent's), and it keeps a
-    * concurrent writer's in-flight job files out of everyone else's
-    * commits: nothing under `data/_staging` is ever visible to reads or
-    * manifests until ITS writer promotes it.
+    * concurrent writer's in-flight files out of everyone else's commits:
+    * nothing under `data/_staging` is ever visible to reads or manifests
+    * until ITS writer promotes it.
     *
-    * Returns (promoted table-relative paths, touched bucket ids —
-    * buckets this write produced data for plus `alsoReplace` buckets the
-    * caller is rewriting even if they came out empty). A crash between
-    * promote and commit leaves orphans that no manifest references —
-    * invisible to reads; [[removeOrphans]] + [[expireSnapshots]] reclaim.
-    * Committed files of the touched buckets are NEVER touched here:
-    * partition-overwrite callers drop them from the manifest, and they
-    * stay on disk until expiry (time travel keeps working).
+    * The rows are written by the tasks that produce them: [[TableWriter]]
+    * runs `df` as one SQL execution rooted at a write node whose tasks each
+    * write one parquet file per bucket under
+    * `data/_staging/batch-<uid>/part=<b>/` and return (bucket, path, footer
+    * bounds, row count) per file — no output committer, no driver-side
+    * listing or footer read. The driver promotes exactly the returned files,
+    * then deletes the staging tree, which also removes any losing task
+    * attempt's files and every file of a failed write. Table files are
+    * never split on `spark.sql.files.maxRecordsPerFile`.
+    *
+    * Returns (promoted files, touched bucket ids — buckets this write
+    * produced data for plus `alsoReplace` buckets the caller is rewriting
+    * even if they came out empty). A crash between promote and commit
+    * leaves orphans that no manifest references — invisible to reads;
+    * [[removeOrphans]] + [[expireSnapshots]] reclaim. Committed files of
+    * the touched buckets are NEVER touched here: partition-overwrite
+    * callers drop them from the manifest, and they stay on disk until
+    * expiry (time travel keeps working).
     */
   private def stagePromote(df: DataFrame, table: String,
                            alsoReplace: Seq[Int] = Seq.empty)
-      : (Seq[String], Seq[Int]) = {
+      : (Seq[WrittenFile], Seq[Int]) = {
     val d = dir(table)
-    val uid = java.util.UUID.randomUUID.toString.take(12)
-    val staging = d.resolve("data").resolve("_staging").resolve(s"batch-$uid")
-    df.write
-      .mode(SaveMode.Overwrite)
-      .partitionBy(PartCol)
-      .parquet(staging.toString)
-    val staged: Seq[(Int, Path)] =
-      if (!Files.exists(staging)) Seq.empty
-      else Files.walk(staging).iterator().asScala
-        .filter(_.toString.endsWith(".parquet"))
-        .filterNot(p => isHiddenPath(staging.relativize(p)))
-        .map { p =>
-          val rel = staging.relativize(p).toString
-          (bucketOfPath(rel), p)
-        }
-        .toSeq
-    val touched = (staged.map(_._1) ++ alsoReplace).distinct.sorted
-    val promoted = staged.map { case (b, src) =>
-      val dst = d.resolve("data").resolve(s"$PartCol=$b")
-        .resolve(src.getFileName.toString)
-      Files.createDirectories(dst.getParent)
-      // Spark part-file names carry the write job's UUID — unique across
-      // concurrent writers, so promotes never collide.
-      Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-      // Refresh mtime at PROMOTE time: move preserves the staging-time
-      // mtime, so a write that staged for longer than removeOrphans' grace
-      // window would promote files that already look expired — a concurrent
-      // vacuum could reap them inside this writer's promote→commit window.
-      // The grace clock must start when the file becomes vacuum-visible.
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-      d.relativize(dst).toString
-    }
-    // Staging tree is empty now — remove it (reverse walk: dirs last).
-    Files.walk(staging).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    (promoted, touched)
+    val staging = d.resolve("data").resolve("_staging")
+    val batch = staging.resolve(s"batch-${java.util.UUID.randomUUID.toString.take(12)}")
+    val promoted =
+      try TableWriter.stage(df, table, d.relativize(batch).toString).map { f =>
+        val src = d.resolve(f.path)
+        val dst = d.resolve("data").resolve(s"$PartCol=${f.bucket}")
+          .resolve(src.getFileName.toString)
+        Files.createDirectories(dst.getParent)
+        // File names carry the write's uid — unique across concurrent
+        // writers, so promotes never collide.
+        Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
+        // Refresh mtime at PROMOTE time: move preserves the staging-time
+        // mtime, so a write that staged for longer than removeOrphans' grace
+        // window would promote files that already look expired — a concurrent
+        // vacuum could reap them inside this writer's promote→commit window.
+        // The grace clock must start when the file becomes vacuum-visible.
+        Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
+        f.copy(path = d.relativize(dst).toString)
+      }
+      finally {
+        deleteTree(batch)
+        // An emptied staging root goes too; a concurrent writer's keeps it.
+        try Files.deleteIfExists(staging)
+        catch { case _: java.nio.file.DirectoryNotEmptyException => }
+      }
+    (promoted, (promoted.map(_.bucket) ++ alsoReplace).distinct.sorted)
   }
+
+  /** Delete `p` and everything under it, if it exists. */
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val s = Files.walk(p)
+      try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
+      finally s.close()
+    }
 
   /** Run an append-type commit, deleting the just-promoted `added` files
     * when the commit is REJECTED with a typed error (SchemaMismatch,
     * CommitConflict, …) — a refused write must not leave orphans behind
     * for the vacuum, mirroring rewriteBuckets' conflict cleanup.
     */
-  private def commitOrCleanup(table: String, added: Seq[String])
+  private def commitOrCleanup(table: String, added: Seq[WrittenFile])
                              (body: => Int): Int =
     try body
     catch {
       case e: graft.GraftError =>
-        added.foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
+        added.foreach(f => Files.deleteIfExists(dir(table).resolve(f.path)))
         throw e
     }
 
   /** Write `df` hash-bucketed on `keyCol` into `numParts` partitions,
-    * creating a new snapshot. `mode` Overwrite replaces the whole table
-    * (it is a re-create, EXCLUSIVE with every other writer by nature: the
-    * data directory is wiped);
+    * creating a new snapshot. Both modes write through [[stagePromote]]'s
+    * task-side writer (one file per bucket per task, never split on
+    * `spark.sql.files.maxRecordsPerFile`). `mode` Overwrite replaces the
+    * whole table (it is a re-create, EXCLUSIVE with every other writer by
+    * nature: the data directory is wiped first, and the commit replaces
+    * every file with the promoted ones);
     * Append stages + promotes new files beside existing ones and commits
     * an explicit file delta — safe under concurrent appends (threads or
     * JVMs), per the commit protocol above. Appends must match the
@@ -664,15 +660,11 @@ object IcebergishTable {
           bucketKey = Some((keyCol, numParts)), added = added)
       }
     } else {
-      withPart.write
-        .mode(mode)
-        .partitionBy(PartCol)
-        .parquet(dir(table).resolve("data").toString)
+      deleteTree(dir(table).resolve("data"))
+      val (added, _) = stagePromote(withPart, table)
       val prior = currentSnapshot(table)
-      // The wiped-and-rewritten directory holds exactly this write's files.
       commit(table, withPart.schema.json, 0 until numParts, 0L,
-        bucketKey = Some((keyCol, numParts)),
-        added = listDataFiles(table), replaceAll = true)
+        bucketKey = Some((keyCol, numParts)), added = added, replaceAll = true)
       // Drop the overwritten snapshots' manifests AFTER the new commit is
       // durable — their data files are gone, so a later pinned read must
       // fail loudly (SnapshotNotFound), not return silently-empty results.
@@ -686,7 +678,10 @@ object IcebergishTable {
 
   /** Write a DataFrame that is ALREADY hash-partitioned on `PartCol` (each
     * task holds exactly one bucket): dynamic-partition-overwrite semantics
-    * with no extra exchange — the single-shuffle fast path's sink. `keyCol`
+    * with no extra exchange — the single-shuffle fast path's sink. The
+    * write runs as ONE SQL execution whose root is the task-side writer
+    * ([[stagePromote]]): the plan's own exchange is its only one, there is
+    * no sort, and an `observe` on `df0` fires. `keyCol`
     * records the bucket spec in the manifest (the caller bucketed on it
     * upstream). `replaceParts` marks buckets the caller is REWRITING even
     * if the new input yields zero rows for them (their parent-manifest
@@ -726,7 +721,9 @@ object IcebergishTable {
     * `queryId → epoch` in the same VERSION swap that publishes the files,
     * and the caller skips any epoch at or below [[streamEpoch]]. A write
     * that stages no files commits nothing. Returns the rows committed, from
-    * the footers the manifest's entries are built from.
+    * the row counts its writing tasks read back from their files' footers
+    * (the same ones the manifest's entries record); the driver opens no
+    * file.
     */
   def appendPrePartitioned(df0: DataFrame, table: String, numParts: Int,
                            keyCol: String, queryId: String, epoch: Long): Long = {
@@ -734,13 +731,12 @@ object IcebergishTable {
     validateAppend(table, keyCol, numParts, df.schema)
     val (added, _) = stagePromote(df, table)
     if (added.isEmpty) return 0L
-    val footers = footerStats(table, added)
     commitOrCleanup(table, added) {
       commit(table, df.schema.json, 0 until numParts, 0L,
         bucketKey = Some((keyCol, numParts)),
-        epochUpdate = Map(queryId -> epoch), added = added, footers = footers)
+        epochUpdate = Map(queryId -> epoch), added = added)
     }
-    footers.valuesIterator.map(_._2).sum
+    added.map(_.rows).sum
   }
 
   /** Parsed current-snapshot manifest metadata for the DSv2 catalog:
@@ -968,11 +964,13 @@ object IcebergishTable {
   private val commitLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Commit one streaming micro-batch: promote `staged` files (written by
-    * the DSv2 StreamingWrite's DataWriters under `data/_staging/…`, hidden
-    * from every read and directory-based commit) into their bucket
-    * directories and commit a snapshot whose manifest records
-    * `queryId → epochId`.
+  /** Commit one streaming micro-batch: promote `staged` (bucket,
+    * table-relative path) files — hidden under `data/_staging/…` from
+    * every read and directory-based commit — into their bucket directories
+    * and commit a snapshot whose manifest records `queryId → epochId`.
+    * Files staged this way carry no bounds or row counts; the streaming
+    * sink commits through [[streamCommitFiles]] with the ones its tasks
+    * read back.
     *
     * Exactly-once: an epoch at or below [[streamEpoch]] is a replay — its
     * staged files are discarded, nothing commits. A crash AFTER files were
@@ -987,23 +985,25 @@ object IcebergishTable {
     */
   def streamCommit(table: String, staged: Seq[(Int, String)],
                    queryId: String, epochId: Long): Unit =
+    streamCommitFiles(table, staged.map { case (b, rel) => WrittenFile(b, rel) },
+      queryId, epochId)
+
+  /** [[streamCommit]] of files staged by [[TableFileWriter]]s, with the
+    * bounds and row counts they read back.
+    */
+  private[graft] def streamCommitFiles(table: String, staged: Seq[WrittenFile],
+                                       queryId: String, epochId: Long): Unit =
     commitLocks.computeIfAbsent(table, _ => new Object).synchronized {
       streamCommitLocked(table, staged, queryId, epochId)
     }
 
-  private def streamCommitLocked(table: String, staged: Seq[(Int, String)],
+  private def streamCommitLocked(table: String, staged: Seq[WrittenFile],
                                  queryId: String, epochId: Long): Unit = {
     val cur = requireSnapshot(table)
-    def sweepStaging(): Unit = {
-      val stagingQ = dir(table).resolve("data").resolve("_staging")
-        .resolve(s"q-$queryId")
-      if (Files.exists(stagingQ))
-        Files.walk(stagingQ).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
+    def sweepStaging(): Unit =
+      deleteTree(dir(table).resolve("data").resolve("_staging").resolve(s"q-$queryId"))
     if (streamEpoch(table, queryId).exists(_ >= epochId)) {
-      staged.foreach { case (_, rel) =>
-        Files.deleteIfExists(dir(table).resolve(rel))
-      }
+      staged.foreach(f => Files.deleteIfExists(dir(table).resolve(f.path)))
       sweepStaging() // a replayed epoch's staging leftovers are all garbage
       return
     }
@@ -1018,9 +1018,9 @@ object IcebergishTable {
       .filterNot(committed)
       .filter(_.contains(s"-q$queryId-e$epochId-"))
       .foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
-    val promoted = staged.map { case (b, rel) =>
-      val src = dir(table).resolve(rel)
-      val dst = dir(table).resolve("data").resolve(s"$PartCol=$b")
+    val promoted = staged.map { f =>
+      val src = dir(table).resolve(f.path)
+      val dst = dir(table).resolve("data").resolve(s"$PartCol=${f.bucket}")
         .resolve(src.getFileName.toString)
       Files.createDirectories(dst.getParent)
       Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE,
@@ -1028,10 +1028,10 @@ object IcebergishTable {
       // Grace clock starts at promote, not staging (see stagePromote).
       Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-      dir(table).relativize(dst).toString
+      f.copy(path = dir(table).relativize(dst).toString)
     }
     commit(table, m.schema.json,
-      partsOf(m.bucket, staged.map(_._1).distinct.sorted), 0L,
+      partsOf(m.bucket, staged.map(_.bucket).distinct.sorted), 0L,
       bucketKey = m.bucket, epochUpdate = Map(queryId -> epochId), added = promoted)
     // The epoch is committed: this query's staging area is dead weight
     // (earlier epochs' leftovers included — micro-batches are serial).
@@ -1044,11 +1044,7 @@ object IcebergishTable {
     * table (a deleted bucket must fail resume verification and recompute).
     */
   def deletePartitionDirs(table: String, parts: Seq[Int]): Unit =
-    parts.foreach { p =>
-      val d = dir(table).resolve("data").resolve(s"$PartCol=$p")
-      if (Files.exists(d))
-        Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
+    parts.foreach(p => deleteTree(dir(table).resolve("data").resolve(s"$PartCol=$p")))
 
   /** Current table state = the CURRENT MANIFEST's file list — genuinely
     * snapshot-consistent: a concurrent append's files sit in the bucket
@@ -1299,7 +1295,7 @@ object IcebergishTable {
                                       expectedParent: Option[Int] = None): Int = {
     val (schemaJson, spec) = manifestMeta(table)
     commit(table, schemaJson, partsOf(spec, added.map(bucketOfPath).distinct.sorted),
-      0L, bucketKey = spec, added = added,
+      0L, bucketKey = spec, added = added.map(f => WrittenFile(bucketOfPath(f), f)),
       expectedParent = expectedParent)
   }
 
@@ -1396,7 +1392,7 @@ object IcebergishTable {
       case e: graft.CommitConflict =>
         // Abort cleanly: the fresh rewrite never entered any manifest —
         // delete it so the loser leaves no orphans behind.
-        fresh.foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
+        fresh.foreach(f => Files.deleteIfExists(dir(table).resolve(f.path)))
         throw e
     }
   }
@@ -1437,7 +1433,7 @@ object IcebergishTable {
         replaceAll = true, expectedParent = Some(startSnap))
     } catch {
       case e: graft.CommitConflict =>
-        fresh.foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
+        fresh.foreach(f => Files.deleteIfExists(dir(table).resolve(f.path)))
         throw e
     }
   }
@@ -1666,7 +1662,7 @@ object IcebergishTable {
         addedDeletes = delRel.toSeq, expectedParent = Some(startSnap))
     } catch {
       case e: graft.GraftError =>
-        added.foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
+        added.foreach(f => Files.deleteIfExists(dir(table).resolve(f.path)))
         delRel.foreach(r => Files.deleteIfExists(dir(table).resolve(r)))
         throw e
     }
@@ -1692,7 +1688,7 @@ object IcebergishTable {
         expectedParent = Some(startSnap))
     } catch {
       case e: graft.CommitConflict =>
-        fresh.foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
+        fresh.foreach(f => Files.deleteIfExists(dir(table).resolve(f.path)))
         throw e
     }
   }
@@ -1828,10 +1824,5 @@ object IcebergishTable {
     throw new IllegalStateException("unreachable")
   }
 
-  def drop(table: String): Unit = {
-    val d = dir(table)
-    if (Files.exists(d)) {
-      Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
-  }
+  def drop(table: String): Unit = deleteTree(dir(table))
 }

@@ -17,10 +17,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * not every file of every bucket.
   *
   * Mechanics:
-  *  - At commit, each writer reads the parquet FOOTERS of its own added
-  *    files (same O(new files) cost class as the size stat) and encodes
-  *    min/max per top-level column; entries carry forward from the parent
-  *    manifest for unchanged files, exactly like sizes.
+  *  - Each writing task reads back the parquet FOOTERS of the files it has
+  *    just closed and encodes min/max per top-level column and the exact
+  *    row count; they travel to the driver with each path, so a commit
+  *    opens no file. Entries carry forward from the parent manifest for
+  *    unchanged files, exactly like sizes.
+  *  - A writer that truncates string statistics
+  *    (`parquet.statistics.truncate.length`) records bounds that still
+  *    prune but are no column values: the max is marked ([[exact]]), and
+  *    metadata MIN/MAX refuses marked bounds.
   *  - They ride the manifest as [[DataFile.stats]] (`"colstats"`, see
   *    [[Manifest]] for the encoding).
   *  - Pruning is CONSERVATIVE by construction: a column absent from a
@@ -40,6 +45,14 @@ object ManifestStats {
     */
   private val MaxStringLen = 64
 
+  /** Appended to the max bound of a string column whose footer bounds the
+    * writer may have truncated: parquet keeps a prefix of the min and rounds
+    * a cut max up, so both remain valid zone-map bounds — the marked max
+    * too, as the mark is the largest code point — but neither need be a
+    * value of the file.
+    */
+  private val InexactMark = new String(Character.toChars(Character.MAX_CODE_POINT))
+
   /** Column → (encoded min, encoded max) of one data file. */
   type FileStats = Map[String, (String, String)]
 
@@ -56,9 +69,12 @@ object ManifestStats {
     * row count, from ONE footer open. Never throws — stats are advisory:
     * row count -1 when the footer is unreadable (a -1 in the manifest
     * refuses metadata-only aggregation for the table, it never corrupts
-    * it).
+    * it). `truncateLength` is the writer's
+    * `parquet.statistics.truncate.length` (`Int.MaxValue`: no truncation):
+    * a string bound of at most that many bytes may be a cut one, and its
+    * column's max is marked.
     */
-  def statsAndCount(file: Path): (FileStats, Long) =
+  def statsAndCount(file: Path, truncateLength: Int): (FileStats, Long) =
     try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(file.toUri), hadoopConf)
@@ -70,8 +86,10 @@ object ManifestStats {
         // cover every row of the file).
         var merged: FileStats = Map.empty
         var dropped = Set.empty[String]
+        var strings = Set.empty[String]
         for (b <- blocks; c <- b.getColumns.asScala) {
           val name = c.getPath.toDotString
+          if (statKind(c) == "s") strings += name
           if (c.getPath.size() == 1 && !dropped(name)) {
             encodeStats(c) match {
               case Some((mn, mx)) =>
@@ -86,7 +104,14 @@ object ManifestStats {
             }
           }
         }
-        (merged, blocks.iterator.map(_.getRowCount).sum)
+        def mayBeCut(b: String): Boolean = truncateLength < Int.MaxValue &&
+          UTF8String.fromString(b).numBytes() <= truncateLength
+        val marked = merged.map {
+          case (n, (mn, mx)) if strings(n) && (mayBeCut(mn) || mayBeCut(mx)) =>
+            n -> (mn, mx + InexactMark)
+          case e => e
+        }
+        (marked, blocks.iterator.map(_.getRowCount).sum)
       } finally reader.close()
     } catch { case scala.util.control.NonFatal(_) => (Map.empty, -1L) }
 
@@ -442,6 +467,11 @@ object ManifestStats {
   def fileStatsOf(table: String, snapshot: Int): Map[String, FileStats] =
     scala.util.Try(Manifest.load(table, snapshot)).toOption.flatten
       .fold(Map.empty[String, FileStats])(_.files.map(f => f.path -> f.stats).toMap)
+
+  /** True unless the writer may have truncated these bounds (see
+    * [[InexactMark]]): only exact bounds answer metadata MIN/MAX.
+    */
+  def exact(bounds: (String, String)): Boolean = !bounds._2.endsWith(InexactMark)
 
   /** Metadata MIN/MAX support for a column type: (decode an encoded bound
     * into Spark's INTERNAL value, compare two encoded bounds). Floats and

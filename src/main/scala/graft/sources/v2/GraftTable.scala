@@ -289,7 +289,8 @@ final class GraftScanBuilder(path: String, tableSchema: StructType,
     * - for MIN/MAX: supported type (floats excluded — NaN can hide outside
     *   footer bounds), no ghost-shadowed name, and every file with rows
     *   must carry the column's bounds entry (an all-null file has none —
-    *   refusing there is what keeps NULL semantics exact).
+    *   refusing there is what keeps NULL semantics exact), exact ones (a
+    *   writer-truncated string bound is no value, [[ManifestStats.exact]]).
     *
     * Anything else returns false and Spark runs the ordinary scan.
     */
@@ -323,7 +324,7 @@ final class GraftScanBuilder(path: String, tableSchema: StructType,
       val (decode, cmp) = ManifestStats.minMaxSupport(fld.dataType)
         .getOrElse(return None)
       val entries = live.filter(_.rows > 0)
-        .map(f => f.stats.getOrElse(colName, return None))
+        .map(f => f.stats.get(colName).filter(ManifestStats.exact).getOrElse(return None))
       if (entries.isEmpty) Some(None)
       else {
         val encoded = entries.map(e => if (wantMin) e._1 else e._2)

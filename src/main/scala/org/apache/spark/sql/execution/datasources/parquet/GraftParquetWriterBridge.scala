@@ -1,11 +1,13 @@
 /*
  * Lives in Spark's parquet datasource package solely to reach the
  * private[sql] standalone parquet writer machinery (ParquetOutputWriter,
- * ParquetWriteSupport) that DSv2 streaming DataWriters need — Spark's own
+ * ParquetWriteSupport) that task-side table writers need — Spark's own
  * file-based streaming sinks use exactly these classes. Everything used
  * here is Apache Spark public source.
  */
 package org.apache.spark.sql.execution.datasources.parquet
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
@@ -18,22 +20,26 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Bridge for writing `InternalRow`s to a single parquet file outside a
-  * Spark write job — the executor half of a DSv2 `StreamingWrite` (each
-  * `DataWriter` owns its own file; the driver promotes files at epoch
-  * commit). Mirrors the subset of `ParquetFileFormat.prepareWrite` the
-  * record writer actually consults.
+  * Spark write job — the executor half of every table write
+  * (`graft.io.TableFileWriter`: each task owns its files; the driver
+  * promotes them at commit). Mirrors the subset of
+  * `ParquetFileFormat.prepareWrite` the record writer actually consults.
   */
 object GraftParquetWriterBridge {
 
   /** Driver side: the conf entries a standalone ParquetWriteSupport needs,
-    * captured from the active session (hadoop `Configuration` itself is not
-    * serializable; this string map is).
+    * captured from `spark` (hadoop `Configuration` itself is not
+    * serializable; this string map is): every `parquet.*` key of the
+    * session's Hadoop conf, so a user's parquet settings reach the files,
+    * then the writer's own entries over them.
     */
   def writerConfEntries(spark: SparkSession, schema: StructType): Map[String, String] = {
     val sqlConf = spark.sessionState.conf
     val tmp = new Configuration(false)
     ParquetWriteSupport.setSchema(schema, tmp)
-    Map(
+    val parquetKeys = spark.sessionState.newHadoopConf().iterator().asScala
+      .map(e => e.getKey -> e.getValue).filter(_._1.startsWith("parquet.")).toMap
+    parquetKeys ++ Map(
       ParquetOutputFormat.WRITE_SUPPORT_CLASS -> classOf[ParquetWriteSupport].getName,
       ParquetWriteSupport.SPARK_ROW_SCHEMA -> tmp.get(ParquetWriteSupport.SPARK_ROW_SCHEMA),
       SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key -> sqlConf.writeLegacyParquetFormat.toString,
@@ -52,13 +58,16 @@ object GraftParquetWriterBridge {
     )
   }
 
-  /** Executor side: open a parquet writer at `path` (absolute, one file). */
+  /** Executor side: open a parquet writer at `path` (absolute, one file),
+    * on a conf holding `confEntries` only — no Hadoop default resources
+    * are parsed per file.
+    */
   def open(path: String, confEntries: Map[String, String],
            partitionId: Int, taskId: Long, epochId: Long): OutputWriter = {
-    val conf = new Configuration()
+    val conf = new Configuration(false)
     confEntries.foreach { case (k, v) => conf.set(k, v) }
     val attemptId = new TaskAttemptID(
-      new TaskID(new JobID("graft-stream", (epochId & 0x7fffffffL).toInt),
+      new TaskID(new JobID("graft-write", (epochId & 0x7fffffffL).toInt),
         TaskType.MAP, partitionId),
       (taskId & 0x7fffffffL).toInt)
     new ParquetOutputWriter(path, new TaskAttemptContextImpl(conf, attemptId))
