@@ -186,10 +186,10 @@ object IcebergishTable {
   }
 
   /** True when any component of the (relative) path is hidden by Hadoop
-    * convention: the output committer stages task files under `_temporary`
-    * (and writes `.`-prefixed CRCs). A crashed or concurrent write leaves
-    * staged files there — treating them as data would commit partial or
-    * duplicate rows into the next snapshot's manifest.
+    * convention: writers stage files under `data/_staging` (and the local
+    * filesystem writes `.`-prefixed CRCs). A crashed or concurrent write
+    * leaves staged files there — treating them as data would commit
+    * partial or duplicate rows into the next snapshot's manifest.
     */
   private def isHiddenPath(rel: Path): Boolean =
     rel.iterator().asScala.exists { seg =>
@@ -197,10 +197,9 @@ object IcebergishTable {
       s.startsWith("_") || s.startsWith(".")
     }
 
-  /** Data files on disk (relative paths, sorted), minus committer
-    * staging/hidden paths. Never what a table contains — that is its
-    * manifest — only what garbage sweeps and a re-create's commit start
-    * from.
+  /** Data files on disk (relative paths, sorted), minus staging/hidden
+    * paths. Never what a table contains — that is its manifest — only what
+    * garbage sweeps start from.
     */
   private def listDataFiles(table: String): Seq[String] = {
     val data = dir(table).resolve("data")

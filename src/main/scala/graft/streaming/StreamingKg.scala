@@ -66,7 +66,8 @@ object StreamingKg {
     * nothing is cached, collected or counted on the way. A batch with no
     * fresh rows stages no files and commits nothing. Each processed batch
     * then appends one lineage row to `$table-acks` whose `rows_out` is the
-    * commit's footer row count; nothing reads it back for replay.
+    * row count the writing tasks read back from the committed files'
+    * footers; nothing reads it back for replay.
     */
   def appendBatch(batch: DataFrame, table: String, queryId: String,
                   batchId: Long, numParts: Int): Unit = {
