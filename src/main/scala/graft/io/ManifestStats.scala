@@ -58,10 +58,9 @@ object ManifestStats {
 
   // ---- commit side: parquet footer → manifest entry ------------------------
 
-  /** One shared bare Configuration: constructing a fresh one per footer
-    * read costs more than the read itself (measured ~8 ms/file, dominated
-    * by conf+filesystem setup; shared conf + parallel reads cut a
-    * ~100-file commit's stats pass to tens of ms).
+  /** One shared bare Configuration per JVM: constructing a fresh one per
+    * footer read costs more than the read itself (measured ~8 ms/file,
+    * dominated by conf+filesystem setup).
     */
   private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration(false)
 

@@ -3,6 +3,7 @@ package graft.io
 import java.nio.file.{Files, NoSuchFileException, Path, Paths}
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
@@ -180,7 +181,10 @@ final case class TableWriteExec(child: SparkPlan, table: String, staging: String
       val w = TableFileWriter.byPart(t, s, u, input, conf, TaskContext.get())
       val written =
         try { rows.foreach(w.write); w.commit() }
-        catch { case e: Throwable => w.abort(); throw e }
+        catch { case e: Throwable =>
+          try w.abort() catch { case NonFatal(a) => e.addSuppressed(a) }
+          throw e
+        }
         finally w.close()
       written.files.iterator.map { f =>
         toUnsafe(new GenericInternalRow(Array[Any](f.bucket, UTF8String.fromString(f.path),
