@@ -164,6 +164,18 @@ class OpsSpec extends SparkSpec {
     assert(incremental.reduce(_ union _) == full,
       "incremental pair union diverged from the single-shot run")
 
+    // The returned frames are lazy: built on a fresh state table and
+    // collected only after all three commits, each still answers against
+    // the state it was built on.
+    val lazyState = java.nio.file.Files
+      .createTempDirectory("graft-incspec-lazy").toString + "/sigs"
+    val lazyFrames = batches.map(b =>
+      graft.ops.IncrementalDedup.processBatch(b, "doc_id", "text", lazyState))
+    val lazySets = lazyFrames.map(_.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    assert(lazySets == incremental,
+      s"pairs collected after later commits diverged: $lazySets vs $incremental")
+
     // Replay batch 1: already-committed ids emit nothing and append nothing.
     val snapBefore = graft.io.IcebergishTable.currentSnapshot(state)
     val replay = graft.ops.IncrementalDedup.processBatch(
