@@ -544,14 +544,20 @@ object IcebergishTable {
   def bucketFnOf(table: String): Option[String] =
     tryLoad(table, currentSnapshot(table)).flatMap(_.bucketFn)
 
-  /** Stage `df` (already carrying [[PartCol]]) into a hidden per-write
-    * staging directory, then promote each file into its bucket directory —
-    * the batch twin of the streaming sink's stage-then-promote. This is
-    * what gives every batch write an EXPLICIT file list for its manifest
-    * (commit records exactly these paths + the parent's), and it keeps a
-    * concurrent writer's in-flight files out of everyone else's commits:
-    * nothing under `data/_staging` is ever visible to reads or manifests
-    * until ITS writer promotes it.
+  /** What a staged write hands its commit: the promoted data files and
+    * the position-delete file written for the same commit, if any.
+    */
+  private final case class Staged(files: Seq[WrittenFile], deletes: Seq[String])
+
+  /** The one stage-and-commit funnel of every batch table write: stage
+    * `df` (already carrying [[PartCol]]) into a hidden per-write staging
+    * directory, promote each file into its bucket directory, write the
+    * position-delete file of `victims` (when there are any), then run the
+    * caller's `commitStaged` over them. This gives every batch write an
+    * EXPLICIT file list for its manifest (commit records exactly these
+    * paths + the parent's), and it keeps a concurrent writer's in-flight
+    * files out of everyone else's commits: nothing under `data/_staging`
+    * is ever visible to reads or manifests until ITS writer promotes it.
     *
     * The rows are written by the tasks that produce them: [[TableWriter]]
     * runs `df` as one SQL execution rooted at a write node whose tasks each
@@ -563,18 +569,19 @@ object IcebergishTable {
     * attempt's files and every file of a failed write. Table files are
     * never split on `spark.sql.files.maxRecordsPerFile`.
     *
-    * Returns (promoted files, touched bucket ids — buckets this write
-    * produced data for plus `alsoReplace` buckets the caller is rewriting
-    * even if they came out empty). A crash between promote and commit
-    * leaves orphans that no manifest references — invisible to reads;
-    * [[removeOrphans]] + [[expireSnapshots]] reclaim. Committed files of
-    * the touched buckets are NEVER touched here: partition-overwrite
-    * callers drop them from the manifest, and they stay on disk until
-    * expiry (time travel keeps working).
+    * A commit REFUSED with a typed [[graft.GraftError]] (CommitConflict,
+    * SchemaMismatch, …) deletes the promoted files and the position-delete
+    * file before the error is rethrown: a refused write leaves nothing
+    * behind for the vacuum. A crash between promote and commit leaves
+    * orphans that no manifest references — invisible to reads;
+    * [[removeOrphans]] + [[expireSnapshots]] reclaim. Committed files are
+    * NEVER touched here: partition-overwrite callers drop them from the
+    * manifest, and they stay on disk until expiry (time travel keeps
+    * working). Returns the promoted files.
     */
   private def stagePromote(df: DataFrame, table: String,
-                           alsoReplace: Seq[Int] = Seq.empty)
-      : (Seq[WrittenFile], Seq[Int]) = {
+                           victims: Seq[(String, Long)] = Seq.empty)
+                          (commitStaged: Staged => Unit): Seq[WrittenFile] = {
     val d = dir(table)
     val staging = d.resolve("data").resolve("_staging")
     val batch = staging.resolve(s"batch-${java.util.UUID.randomUUID.toString.take(12)}")
@@ -602,7 +609,29 @@ object IcebergishTable {
         try Files.deleteIfExists(staging)
         catch { case _: java.nio.file.DirectoryNotEmptyException => }
       }
-    (promoted, (promoted.map(_.bucket) ++ alsoReplace).distinct.sorted)
+    val staged = Staged(promoted,
+      if (victims.isEmpty) Seq.empty else Seq(writePositionDeletes(table, victims)))
+    try commitStaged(staged)
+    catch {
+      case e: graft.GraftError =>
+        (promoted.map(_.path) ++ staged.deletes).foreach(f => Files.deleteIfExists(d.resolve(f)))
+        throw e
+    }
+    promoted
+  }
+
+  /** Write a position-delete file under `deletes/` — sorted TSV lines
+    * `relativeDataFile\tposition` (see [[readDeleteFile]]) — and return its
+    * table-relative path. It is live once a commit records it.
+    */
+  private def writePositionDeletes(table: String, victims: Seq[(String, Long)]): String = {
+    val rel = s"deletes/delete-${java.util.UUID.randomUUID.toString.take(12)}.tsv"
+    val p = dir(table).resolve(rel)
+    Files.createDirectories(p.getParent)
+    Files.write(p, victims.sorted
+      .map { case (f, pos) => s"$f\t$pos" }
+      .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    rel
   }
 
   /** Delete `p` and everything under it, if it exists. */
@@ -611,20 +640,6 @@ object IcebergishTable {
       val s = Files.walk(p)
       try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
       finally s.close()
-    }
-
-  /** Run an append-type commit, deleting the just-promoted `added` files
-    * when the commit is REJECTED with a typed error (SchemaMismatch,
-    * CommitConflict, …) — a refused write must not leave orphans behind
-    * for the vacuum, mirroring rewriteBuckets' conflict cleanup.
-    */
-  private def commitOrCleanup(table: String, added: Seq[WrittenFile])
-                             (body: => Int): Int =
-    try body
-    catch {
-      case e: graft.GraftError =>
-        added.foreach(f => Files.deleteIfExists(dir(table).resolve(f.path)))
-        throw e
     }
 
   /** Write `df` hash-bucketed on `keyCol` into `numParts` partitions,
@@ -648,30 +663,23 @@ object IcebergishTable {
       .repartition(numParts, col(PartCol))
     // Append inherits the committed field ids; Overwrite is a RE-CREATE
     // (possibly with a different schema) and assigns fresh ones.
+    val append = mode == SaveMode.Append
     val withPart =
-      if (mode == SaveMode.Append) withFieldIds(bucketed, table)
-      else withFreshFieldIds(bucketed)
-    if (mode == SaveMode.Append) {
-      validateAppend(table, keyCol, numParts, withPart.schema)
-      val (added, _) = stagePromote(withPart, table)
-      commitOrCleanup(table, added) {
-        commit(table, withPart.schema.json, 0 until numParts, 0L,
-          bucketKey = Some((keyCol, numParts)), added = added)
-      }
-    } else {
-      deleteTree(dir(table).resolve("data"))
-      val (added, _) = stagePromote(withPart, table)
-      val prior = currentSnapshot(table)
+      if (append) withFieldIds(bucketed, table) else withFreshFieldIds(bucketed)
+    if (append) validateAppend(table, keyCol, numParts, withPart.schema)
+    else deleteTree(dir(table).resolve("data"))
+    val prior = currentSnapshot(table)
+    stagePromote(withPart, table) { s =>
       commit(table, withPart.schema.json, 0 until numParts, 0L,
-        bucketKey = Some((keyCol, numParts)), added = added, replaceAll = true)
-      // Drop the overwritten snapshots' manifests AFTER the new commit is
-      // durable — their data files are gone, so a later pinned read must
-      // fail loudly (SnapshotNotFound), not return silently-empty results.
-      // Deleting before the commit would open a crash window where VERSION
-      // points at a deleted manifest and the table metadata is unreadable.
-      (0 to prior).foreach { sOld =>
-        Files.deleteIfExists(dir(table).resolve(s"snap-$sOld.json"))
-      }
+        bucketKey = Some((keyCol, numParts)), added = s.files, replaceAll = !append)
+    }
+    // Drop the overwritten snapshots' manifests AFTER the new commit is
+    // durable — their data files are gone, so a later pinned read must
+    // fail loudly (SnapshotNotFound), not return silently-empty results.
+    // Deleting before the commit would open a crash window where VERSION
+    // points at a deleted manifest and the table metadata is unreadable.
+    if (!append) (0 to prior).foreach { sOld =>
+      Files.deleteIfExists(dir(table).resolve(s"snap-$sOld.json"))
     }
   }
 
@@ -701,14 +709,12 @@ object IcebergishTable {
     val df = withFieldIds(df0, table)
     validateAppend(table, keyCol, numParts, df.schema)
     val base = currentSnapshot(table) // pin before staging (see contract)
-    val (added, touched) =
-      stagePromote(df, table, alsoReplace = replaceParts)
-    val touchedSet = touched.toSet
-    commitOrCleanup(table, added) {
+    stagePromote(df, table) { s =>
+      val touched = s.files.map(_.bucket).toSet ++ replaceParts
       commit(table, df.schema.json, 0 until numParts, 0L,
         bucketKey = if (keyCol.nonEmpty) Some((keyCol, numParts)) else None,
-        added = added,
-        dropParent = f => touchedSet.contains(bucketOfPath(f)),
+        added = s.files,
+        dropParent = f => touched.contains(bucketOfPath(f)),
         expectedParent = Some(base))
     }
   }
@@ -728,14 +734,12 @@ object IcebergishTable {
                            keyCol: String, queryId: String, epoch: Long): Long = {
     val df = withFieldIds(df0, table)
     validateAppend(table, keyCol, numParts, df.schema)
-    val (added, _) = stagePromote(df, table)
-    if (added.isEmpty) return 0L
-    commitOrCleanup(table, added) {
-      commit(table, df.schema.json, 0 until numParts, 0L,
-        bucketKey = Some((keyCol, numParts)),
-        epochUpdate = Map(queryId -> epoch), added = added)
-    }
-    added.map(_.rows).sum
+    stagePromote(df, table) { s =>
+      if (s.files.nonEmpty)
+        commit(table, df.schema.json, 0 until numParts, 0L,
+          bucketKey = Some((keyCol, numParts)),
+          epochUpdate = Map(queryId -> epoch), added = s.files)
+    }.map(_.rows).sum
   }
 
   /** Parsed current-snapshot manifest metadata for the DSv2 catalog:
@@ -1376,24 +1380,15 @@ object IcebergishTable {
     current.count() // materialize BEFORE the inputs are superseded
     // Fresh files land beside the old ones (the old files stay on disk —
     // deleting them would break older snapshots' time travel).
-    val (fresh, _) =
-      try stagePromote(current, table)
-      finally current.unpersist(blocking = false)
-    try {
+    try stagePromote(current, table) { s =>
       // Partition list from the COMMITTED spec when one exists: numParts
       // shapes the rewrite's shuffle only (PartCol values are unchanged by
       // the repartition), it is not a layout change.
       commit(table, current.schema.json,
         0 until spec.map(_._2).getOrElse(numParts), 0L,
-        bucketKey = spec, added = fresh, replaceAll = true,
+        bucketKey = spec, added = s.files, replaceAll = true,
         expectedParent = Some(startSnap))
-    } catch {
-      case e: graft.CommitConflict =>
-        // Abort cleanly: the fresh rewrite never entered any manifest —
-        // delete it so the loser leaves no orphans behind.
-        fresh.foreach(f => Files.deleteIfExists(dir(table).resolve(f.path)))
-        throw e
-    }
+    } finally current.unpersist(blocking = false)
   }
 
   /** PARTITION-SPEC EVOLUTION: rewrite the table under a new bucket
@@ -1423,18 +1418,11 @@ object IcebergishTable {
       .repartition(newNumParts, col(PartCol)), table)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rewritten.count() // materialize before the inputs are superseded
-    val (fresh, _) =
-      try stagePromote(rewritten, table)
-      finally rewritten.unpersist(blocking = false)
-    try {
+    try stagePromote(rewritten, table) { s =>
       commit(table, rewritten.schema.json, 0 until newNumParts, 0L,
-        bucketKey = Some((newKey, newNumParts)), added = fresh,
+        bucketKey = Some((newKey, newNumParts)), added = s.files,
         replaceAll = true, expectedParent = Some(startSnap))
-    } catch {
-      case e: graft.CommitConflict =>
-        fresh.foreach(f => Files.deleteIfExists(dir(table).resolve(f.path)))
-        throw e
-    }
+    } finally rewritten.unpersist(blocking = false)
   }
 
   /** Row-level DELETE. Two physical strategies behind one semantic:
@@ -1502,19 +1490,14 @@ object IcebergishTable {
       // bounded by the caller's own threshold.
       val victims = predScan.select(col(FileCol), col(PosCol))
         .collect().map(r => (r.getString(0), r.getLong(1)))
-      val rel = s"deletes/delete-${java.util.UUID.randomUUID.toString.take(12)}.tsv"
-      val p = dir(table).resolve(rel)
-      Files.createDirectories(p.getParent)
-      Files.write(p, victims.sorted
-        .map { case (f, pos) => s"$f\t$pos" }
-        .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+      val rel = writePositionDeletes(table, victims.toSeq)
       try {
         commit(table, schema.json, partsOf(spec, touched.toSeq.sorted),
           0L, bucketKey = spec, addedDeletes = Seq(rel),
           expectedParent = Some(startSnap))
       } catch {
         case e: graft.GraftError =>
-          Files.deleteIfExists(p)
+          Files.deleteIfExists(dir(table).resolve(rel))
           throw e
       }
       return deleted
@@ -1616,19 +1599,22 @@ object IcebergishTable {
           s"MERGE updates column '$c' has type ${got.simpleString}, table expects ${want.simpleString}")
       }: _*)
     }
+    // The updates append as new files; `victims` (matched existing rows)
+    // are masked in the same commit.
+    def appendUpdates(victims: Seq[(String, Long)] = Seq.empty): Unit =
+      stagePromote(withFieldIds(up.select(outCols.map(col): _*)
+          .repartition(math.max(1, touched.size), col(PartCol)), table),
+        table, victims) { s =>
+        commit(table, schema.json, partsOf(spec, touched.toSeq.sorted),
+          0L, bucketKey = spec, added = s.files, addedDeletes = s.deletes,
+          expectedParent = Some(startSnap))
+      }
     // Positions of matched EXISTING rows, excluding already-tombstoned
     // ones (they are logically absent — their keys re-insert, not match).
     if (!m.paths.exists(f => touched.contains(bucketOfPath(f)))) {
       // Nothing to match against: the whole update set inserts — still
       // cheaper as a plain MOR append (no tombstone needed).
-      val (added, _) = stagePromote(withFieldIds(
-        up.select(outCols.map(col): _*)
-          .repartition(math.max(1, touched.size), col(PartCol)), table), table)
-      commitOrCleanup(table, added) {
-        commit(table, schema.json, partsOf(spec, touched.toSeq.sorted),
-          0L, bucketKey = spec, added = added,
-          expectedParent = Some(startSnap))
-      }
+      appendUpdates()
       return true
     }
     // take(limit+1): bounded driver memory AND the over-threshold signal
@@ -1640,38 +1626,15 @@ object IcebergishTable {
       .select(col(FileCol), col(PosCol))
       .take(cap + 1)
     if (matched.length > cap) return false
-    val victims = matched.map(r => (r.getString(0), r.getLong(1)))
-    val (added, _) = stagePromote(withFieldIds(
-      up.select(outCols.map(col): _*)
-        .repartition(math.max(1, touched.size), col(PartCol)), table), table)
-    val delRel =
-      if (victims.isEmpty) None
-      else {
-        val rel = s"deletes/delete-${java.util.UUID.randomUUID.toString.take(12)}.tsv"
-        val p = dir(table).resolve(rel)
-        Files.createDirectories(p.getParent)
-        Files.write(p, victims.sorted
-          .map { case (f, pos) => s"$f\t$pos" }
-          .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-        Some(rel)
-      }
-    try {
-      commit(table, schema.json, partsOf(spec, touched.toSeq.sorted),
-        0L, bucketKey = spec, added = added,
-        addedDeletes = delRel.toSeq, expectedParent = Some(startSnap))
-    } catch {
-      case e: graft.GraftError =>
-        added.foreach(f => Files.deleteIfExists(dir(table).resolve(f.path)))
-        delRel.foreach(r => Files.deleteIfExists(dir(table).resolve(r)))
-        throw e
-    }
+    appendUpdates(matched.map(r => (r.getString(0), r.getLong(1))).toSeq)
     true
   }
 
   /** Shared COW core of [[deleteWhere]]/[[mergeRows]]: stage + promote the
     * replacement rows of `touched` buckets, commit them over exactly those
     * buckets' parent files (pinned to `startSnap`); the replaced files
-    * stay on disk for expiry. Conflict → fresh files cleaned, typed rethrow.
+    * stay on disk for expiry. A refused commit leaves no fresh file behind
+    * ([[stagePromote]]).
     */
   private def rewriteBuckets(table: String, startSnap: Int,
                              schemaJson: String,
@@ -1679,16 +1642,11 @@ object IcebergishTable {
                              touched: Set[Int], replacement: DataFrame): Unit = {
     // Re-annotate: unionByName/joins in the replacement plan may have
     // dropped the field-id metadata the fresh files must embed.
-    val (fresh, _) = stagePromote(withFieldIds(replacement, table), table)
-    try {
+    stagePromote(withFieldIds(replacement, table), table) { s =>
       commit(table, schemaJson, partsOf(spec, touched.toSeq.sorted),
-        0L, bucketKey = spec, added = fresh,
+        0L, bucketKey = spec, added = s.files,
         dropParent = f => touched.contains(bucketOfPath(f)),
         expectedParent = Some(startSnap))
-    } catch {
-      case e: graft.CommitConflict =>
-        fresh.foreach(f => Files.deleteIfExists(dir(table).resolve(f.path)))
-        throw e
     }
   }
 

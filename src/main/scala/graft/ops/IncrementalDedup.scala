@@ -16,9 +16,11 @@ import graft.io.IcebergishTable
   * earlier batches), verify candidates by exact fingerprint-set jaccard,
   * then commit the new signatures to the state table. The state is an
   * [[IcebergishTable]] bucketed by id: appends are atomic snapshots, so a
-  * crashed batch never half-publishes, and a REPLAYED batch converges —
-  * ids already committed are anti-joined out, emitting zero new pairs and
-  * appending nothing (exactly-once by doc id without an external ack log).
+  * crashed batch never half-publishes, and a re-delivered document is a
+  * no-op — ids already committed are anti-joined out, emitting no pairs
+  * and appending nothing. The streaming entry point adds the manifest's
+  * `queryId → epoch` guard on top ([[streamIntoTables]]): a replayed
+  * micro-batch whose appends both committed runs no Spark job at all.
   *
   * Union of emitted pairs over any batch split ≡ the single-shot
   * [[Dedup.minhashLshPairs]] run on the whole corpus (spec-asserted, and
@@ -51,6 +53,13 @@ object IncrementalDedup {
   /** Process one batch; returns the verified near-dup pairs this batch
     * adds: (ia, ib, jaccard) with ia < ib, at least one side new.
     *
+    * The returned frame is lazy and stays correct after the state commit:
+    * it reads the state through the manifest that was current when this
+    * call began ([[IcebergishTable.read]] pins it), so a recompute never
+    * sees this batch's own signatures. A replayed batch emits nothing and
+    * commits nothing: its ids are already in the state, and one probe of
+    * the anti-joined signatures skips the write.
+    *
     * Batches must be processed SERIALLY per state table (the reality of a
     * daily-crawl pipeline): two batches processed CONCURRENTLY would each
     * read a state missing the other, so a cross-pair between them could
@@ -63,22 +72,25 @@ object IncrementalDedup {
                    w: Int = DefaultW, numHashes: Int = DefaultNumHashes,
                    rowsPerBand: Int = DefaultRowsPerBand,
                    minJaccard: Double = DefaultMinJaccard): DataFrame = {
-    val (pairs, fresh, hasState) = computeBatch(batch, idCol, textCol,
+    val (pairs, fresh) = computeBatch(batch, idCol, textCol,
       stateTable, w, numHashes, rowsPerBand, minJaccard)
-    commitState(fresh, stateTable, stateBuckets, hasState)
+    try {
+      if (fresh.limit(1).count() > 0)
+        IcebergishTable.write(signatures(fresh), stateTable, "id",
+          stateBuckets, SaveMode.Append)
+    } finally fresh.unpersist(blocking = false)
     pairs
   }
 
   /** One batch's computation WITHOUT committing anything: (verified pairs,
-    * persisted fresh-signature frame, whether state already exists). The
-    * caller MUST pass `fresh` to [[commitState]] (which also unpersists) —
-    * split out so the streaming sink can interleave its own pairs append
-    * between computation and the state commit.
+    * persisted fresh-signature frame). The caller commits `fresh` and then
+    * unpersists it. Both frames read the state table through the manifest
+    * current at this call, so they recompute identically after a commit.
     */
   private def computeBatch(batch: DataFrame, idCol: String, textCol: String,
                            stateTable: String, w: Int, numHashes: Int,
                            rowsPerBand: Int, minJaccard: Double)
-      : (DataFrame, DataFrame, Boolean) = {
+      : (DataFrame, DataFrame) = {
     val spark = batch.sparkSession
     import spark.implicits._
     // Shared sketch pipeline (Dedup.minhashSignatureFrame): the batch-union
@@ -87,17 +99,16 @@ object IncrementalDedup {
     val newSigs = Dedup.minhashSignatureFrame(batch, idCol, textCol,
       w, numHashes, rowsPerBand)
 
-    val hasState = IcebergishTable.currentSnapshot(stateTable) >= 0
     val oldSigs =
-      if (hasState)
+      if (IcebergishTable.exists(stateTable))
         IcebergishTable.read(spark, stateTable)
           .select(col("id"), col("sh"), col("bandKeys"))
       else
         spark.emptyDataset[(Long, Seq[Long], Seq[Long])]
           .toDF("id", "sh", "bandKeys")
 
-    // Replay protection: ids already committed are not re-sketched into
-    // state and emit no pairs — a re-delivered batch is a no-op.
+    // Doc-id dedup: ids already committed are not re-sketched into state
+    // and emit no pairs — a re-delivered document is a no-op.
     val fresh = newSigs
       .join(oldSigs.select(col("id")), Seq("id"), "left_anti")
       // Consumed by bucket join (2 sides), verify join, and the state
@@ -121,22 +132,12 @@ object IncrementalDedup {
       .union(oldSigs.select(col("id"), col("sh")))
     // Shared verify (Dedup.jaccardVerify) — same rounding/threshold code
     // path as the single-shot operator, same oracle.
-    val out = Dedup.jaccardVerify(cand, allSh, minJaccard)
-    // Materialize pairs BEFORE the state append: the returned frame must
-    // not lazily recompute against a state that now contains this batch
-    // (every fresh id would self-candidate against its committed copy).
-    val pairs = out.localCheckpoint()
-    (pairs, fresh, hasState)
+    (Dedup.jaccardVerify(cand, allSh, minJaccard), fresh)
   }
 
-  private def commitState(fresh: DataFrame, stateTable: String,
-                          stateBuckets: Int, hasState: Boolean): Unit = {
-    if (fresh.limit(1).count() > 0)
-      IcebergishTable.write(fresh.select(col("id"), col("sh"), col("bandKeys")),
-        stateTable, "id", stateBuckets,
-        if (hasState) SaveMode.Append else SaveMode.Overwrite)
-    fresh.unpersist(blocking = false)
-  }
+  /** The state table's columns of a signature frame. */
+  private def signatures(fresh: DataFrame): DataFrame =
+    fresh.select(col("id"), col("sh"), col("bandKeys"))
 
   /** Streaming incremental dedup: every micro-batch of documents runs the
     * batch computation against the shared state table, appends its NEW
@@ -144,14 +145,18 @@ object IncrementalDedup {
     * signatures — `readStream → foreachBatch` over the same core as
     * [[processBatch]].
     *
-    * NET-EXACTLY-ONCE without a distributed transaction: the pairs append
-    * is an anti-join against the pairs table's committed (ia, ib) state
-    * (the StreamingKg cross-batch-dedup pattern), and the state append
-    * carries the committed-id anti-join. Whichever crash window a replay
-    * lands in — before the pairs append, between the two appends, or
-    * after both — re-running the batch converges to the identical final
-    * tables: already-appended pairs anti-join away, already-committed ids
-    * emit nothing, and both appends are atomic snapshots.
+    * EXACTLY-ONCE through the manifest epoch guard, the same one
+    * [[graft.streaming.StreamingKg]] uses: each append records
+    * `queryId → batchId` in the VERSION swap that publishes its files, and
+    * a table whose [[IcebergishTable.streamEpoch]] covers the batch is not
+    * appended to again. Whichever crash window a replay lands in — before
+    * the pairs append, between the two appends, or after both — re-running
+    * the batch converges to the identical final tables: after both, it
+    * runs no Spark job; between them, it skips the pairs append and
+    * commits the signatures; before, it runs the batch from the start.
+    * A batch that adds no pairs (or no fresh ids) commits nothing to that
+    * table; its replay recomputes and, every id being committed, emits
+    * nothing.
     */
   def streamIntoTables(docs: DataFrame, idCol: String, textCol: String,
                        stateTable: String, pairsTable: String,
@@ -166,71 +171,46 @@ object IncrementalDedup {
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         appendBatch(batch, idCol, textCol, stateTable, pairsTable,
-          stateBuckets, pairsBuckets, w, numHashes, rowsPerBand, minJaccard)
+          batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId"),
+          batchId, stateBuckets, pairsBuckets, w, numHashes, rowsPerBand,
+          minJaccard)
       }
       .trigger(trigger)
       .start()
 
   /** The per-micro-batch unit of [[streamIntoTables]] (also the replay
-    * unit the spec exercises directly): compute → converging pairs append
-    * → state commit, in that order (see the crash-window analysis above).
+    * unit the spec exercises directly): compute → pairs append → state
+    * append, each under `queryId → batchId` (see the crash-window analysis
+    * above). The state append follows a successful pairs append only: the
+    * other order would let a crash commit the signatures without the
+    * pairs, and the replay would then emit nothing.
     */
   private[graft] def appendBatch(batch: DataFrame, idCol: String,
                                  textCol: String, stateTable: String,
-                                 pairsTable: String,
+                                 pairsTable: String, queryId: String,
+                                 batchId: Long,
                                  stateBuckets: Int = DefaultStateBuckets,
                                  pairsBuckets: Int = DefaultPairsBuckets,
                                  w: Int = DefaultW,
                                  numHashes: Int = DefaultNumHashes,
                                  rowsPerBand: Int = DefaultRowsPerBand,
                                  minJaccard: Double = DefaultMinJaccard): Unit = {
-    val spark = batch.sparkSession
-    val (pairs, fresh, hasState) = computeBatch(batch, idCol, textCol,
+    def done(table: String) =
+      IcebergishTable.streamEpoch(table, queryId).exists(_ >= batchId)
+    val pairsDone = done(pairsTable)
+    if (pairsDone && done(stateTable)) return
+    def append(df: DataFrame, table: String, key: String, n: Int): Unit =
+      IcebergishTable.appendPrePartitioned(
+        df.withColumn(IcebergishTable.PartCol, IcebergishTable.partExpr(key, n))
+          .repartition(n, col(key)),
+        table, n, key, queryId, batchId)
+    val (pairs, fresh) = computeBatch(batch, idCol, textCol,
       stateTable, w, numHashes, rowsPerBand, minJaccard)
-    // Tracked outside the if/else so the finally can free it: the
-    // anti-joined frame is localCheckpoint'd per micro-batch, and a
-    // long-running stream would otherwise accumulate one orphaned block
-    // set per batch (ADVICE r06 #1).
-    var np: DataFrame = null
     try {
-      val newPairs =
-        if (IcebergishTable.currentSnapshot(pairsTable) >= 0) {
-          // Replay-protection anti-join reads ONLY the pairs-table buckets
-          // this batch's pairs land in (both sides keyed on ia — the
-          // StreamingKg cross-batch pattern): per-batch cost stays bounded
-          // by the batch, not by the table's history. The candidate set is
-          // ALSO materialized once (localCheckpoint) so the probe and the
-          // write don't re-execute the join.
-          val batchParts = pairs
-            .select(IcebergishTable.partExpr("ia", pairsBuckets).as("p"))
-            .distinct().collect().map(_.getInt(0)).toSeq
-          val existing = IcebergishTable.read(spark, pairsTable)
-            .where(col(IcebergishTable.PartCol).isin(batchParts: _*))
-            .select(col("ia"), col("ib"))
-          np = pairs.join(existing, Seq("ia", "ib"), "left_anti")
-            .localCheckpoint()
-          if (np.limit(1).count() > 0) Some((np, SaveMode.Append)) else None
-        } else if (pairs.limit(1).count() > 0)
-          Some((pairs, SaveMode.Overwrite))
-        else None
-      newPairs.foreach { case (np, mode) =>
-        IcebergishTable.write(np, pairsTable, "ia", pairsBuckets, mode)
-      }
-      // Deliberately INSIDE the try: if the pairs write threw, committing
-      // the signatures would make the replay emit nothing and lose the
-      // batch's pairs forever — the state commit must only follow a
-      // successful pairs append.
-      commitState(fresh, stateTable, stateBuckets, hasState)
-    } finally {
-      // commitState unpersists fresh on success (idempotent); the failure
-      // path, the batch-local pairs checkpoint, and the anti-joined np
-      // checkpoint are freed here so a long-running stream's batches (and
-      // failed attempts) can't accumulate blocks.
-      if (np != null) np.unpersist(blocking = false)
-      fresh.unpersist(blocking = false)
-      pairs.unpersist(blocking = false)
-    }
+      if (!pairsDone) append(pairs, pairsTable, "ia", pairsBuckets)
+      append(signatures(fresh), stateTable, "id", stateBuckets)
+    } finally fresh.unpersist(blocking = false)
   }
 }

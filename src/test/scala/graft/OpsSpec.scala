@@ -260,7 +260,7 @@ class OpsSpec extends SparkSpec {
     val pairsSnap = graft.io.IcebergishTable.currentSnapshot(pairsT)
     graft.ops.IncrementalDedup.appendBatch(
       corpus.where(pmod(col("doc_id"), lit(3)) === 1),
-      "doc_id", "text", state, pairsT)
+      "doc_id", "text", state, pairsT, q.id.toString, 1L)
     assert(graft.io.IcebergishTable.currentSnapshot(state) == stateSnap)
     assert(graft.io.IcebergishTable.currentSnapshot(pairsT) == pairsSnap)
 
@@ -271,7 +271,7 @@ class OpsSpec extends SparkSpec {
     val lastBatch = corpus.where(pmod(col("doc_id"), lit(3)) === 2)
     graft.io.IcebergishTable.rollbackTo(state, stateSnap - 1)
     graft.ops.IncrementalDedup.appendBatch(lastBatch,
-      "doc_id", "text", state, pairsT)
+      "doc_id", "text", state, pairsT, q.id.toString, 2L)
     assert(pairsNow().toSet == full, "crash replay diverged")
     assert(pairsNow().size == full.size, "crash replay duplicated pairs")
     val stateIds = graft.io.IcebergishTable.read(spark, state)
