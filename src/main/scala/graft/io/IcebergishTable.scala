@@ -238,8 +238,9 @@ object IcebergishTable {
     * would silently drop that writer's files.
     *
     * The per-table monitor is an in-JVM fast path only (saves CAS churn
-    * between threads and keeps streamCommit's promote window serialized per
-    * query); correctness across JVMs comes from the hard-link claim.
+    * between threads and keeps streamCommitFiles' promote window
+    * serialized per query); correctness across JVMs comes from the
+    * hard-link claim.
     */
   private def commit(table: String, schemaJson: String,
                      parts: Seq[Int], rows: Long,
@@ -586,23 +587,7 @@ object IcebergishTable {
     val staging = d.resolve("data").resolve("_staging")
     val batch = staging.resolve(s"batch-${java.util.UUID.randomUUID.toString.take(12)}")
     val promoted =
-      try TableWriter.stage(df, table, d.relativize(batch).toString).map { f =>
-        val src = d.resolve(f.path)
-        val dst = d.resolve("data").resolve(s"$PartCol=${f.bucket}")
-          .resolve(src.getFileName.toString)
-        Files.createDirectories(dst.getParent)
-        // File names carry the write's uid — unique across concurrent
-        // writers, so promotes never collide.
-        Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-        // Refresh mtime at PROMOTE time: move preserves the staging-time
-        // mtime, so a write that staged for longer than removeOrphans' grace
-        // window would promote files that already look expired — a concurrent
-        // vacuum could reap them inside this writer's promote→commit window.
-        // The grace clock must start when the file becomes vacuum-visible.
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-        f.copy(path = d.relativize(dst).toString)
-      }
+      try TableWriter.stage(df, table, d.relativize(batch).toString).map(promote(table, _))
       finally {
         deleteTree(batch)
         // An emptied staging root goes too; a concurrent writer's keeps it.
@@ -618,6 +603,27 @@ object IcebergishTable {
         throw e
     }
     promoted
+  }
+
+  /** Move a staged file into its bucket directory and return it with its
+    * table-relative path there. The caller guarantees the name is free: a
+    * batch write's names carry its uid, a stream epoch's carry its query and
+    * epoch and its commit first sweeps that epoch's uncommitted files.
+    */
+  private def promote(table: String, f: WrittenFile): WrittenFile = {
+    val d = dir(table)
+    val src = d.resolve(f.path)
+    val dst = d.resolve("data").resolve(s"$PartCol=${f.bucket}").resolve(src.getFileName.toString)
+    Files.createDirectories(dst.getParent)
+    Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
+    // Refresh mtime at PROMOTE time: move preserves the staging-time
+    // mtime, so a write that staged for longer than removeOrphans' grace
+    // window would promote files that already look expired — a concurrent
+    // vacuum could reap them inside this writer's promote→commit window.
+    // The grace clock must start when the file becomes vacuum-visible.
+    Files.setLastModifiedTime(dst,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
+    f.copy(path = d.relativize(dst).toString)
   }
 
   /** Write a position-delete file under `deletes/` — sorted TSV lines
@@ -967,13 +973,11 @@ object IcebergishTable {
   private val commitLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Commit one streaming micro-batch: promote `staged` (bucket,
-    * table-relative path) files — hidden under `data/_staging/…` from
-    * every read and directory-based commit — into their bucket directories
-    * and commit a snapshot whose manifest records `queryId → epochId`.
-    * Files staged this way carry no bounds or row counts; the streaming
-    * sink commits through [[streamCommitFiles]] with the ones its tasks
-    * read back.
+  /** Commit one streaming micro-batch: promote the `staged` files — written
+    * by [[TableFileWriter]]s under `data/_staging/…`, hidden from every
+    * read and directory-based commit — into their bucket directories and
+    * commit a snapshot whose manifest records the bounds and row counts
+    * the files carry and `queryId → epochId`.
     *
     * Exactly-once: an epoch at or below [[streamEpoch]] is a replay — its
     * staged files are discarded, nothing commits. A crash AFTER files were
@@ -985,14 +989,6 @@ object IcebergishTable {
     * attempt of this epoch can have left such files; earlier epochs' files
     * that a compaction replaced stay for time travel, and other writers'
     * uncommitted files are left alone.
-    */
-  def streamCommit(table: String, staged: Seq[(Int, String)],
-                   queryId: String, epochId: Long): Unit =
-    streamCommitFiles(table, staged.map { case (b, rel) => WrittenFile(b, rel) },
-      queryId, epochId)
-
-  /** [[streamCommit]] of files staged by [[TableFileWriter]]s, with the
-    * bounds and row counts they read back.
     */
   private[graft] def streamCommitFiles(table: String, staged: Seq[WrittenFile],
                                        queryId: String, epochId: Long): Unit =
@@ -1021,18 +1017,7 @@ object IcebergishTable {
       .filterNot(committed)
       .filter(_.contains(s"-q$queryId-e$epochId-"))
       .foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
-    val promoted = staged.map { f =>
-      val src = dir(table).resolve(f.path)
-      val dst = dir(table).resolve("data").resolve(s"$PartCol=${f.bucket}")
-        .resolve(src.getFileName.toString)
-      Files.createDirectories(dst.getParent)
-      Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-      // Grace clock starts at promote, not staging (see stagePromote).
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-      f.copy(path = dir(table).relativize(dst).toString)
-    }
+    val promoted = staged.map(promote(table, _))
     commit(table, m.schema.json,
       partsOf(m.bucket, staged.map(_.bucket).distinct.sorted), 0L,
       bucketKey = m.bucket, epochUpdate = Map(queryId -> epochId), added = promoted)

@@ -118,7 +118,7 @@ object TableFileWriter {
     * task) pair, and promoting a colliding name would replace an earlier
     * committed file. The `-q<queryId>-e<epochId>-` segment also lets the
     * epoch commit sweep exactly this epoch's crashed-promote orphans
-    * ([[IcebergishTable.streamCommit]]).
+    * ([[IcebergishTable.streamCommitFiles]]).
     */
   def byKey(table: String, key: String, n: Int, schema: StructType,
             confEntries: Map[String, String], queryId: String,

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.io.{IcebergishTable, Manifest}
+import graft.io.{IcebergishTable, Manifest, WrittenFile}
 import graft.streaming.StreamingKg
 import graft.synth.PageSynth
 
@@ -699,7 +699,7 @@ class IcebergishSpec extends SparkSpec {
     Files.setLastModifiedTime(staged,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() - 7200000L))
-    IcebergishTable.streamCommit(table, Seq((bucket, stagedRel)), "qslow", 0L)
+    IcebergishTable.streamCommitFiles(table, Seq(WrittenFile(bucket, stagedRel)), "qslow", 0L)
     val promoted = java.nio.file.Paths.get(table,
       s"data/part=$bucket/b$bucket-qqslow-e0-p0-t0.parquet")
     assert(Files.exists(promoted))
@@ -841,7 +841,7 @@ class IcebergishSpec extends SparkSpec {
       Seq(Triple("A", "p", "B", "u", 1.0)).toDF.schema, "subj", 4)
     val q = "q1"
     // One parquet file staged the way the streaming writer stages it.
-    def stage(epoch: Long, subj: String, task: Int): (Int, String) = {
+    def stage(epoch: Long, subj: String, task: Int): WrittenFile = {
       val rows = Seq(Triple(subj, "p", "B", s"u-$subj", 1.0)).toDF
       val b = Seq(subj).toDF("k").select(IcebergishTable.partExpr("k", 4)).head().getInt(0)
       val tmp = Files.createTempDirectory("graft-sweep-stage")
@@ -852,20 +852,20 @@ class IcebergishSpec extends SparkSpec {
       val rel = s"data/_staging/q-$q/epoch-$epoch/b$b-q$q-e$epoch-p0-t$task.parquet"
       Files.createDirectories(root.resolve(rel).getParent)
       Files.move(written, root.resolve(rel))
-      (b, rel)
+      WrittenFile(b, rel)
     }
     def subjects(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select("subj").as[String].collect().toSeq.sorted
-    IcebergishTable.streamCommit(table, Seq(stage(0, "A", 0)), q, 0L)
-    IcebergishTable.streamCommit(table, Seq(stage(1, "C", 0)), q, 1L)
+    IcebergishTable.streamCommitFiles(table, Seq(stage(0, "A", 0)), q, 0L)
+    IcebergishTable.streamCommitFiles(table, Seq(stage(1, "C", 0)), q, 1L)
 
     // Epoch 2 promotes its file into the bucket dir, then crashes before
     // the manifest swap; its retry sweeps that file and commits once.
-    val (b, staged) = stage(2, "E", 0)
+    val WrittenFile(b, staged, _, _) = stage(2, "E", 0)
     val orphan = s"data/part=$b/${java.nio.file.Paths.get(staged).getFileName}"
     Files.createDirectories(root.resolve(orphan).getParent)
     Files.move(root.resolve(staged), root.resolve(orphan))
-    IcebergishTable.streamCommit(table, Seq(stage(2, "E", 1)), q, 2L)
+    IcebergishTable.streamCommitFiles(table, Seq(stage(2, "E", 1)), q, 2L)
     assert(!Files.exists(root.resolve(orphan)), "crashed promote not swept")
     assert(subjects(IcebergishTable.read(spark, table)) == Seq("A", "C", "E"))
 
@@ -873,7 +873,7 @@ class IcebergishSpec extends SparkSpec {
     // of earlier epochs alone: the pre-compaction snapshot still reads.
     val preCompact = IcebergishTable.currentSnapshot(table)
     IcebergishTable.compact(spark, table, 4, "subj")
-    IcebergishTable.streamCommit(table, Seq(stage(3, "G", 0)), q, 3L)
+    IcebergishTable.streamCommitFiles(table, Seq(stage(3, "G", 0)), q, 3L)
     Manifest.read(table, preCompact).paths.foreach { f =>
       assert(Files.exists(root.resolve(f)), s"replaced file of an earlier epoch swept: $f")
     }

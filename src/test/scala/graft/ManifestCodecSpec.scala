@@ -78,7 +78,7 @@ class ManifestCodecSpec extends SparkSpec {
         IcebergishTable.commitAddedFiles(t, Seq.empty)
         // Query ids name a staging directory too, so they stay path-safe.
         val query = a.filter(c => c >= ' ' && c < 0x7f && c != '/')
-        IcebergishTable.streamCommit(t, Seq.empty, query, 3L)
+        IcebergishTable.streamCommitFiles(t, Seq.empty, query, 3L)
         added && renamed && columns == Seq("k", "part") &&
           IcebergishTable.snapshotGhostNames(t, current) == Seq(a, b).sorted &&
           IcebergishTable.manifestEpochs(t) == Map(query -> 3L)

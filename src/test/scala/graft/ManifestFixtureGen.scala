@@ -40,7 +40,7 @@ object ManifestFixtureGen {
     IcebergishTable.dropColumn(t, "x")
     IcebergishTable.deleteWhere(spark, t, col("v") === 3L, morMaxRows = 10)
     IcebergishTable.deleteEquality(spark, t, Seq("k105").toDF("k"), Seq("k"))
-    IcebergishTable.streamCommit(t, Seq.empty, "q1", 7L)
+    IcebergishTable.streamCommitFiles(t, Seq.empty, "q1", 7L)
     // Committer side files (CRCs, _SUCCESS) are not table state.
     Files.walk(Paths.get(t)).iterator().asScala.toSeq
       .filter { p =>

@@ -206,7 +206,7 @@ class StreamingSpec extends SparkSpec {
   test("writeStream.toTable: native DSv2 streaming sink appends exactly-once") {
     import java.nio.file.Files
     import spark.implicits._
-    import graft.io.IcebergishTable
+    import graft.io.{IcebergishTable, WrittenFile}
     implicit val sqlCtx = spark.sqlContext
     val base = Files.createTempDirectory("graft-ssw").toString
     val table = s"$base/sink"
@@ -254,8 +254,8 @@ class StreamingSpec extends SparkSpec {
         s"$table/data/_staging/q-$qid/epoch-0/b0-p0-t99.parquet")
       Files.createDirectories(staged.getParent)
       Files.write(staged, Array[Byte](1, 2, 3))
-      IcebergishTable.streamCommit(table,
-        Seq((0, s"data/_staging/q-$qid/epoch-0/b0-p0-t99.parquet")), qid, 0L)
+      IcebergishTable.streamCommitFiles(table,
+        Seq(WrittenFile(0, s"data/_staging/q-$qid/epoch-0/b0-p0-t99.parquet")), qid, 0L)
       assert(!Files.exists(staged), "replayed epoch's staged file not discarded")
       assert(IcebergishTable.currentSnapshot(table) == snapBefore,
         "replayed epoch committed a snapshot")
