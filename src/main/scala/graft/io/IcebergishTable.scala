@@ -237,13 +237,17 @@ object IcebergishTable {
     * read the table — a replaceAll commit merged onto an unseen parent
     * would silently drop that writer's files.
     *
+    * `epochUpdate` carries the replay guard of both streaming sinks: when
+    * the parent manifest already records an epoch at or above one of its
+    * `queryId → epoch` entries, that micro-batch committed before, and
+    * nothing is committed (None).
+    *
     * The per-table monitor is an in-JVM fast path only (saves CAS churn
-    * between threads and keeps streamCommitFiles' promote window
-    * serialized per query); correctness across JVMs comes from the
-    * hard-link claim.
+    * between threads); correctness across JVMs comes from the hard-link
+    * claim. Returns the committed snapshot.
     */
   private def commit(table: String, schemaJson: String,
-                     parts: Seq[Int], rows: Long,
+                     parts: Seq[Int],
                      bucketKey: Option[(String, Int)] = None,
                      epochUpdate: Map[String, Long] = Map.empty,
                      added: Seq[WrittenFile] = Seq.empty,
@@ -253,9 +257,9 @@ object IcebergishTable {
                      schemaEvolution: Boolean = false,
                      addedDeletes: Seq[String] = Seq.empty,
                      statsRekey: Map[String, Option[String]] = Map.empty,
-                     addedGhosts: Seq[String] = Seq.empty): Int =
+                     addedGhosts: Seq[String] = Seq.empty): Option[Int] =
     commitLocks.computeIfAbsent(table, _ => new Object).synchronized {
-      commitLocked(table, schemaJson, parts, rows, bucketKey,
+      commitLocked(table, schemaJson, parts, bucketKey,
         epochUpdate, added, dropParent, replaceAll, expectedParent,
         schemaEvolution, addedDeletes, statsRekey, addedGhosts)
     }
@@ -285,7 +289,7 @@ object IcebergishTable {
   }
 
   private def commitLocked(table: String, schemaJson: String,
-                           parts: Seq[Int], rows: Long,
+                           parts: Seq[Int],
                            bucketKey: Option[(String, Int)],
                            epochUpdate: Map[String, Long],
                            added: Seq[WrittenFile],
@@ -296,7 +300,7 @@ object IcebergishTable {
                            addedDeletes: Seq[String] = Seq.empty,
                            statsRekey: Map[String, Option[String]],
                            addedGhosts: Seq[String])
-      : Int = {
+      : Option[Int] = {
     val d = dir(table)
     Files.createDirectories(d)
     // `base` = the last VALID manifest we merge deltas onto; `target` = the
@@ -324,6 +328,8 @@ object IcebergishTable {
         else Some(Manifest.load(table, base).getOrElse(
           throw new graft.ManifestCorrupted(table, base,
             "parent manifest unreadable during commit")))
+      if (epochUpdate.exists { case (q, e) => parent.exists(_.epochs.get(q).exists(_ >= e)) })
+        return None // a replayed micro-batch (see commit)
       val prevFiles: Map[String, DataFile] =
         parent.fold(Map.empty[String, DataFile])(_.files.map(f => f.path -> f).toMap)
       val kept =
@@ -400,7 +406,7 @@ object IcebergishTable {
       // validateAppend). Streaming epoch high-waters carry forward on
       // EVERY commit: the VERSION swap is then the single atomic point
       // that commits a micro-batch's files AND records its epoch.
-      val manifest = Manifest(target, rows, bucketKey, bucketKey.map(_ => BucketFn),
+      val manifest = Manifest(target, 0L, bucketKey, bucketKey.map(_ => BucketFn),
         parent.fold(Map.empty[String, Long])(_.epochs) ++ epochUpdate,
         maxFid, ghosts, deletes, parts.sorted, files, effSchema)
       // ATOMIC publication: full bytes to a private hidden temp file, then
@@ -426,7 +432,7 @@ object IcebergishTable {
       }
     }
     advanceVersionTo(table, d, committed)
-    committed
+    Some(committed)
   }
 
   /** Write `bytes` under `name` atomically-or-not-at-all: full content to
@@ -546,69 +552,74 @@ object IcebergishTable {
     tryLoad(table, currentSnapshot(table)).flatMap(_.bucketFn)
 
   /** What a staged write hands its commit: the promoted data files and
-    * the position-delete file written for the same commit, if any.
+    * the delete files written for the same commit.
     */
   private final case class Staged(files: Seq[WrittenFile], deletes: Seq[String])
 
-  /** The one stage-and-commit funnel of every batch table write: stage
-    * `df` (already carrying [[PartCol]]) into a hidden per-write staging
-    * directory, promote each file into its bucket directory, write the
-    * position-delete file of `victims` (when there are any), then run the
-    * caller's `commitStaged` over them. This gives every batch write an
+  /** The one stage-and-commit funnel of every table write that adds files:
+    * `stage` writes the data files into the hidden staging tree of `uid`
+    * (batch writes run [[TableWriter.stage]] there; the DSv2 streaming
+    * sink's tasks staged there already), the driver promotes each returned
+    * file into its bucket directory and deletes the staging tree, which
+    * also removes any losing task attempt's files and every file of a
+    * failed write; `deletes` then writes the write's delete files, if any,
+    * and `commitStaged` commits them all. This gives every write an
     * EXPLICIT file list for its manifest (commit records exactly these
     * paths + the parent's), and it keeps a concurrent writer's in-flight
     * files out of everyone else's commits: nothing under `data/_staging`
     * is ever visible to reads or manifests until ITS writer promotes it.
     *
-    * The rows are written by the tasks that produce them: [[TableWriter]]
-    * runs `df` as one SQL execution rooted at a write node whose tasks each
-    * write one parquet file per bucket under
-    * `data/_staging/batch-<uid>/part=<b>/` and return (bucket, path, footer
-    * bounds, row count) per file — no output committer, no driver-side
-    * listing or footer read. The driver promotes exactly the returned files,
-    * then deletes the staging tree, which also removes any losing task
-    * attempt's files and every file of a failed write. Table files are
-    * never split on `spark.sql.files.maxRecordsPerFile`.
+    * The rows are written by the tasks that produce them
+    * ([[TableFileWriter]]): one parquet file per bucket per task under
+    * `data/_staging/batch-<uid>/part=<b>/`, each returned with its footer
+    * bounds and row count — no output committer, no driver-side listing or
+    * footer read. Table files are never split on
+    * `spark.sql.files.maxRecordsPerFile`.
     *
     * A commit REFUSED with a typed [[graft.GraftError]] (CommitConflict,
-    * SchemaMismatch, …) deletes the promoted files and the position-delete
-    * file before the error is rethrown: a refused write leaves nothing
-    * behind for the vacuum. A crash between promote and commit leaves
-    * orphans that no manifest references — invisible to reads;
+    * SchemaMismatch, …), or one that commits nothing (None: a replayed
+    * stream epoch, an empty one), deletes the promoted files and the delete
+    * files; a refusal is then rethrown. A crash between promote and commit
+    * leaves orphans that no manifest references — invisible to reads;
     * [[removeOrphans]] + [[expireSnapshots]] reclaim. Committed files are
     * NEVER touched here: partition-overwrite callers drop them from the
     * manifest, and they stay on disk until expiry (time travel keeps
-    * working). Returns the promoted files.
+    * working). Returns the committed files.
     */
-  private def stagePromote(df: DataFrame, table: String,
-                           victims: Seq[(String, Long)] = Seq.empty)
-                          (commitStaged: Staged => Unit): Seq[WrittenFile] = {
-    val d = dir(table)
-    val staging = d.resolve("data").resolve("_staging")
-    val batch = staging.resolve(s"batch-${java.util.UUID.randomUUID.toString.take(12)}")
+  private def stagePromote(table: String,
+                           stage: String => Seq[WrittenFile] = _ => Seq.empty,
+                           deletes: => Seq[String] = Seq.empty,
+                           uid: String = TableFileWriter.newUid())
+                          (commitStaged: Staged => Option[Int]): Seq[WrittenFile] = {
     val promoted =
-      try TableWriter.stage(df, table, d.relativize(batch).toString).map(promote(table, _))
-      finally {
-        deleteTree(batch)
-        // An emptied staging root goes too; a concurrent writer's keeps it.
-        try Files.deleteIfExists(staging)
-        catch { case _: java.nio.file.DirectoryNotEmptyException => }
+      try stage(uid).map(promote(table, _))
+      finally dropStaging(table, uid)
+    val staged = Staged(promoted, deletes)
+    def discard(): Unit =
+      (promoted.map(_.path) ++ staged.deletes).foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
+    val committed =
+      try commitStaged(staged).isDefined
+      catch {
+        case e: graft.GraftError =>
+          discard()
+          throw e
       }
-    val staged = Staged(promoted,
-      if (victims.isEmpty) Seq.empty else Seq(writePositionDeletes(table, victims)))
-    try commitStaged(staged)
-    catch {
-      case e: graft.GraftError =>
-        (promoted.map(_.path) ++ staged.deletes).foreach(f => Files.deleteIfExists(d.resolve(f)))
-        throw e
-    }
-    promoted
+    if (committed) promoted else { discard(); Seq.empty }
+  }
+
+  /** Delete the staging tree of the write `uid`, and the staging root once
+    * it is empty (a concurrent writer's tree keeps it).
+    */
+  private[graft] def dropStaging(table: String, uid: String): Unit = {
+    val tree = dir(table).resolve(TableFileWriter.staging(uid))
+    deleteTree(tree)
+    try Files.deleteIfExists(tree.getParent)
+    catch { case _: java.nio.file.DirectoryNotEmptyException => }
   }
 
   /** Move a staged file into its bucket directory and return it with its
-    * table-relative path there. The caller guarantees the name is free: a
-    * batch write's names carry its uid, a stream epoch's carry its query and
-    * epoch and its commit first sweeps that epoch's uncommitted files.
+    * table-relative path there. Its name is free: it carries its write's
+    * uid and its task attempt id.
     */
   private def promote(table: String, f: WrittenFile): WrittenFile = {
     val d = dir(table)
@@ -626,19 +637,22 @@ object IcebergishTable {
     f.copy(path = d.relativize(dst).toString)
   }
 
-  /** Write a position-delete file under `deletes/` — sorted TSV lines
-    * `relativeDataFile\tposition` (see [[readDeleteFile]]) — and return its
+  /** Write a delete file `<prefix><id>.tsv` holding `lines` and return its
     * table-relative path. It is live once a commit records it.
     */
-  private def writePositionDeletes(table: String, victims: Seq[(String, Long)]): String = {
-    val rel = s"deletes/delete-${java.util.UUID.randomUUID.toString.take(12)}.tsv"
+  private def writeDeleteFile(table: String, prefix: String, lines: Seq[String]): String = {
+    val rel = s"$prefix${TableFileWriter.newUid()}.tsv"
     val p = dir(table).resolve(rel)
     Files.createDirectories(p.getParent)
-    Files.write(p, victims.sorted
-      .map { case (f, pos) => s"$f\t$pos" }
-      .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    Files.write(p, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     rel
   }
+
+  /** A position-delete file: sorted TSV lines `relativeDataFile\tposition`
+    * (see [[readDeleteFile]]).
+    */
+  private def writePositionDeletes(table: String, victims: Seq[(String, Long)]): String =
+    writeDeleteFile(table, "deletes/delete-", victims.sorted.map { case (f, pos) => s"$f\t$pos" })
 
   /** Delete `p` and everything under it, if it exists. */
   private def deleteTree(p: Path): Unit =
@@ -675,8 +689,8 @@ object IcebergishTable {
     if (append) validateAppend(table, keyCol, numParts, withPart.schema)
     else deleteTree(dir(table).resolve("data"))
     val prior = currentSnapshot(table)
-    stagePromote(withPart, table) { s =>
-      commit(table, withPart.schema.json, 0 until numParts, 0L,
+    stagePromote(table, TableWriter.stage(withPart, table, _)) { s =>
+      commit(table, withPart.schema.json, 0 until numParts,
         bucketKey = Some((keyCol, numParts)), added = s.files, replaceAll = !append)
     }
     // Drop the overwritten snapshots' manifests AFTER the new commit is
@@ -715,9 +729,9 @@ object IcebergishTable {
     val df = withFieldIds(df0, table)
     validateAppend(table, keyCol, numParts, df.schema)
     val base = currentSnapshot(table) // pin before staging (see contract)
-    stagePromote(df, table) { s =>
+    stagePromote(table, TableWriter.stage(df, table, _)) { s =>
       val touched = s.files.map(_.bucket).toSet ++ replaceParts
-      commit(table, df.schema.json, 0 until numParts, 0L,
+      commit(table, df.schema.json, 0 until numParts,
         bucketKey = if (keyCol.nonEmpty) Some((keyCol, numParts)) else None,
         added = s.files,
         dropParent = f => touched.contains(bucketOfPath(f)),
@@ -728,25 +742,43 @@ object IcebergishTable {
   /** APPEND a DataFrame that is already hash-partitioned on `PartCol` into
     * the bucket directories (new files beside existing ones), committing a
     * new snapshot with an explicit file delta — safe under concurrent
-    * appends. The streaming micro-batch sink's unit: the commit records
-    * `queryId → epoch` in the same VERSION swap that publishes the files,
-    * and the caller skips any epoch at or below [[streamEpoch]]. A write
-    * that stages no files commits nothing. Returns the rows committed, from
-    * the row counts its writing tasks read back from their files' footers
-    * (the same ones the manifest's entries record); the driver opens no
-    * file.
+    * appends. The foreachBatch streaming sink's unit, committed like the
+    * DSv2 sink's epochs ([[appendStaged]]) by [[commitEpoch]]; callers skip
+    * any epoch at or below [[streamEpoch]] before running its jobs. Returns
+    * the rows committed, from the row counts its writing tasks read back
+    * from their files' footers (the same ones the manifest's entries
+    * record); the driver opens no file.
     */
   def appendPrePartitioned(df0: DataFrame, table: String, numParts: Int,
                            keyCol: String, queryId: String, epoch: Long): Long = {
     val df = withFieldIds(df0, table)
     validateAppend(table, keyCol, numParts, df.schema)
-    stagePromote(df, table) { s =>
-      if (s.files.nonEmpty)
-        commit(table, df.schema.json, 0 until numParts, 0L,
-          bucketKey = Some((keyCol, numParts)),
-          epochUpdate = Map(queryId -> epoch), added = s.files)
-    }.map(_.rows).sum
+    stagePromote(table, TableWriter.stage(df, table, _))(
+      commitEpoch(table, df.schema.json, Some((keyCol, numParts)), queryId, epoch))
+      .map(_.rows).sum
   }
+
+  /** Commit the files the DSv2 streaming sink's tasks staged under `uid`
+    * for micro-batch `epoch` of `queryId` ([[graft.sources.v2.GraftStreamingWrite]]),
+    * under the table's committed schema and bucket spec.
+    */
+  private[graft] def appendStaged(table: String, uid: String, staged: Seq[WrittenFile],
+                                  queryId: String, epoch: Long): Unit = {
+    val m = Manifest.read(table, requireSnapshot(table))
+    stagePromote(table, _ => staged, uid = uid)(
+      commitEpoch(table, m.schema.json, m.bucket, queryId, epoch))
+  }
+
+  /** The commit of one streaming micro-batch, for both sinks: its files and
+    * `queryId → epoch` publish in ONE VERSION swap, so a replayed epoch
+    * commits nothing (the guard in [[commit]]) and [[stagePromote]] deletes
+    * its promoted files. A micro-batch that staged no files commits nothing.
+    */
+  private def commitEpoch(table: String, schemaJson: String, spec: Option[(String, Int)],
+                          queryId: String, epoch: Long)(s: Staged): Option[Int] =
+    if (s.files.isEmpty) None
+    else commit(table, schemaJson, partsOf(spec, s.files.map(_.bucket).distinct.sorted),
+      bucketKey = spec, epochUpdate = Map(queryId -> epoch), added = s.files)
 
   /** Parsed current-snapshot manifest metadata for the DSv2 catalog:
     * (schema json, bucket key, bucket count). Tables written before bucket
@@ -775,23 +807,11 @@ object IcebergishTable {
     tryLoad(table, currentSnapshot(table)).fold(Map.empty[String, Long])(_.epochs)
 
   /** Last epoch streaming query `queryId` committed into the current
-    * snapshot, if any — the replay guard of both streaming sinks.
+    * snapshot, if any: both streaming sinks skip a covered micro-batch's
+    * jobs on it, and [[commit]] re-checks it against the parent it merges.
     */
   def streamEpoch(table: String, queryId: String): Option[Long] =
     manifestEpochs(table).get(queryId)
-
-  /** Ghost names of a snapshot — see the commit-path doc. Empty for
-    * manifests predating the feature (those tables never ran drop/rename,
-    * which is what creates ghosts).
-    */
-  def snapshotGhostNames(table: String, snapshot: Int): Seq[String] =
-    tryLoad(table, snapshot).fold(Seq.empty[String])(_.ghosts)
-
-  /** Delete files recorded in a snapshot's manifest (relative paths under
-    * `deletes/`). Empty when the snapshot predates MOR deletes or has none.
-    */
-  def snapshotDeleteFiles(table: String, snapshot: Int): Seq[String] =
-    tryLoad(table, snapshot).fold(Seq.empty[String])(_.deletes.map(_.path))
 
   /** Parse one position-delete file: TSV lines `relativeDataFile\tposition`
     * (positions are parquet row ordinals within that file). Missing files
@@ -933,9 +953,6 @@ object IcebergishTable {
         s"equality delete exceeds maxKeys=$maxKeys distinct tuples — use " +
           "deleteWhere (zone-map-pruned scan + COW/MOR) for large deletes")
     if (rows.isEmpty) return
-    val rel = s"$EqDeletePrefix${java.util.UUID.randomUUID.toString.take(12)}.tsv"
-    val p = dir(table).resolve(rel)
-    Files.createDirectories(p.getParent)
     val body = rows.map { r =>
       keyCols.indices.map { i =>
         r.get(i) match {
@@ -943,7 +960,7 @@ object IcebergishTable {
           case other => other.toString
         }
       }.mkString("\t")
-    }.sorted
+    }.toSeq.sorted
     // Field ids ride the header so the tombstone survives key-column
     // renames (resolution is id-first at apply time).
     val ids = keyCols.map { c =>
@@ -952,79 +969,19 @@ object IcebergishTable {
         f.metadata.getLong(FieldIdKey).toString
       else ""
     }
-    Files.write(p,
-      (s"#eq\t${keyCols.mkString(",")}\t${ids.mkString(",")}" +: body)
-        .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    try {
+    stagePromote(table, deletes = Seq(writeDeleteFile(table, EqDeletePrefix,
+        s"#eq\t${keyCols.mkString(",")}\t${ids.mkString(",")}" +: body))) { s =>
       commit(table, schemaJson, partsOf(spec, Seq.empty),
-        0L, bucketKey = spec, addedDeletes = Seq(rel))
-    } catch {
-      case e: graft.GraftError =>
-        Files.deleteIfExists(p)
-        throw e
+        bucketKey = spec, addedDeletes = s.deletes)
     }
   }
 
-  /** One commit monitor per table path: two streaming queries writing the
-    * same table from one driver serialize their sweep+promote+commit
-    * windows. Cross-JVM writers remain single-writer by contract, like
-    * Iceberg's commit protocol.
+  /** One commit monitor per table path: two writers of the same table in
+    * one driver serialize their commits. Cross-JVM writers race through the
+    * hard-link claim (see [[commit]]).
     */
   private val commitLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Commit one streaming micro-batch: promote the `staged` files — written
-    * by [[TableFileWriter]]s under `data/_staging/…`, hidden from every
-    * read and directory-based commit — into their bucket directories and
-    * commit a snapshot whose manifest records the bounds and row counts
-    * the files carry and `queryId → epochId`.
-    *
-    * Exactly-once: an epoch at or below [[streamEpoch]] is a replay — its
-    * staged files are discarded, nothing commits. A crash AFTER files were
-    * promoted but BEFORE the manifest swap leaves orphans in bucket dirs;
-    * before promoting the retry, this sweeps the data files that the
-    * current manifest does not reference and whose names carry this
-    * epoch's `-q<queryId>-e<epochId>-` segment (a no-op when nothing is
-    * orphaned). Micro-batches run one at a time, so only an uncommitted
-    * attempt of this epoch can have left such files; earlier epochs' files
-    * that a compaction replaced stay for time travel, and other writers'
-    * uncommitted files are left alone.
-    */
-  private[graft] def streamCommitFiles(table: String, staged: Seq[WrittenFile],
-                                       queryId: String, epochId: Long): Unit =
-    commitLocks.computeIfAbsent(table, _ => new Object).synchronized {
-      streamCommitLocked(table, staged, queryId, epochId)
-    }
-
-  private def streamCommitLocked(table: String, staged: Seq[WrittenFile],
-                                 queryId: String, epochId: Long): Unit = {
-    val cur = requireSnapshot(table)
-    def sweepStaging(): Unit =
-      deleteTree(dir(table).resolve("data").resolve("_staging").resolve(s"q-$queryId"))
-    if (streamEpoch(table, queryId).exists(_ >= epochId)) {
-      staged.foreach(f => Files.deleteIfExists(dir(table).resolve(f.path)))
-      sweepStaging() // a replayed epoch's staging leftovers are all garbage
-      return
-    }
-    val m = Manifest.read(table, cur)
-    // Sweep a crashed attempt's promoted-but-uncommitted files — but ONLY
-    // this epoch's own (file names carry a -q<queryId>-e<epochId>-
-    // segment): a wider sweep would also reap a concurrent maintenance
-    // writer's (e.g. compact's) files in its promote window, or earlier
-    // epochs' files that a compaction replaced but older snapshots read.
-    val committed = m.paths.toSet
-    listDataFiles(table)
-      .filterNot(committed)
-      .filter(_.contains(s"-q$queryId-e$epochId-"))
-      .foreach(f => Files.deleteIfExists(dir(table).resolve(f)))
-    val promoted = staged.map(promote(table, _))
-    commit(table, m.schema.json,
-      partsOf(m.bucket, staged.map(_.bucket).distinct.sorted), 0L,
-      bucketKey = m.bucket, epochUpdate = Map(queryId -> epochId), added = promoted)
-    // The epoch is committed: this query's staging area is dead weight
-    // (earlier epochs' leftovers included — micro-batches are serial).
-    sweepStaging()
-  }
 
   /** Remove the data directories of the given buckets, bypassing the
     * manifests: the committed files there go missing under the current
@@ -1149,7 +1106,7 @@ object IcebergishTable {
       dataCols.toSeq ++ Seq(newField) ++ partCols.toSeq)
     // No added files, no dropped parent files — the commit carries the
     // parent's file list forward under the evolved schema.
-    commit(table, evolved.json, partsOfManifest(m), 0L, bucketKey = m.bucket,
+    commit(table, evolved.json, partsOfManifest(m), bucketKey = m.bucket,
       schemaEvolution = true, expectedParent = Some(base))
   }
 
@@ -1202,7 +1159,7 @@ object IcebergishTable {
     val evolved = StructType(cur.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
     val evolvedSpec = m.bucket.map { case (k, n) => (if (k == from) to else k, n) }
-    commit(table, evolved.json, partsOfManifest(m), 0L, bucketKey = evolvedSpec,
+    commit(table, evolved.json, partsOfManifest(m), bucketKey = evolvedSpec,
       schemaEvolution = true, expectedParent = Some(base),
       statsRekey = Map(from -> Some(to)),
       // `from` stays physically present in old files under its id; if the
@@ -1247,7 +1204,7 @@ object IcebergishTable {
         s"column '$name' is a key of a live equality-delete tombstone in " +
           s"$table — compact to fold the tombstone, then drop")
     val evolved = StructType(cur.fields.filterNot(_.name == name))
-    commit(table, evolved.json, partsOfManifest(m), 0L, bucketKey = m.bucket,
+    commit(table, evolved.json, partsOfManifest(m), bucketKey = m.bucket,
       schemaEvolution = true, expectedParent = Some(base),
       statsRekey = Map(name -> None),
       // The dropped column's bytes stay in old files — ghost the name so
@@ -1269,7 +1226,7 @@ object IcebergishTable {
     val withPart = annotateFieldIds(table, dataSchema)
       .add(org.apache.spark.sql.types.StructField(PartCol,
         org.apache.spark.sql.types.IntegerType, nullable = false))
-    commit(table, withPart.json, 0 until numParts, 0L,
+    commit(table, withPart.json, 0 until numParts,
       bucketKey = Some((keyCol, numParts)))
   }
 
@@ -1283,8 +1240,8 @@ object IcebergishTable {
                                       expectedParent: Option[Int] = None): Int = {
     val (schemaJson, spec) = manifestMeta(table)
     commit(table, schemaJson, partsOf(spec, added.map(bucketOfPath).distinct.sorted),
-      0L, bucketKey = spec, added = added.map(f => WrittenFile(bucketOfPath(f), f)),
-      expectedParent = expectedParent)
+      bucketKey = spec, added = added.map(f => WrittenFile(bucketOfPath(f), f)),
+      expectedParent = expectedParent).get // no epoch: always commits
   }
 
   def exists(table: String): Boolean =
@@ -1365,12 +1322,12 @@ object IcebergishTable {
     current.count() // materialize BEFORE the inputs are superseded
     // Fresh files land beside the old ones (the old files stay on disk —
     // deleting them would break older snapshots' time travel).
-    try stagePromote(current, table) { s =>
+    try stagePromote(table, TableWriter.stage(current, table, _)) { s =>
       // Partition list from the COMMITTED spec when one exists: numParts
       // shapes the rewrite's shuffle only (PartCol values are unchanged by
       // the repartition), it is not a layout change.
       commit(table, current.schema.json,
-        0 until spec.map(_._2).getOrElse(numParts), 0L,
+        0 until spec.map(_._2).getOrElse(numParts),
         bucketKey = spec, added = s.files, replaceAll = true,
         expectedParent = Some(startSnap))
     } finally current.unpersist(blocking = false)
@@ -1403,8 +1360,8 @@ object IcebergishTable {
       .repartition(newNumParts, col(PartCol)), table)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rewritten.count() // materialize before the inputs are superseded
-    try stagePromote(rewritten, table) { s =>
-      commit(table, rewritten.schema.json, 0 until newNumParts, 0L,
+    try stagePromote(table, TableWriter.stage(rewritten, table, _)) { s =>
+      commit(table, rewritten.schema.json, 0 until newNumParts,
         bucketKey = Some((newKey, newNumParts)), added = s.files,
         replaceAll = true, expectedParent = Some(startSnap))
     } finally rewritten.unpersist(blocking = false)
@@ -1475,15 +1432,9 @@ object IcebergishTable {
       // bounded by the caller's own threshold.
       val victims = predScan.select(col(FileCol), col(PosCol))
         .collect().map(r => (r.getString(0), r.getLong(1)))
-      val rel = writePositionDeletes(table, victims.toSeq)
-      try {
+      stagePromote(table, deletes = Seq(writePositionDeletes(table, victims.toSeq))) { s =>
         commit(table, schema.json, partsOf(spec, touched.toSeq.sorted),
-          0L, bucketKey = spec, addedDeletes = Seq(rel),
-          expectedParent = Some(startSnap))
-      } catch {
-        case e: graft.GraftError =>
-          Files.deleteIfExists(dir(table).resolve(rel))
-          throw e
+          bucketKey = spec, addedDeletes = s.deletes, expectedParent = Some(startSnap))
       }
       return deleted
     }
@@ -1587,11 +1538,11 @@ object IcebergishTable {
     // The updates append as new files; `victims` (matched existing rows)
     // are masked in the same commit.
     def appendUpdates(victims: Seq[(String, Long)] = Seq.empty): Unit =
-      stagePromote(withFieldIds(up.select(outCols.map(col): _*)
-          .repartition(math.max(1, touched.size), col(PartCol)), table),
-        table, victims) { s =>
+      stagePromote(table, TableWriter.stage(withFieldIds(up.select(outCols.map(col): _*)
+          .repartition(math.max(1, touched.size), col(PartCol)), table), table, _),
+        if (victims.isEmpty) Seq.empty else Seq(writePositionDeletes(table, victims))) { s =>
         commit(table, schema.json, partsOf(spec, touched.toSeq.sorted),
-          0L, bucketKey = spec, added = s.files, addedDeletes = s.deletes,
+          bucketKey = spec, added = s.files, addedDeletes = s.deletes,
           expectedParent = Some(startSnap))
       }
     // Positions of matched EXISTING rows, excluding already-tombstoned
@@ -1627,9 +1578,9 @@ object IcebergishTable {
                              touched: Set[Int], replacement: DataFrame): Unit = {
     // Re-annotate: unionByName/joins in the replacement plan may have
     // dropped the field-id metadata the fresh files must embed.
-    stagePromote(withFieldIds(replacement, table), table) { s =>
+    stagePromote(table, TableWriter.stage(withFieldIds(replacement, table), table, _)) { s =>
       commit(table, schemaJson, partsOf(spec, touched.toSeq.sorted),
-        0L, bucketKey = spec, added = s.files,
+        bucketKey = spec, added = s.files,
         dropParent = f => touched.contains(bucketOfPath(f)),
         expectedParent = Some(startSnap))
     }
@@ -1650,19 +1601,11 @@ object IcebergishTable {
     val cur = currentSnapshot(table)
     val manifests = manifestsOnDisk(table, strict = _ == cur)
     val referenced = manifests.flatMap(_.paths).toSet
-    val data = d.resolve("data")
-    if (!Files.exists(data)) return Seq.empty
     val cutoff = System.currentTimeMillis() - olderThanMs
-    val candidates = Files.walk(data).iterator().asScala
-      .filter(_.toString.endsWith(".parquet"))
-      .map(p => (d.relativize(p), p))
-      .filterNot { case (rel, _) => isHiddenPath(rel) } // staging is live
-      .filter { case (rel, p) =>
-        !referenced.contains(rel.toString) &&
-          Files.getLastModifiedTime(p).toMillis < cutoff
-      }
-      .toSeq
-    candidates.foreach { case (_, p) => Files.deleteIfExists(p) }
+    val candidates = listDataFiles(table) // staging is live: never listed
+      .filterNot(referenced)
+      .filter(f => Files.getLastModifiedTime(d.resolve(f)).toMillis < cutoff)
+    candidates.foreach(f => Files.deleteIfExists(d.resolve(f)))
     // Orphaned position-delete files (a crashed MOR delete wrote its TSV
     // but never committed): same manifest-reference + grace rule.
     val referencedDeletes = manifests.flatMap(_.deletes.map(_.path)).toSet
@@ -1670,7 +1613,7 @@ object IcebergishTable {
       .filterNot(referencedDeletes)
       .filter(f => Files.getLastModifiedTime(d.resolve(f)).toMillis < cutoff)
     orphanDeletes.foreach(f => Files.deleteIfExists(d.resolve(f)))
-    candidates.map(_._1.toString) ++ orphanDeletes
+    candidates ++ orphanDeletes
   }
 
   /** Every snapshot manifest on disk, decoded — the reachability set space

@@ -32,10 +32,12 @@ final case class WrittenFile(bucket: Int, path: String,
 final case class WrittenFiles(files: Seq[WrittenFile]) extends WriterCommitMessage
 
 /** The task side of every table write, batch and stream: one parquet file
-  * per bucket the task's rows reach, staged under the table's hidden
-  * `data/_staging/` tree (invisible to reads until the driver promotes it).
-  * Rows reach their bucket either through the `part` column the batch
-  * writes carry, or through the table's key hash (the streaming sink).
+  * per bucket the task's rows reach, staged under the write's hidden
+  * `data/_staging/batch-<uid>/` tree (invisible to reads until the driver
+  * promotes it). Rows reach their bucket either through the `part` column
+  * the batch writes carry, or through the table's key hash (the DSv2
+  * streaming sink); either way a file is named
+  * `part=<b>/part-<pid>-<uid>-<attempt>.parquet`.
   *
   * [[commit]] closes the files and reads each footer back
   * ([[ManifestStats.statsAndCount]]) so the driver commits bounds and row
@@ -92,42 +94,43 @@ final class TableFileWriter private (table: String, stagedPath: Int => String,
 
 object TableFileWriter {
 
-  /** A batch write task: rows carry `part`, which routes them and is not
-    * written (it is the file's directory). Names carry the write's `uid`
-    * and the task attempt id, so they are unique across writers and
-    * attempts.
+  /** A fresh write id: names one write's staging tree and its files. */
+  def newUid(): String = java.util.UUID.randomUUID.toString.take(12)
+
+  /** Table-relative staging tree of the write `uid`. */
+  def staging(uid: String): String = s"data/_staging/batch-$uid"
+
+  /** Staged path of bucket `b`'s file of one task attempt: the uid and the
+    * attempt id make it unique across writes and attempts.
     */
-  def byPart(table: String, staging: String, uid: String, input: Seq[Attribute],
+  private def stagedPath(uid: String, pid: Int, attempt: Long)(b: Int): String =
+    f"${staging(uid)}/${IcebergishTable.PartCol}=$b/part-$pid%05d-$uid-$attempt.parquet"
+
+  /** A batch write task: rows carry `part`, which routes them and is not
+    * written (it is the file's directory).
+    */
+  def byPart(table: String, uid: String, input: Seq[Attribute],
              confEntries: Map[String, String], ctx: TaskContext): TableFileWriter = {
     val partIdx = input.indexWhere(_.name == IcebergishTable.PartCol)
     val project = UnsafeProjection.create(
       input.filterNot(_.name == IcebergishTable.PartCol), input)
     val pid = ctx.partitionId()
     val attempt = ctx.taskAttemptId()
-    new TableFileWriter(table,
-      b => f"$staging/${IcebergishTable.PartCol}=$b/part-$pid%05d-$uid-$attempt.parquet",
+    new TableFileWriter(table, stagedPath(uid, pid, attempt),
       _.getInt(partIdx), project, confEntries, pid, attempt, 0L)
   }
 
   /** A streaming epoch task: bucket = pmod(murmur3(key), n), Spark's
     * `hash()` — identical to [[IcebergishTable.partExpr]] and to
     * HashPartitioning, so streamed and batch-written rows of one key share
-    * a bucket. queryId AND epochId are part of the file name, not just the
-    * staging dir: task ids reset with a new SparkContext, so across
-    * restarts another epoch — or another query — can repeat a (partition,
-    * task) pair, and promoting a colliding name would replace an earlier
-    * committed file. The `-q<queryId>-e<epochId>-` segment also lets the
-    * epoch commit sweep exactly this epoch's crashed-promote orphans
-    * ([[IcebergishTable.streamCommitFiles]]).
+    * a bucket.
     */
-  def byKey(table: String, key: String, n: Int, schema: StructType,
-            confEntries: Map[String, String], queryId: String,
+  def byKey(table: String, uid: String, key: String, n: Int, schema: StructType,
+            confEntries: Map[String, String],
             partitionId: Int, taskId: Long, epochId: Long): TableFileWriter = {
     val keyIdx = schema.fieldIndex(key)
     val keyType = schema(keyIdx).dataType
-    new TableFileWriter(table,
-      b => s"data/_staging/q-$queryId/epoch-$epochId/" +
-        s"b$b-q$queryId-e$epochId-p$partitionId-t$taskId.parquet",
+    new TableFileWriter(table, stagedPath(uid, partitionId, taskId),
       row => {
         val h = Murmur3HashFunction.hash(row.get(keyIdx, keyType), keyType, 42L).toInt
         ((h % n) + n) % n
@@ -149,10 +152,11 @@ object TableFileWriter {
 }
 
 /** Logical root of a table write: writes its child's rows (each carrying
-  * [[IcebergishTable.PartCol]]) under `staging` and returns one row per
-  * file — (bucket, path, rows, stats as flat [column, min, max, …]).
+  * [[IcebergishTable.PartCol]]) under the staging tree of `uid` and returns
+  * one row per file — (bucket, path, rows, stats as flat [column, min,
+  * max, …]).
   */
-final case class TableWrite(child: LogicalPlan, table: String, staging: String,
+final case class TableWrite(child: LogicalPlan, table: String,
                             uid: String, confEntries: Map[String, String],
                             output: Seq[Attribute]) extends UnaryNode {
   override def producedAttributes: AttributeSet = outputSet
@@ -165,7 +169,7 @@ final case class TableWrite(child: LogicalPlan, table: String, staging: String,
   * `repartition(n, key)` when the rows are already partitioned that way. It
   * asks for no ordering: [[TableFileWriter]] fans out by bucket.
   */
-final case class TableWriteExec(child: SparkPlan, table: String, staging: String,
+final case class TableWriteExec(child: SparkPlan, table: String,
                                 uid: String, confEntries: Map[String, String],
                                 output: Seq[Attribute]) extends UnaryExecNode {
 
@@ -174,11 +178,11 @@ final case class TableWriteExec(child: SparkPlan, table: String, staging: String
   override protected def withNewChildInternal(c: SparkPlan): TableWriteExec = copy(child = c)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val (t, s, u, conf, input) = (table, staging, uid, confEntries, child.output)
+    val (t, u, conf, input) = (table, uid, confEntries, child.output)
     val outTypes = output.map(_.dataType).toArray
     child.execute().mapPartitions { rows =>
       val toUnsafe = UnsafeProjection.create(outTypes)
-      val w = TableFileWriter.byPart(t, s, u, input, conf, TaskContext.get())
+      val w = TableFileWriter.byPart(t, u, input, conf, TaskContext.get())
       val written =
         try { rows.foreach(w.write); w.commit() }
         catch { case e: Throwable =>
@@ -199,19 +203,18 @@ final case class TableWriteExec(child: SparkPlan, table: String, staging: String
 object TableWriteStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case w: TableWrite =>
-      TableWriteExec(planLater(w.child), w.table, w.staging, w.uid, w.confEntries,
-        w.output) :: Nil
+      TableWriteExec(planLater(w.child), w.table, w.uid, w.confEntries, w.output) :: Nil
     case _ => Nil
   }
 }
 
 object TableWriter {
 
-  /** Write `df` (carrying [[IcebergishTable.PartCol]]) into `staging`
-    * (table-relative) as one SQL execution — observations on `df` fire —
-    * and return the staged files. Opens no file on the driver.
+  /** Write `df` (carrying [[IcebergishTable.PartCol]]) into the staging
+    * tree of `uid` as one SQL execution — observations on `df` fire — and
+    * return the staged files. Opens no file on the driver.
     */
-  def stage(df: DataFrame, table: String, staging: String): Seq[WrittenFile] = {
+  def stage(df: DataFrame, table: String, uid: String): Seq[WrittenFile] = {
     val spark = df.sparkSession
     install(spark)
     val dataSchema = StructType(df.schema.filterNot(_.name == IcebergishTable.PartCol))
@@ -222,9 +225,8 @@ object TableWriter {
       AttributeReference("rows", LongType, nullable = false)(),
       AttributeReference("stats", ArrayType(StringType, containsNull = false),
         nullable = false)())
-    val uid = java.util.UUID.randomUUID.toString.take(12)
     org.apache.spark.sql.GraftColumnBridge.dfOf(spark,
-        TableWrite(df.queryExecution.analyzed, table, staging, uid, conf, out))
+        TableWrite(df.queryExecution.analyzed, table, uid, conf, out))
       .collect().toSeq.map { r =>
         WrittenFile(r.getInt(0), r.getString(1),
           r.getSeq[String](3).grouped(3).map { case Seq(c, mn, mx) => c -> (mn, mx) }.toMap,

@@ -78,16 +78,20 @@ object Checkpoint {
       StandardOpenOption.SYNC) // ack must be durable before we report done
   }
 
-  /** Partitions of `stage` already completed for `runId` AND the same
-    * input snapshot — an ack against a different input is stale (the
-    * reference's cursor is likewise bound to one dump context,
-    * /root/reference/src/sharding.rs:86-137).
+  /** Acked parts of `stage` for `runId` AND the same input snapshot, each
+    * with the input fingerprint of its last ack — an ack against a
+    * different input is stale (the reference's cursor is likewise bound to
+    * one dump context, /root/reference/src/sharding.rs:86-137).
     */
-  def doneParts(spark: SparkSession, path: String, runId: String,
-                stage: String, inputTag: String): Set[Int] =
+  def ackedFingerprints(path: String, runId: String, stage: String,
+                        inputTag: String): Map[Int, String] =
     readRows(path)
       .filter(r => r.run_id == runId && r.stage == stage &&
         r.status == "done" && r.input_tag == inputTag)
-      .map(_.part)
-      .toSet
+      .groupBy(_.part).view.mapValues(_.last.input_fingerprint).toMap
+
+  /** Partitions of `stage` already completed for `runId` and `inputTag`. */
+  def doneParts(spark: SparkSession, path: String, runId: String,
+                stage: String, inputTag: String): Set[Int] =
+    ackedFingerprints(path, runId, stage, inputTag).keySet
 }

@@ -39,12 +39,8 @@ object GraphOut {
                                 keyCol: String, ckptPath: String,
                                 runId: String, stage: String,
                                 inputTag: String): Set[Int] = {
-    val rows = Checkpoint.readRows(ckptPath)
-      .filter(r => r.run_id == runId && r.stage == stage &&
-        r.status == "done" && r.input_tag == inputTag)
-    if (rows.isEmpty || !IcebergishTable.exists(table)) return Set.empty
-    val expected: Map[Int, String] =
-      rows.groupBy(_.part).view.mapValues(_.last.input_fingerprint).toMap
+    val expected = Checkpoint.ackedFingerprints(ckptPath, runId, stage, inputTag)
+    if (expected.isEmpty || !IcebergishTable.exists(table)) return Set.empty
     val done = expected.keySet
     // Tamper-tolerant read: a deleted acked file must surface as a
     // fingerprint mismatch below (→ demote to pending and recompute),

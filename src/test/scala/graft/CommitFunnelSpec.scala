@@ -9,11 +9,12 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 
-import graft.io.{IcebergishTable, Manifest, TableWrite}
+import graft.io.{IcebergishTable, Manifest, TableFileWriter, TableWrite, WrittenFile}
 
 /** The stage-and-commit funnel: a table write whose commit is refused
   * leaves the table's `data/` and `deletes/` exactly as the winning
-  * writer left them.
+  * writer left them, and a stream epoch that commits nothing leaves them
+  * as they were.
   */
 class CommitFunnelSpec extends SparkSpec {
 
@@ -80,6 +81,38 @@ class CommitFunnelSpec extends SparkSpec {
     assert(files(table) == before + winner, s"left behind: ${files(table) -- before - winner}")
     assert(IcebergishTable.read(spark, table).where(col("k") === "k3").count() >= 1,
       "the refused delete took effect")
+  }
+
+  test("a replayed or empty stream epoch commits no snapshot and leaves no staged file, for both sinks") {
+    import spark.implicits._
+    val (table, _) = tableWithWinner("graft-funnel-epochs")
+    def batch(keys: Seq[String]) = keys.map(k => (k, 1L)).toDF("k", "v")
+      .withColumn(IcebergishTable.PartCol, IcebergishTable.partExpr("k", 4))
+    assert(IcebergishTable.appendPrePartitioned(batch(Seq("x1", "x2")), table, 4, "k", "q", 1L) == 2L)
+    val before = files(table)
+    val snap = IcebergishTable.currentSnapshot(table)
+    def unchanged(what: String): Unit = {
+      assert(IcebergishTable.currentSnapshot(table) == snap, s"$what committed a snapshot")
+      assert(files(table) == before, s"$what left: ${files(table) -- before}")
+      assert(!Files.exists(Paths.get(table, "data", "_staging")), s"$what left a staging tree")
+      assert(IcebergishTable.streamEpoch(table, "q") == Some(1L))
+    }
+    // foreachBatch sink: a replay that reaches the commit, then an empty batch.
+    assert(IcebergishTable.appendPrePartitioned(batch(Seq("x3")), table, 4, "k", "q", 1L) == 0L)
+    unchanged("a replayed foreachBatch epoch")
+    assert(IcebergishTable.appendPrePartitioned(batch(Seq.empty), table, 4, "k", "q", 2L) == 0L)
+    unchanged("an empty foreachBatch epoch")
+    // DSv2 sink: a replayed epoch's staged file, then an epoch with no file.
+    val seed = Manifest.read(table, snap).paths.head
+    val bucket = IcebergishTable.bucketOfPath(seed)
+    val staged = s"${TableFileWriter.staging("replay")}/part=$bucket/part-00000-replay-0.parquet"
+    Files.createDirectories(Paths.get(table, staged).getParent)
+    Files.copy(Paths.get(table, seed), Paths.get(table, staged))
+    IcebergishTable.appendStaged(table, "replay", Seq(WrittenFile(bucket, staged)), "q", 1L)
+    unchanged("a replayed DSv2 epoch")
+    IcebergishTable.appendStaged(table, "empty", Seq.empty, "q", 2L)
+    unchanged("an empty DSv2 epoch")
+    assert(IcebergishTable.read(spark, table).count() == 42)
   }
 }
 

@@ -38,7 +38,7 @@ class EqualityDeleteSpec extends SparkSpec {
       assert(Files.getLastModifiedTime(
         java.nio.file.Paths.get(t).resolve(f)) == mtimes0(f), s"$f touched")
     }
-    assert(IcebergishTable.snapshotDeleteFiles(t, s1).size == 1)
+    assert(Manifest.read(t, s1).deletes.map(_.path).size == 1)
     assert(IcebergishTable.read(spark, t).count() == 98)
     assert(IcebergishTable.read(spark, t)
       .where(col("k").isin("k3", "k77")).count() == 0)
@@ -100,7 +100,7 @@ class EqualityDeleteSpec extends SparkSpec {
     IcebergishTable.deleteEquality(spark, t, Seq("k1", "k2").toDF("k"), Seq("k"))
     IcebergishTable.compact(spark, t, 4, "k")
     val cur = IcebergishTable.currentSnapshot(t)
-    assert(IcebergishTable.snapshotDeleteFiles(t, cur).isEmpty)
+    assert(Manifest.read(t, cur).deletes.map(_.path).isEmpty)
     assert(IcebergishTable.read(spark, t).count() == 98)
     // Compacted files carry a NEW seq: a stale eq tombstone could never
     // re-apply to them even if it survived (it did not).

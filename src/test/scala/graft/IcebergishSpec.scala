@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.io.{IcebergishTable, Manifest, WrittenFile}
+import graft.io.{IcebergishTable, Manifest, TableFileWriter, WrittenFile}
 import graft.streaming.StreamingKg
 import graft.synth.PageSynth
 
@@ -692,16 +692,15 @@ class IcebergishSpec extends SparkSpec {
     // promote-time refresh its file would look expired the moment it
     // became vacuum-visible — a concurrent vacuum could reap it inside
     // the promote→commit window.
-    val stagedRel = s"data/_staging/q-qslow/epoch-0/b$bucket-qqslow-e0-p0-t0.parquet"
+    val stagedRel = s"${TableFileWriter.staging("slow")}/part=$bucket/part-00000-slow-0.parquet"
     val staged = java.nio.file.Paths.get(table, stagedRel)
     Files.createDirectories(staged.getParent)
     Files.copy(java.nio.file.Paths.get(table, seed), staged)
     Files.setLastModifiedTime(staged,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() - 7200000L))
-    IcebergishTable.streamCommitFiles(table, Seq(WrittenFile(bucket, stagedRel)), "qslow", 0L)
-    val promoted = java.nio.file.Paths.get(table,
-      s"data/part=$bucket/b$bucket-qqslow-e0-p0-t0.parquet")
+    IcebergishTable.appendStaged(table, "slow", Seq(WrittenFile(bucket, stagedRel)), "qslow", 0L)
+    val promoted = java.nio.file.Paths.get(table, s"data/part=$bucket/part-00000-slow-0.parquet")
     assert(Files.exists(promoted))
     // Grace clock restarted: the promoted file's mtime is NOW, not the
     // two-hour-old staging time.
@@ -833,15 +832,16 @@ class IcebergishSpec extends SparkSpec {
     assert(IcebergishTable.read(spark, table).as[(String, Long, Int)].collect().toSet == before)
   }
 
-  test("a stream epoch's commit sweeps only that epoch's crashed promote") {
+  test("a stream epoch's crashed promote is an orphan that removeOrphans reclaims") {
     import spark.implicits._
     val table = Files.createTempDirectory("graft-sweep").toString + "/t"
     val root = java.nio.file.Paths.get(table)
     IcebergishTable.createEmpty(table,
       Seq(Triple("A", "p", "B", "u", 1.0)).toDF.schema, "subj", 4)
     val q = "q1"
-    // One parquet file staged the way the streaming writer stages it.
-    def stage(epoch: Long, subj: String, task: Int): WrittenFile = {
+    // One parquet file staged the way the DSv2 sink's task stages it for
+    // the write `uid`.
+    def stage(uid: String, subj: String): WrittenFile = {
       val rows = Seq(Triple(subj, "p", "B", s"u-$subj", 1.0)).toDF
       val b = Seq(subj).toDF("k").select(IcebergishTable.partExpr("k", 4)).head().getInt(0)
       val tmp = Files.createTempDirectory("graft-sweep-stage")
@@ -849,31 +849,37 @@ class IcebergishSpec extends SparkSpec {
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val written = Files.list(tmp).iterator().asScala
         .find(_.toString.endsWith(".parquet")).get
-      val rel = s"data/_staging/q-$q/epoch-$epoch/b$b-q$q-e$epoch-p0-t$task.parquet"
+      val rel = s"${TableFileWriter.staging(uid)}/part=$b/part-00000-$uid-0.parquet"
       Files.createDirectories(root.resolve(rel).getParent)
       Files.move(written, root.resolve(rel))
       WrittenFile(b, rel)
     }
     def subjects(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select("subj").as[String].collect().toSeq.sorted
-    IcebergishTable.streamCommitFiles(table, Seq(stage(0, "A", 0)), q, 0L)
-    IcebergishTable.streamCommitFiles(table, Seq(stage(1, "C", 0)), q, 1L)
+    IcebergishTable.appendStaged(table, "e0", Seq(stage("e0", "A")), q, 0L)
+    IcebergishTable.appendStaged(table, "e1", Seq(stage("e1", "C")), q, 1L)
 
     // Epoch 2 promotes its file into the bucket dir, then crashes before
-    // the manifest swap; its retry sweeps that file and commits once.
-    val WrittenFile(b, staged, _, _) = stage(2, "E", 0)
+    // the manifest swap; its retry (a fresh write uid) commits it once.
+    val WrittenFile(b, staged, _, _) = stage("e2a", "E")
     val orphan = s"data/part=$b/${java.nio.file.Paths.get(staged).getFileName}"
     Files.createDirectories(root.resolve(orphan).getParent)
     Files.move(root.resolve(staged), root.resolve(orphan))
-    IcebergishTable.streamCommitFiles(table, Seq(stage(2, "E", 1)), q, 2L)
-    assert(!Files.exists(root.resolve(orphan)), "crashed promote not swept")
+    val beforeRetry = IcebergishTable.currentSnapshot(table)
+    IcebergishTable.appendStaged(table, "e2b", Seq(stage("e2b", "E")), q, 2L)
+    assert(IcebergishTable.currentSnapshot(table) == beforeRetry + 1)
+    assert(IcebergishTable.streamEpoch(table, q) == Some(2L))
+    assert((0 to IcebergishTable.currentSnapshot(table)).forall(s =>
+      !Manifest.read(table, s).paths.contains(orphan)), "crashed attempt's file committed")
+    assert(subjects(IcebergishTable.read(spark, table)) == Seq("A", "C", "E"))
+    assert(IcebergishTable.removeOrphans(table, 0L) == Seq(orphan))
     assert(subjects(IcebergishTable.read(spark, table)) == Seq("A", "C", "E"))
 
-    // After a compaction, the next epoch's sweep leaves the replaced files
-    // of earlier epochs alone: the pre-compaction snapshot still reads.
+    // After a compaction, the next epoch leaves the replaced files of
+    // earlier epochs alone: the pre-compaction snapshot still reads.
     val preCompact = IcebergishTable.currentSnapshot(table)
     IcebergishTable.compact(spark, table, 4, "subj")
-    IcebergishTable.streamCommitFiles(table, Seq(stage(3, "G", 0)), q, 3L)
+    IcebergishTable.appendStaged(table, "e3", Seq(stage("e3", "G")), q, 3L)
     Manifest.read(table, preCompact).paths.foreach { f =>
       assert(Files.exists(root.resolve(f)), s"replaced file of an earlier epoch swept: $f")
     }

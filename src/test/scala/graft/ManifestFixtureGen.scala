@@ -40,7 +40,10 @@ object ManifestFixtureGen {
     IcebergishTable.dropColumn(t, "x")
     IcebergishTable.deleteWhere(spark, t, col("v") === 3L, morMaxRows = 10)
     IcebergishTable.deleteEquality(spark, t, Seq("k105").toDF("k"), Seq("k"))
-    IcebergishTable.streamCommitFiles(t, Seq.empty, "q1", 7L)
+    // An empty epoch commits nothing: the epoch rides a one-row append.
+    IcebergishTable.appendPrePartitioned(Seq(("k200", 200L, "w200", 0L)).toDF("k", "v", "w2", "y")
+      .withColumn(IcebergishTable.PartCol, IcebergishTable.partExpr("k", 2)),
+      t, 2, "k", "q1", 7L)
     // Committer side files (CRCs, _SUCCESS) are not table state.
     Files.walk(Paths.get(t)).iterator().asScala.toSeq
       .filter { p =>

@@ -42,7 +42,7 @@ class MorDeleteSpec extends SparkSpec {
       assert(Files.getLastModifiedTime(
         java.nio.file.Paths.get(t).resolve(f)) == mtimes0(f), s"$f rewritten")
     }
-    assert(IcebergishTable.snapshotDeleteFiles(t, s1).size == 1)
+    assert(Manifest.read(t, s1).deletes.map(_.path).size == 1)
 
     // Reads exclude exactly the victims (≡ what a COW delete would leave).
     val got = IcebergishTable.read(spark, t).select("v").as[Long].collect().toSet
@@ -104,7 +104,7 @@ class MorDeleteSpec extends SparkSpec {
     IcebergishTable.compact(spark, t, 4, "k")
     val cur = IcebergishTable.currentSnapshot(t)
     // The compacted snapshot carries NO delete entries (folded physically)…
-    assert(IcebergishTable.snapshotDeleteFiles(t, cur).isEmpty)
+    assert(Manifest.read(t, cur).deletes.map(_.path).isEmpty)
     assert(IcebergishTable.read(spark, t).count() == 196)
     // …and expiry reclaims the TSV once no retained snapshot references it.
     assert(Files.list(java.nio.file.Paths.get(t).resolve("deletes"))
@@ -122,7 +122,7 @@ class MorDeleteSpec extends SparkSpec {
     assert(IcebergishTable.read(spark, t).count() == 199)
     IcebergishTable.rollbackTo(t, s0)
     assert(IcebergishTable.read(spark, t).count() == 200)
-    assert(IcebergishTable.snapshotDeleteFiles(t, s0).isEmpty)
+    assert(Manifest.read(t, s0).deletes.map(_.path).isEmpty)
     assert(!Files.exists(java.nio.file.Paths.get(t).resolve("deletes")) ||
       Files.list(java.nio.file.Paths.get(t).resolve("deletes")).count() == 0)
   }
@@ -149,7 +149,7 @@ class MorDeleteSpec extends SparkSpec {
         java.nio.file.Paths.get(t).resolve(f)) == mtimes0(f), s"$f rewritten")
     }
     assert(Manifest.read(t, s1).paths.size > files0.size)
-    assert(IcebergishTable.snapshotDeleteFiles(t, s1).size == 1)
+    assert(Manifest.read(t, s1).deletes.map(_.path).size == 1)
     val got = IcebergishTable.read(spark, t)
       .where(col("k").isin("k3", "k7", "knew"))
       .select("k", "v").as[(String, Long)].collect().toSet

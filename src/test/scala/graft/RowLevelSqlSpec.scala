@@ -37,7 +37,7 @@ class RowLevelSqlSpec extends SparkSpec {
     // files untouched, a delete entry committed (default morMaxRows 10k).
     val cur = IcebergishTable.currentSnapshot(t)
     assert(Manifest.read(t, cur).paths == files0)
-    assert(IcebergishTable.snapshotDeleteFiles(t, cur).size == 1)
+    assert(Manifest.read(t, cur).deletes.map(_.path).size == 1)
     assert(spark.table("graft_q.del1").count() == 197)
     assert(spark.table("graft_q.del1").where(col("v") === 6L).count() == 0)
   }
@@ -51,7 +51,7 @@ class RowLevelSqlSpec extends SparkSpec {
       spark.sql("DELETE FROM graft_q.del2 WHERE v < 100")
       val cur = IcebergishTable.currentSnapshot(t)
       assert(Manifest.read(t, cur).paths != files0)
-      assert(IcebergishTable.snapshotDeleteFiles(t, cur).isEmpty)
+      assert(Manifest.read(t, cur).deletes.map(_.path).isEmpty)
       assert(spark.table("graft_q.del2").count() == 100)
     } finally spark.conf.unset("spark.graft.delete.morMaxRows")
   }

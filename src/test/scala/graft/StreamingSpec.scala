@@ -206,7 +206,7 @@ class StreamingSpec extends SparkSpec {
   test("writeStream.toTable: native DSv2 streaming sink appends exactly-once") {
     import java.nio.file.Files
     import spark.implicits._
-    import graft.io.{IcebergishTable, WrittenFile}
+    import graft.io.{IcebergishTable, TableFileWriter, WrittenFile}
     implicit val sqlCtx = spark.sqlContext
     val base = Files.createTempDirectory("graft-ssw").toString
     val table = s"$base/sink"
@@ -250,19 +250,18 @@ class StreamingSpec extends SparkSpec {
       assert(epochs.size == 1 && epochs.head._2 >= 1, s"epochs $epochs")
       val qid = epochs.head._1
       val snapBefore = IcebergishTable.currentSnapshot(table)
-      val staged = java.nio.file.Paths.get(
-        s"$table/data/_staging/q-$qid/epoch-0/b0-p0-t99.parquet")
+      val stagedRel = s"${TableFileWriter.staging("replay")}/part=0/part-00000-replay-99.parquet"
+      val staged = java.nio.file.Paths.get(table, stagedRel)
       Files.createDirectories(staged.getParent)
       Files.write(staged, Array[Byte](1, 2, 3))
-      IcebergishTable.streamCommitFiles(table,
-        Seq(WrittenFile(0, s"data/_staging/q-$qid/epoch-0/b0-p0-t99.parquet")), qid, 0L)
+      IcebergishTable.appendStaged(table, "replay", Seq(WrittenFile(0, stagedRel)), qid, 0L)
       assert(!Files.exists(staged), "replayed epoch's staged file not discarded")
       assert(IcebergishTable.currentSnapshot(table) == snapBefore,
         "replayed epoch committed a snapshot")
       assert(IcebergishTable.read(spark, table).count() == 3)
 
       // Staging tree is swept after commits — no hidden-file accumulation.
-      val stagingRoot = java.nio.file.Paths.get(s"$table/data/_staging/q-$qid")
+      val stagingRoot = java.nio.file.Paths.get(s"$table/data/_staging")
       assert(!Files.exists(stagingRoot) ||
         !Files.list(stagingRoot).iterator().hasNext)
 

@@ -91,8 +91,8 @@ class TableFeatureInteractionSpec extends SparkSpec {
     // Compact rewrites every file under the current schema → ghosts reset,
     // pushdown-enabled reads return, results unchanged.
     IcebergishTable.compact(spark, t, 4)
-    assert(IcebergishTable.snapshotGhostNames(
-      t, IcebergishTable.currentSnapshot(t)).isEmpty,
+    assert(Manifest.read(
+      t, IcebergishTable.currentSnapshot(t)).ghosts.isEmpty,
       "replace-all must clear the ghost list")
     assert(IcebergishTable.read(spark, t).where(col("x") >= 500L)
       .count() == 40)
@@ -121,7 +121,7 @@ class TableFeatureInteractionSpec extends SparkSpec {
     // (replace-all drops the delete list) and keeps the rename.
     IcebergishTable.rebucket(spark, t, "g", 8)
     val cur = IcebergishTable.currentSnapshot(t)
-    assert(IcebergishTable.snapshotDeleteFiles(t, cur).isEmpty)
+    assert(Manifest.read(t, cur).deletes.map(_.path).isEmpty)
     assert(IcebergishTable.read(spark, t).count() == 97)
     assert(IcebergishTable.read(spark, t).agg(sum("value")).as[Long].head() ==
       (0 until 100).map(_.toLong).sum - 5L - 50L - 95L)
