@@ -39,12 +39,12 @@ final case class PipelineConfig(
     // Planted-hub synthesis share (north_rule skew case): fraction of fact
     // sentences whose subject is entity 0. 0 = historical corpus.
     hubShare: Double = 0.0,
-    // Write-side skew salting: split each output bucket over this many
-    // shuffle sub-keys (see GraphOut.bucketedDedupPlanAlignedSalted).
-    // 1 = one file per bucket; raise when a hub subject concentrates a
-    // bucket; 0 = AUTO — estimate the hottest subject's share from a small
-    // page sample and size the salt so the hub bucket's slices weigh about
-    // as much as an average bucket (see Pipeline.autoSalt).
+    // Write-side skew split: the maximum number of tasks (and files) one
+    // output bucket of the edge table may span. 1 = one task per bucket;
+    // n > 1 = a bucket splits, up to n ways, only when the edges shuffle's
+    // map statistics show it alone outweighs a core's fair share (see
+    // GraphOut.bucketedDedupPlanAlignedSalted, plans.SplitHotBuckets);
+    // 0 = AUTO, min(8, defaultParallelism) (see Pipeline.autoSplit).
     writeSalt: Int = 1
 )
 
@@ -67,16 +67,17 @@ object Pipeline {
     if (cfg.workDir.isEmpty || cfg.runId.isEmpty) bad("workDir and runId are required")
   }
 
-  /** AUTO write-salt (cfg.writeSalt == 0): a planner hint, not an exact
-    * statistic. Extract triples from a small page-prefix sample, take the
-    * hottest subject's share s of sampled triples, and size the salt so the
-    * hub's bucket splits into slices that each weigh about an average
-    * bucket: the hub bucket holds ≈ s + (1-s)/n of all rows vs 1/n average,
-    * so slices needed ≈ s·n (+1). Clamped to [1, 8] — salt costs up-to-salt
-    * files per bucket and ~10% map-side hashing, so an unskewed corpus must
-    * come out at 1 (it does: s ≈ 1/dictionary-size ⇒ s·n < 1). A prefix
-    * sample under-detects hubs confined to late partitions; the clamp and
-    * the downstream dedup's correctness-under-any-salt make that safe.
+  /** AUTO maximum split (cfg.writeSalt == 0): as many splits as cores, up
+    * to 8. No sample job: which buckets split, and how far, is decided from
+    * the edges shuffle's own map statistics once its map stage has run
+    * ([[graft.plans.SplitHotBuckets]]).
+    */
+  def autoSplit(spark: SparkSession): Int =
+    math.max(1, math.min(8, spark.sparkContext.defaultParallelism))
+
+  /** [[autoSplit]] of the session of `pages`. The other parameters are
+    * unused; the signature stays for callers that replay [[build]] step by
+    * step.
     */
   private[graft] def autoSalt(pages: Dataset[Page],
                               aliasDict: Seq[Alias],
@@ -84,29 +85,8 @@ object Pipeline {
                               canon: Map[String, String],
                               numParts: Int,
                               samplePages: Int = 1000,
-                              canonDf: Option[DataFrame] = None): Int = {
-    import org.apache.spark.sql.functions.{count => cnt}
-    val raw = TripleExtract
-      .extractDirect(pages.limit(samplePages), aliasDict, phrases, canon)
-    // The bucket key downstream is the CANONICAL subject: when the sameAs
-    // graph is too big for a driver map (canon arrives as a DataFrame), the
-    // sample must canonicalize the same way, or a hub entity spread over k
-    // aliases samples as k small subjects and the salt underestimates by k
-    // — exactly in the large-corpus regime auto mode exists for.
-    val sample = (canonDf match {
-      case Some(df) =>
-        TripleExtract.canonicalize(raw, df, assumeSmall = false, dedup = false)
-      case None => raw
-    })
-      .groupBy(col("subj")).agg(cnt(lit(1)).as("n"))
-      .agg(max(col("n")).as("hub"), sum(col("n")).as("total"))
-      .head()
-    if (sample.isNullAt(0) || sample.getLong(1) == 0L) 1
-    else {
-      val s = sample.getLong(0).toDouble / sample.getLong(1)
-      math.max(1, math.min(8, math.ceil(s * numParts).toInt))
-    }
-  }
+                              canonDf: Option[DataFrame] = None): Int =
+    autoSplit(pages.sparkSession)
 
   /** Stage 0: synthesize the input table and materialize it Iceberg-style.
     * Idempotent: skipped when the table already exists with the same
@@ -202,11 +182,7 @@ object Pipeline {
         TripleExtract.canonicalize(
           TripleExtract.extractDirect(pages, aliasDict, phrases),
           canonDf, assumeSmall = false, dedup = false)
-    val salt =
-      if (cfg.writeSalt == 0)
-        autoSalt(pages, aliasDict, phrases, canonMap, cfg.outputBuckets,
-          canonDf = if (fitsDriver) None else Some(canonDf))
-      else cfg.writeSalt
+    val salt = if (cfg.writeSalt == 0) autoSplit(spark) else cfg.writeSalt
     val edgeStats = GraphOut.writeBucketedDedup(
       rawTriples.toDF, edgesTable, "subj", cfg.outputBuckets,
       Seq("subj", "pred", "obj", "url"), ckpt, cfg.runId, "edges",

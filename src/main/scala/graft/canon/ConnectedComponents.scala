@@ -1,6 +1,7 @@
 package graft.canon
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -83,21 +84,36 @@ object ConnectedComponents {
                       localByteBudget: Long = 256L << 20): (DataFrame, Boolean) = {
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst"))
-    // ONE gate job measures rows AND id characters (the row count alone is
-    // only an ESTIMATE of driver memory — adversarially long ids can blow
-    // the heap at a legal row count). Deliberately not a streamed
+    // Edges already on the driver (a LocalRelation, as PageSynth.sameAs is)
+    // are collected without a Spark job, and the gate and the union-find
+    // read that one copy.
+    val onDriver = e.queryExecution.optimizedPlan match {
+      case _: LocalRelation =>
+        val spark = e.sparkSession
+        import spark.implicits._
+        Some(e.as[(String, String)].collect())
+      case _ => None
+    }
+    // Otherwise ONE gate job measures rows AND id characters (the row count
+    // alone is only an ESTIMATE of driver memory — adversarially long ids
+    // can blow the heap at a legal row count). Deliberately not a streamed
     // per-partition meter: toLocalIterator schedules one serial job per
     // partition (measured ~0.4 s of 5 ms jobs at 32 partitions), while
     // this agg is one distributed pass over the same data.
-    val gate = e.agg(count(lit(1)),
-      coalesce(sum(length(col("src")) + length(col("dst"))), lit(0L))).head()
-    if (gate.getLong(0) <= localThreshold) {
+    val (rows, chars) = onDriver match {
+      case Some(pairs) =>
+        (pairs.length.toLong, pairs.iterator.map(p => (p._1.length + p._2.length).toLong).sum)
+      case None =>
+        val gate = e.agg(count(lit(1)),
+          coalesce(sum(length(col("src")) + length(col("dst"))), lit(0L))).head()
+        (gate.getLong(0), gate.getLong(1))
+    }
+    if (rows <= localThreshold) {
       // Runtime re-plan (the reference's analog: Dump→AQL downgrade on a
       // RUNTIME support failure, graph_loader.rs:213-238): on a measured
       // budget overflow the SAME edge set re-plans onto the distributed
       // path instead of dying in the driver.
-      try (componentsLocal(e, localByteBudget,
-        Some(heapEstimate(gate.getLong(0), gate.getLong(1)))), true)
+      try (componentsLocal(e, localByteBudget, Some(heapEstimate(rows, chars)), onDriver), true)
       catch {
         case ex: graft.LocalPlanOverBudget =>
           System.err.println(
@@ -119,16 +135,17 @@ object ConnectedComponents {
   private def heapEstimate(rows: Long, chars: Long): Long =
     chars * 2 + rows * 240
 
-  /** Driver-side union-find for small graphs (single collect). The collect
-    * is budget-gated: the estimated heap cost (passed down from
-    * [[componentsSized]]'s gate job, or measured here for direct callers)
-    * crossing `byteBudget` aborts with the typed
+  /** Driver-side union-find for small graphs (single collect, or the
+    * `collected` edges). The collect is budget-gated: the estimated heap
+    * cost (passed down from [[componentsSized]]'s gate, or measured here
+    * for direct callers) crossing `byteBudget` aborts with the typed
     * [[graft.LocalPlanOverBudget]] BEFORE the driver heap is at risk —
     * [[componentsSized]] catches it and re-plans distributed.
     */
   private[graft] def componentsLocal(edges: DataFrame,
                                      byteBudget: Long = Long.MaxValue,
-                                     knownBytes: Option[Long] = None): DataFrame = {
+                                     knownBytes: Option[Long] = None,
+                                     collected: Option[Array[(String, String)]] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     if (byteBudget != Long.MaxValue) {
@@ -141,7 +158,7 @@ object ConnectedComponents {
       if (bytes > byteBudget)
         throw new graft.LocalPlanOverBudget("cc local union-find", bytes, byteBudget)
     }
-    val pairs = edges.as[(String, String)].collect()
+    val pairs = collected.getOrElse(edges.as[(String, String)].collect())
     val parent = scala.collection.mutable.HashMap.empty[String, String]
     // Iterative find with path compression (no recursion — adversarial
     // union orders can build deep chains near the size threshold).

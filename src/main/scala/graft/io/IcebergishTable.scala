@@ -1588,13 +1588,16 @@ object IcebergishTable {
 
   /** Delete data files referenced by NO existing snapshot manifest — the
     * leftovers of a writer that crashed between promote and commit (or a
-    * compaction loser's sweep racing a crash). Orphans are invisible to
+    * compaction loser's sweep racing a crash) — and the staging trees of
+    * writers that crashed before their promote. Orphans are invisible to
     * every read (manifest-pinned), so this is pure space reclaim —
     * Iceberg's remove_orphan_files. `olderThanMs` is the safety grace: a
     * CONCURRENT writer mid-promote has files on disk that its imminent
     * commit will reference, and they are younger than any sane grace
-    * window (default 1 h). Like expiry, a maintenance op: one at a time
-    * per table. Returns the deleted relative paths.
+    * window (default 1 h); a staging tree is as old as its newest file or
+    * directory, which a live writer's tasks keep refreshing. Like expiry, a
+    * maintenance op: one at a time per table. Returns the deleted relative
+    * paths.
     */
   def removeOrphans(table: String, olderThanMs: Long = 3600000L): Seq[String] = {
     val d = dir(table)
@@ -1613,7 +1616,35 @@ object IcebergishTable {
       .filterNot(referencedDeletes)
       .filter(f => Files.getLastModifiedTime(d.resolve(f)).toMillis < cutoff)
     orphanDeletes.foreach(f => Files.deleteIfExists(d.resolve(f)))
-    candidates ++ orphanDeletes
+    candidates ++ orphanDeletes ++ removeStaleStaging(table, cutoff)
+  }
+
+  /** Delete every staging tree whose newest file or directory was modified
+    * before `cutoff`, then the staging root once it is empty. Returns the
+    * deleted files, table-relative.
+    */
+  private def removeStaleStaging(table: String, cutoff: Long): Seq[String] = {
+    val root = dir(table).resolve(TableFileWriter.StagingRoot)
+    if (!Files.isDirectory(root)) return Seq.empty
+    def walk[A](p: Path)(f: Iterator[Path] => A): A = {
+      val s = Files.walk(p)
+      try f(s.iterator().asScala) finally s.close()
+    }
+    // A tree its writer drops while it is walked is not stale.
+    def newest(t: Path): Long =
+      try walk(t)(_.map(Files.getLastModifiedTime(_).toMillis).max)
+      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => Long.MaxValue }
+    val trees = { val s = Files.list(root); try s.iterator().asScala.toList finally s.close() }
+    val stale = trees.filter(newest(_) < cutoff)
+    val removed = stale.flatMap { t =>
+      val files = walk(t)(_.filter(Files.isRegularFile(_))
+        .map(f => dir(table).relativize(f).toString).toList.sorted)
+      deleteTree(t)
+      files
+    }
+    try Files.deleteIfExists(root)
+    catch { case _: java.nio.file.DirectoryNotEmptyException => }
+    removed
   }
 
   /** Every snapshot manifest on disk, decoded — the reachability set space

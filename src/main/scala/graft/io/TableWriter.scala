@@ -97,8 +97,11 @@ object TableFileWriter {
   /** A fresh write id: names one write's staging tree and its files. */
   def newUid(): String = java.util.UUID.randomUUID.toString.take(12)
 
+  /** Table-relative root of every write's staging tree. */
+  val StagingRoot = "data/_staging"
+
   /** Table-relative staging tree of the write `uid`. */
-  def staging(uid: String): String = s"data/_staging/batch-$uid"
+  def staging(uid: String): String = s"$StagingRoot/batch-$uid"
 
   /** Staged path of bucket `b`'s file of one task attempt: the uid and the
     * attempt id make it unique across writes and attempts.

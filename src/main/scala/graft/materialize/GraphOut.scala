@@ -131,9 +131,10 @@ object GraphOut {
     * bucket on the dedup key by the shuffle's spill-safe sort machinery and
     * de-duplicated with an O(1)-memory adjacent filter; each task then holds
     * exactly one bucket, so `partitionBy` emits one file per bucket with no
-    * further repartition. `groupSize` buckets commit per group;
-    * `failAfterGroups >= 0` injects a crash after that many committed groups
-    * (tests only).
+    * further repartition. `skewSalt > 1` is the maximum split of a hot
+    * bucket ([[bucketedDedupPlanAlignedSalted]]). `groupSize` buckets
+    * commit per group; `failAfterGroups >= 0` injects a crash after that
+    * many committed groups (tests only).
     */
   def writeBucketedDedup(
       df: DataFrame,
@@ -221,36 +222,40 @@ object GraphOut {
     out
   }
 
-  /** Bucket-aligned SALTED single-exchange dedup: each of the
-    * `numParts × skewSalt` (bucket, salt) slices becomes exactly ONE
-    * shuffle partition — even, non-empty reduce tasks like
-    * [[bucketedDedupPlanAligned]], but with hub buckets split `skewSalt`
-    * ways.
+  /** Bucket-aligned SALTED single-exchange dedup: ONE exchange of
+    * `numParts × maxSplit` slots laid out bucket-major — slot
+    * `b·maxSplit + j` holds split `j` of bucket `b`, the split a pure
+    * function of the dedup key (duplicates still meet). The slot column is
+    * marked with `maxSplit` ([[graft.plans.SplitHotBuckets.markSlots]]), so
+    * under adaptive execution with [[graft.plans.GraftExtensions]] the
+    * write reads each bucket's slots as one task unless the map statistics
+    * show the bucket alone outweighs a core's fair share; then it spans up
+    * to `maxSplit` tasks. Every task holds one bucket either way; without
+    * the rule every slot is its own task (the uniform split).
     *
     * Alignment trick: HashPartitioning can't be told "partition id =
-    * part·salt + wsalt" directly, and hashing (part, wsalt) into m slots
+    * part·maxSplit + split" directly, and hashing (part, split) into m slots
     * collides birthday-style (measured occ 82% / p50 43 ms vs the aligned
     * plan's one-whole-bucket tasks). Instead we shuffle on a synthetic int
     * column looked up from [[inverseHashSlots]]: a literal array whose
-    * entry for slot s is an int that murmur3-hashes TO s. The salt stays a
-    * pure function of the dedup key (duplicates still meet), and the slot
-    * column joins the grouping keys so the child's HashPartitioning
-    * satisfies the aggregation — still exactly ONE exchange.
+    * entry for slot s is an int that murmur3-hashes TO s. The slot column
+    * joins the grouping keys so the child's HashPartitioning satisfies the
+    * aggregation — still exactly ONE exchange.
     */
   def bucketedDedupPlanAlignedSalted(withPart: DataFrame, numParts: Int,
                                      dedupCols: Seq[String],
-                                     skewSalt: Int): DataFrame = {
+                                     maxSplit: Int): DataFrame = {
     require(dedupCols.nonEmpty, "salted dedup requires dedup columns")
-    val m = numParts * skewSalt
+    val m = numParts * maxSplit
     val saltCol = "_wsalt"
     val slotCol = "_wslot"
     val lookup = inverseHashSlots(m)
     val salted = withPart
       .withColumn(saltCol,
-        pmod(xxhash64(dedupCols.map(col): _*), lit(skewSalt)).cast("int"))
-      .withColumn(slotCol, element_at(
+        pmod(xxhash64(dedupCols.map(col): _*), lit(maxSplit)).cast("int"))
+      .withColumn(slotCol, graft.plans.SplitHotBuckets.markSlots(element_at(
         typedLit(lookup.toSeq),
-        col(IcebergishTable.PartCol) * skewSalt + col(saltCol) + 1))
+        col(IcebergishTable.PartCol) * maxSplit + col(saltCol) + 1), slotCol, maxSplit))
     val sub = salted.repartition(m, col(slotCol))
     dedupGroups(sub, withPart.columns, Seq(slotCol, saltCol), dedupCols)
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import graft.functions.HtmlExtractExpr
 
 /** Session-extension entry point: registers the engine's native
-  * function(s) and its one optimizer rule. Usage:
+  * function(s), its one optimizer rule and its one query-stage rule. Usage:
   *
   *   SparkSession.builder()
   *     .withExtensions(new GraftExtensions)
@@ -21,6 +21,10 @@ import graft.functions.HtmlExtractExpr
   * `SimplifyExtractValueOps` cannot fold `props['k']` through
   * `map_filter`, leaving a full map build+filter per row on open-schema
   * round-trips (asserted before/after in ExtensionsSpec).
+  * [[SplitHotBuckets]] earns its place too: no built-in reads a
+  * `repartition(n, key)` shuffle by its measured load, so a salted edges
+  * write otherwise runs one task (and writes one file) per slot, light
+  * buckets included (asserted in SkewPipelineSpec).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -36,5 +40,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // claim the plan before Spark's SupportsRowLevelOperations fallback
     // rejects the table).
     ext.injectResolutionRule(_ => GraftRowLevelSql)
+    ext.injectQueryStageOptimizerRule(SplitHotBuckets(_))
   }
 }

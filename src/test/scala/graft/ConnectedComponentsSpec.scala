@@ -121,6 +121,26 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(e.getMessage.contains("byte budget"))
   }
 
+  test("edges already on the driver: gate and union-find run no Spark job, same components") {
+    val edges = graft.synth.PageSynth.sameAs(spark).toDF("src", "dst")
+    val ((local, fits), jobs) = withJobCount {
+      val (df, fits) = ConnectedComponents.componentsSized(edges)
+      (df.collect().map(r => r.getString(0) -> r.getString(1)).toMap, fits)
+    }
+    assert(fits)
+    assert(jobs == 0, s"$jobs Spark job(s) for a driver-local edge list")
+    val dist = ConnectedComponents.componentsDistributed(edges)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(local == dist)
+    // Over the row threshold or the byte budget it still goes distributed.
+    Seq(ConnectedComponents.componentsSized(edges, localThreshold = 1L),
+        ConnectedComponents.componentsSized(edges, localByteBudget = 64L)).foreach {
+      case (df, fitsDriver) =>
+        assert(!fitsDriver)
+        assert(df.collect().map(r => r.getString(0) -> r.getString(1)).toMap == dist)
+    }
+  }
+
   test("sameAs fixture canonicalizes E01xx to E00xx") {
     val got = cc(graft.synth.PageSynth.sameAsPairs)
     (0 until graft.synth.PageSynth.DupRangeLen).foreach { i =>

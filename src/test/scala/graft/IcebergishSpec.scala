@@ -661,9 +661,10 @@ class IcebergishSpec extends SparkSpec {
           System.currentTimeMillis() - 7200000L))
       p
     }
-    // An aged orphan (promoted, never committed), an aged STAGED file (a
-    // writer's private area — never touched), and a fresh orphan (inside
-    // the grace window of a possibly-mid-promote writer).
+    // An aged orphan (promoted, never committed), an aged STAGED file in a
+    // tree whose directories are fresh (a writer still staging — its tree
+    // is as young as its newest entry), and a fresh orphan (inside the
+    // grace window of a possibly-mid-promote writer).
     val orphan = plantAged(s"data/part=$bucket/orphan-old.parquet")
     val staged = plantAged(s"data/_staging/batch-x/part=$bucket/in-flight.parquet")
     val fresh = java.nio.file.Paths.get(table, s"data/part=$bucket/orphan-new.parquet")
@@ -676,6 +677,35 @@ class IcebergishSpec extends SparkSpec {
     // Every committed file untouched; reads unaffected.
     Manifest.read(table, IcebergishTable.currentSnapshot(table)).paths
       .foreach(f => assert(Files.exists(java.nio.file.Paths.get(table, f))))
+    assert(IcebergishTable.read(spark, table).count() == 8)
+  }
+
+  test("removeOrphans reclaims a crashed writer's aged staging tree; a fresh one survives") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("graft-orph-staging").toString + "/t"
+    IcebergishTable.write(
+      (0 until 8).map(i => (s"k$i", i.toLong)).toDF("k", "v"), table, "k", 4)
+    val seed = java.nio.file.Paths.get(table, Manifest.read(
+      table, IcebergishTable.currentSnapshot(table)).paths.head)
+    // Stage one file under a writer's tree; `ageMs` ages the file and every
+    // directory of the tree (a writer that crashed that long ago).
+    def stage(uid: String, ageMs: Long): java.nio.file.Path = {
+      val tree = java.nio.file.Paths.get(table, TableFileWriter.staging(uid))
+      val f = tree.resolve("part=0/part-00000-x-0.parquet")
+      Files.createDirectories(f.getParent)
+      Files.copy(seed, f)
+      val t = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ageMs)
+      Seq(f, f.getParent, tree).foreach(Files.setLastModifiedTime(_, t))
+      tree
+    }
+    val crashed = stage("crashed", 7200000L)
+    val live = stage("live", 0L)
+
+    val removed = IcebergishTable.removeOrphans(table, olderThanMs = 3600000L)
+    assert(removed == Seq(s"${TableFileWriter.staging("crashed")}/part=0/part-00000-x-0.parquet"),
+      removed)
+    assert(!Files.exists(crashed), "the crashed writer's staging tree survived")
+    assert(Files.exists(live.resolve("part=0/part-00000-x-0.parquet")))
     assert(IcebergishTable.read(spark, table).count() == 8)
   }
 

@@ -7,6 +7,25 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** `body`'s result and the Spark jobs it ran (the listener bus flushed
+    * on both sides).
+    */
+  def withJobCount[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.graftmetrics.ListenerFlush.flush(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.graftmetrics.ListenerFlush.flush(sc)
+      (a, n.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
