@@ -983,14 +983,6 @@ object IcebergishTable {
   private val commitLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Remove the data directories of the given buckets, bypassing the
-    * manifests: the committed files there go missing under the current
-    * snapshot. No write path calls this; specs use it to tamper with a
-    * table (a deleted bucket must fail resume verification and recompute).
-    */
-  def deletePartitionDirs(table: String, parts: Seq[Int]): Unit =
-    parts.foreach(p => deleteTree(dir(table).resolve("data").resolve(s"$PartCol=$p")))
-
   /** Current table state = the CURRENT MANIFEST's file list — genuinely
     * snapshot-consistent: a concurrent append's files sit in the bucket
     * dirs before its commit, and a directory-derived read would leak that
@@ -1380,7 +1372,8 @@ object IcebergishTable {
     *    amplification. [[compact]] folds the tombstones back into data.
     *
     * SQL semantics either way: rows where `cond` evaluates NULL are NOT
-    * deleted. The predicate scan is zone-map pruned to candidate files.
+    * deleted. The predicate scan is zone-map pruned to candidate files
+    * through the scan's pushed filters.
     * Pins its input snapshot: any concurrent commit aborts this delete
     * with a typed [[graft.CommitConflict]] (retry against the new state);
     * its fresh files are cleaned up. Returns deleted row count.
@@ -1391,30 +1384,15 @@ object IcebergishTable {
     val startSnap = requireSnapshot(table)
     val m = Manifest.read(table, startSnap)
     val (schema, spec) = (m.schema, m.bucket)
-    val hit = coalesce(cond, lit(false))
-    // ZONE-MAP PRUNING for the predicate scan: the manifest's per-file
-    // min/max drops files whose ranges cannot contain a matching row, so
-    // finding the touched buckets reads only candidate files — previously
-    // this was the one full-table scan in the delete path (flagged by the
-    // round-4 review as what file stats would fix). The REWRITE below
-    // still reads the touched buckets' full file sets, as it must.
-    // Two predicate front doors: user-built Columns carry ColumnNode
-    // trees; the SQL DELETE rewrite hands a Column wrapping a catalyst
-    // expression — try both, conservatively.
-    val preds = {
-      val fromNodes = ManifestStats.fromColumn(cond, schema)
-      if (fromNodes.nonEmpty) fromNodes
-      else scala.util.Try(ManifestStats.fromExpression(
-        org.apache.spark.sql.GraftColumnBridge.expressionOf(cond)))
-        .getOrElse(Seq.empty)
-    }
-    val candidates = ManifestStats.prune(m, schema, preds)
-    if (candidates.isEmpty) return 0L
-    // The candidate scan excludes already-MOR-deleted rows (it reads under
-    // the snapshot's deletes), so the count below is exact, and a MOR
-    // victim list falls straight out of the same frame's file/ordinal
-    // columns.
-    val predScan = frameOf(spark, table, m.copy(files = candidates)).where(hit)
+    // The predicate scan reads only candidate files: its GraftScan prunes
+    // by the manifest's zone maps from the filters pushed to it, like every
+    // other read. It filters on `cond` itself: a WHERE drops the rows where
+    // `cond` is NULL, and no pushdown translates the keep side's
+    // `coalesce`. It reads under the snapshot's deletes, so the count below
+    // is exact, and a MOR victim list falls straight out of the same
+    // frame's file/ordinal columns. The COW rewrite still reads the touched
+    // buckets' full file sets, as it must.
+    val predScan = frameOf(spark, table, m).where(cond)
     // ONE job yields both the touched-bucket set and the deleted count
     // (bounded by numParts rows) — not a distinct-collect plus a second
     // full predicate scan.
@@ -1438,6 +1416,8 @@ object IcebergishTable {
       }
       return deleted
     }
+    // Kept: every row of a touched bucket where `cond` is not TRUE.
+    val hit = coalesce(cond, lit(false))
     val keep = frameOf(spark, table, m)
       .where(col(PartCol).isin(touched.toSeq: _*)).where(!hit)
       .repartition(math.max(1, touched.size), col(PartCol))

@@ -197,8 +197,10 @@ object ManifestStats {
 
   /** Predicate shapes the zone maps can evaluate. Values are CATALYST
     * INTERNAL representations (Long micros for timestamps, Int days for
-    * dates, UTF8String for strings) so both front doors — V1 source
-    * filters and catalyst expressions — normalize into one comparator.
+    * dates, UTF8String for strings) so one comparator serves every type.
+    * The one front door is [[fromFilter]]: the filters Spark pushes to a
+    * table scan, so every read — row-level deletes' predicate scans
+    * included — prunes through the same translation.
     */
   sealed trait StatPred
   final case class Cmp(col: String, op: String, v: Any) extends StatPred
@@ -210,10 +212,17 @@ object ManifestStats {
   /** V1 source filter → StatPred (None = shape not prunable). External
     * values (Instant, LocalDate, java.sql types…) normalize to catalyst
     * internal form via Spark's own converters.
+    *
+    * Attribute names arrive as Spark pushes them: quoted where needed
+    * (`` `a b` ``) and dotted for nested fields. They parse as multipart
+    * identifiers; only single-part names (top-level columns) prune.
     */
   def fromFilter(f: org.apache.spark.sql.sources.Filter,
                  schema: StructType): Option[StatPred] = {
     import org.apache.spark.sql.sources._
+    def column(attr: String): Option[String] =
+      scala.util.Try(org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+        .parseMultipartIdentifier(attr)).toOption.collect { case Seq(c) => c }
     def conv(col: String, v: Any): Option[Any] =
       schema.fields.find(_.name == col).flatMap { fld =>
         if (v == null) None
@@ -221,19 +230,23 @@ object ManifestStats {
           org.apache.spark.sql.catalyst.CatalystTypeConverters
             .createToCatalystConverter(fld.dataType)(v)).toOption
       }
+    def cmp(attr: String, op: String, v: Any): Option[StatPred] =
+      for { c <- column(attr); cv <- conv(c, v) } yield Cmp(c, op, cv)
     f match {
-      case EqualTo(c, v) => conv(c, v).map(Cmp(c, "=", _))
-      case EqualNullSafe(c, v) if v != null => conv(c, v).map(Cmp(c, "=", _))
-      case GreaterThan(c, v) => conv(c, v).map(Cmp(c, ">", _))
-      case GreaterThanOrEqual(c, v) => conv(c, v).map(Cmp(c, ">=", _))
-      case LessThan(c, v) => conv(c, v).map(Cmp(c, "<", _))
-      case LessThanOrEqual(c, v) => conv(c, v).map(Cmp(c, "<=", _))
-      case In(c, vs) if vs.nonEmpty && !vs.contains(null) =>
-        val conved = vs.toSeq.map(conv(c, _))
-        if (conved.forall(_.isDefined)) Some(InVals(c, conved.flatten))
-        else None
-      case StringStartsWith(c, p) =>
-        Some(PrefixP(c, UTF8String.fromString(p)))
+      case EqualTo(a, v) => cmp(a, "=", v)
+      case EqualNullSafe(a, v) if v != null => cmp(a, "=", v)
+      case GreaterThan(a, v) => cmp(a, ">", v)
+      case GreaterThanOrEqual(a, v) => cmp(a, ">=", v)
+      case LessThan(a, v) => cmp(a, "<", v)
+      case LessThanOrEqual(a, v) => cmp(a, "<=", v)
+      case In(a, vs) if vs.nonEmpty && !vs.contains(null) =>
+        column(a).flatMap { c =>
+          val conved = vs.toSeq.map(conv(c, _))
+          if (conved.forall(_.isDefined)) Some(InVals(c, conved.flatten))
+          else None
+        }
+      case StringStartsWith(a, p) =>
+        column(a).map(PrefixP(_, UTF8String.fromString(p)))
       case And(l, r) =>
         (fromFilter(l, schema), fromFilter(r, schema)) match {
           case (Some(a), Some(b)) => Some(AndP(a, b))
@@ -244,114 +257,6 @@ object ManifestStats {
           yield OrP(a, b)
       case _ => None
     }
-  }
-
-  /** A user's predicate `Column` → StatPreds, one per prunable conjunct.
-    * Spark 4 Columns are trees of `sql.internal.ColumnNode`s (function
-    * names as strings, literal values in EXTERNAL form) — matched here
-    * directly; values normalize through the same catalyst converters as
-    * the V1 filter path.
-    */
-  def fromColumn(c: org.apache.spark.sql.Column,
-                 schema: StructType): Seq[StatPred] = {
-    import org.apache.spark.sql.GraftColumnBridge.{PAttr, PCall, PLit, PredNode}
-    def nameOf(n: PredNode): Option[String] = n match {
-      case PAttr(a) => Some(a)
-      case _ => None
-    }
-    def convFor(colName: String, v: Any): Option[Any] =
-      schema.fields.find(_.name == colName).flatMap { fld =>
-        if (v == null) None
-        else scala.util.Try(
-          org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToCatalystConverter(fld.dataType)(v)).toOption
-      }
-    def cmpOf(op: String, a: PredNode, b: PredNode): Option[StatPred] =
-      (a, b) match {
-        case (attr, PLit(v)) =>
-          for { n <- nameOf(attr); cv <- convFor(n, v) } yield Cmp(n, op, cv)
-        case (PLit(v), attr) =>
-          val flip = Map(">" -> "<", "<" -> ">", ">=" -> "<=", "<=" -> ">=",
-            "=" -> "=")
-          for { n <- nameOf(attr); cv <- convFor(n, v) }
-            yield Cmp(n, flip(op), cv)
-        case _ => None
-      }
-    def one(n: PredNode): Option[StatPred] = n match {
-      case PCall(fn, args) => (fn, args) match {
-        case ("=" | "==" | "equal_to", Seq(a, b)) => cmpOf("=", a, b)
-        case (">", Seq(a, b)) => cmpOf(">", a, b)
-        case (">=", Seq(a, b)) => cmpOf(">=", a, b)
-        case ("<", Seq(a, b)) => cmpOf("<", a, b)
-        case ("<=", Seq(a, b)) => cmpOf("<=", a, b)
-        case ("in", attr +: vals) if vals.nonEmpty =>
-          nameOf(attr).flatMap { nm =>
-            val conved = vals.map {
-              case PLit(v) => convFor(nm, v)
-              case _ => None
-            }
-            if (conved.forall(_.isDefined)) Some(InVals(nm, conved.flatten.toSeq))
-            else None
-          }
-        case ("startswith", Seq(attr, PLit(s: String))) =>
-          nameOf(attr).map(PrefixP(_, UTF8String.fromString(s)))
-        case ("or", Seq(a, b)) =>
-          for { l <- one(a); r <- one(b) } yield OrP(l, r)
-        case ("and", Seq(a, b)) =>
-          (one(a), one(b)) match {
-            case (Some(l), Some(r)) => Some(AndP(l, r))
-            case (l, r) => l.orElse(r)
-          }
-        case _ => None
-      }
-      case _ => None
-    }
-    def conjuncts(n: PredNode): Seq[PredNode] = n match {
-      case PCall("and", args) if args.length == 2 => args.flatMap(conjuncts)
-      case other => Seq(other)
-    }
-    conjuncts(org.apache.spark.sql.GraftColumnBridge.predTreeOf(c))
-      .flatMap(one(_).toSeq)
-  }
-
-  /** Resolved catalyst expression (the SQL command path) → StatPreds,
-    * one per prunable conjunct. Literal values are already internal.
-    */
-  def fromExpression(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[StatPred] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    def nameOf(x: Expression): Option[String] = x match {
-      case a: AttributeReference => Some(a.name)
-      case u: UnresolvedAttribute if u.nameParts.length == 1 =>
-        Some(u.nameParts.head)
-      case _ => None
-    }
-    def one(x: Expression): Option[StatPred] = x match {
-      case EqualTo(a, Literal(v, _)) if v != null => nameOf(a).map(Cmp(_, "=", v))
-      case EqualTo(Literal(v, _), a) if v != null => nameOf(a).map(Cmp(_, "=", v))
-      case GreaterThan(a, Literal(v, _)) if v != null => nameOf(a).map(Cmp(_, ">", v))
-      case GreaterThan(Literal(v, _), a) if v != null => nameOf(a).map(Cmp(_, "<", v))
-      case GreaterThanOrEqual(a, Literal(v, _)) if v != null => nameOf(a).map(Cmp(_, ">=", v))
-      case GreaterThanOrEqual(Literal(v, _), a) if v != null => nameOf(a).map(Cmp(_, "<=", v))
-      case LessThan(a, Literal(v, _)) if v != null => nameOf(a).map(Cmp(_, "<", v))
-      case LessThan(Literal(v, _), a) if v != null => nameOf(a).map(Cmp(_, ">", v))
-      case LessThanOrEqual(a, Literal(v, _)) if v != null => nameOf(a).map(Cmp(_, "<=", v))
-      case LessThanOrEqual(Literal(v, _), a) if v != null => nameOf(a).map(Cmp(_, ">=", v))
-      case In(a, vs) if vs.nonEmpty && vs.forall {
-        case Literal(v, _) => v != null; case _ => false } =>
-        nameOf(a).map(InVals(_, vs.map { case Literal(v, _) => v }))
-      case StartsWith(a, Literal(v: UTF8String, _)) if v != null =>
-        nameOf(a).map(PrefixP(_, v))
-      case Or(l, r) =>
-        for { a <- one(l); b <- one(r) } yield OrP(a, b)
-      case _ => None
-    }
-    def conjuncts(x: Expression): Seq[Expression] = x match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    conjuncts(e).flatMap(one)
   }
 
   /** MAY the file (described by `stats`) contain a row satisfying `p`?
@@ -458,14 +363,7 @@ object ManifestStats {
     case _ => None
   }
 
-  // ---- table-level front door ----------------------------------------------
-
-  /** File → stats for a snapshot (empty map per file when the manifest
-    * predates colstats; empty when it is missing or undecodable).
-    */
-  def fileStatsOf(table: String, snapshot: Int): Map[String, FileStats] =
-    scala.util.Try(Manifest.load(table, snapshot)).toOption.flatten
-      .fold(Map.empty[String, FileStats])(_.files.map(f => f.path -> f.stats).toMap)
+  // ---- metadata MIN/MAX and file pruning -----------------------------------
 
   /** True unless the writer may have truncated these bounds (see
     * [[InexactMark]]): only exact bounds answer metadata MIN/MAX.
@@ -503,13 +401,6 @@ object ManifestStats {
     */
   def prune(m: Manifest, schema: StructType, preds: Seq[StatPred]): Seq[DataFile] =
     m.files.filter(f => mayMatchAll(f.stats, schema, preds))
-
-  /** The subset of `files` a scan of `snapshot` with `preds` must read. */
-  def prune(table: String, snapshot: Int, schema: StructType,
-            preds: Seq[StatPred], files: Seq[String]): Seq[String] = {
-    val statsMap = fileStatsOf(table, snapshot)
-    files.filter(f => mayMatchAll(statsMap.getOrElse(f, Map.empty), schema, preds))
-  }
 
   private def mayMatchAll(stats: FileStats, schema: StructType,
                           preds: Seq[StatPred]): Boolean =

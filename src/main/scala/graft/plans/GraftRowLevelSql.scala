@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.sources.v2.GraftTable
 
@@ -51,7 +52,7 @@ object GraftRowLevelSql extends Rule[LogicalPlan] {
       // unresolved expression hanging off a command node — resolution
       // happens against the fresh table read inside deleteWhere.
       GraftDeleteCommand(t.tablePath,
-        org.apache.spark.sql.GraftColumnBridge.columnOf(unresolveByName(cond)))
+        ColumnBridge.column(unresolveByName(cond)))
 
     case m @ MergeIntoTable(target, source, cond,
         matched, notMatched, notMatchedBySource, _)
@@ -188,7 +189,7 @@ final case class GraftMergeCommand(path: String, source: LogicalPlan,
   override def run(spark: SparkSession): Seq[Row] = {
     val src = org.apache.spark.sql.GraftColumnBridge.dfOf(spark, source)
     val updates = src.select(columns.map { case (name, expr) =>
-      org.apache.spark.sql.GraftColumnBridge.columnOf(expr).as(name)
+      ColumnBridge.column(expr).as(name)
     }: _*)
     // Same strategy dial as DELETE: matched rows at or below the
     // threshold take the MOR leg (tombstone + append), larger merges COW.

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{LongType, MetadataBuilder, StructField, Struc
   * the flag changes column resolution of UNRELATED parquet reads whose
   * requested schema happens to carry `parquet.field.id` metadata. The
   * mechanism the library relies on is a cached field-id-enabled session
-  * CLONE (`GraftColumnBridge.sessionWithFieldIdReads`): file relations
+  * CLONE (`GraftColumnBridge.scopedSession` with the flag on): file relations
   * capture their session at creation, so a frame built on the clone keeps
   * id resolution when composed into base-session plans, while the base
   * session's own parquet reads keep name resolution. (A per-relation
@@ -21,6 +21,9 @@ class FieldIdScopeSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  private def fieldIdClone() = org.apache.spark.sql.GraftColumnBridge
+    .scopedSession(spark, Map("spark.sql.parquet.fieldId.read.enabled" -> "true"))
 
   test("session clone scopes field-id resolution to graft-built frames") {
     val dir = tmp("fid-clone")
@@ -42,8 +45,7 @@ class FieldIdScopeSpec extends SparkSpec {
     val before = spark.conf.getOption("spark.sql.parquet.fieldId.read.enabled")
     try {
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "false")
-      val clone = org.apache.spark.sql.GraftColumnBridge
-        .sessionWithFieldIdReads(spark)
+      val clone = fieldIdClone()
       val onClone = clone.read.schema(renamed).parquet(dir)
         .selectExpr("sum(x)", "sum(y)").collect().head
       assert(onClone.getLong(0) == 3L && onClone.getLong(1) == 30L,
@@ -57,8 +59,7 @@ class FieldIdScopeSpec extends SparkSpec {
       assert(spark.conf.get("spark.sql.parquet.fieldId.read.enabled")
         == "false", "clone must not mutate the base session's conf")
       // Clone is cached — repeated reads don't re-clone session state.
-      assert(org.apache.spark.sql.GraftColumnBridge
-        .sessionWithFieldIdReads(spark) eq clone)
+      assert(fieldIdClone() eq clone)
     } finally before match {
       case Some(v) => spark.conf.set("spark.sql.parquet.fieldId.read.enabled", v)
       case None => spark.conf.unset("spark.sql.parquet.fieldId.read.enabled")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.io.{IcebergishTable, Manifest, ManifestStats}
+import graft.io.{IcebergishTable, Manifest}
 
 /** Writes the committed backward-compatibility fixture read by
   * [[ManifestFixtureSpec]]: a small table whose manifest chain carries
@@ -57,17 +57,17 @@ object ManifestFixtureGen {
   }
 
   /** `kind \t snapshot \t value` lines: each snapshot's file list, its
-    * time-travel rows, and the files [[PrunePredicate]] keeps; `current`
-    * rows come from a plain read.
+    * time-travel rows, and the files a scan filtered on [[PrunePredicate]]
+    * plans; `current` rows come from a plain read.
     */
   def expectations(t: String): Seq[String] = {
     val spark = SparkSpec.session
     val cur = IcebergishTable.currentSnapshot(t)
     (0 to cur).flatMap { s =>
       val files = Manifest.read(t, s).paths
-      val schema = IcebergishTable.readSnapshot(spark, t, s).schema
-      val kept = ManifestStats.prune(t, s, schema,
-        ManifestStats.fromColumn(PrunePredicate, schema), files)
+      val planned = SparkSpec.plannedFiles(IcebergishTable.readSnapshot(spark, t, s)
+        .where(PrunePredicate).queryExecution).toSet
+      val kept = files.filter(planned)
       files.map(f => s"files\t$s\t$f") ++
         rowsOf(IcebergishTable.readSnapshot(spark, t, s)).map(r => s"rows\t$s\t$r") ++
         kept.map(f => s"prune\t$s\t$f")

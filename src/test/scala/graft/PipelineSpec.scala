@@ -185,7 +185,7 @@ class PipelineSpec extends SparkSpec {
       .where(IcebergishTable.partExpr("subj", cfg.outputBuckets) === victim)
       .count()
     assert(victimRows > 0)
-    IcebergishTable.deletePartitionDirs(edgesTable, Seq(victim))
+    deletePartitionDirs(edgesTable, Seq(victim))
     val edgeAcksBefore = acks("edges").size
     val vertexAcksBefore = acks("vertices").size
 

@@ -121,7 +121,7 @@ class ResumeSafetySpec extends SparkSpec {
 
     // Tamper: wipe one acked bucket's data files behind the checkpoint's back.
     val victim = bucketOf("E1", numParts)
-    IcebergishTable.deletePartitionDirs(s"$dir/edges", Seq(victim))
+    deletePartitionDirs(s"$dir/edges", Seq(victim))
     // Same runId/stage/inputTag: without verification this would full-skip.
     val resumed = GraphOut.writeBucketedDedup(df, s"$dir/edges", "subj",
       numParts, Seq("subj", "pred", "obj", "url"), s"$dir/ckpt", "r1",

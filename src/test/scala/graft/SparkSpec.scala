@@ -1,6 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,9 +33,56 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       (a, n.get())
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `body`'s result and the query executions it ran (the listener bus
+    * flushed on both sides).
+    */
+  def withQueries[A](body: => A): (A, Seq[QueryExecution]) = {
+    val sc = spark.sparkContext
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qes.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        qes.add(qe)
+    }
+    org.apache.spark.graftmetrics.ListenerFlush.flush(sc)
+    spark.listenerManager.register(listener)
+    try {
+      val a = body
+      org.apache.spark.graftmetrics.ListenerFlush.flush(sc)
+      (a, qes.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  def plannedFiles(df: DataFrame): Seq[String] = SparkSpec.plannedFiles(df.queryExecution)
+
+  /** Remove the data directories of the given buckets, bypassing the
+    * manifests: the committed files there go missing under the current
+    * snapshot (a tampered table: a deleted bucket must fail resume
+    * verification and recompute).
+    */
+  def deletePartitionDirs(table: String, parts: Seq[Int]): Unit =
+    parts.foreach { p =>
+      val d = Paths.get(table, "data", s"${graft.io.IcebergishTable.PartCol}=$p")
+      if (Files.exists(d)) {
+        val s = Files.walk(d)
+        try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
+        finally s.close()
+      }
+    }
 }
 
 object SparkSpec {
+  /** Table-relative paths of the data files the graft scans of `qe` plan,
+    * after zone-map and bucket pruning.
+    */
+  def plannedFiles(qe: QueryExecution): Seq[String] =
+    qe.sparkPlan.collect { case b: BatchScanExec => b }.flatMap(_.inputPartitions.flatMap {
+      case p: graft.sources.v2.GraftBucketPartition => p.files.toSeq.map(_.rel)
+      case _ => Seq.empty
+    })
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

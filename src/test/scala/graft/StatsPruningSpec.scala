@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 
 import graft.io.{IcebergishTable, Manifest, ManifestStats}
 
-/** Round-5 manifest zone maps: per-file column min/max recorded at commit,
-  * file-level skipping in DSv2 scan planning and deleteWhere's predicate
-  * scan.
+/** Round-5 manifest zone maps: per-file column min/max recorded at commit
+  * and file-level skipping in DSv2 scan planning, from the filters Spark
+  * pushes to the scan — deleteWhere's predicate scan included.
   */
 class StatsPruningSpec extends SparkSpec {
 
@@ -31,7 +31,7 @@ class StatsPruningSpec extends SparkSpec {
 
   test("commit records per-file min/max; carry-forward across appends") {
     val (t, snap) = twoEraTable("graft-stats")
-    val stats = ManifestStats.fileStatsOf(t, snap)
+    val stats = Manifest.read(t, snap).files.map(f => f.path -> f.stats).toMap
     val files = Manifest.read(t, snap).paths
     assert(files.nonEmpty && stats.keySet == files.toSet)
     // Every file has a v range entirely inside one era.
@@ -78,24 +78,46 @@ class StatsPruningSpec extends SparkSpec {
   test("deleteWhere reads only zone-map candidate files") {
     import spark.implicits._
     val (t, snap) = twoEraTable("graft-stats-del")
-    // The candidate set for a high-era predicate is the high-era half.
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(IcebergishTable.manifestMeta(t)._1)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    // The high-era files: the ones the append (the current snapshot) added.
     val all = Manifest.read(t, snap).paths
-    val preds = ManifestStats.fromColumn(col("v") >= lit(1000L), schema)
-    assert(preds.nonEmpty, "Column condition did not translate to StatPreds")
-    val cand = ManifestStats.prune(t, snap, schema, preds, all)
-    assert(cand.size * 2 <= all.size, s"${cand.size} of ${all.size}")
+    val hiEra = all.toSet -- Manifest.read(t, snap - 1).paths
+    assert(hiEra.nonEmpty && hiEra.size * 2 <= all.size, s"${hiEra.size} of ${all.size}")
 
-    // End-to-end: the delete itself stays correct through the pruned scan.
+    // MOR: the count and the victim collect both plan only candidates.
+    val (morDeleted, morQueries) = withQueries(
+      IcebergishTable.deleteWhere(spark, t, col("v") >= 1030L, morMaxRows = 100L))
+    assert(morDeleted == 10L)
+    val morPlans = morQueries.map(SparkSpec.plannedFiles)
+    assert(morPlans.size == 2 && morPlans.forall(f => f.nonEmpty && f.toSet.subsetOf(hiEra)),
+      s"MOR predicate scans planned $morPlans of ${all.size} files")
+    assert(IcebergishTable.read(spark, t).count() == 70L)
+
+    // SQL DELETE runs deleteWhere with a name-anchored condition: its
+    // predicate scans prune the same way.
+    spark.conf.set("spark.sql.catalog.statsdel",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.statsdel.warehouse",
+      java.nio.file.Paths.get(t).getParent.toString)
+    val (_, sqlQueries) = withQueries(spark.sql("DELETE FROM statsdel.t WHERE v >= 1020"))
+    val sqlPlans = sqlQueries.map(SparkSpec.plannedFiles).filter(_.nonEmpty)
+    assert(sqlPlans.nonEmpty && sqlPlans.forall(_.toSet.subsetOf(hiEra)),
+      s"SQL DELETE predicate scans planned $sqlPlans of ${all.size} files")
+    assert(IcebergishTable.read(spark, t).count() == 60L)
+
+    // COW end-to-end: the delete stays correct through the pruned scan.
     val deleted = IcebergishTable.deleteWhere(spark, t, col("v") >= 1000L)
-    assert(deleted == 40L)
+    assert(deleted == 20L)
     assert(IcebergishTable.read(spark, t).count() == 40L)
     assert(IcebergishTable.read(spark, t).agg(max("v")).as[Long].head() < 40L)
 
-    // A predicate excluded by every file's range: zero candidates, no job.
-    assert(IcebergishTable.deleteWhere(spark, t, col("v") > 100000L) == 0L)
+    // A predicate every zone map excludes: 0, no data file planned (so
+    // none opened), nothing committed.
+    val before = IcebergishTable.currentSnapshot(t)
+    val (none, noneQueries) = withQueries(
+      IcebergishTable.deleteWhere(spark, t, col("v") > 100000L))
+    assert(none == 0L)
+    assert(noneQueries.forall(SparkSpec.plannedFiles(_).isEmpty))
+    assert(IcebergishTable.currentSnapshot(t) == before)
   }
 
   test("predicate translation: filters, columns, timestamps, strings, IN, OR") {
@@ -122,16 +144,29 @@ class StatsPruningSpec extends SparkSpec {
     assert(!may(And(EqualTo("v", 15L), EqualTo("s", "aaa"))))
     // Unknown shapes and columns never prune.
     assert(may(IsNull("v")) && may(EqualTo("zz", 1L)))
+    // Names arrive as Spark pushes them: quoted ones prune, nested never.
+    assert(!may(EqualTo("`v`", 5L)) && ManifestStats.fromFilter(EqualTo("v.x", 5L), schema).isEmpty)
 
-    // Column-expression front door produces equivalent predicates.
-    def mayC(c: org.apache.spark.sql.Column): Boolean =
-      ManifestStats.fromColumn(c, schema)
-        .forall(p => ManifestStats.mayMatch(stats, schema, p))
-    assert(!mayC(col("v") === 5L) && mayC(col("v") === 15L))
-    assert(!mayC(col("v") > 20L) && mayC(col("v") >= 20L))
-    assert(!mayC(lit(5L) > col("v") && col("s") === "ccc"))
-    assert(!mayC(col("s").startsWith("e")))
-    assert(!mayC(col("v").isin(1L, 30L)))
+    // Column predicates plan through the scan's pushed filters. One
+    // bucket, two appends: file lo holds v in [10, 20] and s in
+    // [bbb, ddd], file hi holds v in [1000, 1005] and s in [xa, xf].
+    import spark.implicits._
+    val t = Files.createTempDirectory("graft-stats-cols").resolve("t").toString
+    IcebergishTable.write(Seq(("k0", 10L, "bbb"), ("k1", 20L, "ddd"))
+      .toDF("k", "v", "s"), t, "k", 1)
+    IcebergishTable.write((0 to 5).map(i => (s"k$i", 1000L + i, s"x${"abcdef"(i)}"))
+      .toDF("k", "v", "s"), t, "k", 1, SaveMode.Append)
+    def planned(c: org.apache.spark.sql.Column): Int =
+      plannedFiles(IcebergishTable.read(spark, t).where(c)).size
+    assert(planned(col("v") === 5L) == 0 && planned(col("v") === 15L) == 1)
+    assert(planned(col("v") > 20L) == 1 && planned(col("v") >= 20L) == 2)
+    assert(planned(col("v") < 10L) == 0 && planned(col("v") <= 10L) == 1)
+    assert(planned(lit(5L) > col("v") && col("s") === "ccc") == 0)
+    assert(planned(lit(15L) < col("v") && col("s") === "ccc") == 1)
+    assert(planned(col("s").startsWith("e")) == 0 && planned(col("s").startsWith("cc")) == 1)
+    assert(planned(col("v").isin(1L, 30L)) == 0 && planned(col("v").isin(1L, 12L)) == 1)
+    assert(planned(col("v") === 5L || col("v") === 1003L) == 1)
+    assert(planned(col("v").isNull) == 2)
   }
 
   test("timestamp zone maps prune through the DSv2 scan") {
@@ -145,8 +180,7 @@ class StatsPruningSpec extends SparkSpec {
       }.toDF("k", "ts")
     IcebergishTable.write(batch(0), t, "k", 4)
     IcebergishTable.write(batch(30), t, "k", 4, SaveMode.Append)
-    val snap = IcebergishTable.currentSnapshot(t)
-    val all = Manifest.read(t, snap).paths
+    val all = Manifest.read(t, IcebergishTable.currentSnapshot(t)).paths
     val cutoff = java.sql.Timestamp.from(base.plusSeconds(15 * 86400L))
     val preds = ManifestStats.fromFilter(
       org.apache.spark.sql.sources.GreaterThan("ts", cutoff),
@@ -154,11 +188,8 @@ class StatsPruningSpec extends SparkSpec {
         org.apache.spark.sql.types.StructField("ts",
           org.apache.spark.sql.types.TimestampType))))
     assert(preds.isDefined)
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(IcebergishTable.manifestMeta(t)._1)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val cand = ManifestStats.prune(t, snap, schema, preds.toSeq, all)
-    assert(cand.size * 2 <= all.size,
+    val cand = plannedFiles(IcebergishTable.read(spark, t).where(col("ts") > lit(cutoff)))
+    assert(cand.nonEmpty && cand.size * 2 <= all.size,
       s"timestamp range kept ${cand.size} of ${all.size} files")
     // Value-level sanity through a real read.
     assert(IcebergishTable.read(spark, t)
@@ -172,25 +203,26 @@ class StatsPruningSpec extends SparkSpec {
     val hi = (0 until 40).map(i => (s"k$i", 1000L + i, s"z${i % 7}"))
     IcebergishTable.write(lo.toDF("k", "files", "a b"), t, "k", 4)
     IcebergishTable.write(hi.toDF("k", "files", "a b"), t, "k", 4, SaveMode.Append)
-    val snap = IcebergishTable.currentSnapshot(t)
-    val all = Manifest.read(t, snap).paths
-    val stats = ManifestStats.fileStatsOf(t, snap)
-    assert(all.forall(f => stats(f).contains("files") && stats(f).contains("a b")))
-    val schema = IcebergishTable.read(spark, t).schema
+    val files = Manifest.read(t, IcebergishTable.currentSnapshot(t)).files
+    assert(files.forall(f => f.stats.contains("files") && f.stats.contains("a b")))
     spark.conf.set("spark.sql.catalog.statsnames",
       classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.statsnames.warehouse",
       java.nio.file.Paths.get(t).getParent.toString)
+    // Spark pushes `a b` quoted; both the catalog's scan and the path
+    // read's plan only the high era.
     for (c <- Seq(col("files") >= 1000L, col("a b") >= "z")) {
-      val kept = ManifestStats.prune(t, snap, schema,
-        ManifestStats.fromColumn(c, schema), all)
-      assert(kept.nonEmpty && kept.size * 2 <= all.size,
-        s"$c kept ${kept.size} of ${all.size} files")
-      val pruned = spark.table("statsnames.t").where(c)
-        .select("k", "files", "a b").as[(String, Long, String)].collect().sorted
-      val unpruned = IcebergishTable.read(spark, t).where(c)
-        .select("k", "files", "a b").as[(String, Long, String)].collect().sorted
-      assert(pruned.length == 40 && pruned.sameElements(unpruned))
+      val catalog = spark.table("statsnames.t").where(c)
+      val path = IcebergishTable.read(spark, t).where(c)
+      for (df <- Seq(catalog, path)) {
+        val kept = plannedFiles(df).size
+        assert(kept > 0 && kept * 2 <= files.size,
+          s"$c planned $kept of ${files.size} files")
+      }
+      val rows = catalog.select("k", "files", "a b").as[(String, Long, String)].collect().sorted
+      assert(rows.length == 40 && rows.sameElements(
+        path.select("k", "files", "a b").as[(String, Long, String)].collect().sorted))
+      assert(rows.forall(_._2 >= 1000L))
     }
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.io.{IcebergishTable, Manifest, ManifestStats}
+import graft.io.{IcebergishTable, Manifest}
 
 /** Feature INTERACTIONS on one table: zone maps × column rename × MOR
   * deletes × partition-spec evolution × compaction — the places where
@@ -13,6 +13,10 @@ import graft.io.{IcebergishTable, Manifest, ManifestStats}
   * metadata assumptions drift.
   */
 class TableFeatureInteractionSpec extends SparkSpec {
+
+  /** The files a read of `t` filtered on `c` plans. */
+  private def planned(t: String, c: org.apache.spark.sql.Column): Seq[String] =
+    plannedFiles(IcebergishTable.read(spark, t).where(c))
 
   test("rename → zone maps re-key with the field: exact for BOTH eras") {
     import spark.implicits._
@@ -25,13 +29,8 @@ class TableFeatureInteractionSpec extends SparkSpec {
     IcebergishTable.write((0 until 40).map(i => (s"k$i", 1000L + i))
       .toDF("k", "value"), t, "k", 4, SaveMode.Append)
 
-    val snap = IcebergishTable.currentSnapshot(t)
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(IcebergishTable.manifestMeta(t)._1)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val all = Manifest.read(t, snap).paths
-    val preds = ManifestStats.fromColumn(col("value") >= 1000L, schema)
-    val cand = ManifestStats.prune(t, snap, schema, preds, all)
+    val all = Manifest.read(t, IcebergishTable.currentSnapshot(t)).paths
+    val cand = planned(t, col("value") >= 1000L)
     // Stats follow the FIELD through the rename (the rename commit re-keys
     // carried-forward entries v → value), so era-1 files — whose values
     // under field-id resolution ARE column `value`, max 39 — prune exactly:
@@ -41,12 +40,10 @@ class TableFeatureInteractionSpec extends SparkSpec {
     assert(cand.size == all.size / 2 && cand.toSet.subsetOf(all.toSet),
       s"rename broke exact re-keyed pruning: ${cand.size} of ${all.size}")
     // A predicate matching NOTHING prunes both eras.
-    val none = ManifestStats.prune(t, snap, schema,
-      ManifestStats.fromColumn(col("value") >= 5000L, schema), all)
+    val none = planned(t, col("value") >= 5000L)
     assert(none.isEmpty, "post-rename stats failed to prune either era")
     // An era-1-only predicate keeps era-1 reachable (no over-pruning).
-    val era1 = ManifestStats.prune(t, snap, schema,
-      ManifestStats.fromColumn(col("value") < 40L, schema), all)
+    val era1 = planned(t, col("value") < 40L)
     assert(era1.size == all.size / 2, "era-1 files over-pruned post-rename")
     // Correctness through the full read regardless of pruning:
     assert(IcebergishTable.read(spark, t).where(col("value") >= 1000L)
@@ -68,19 +65,13 @@ class TableFeatureInteractionSpec extends SparkSpec {
     // that DO match.
     IcebergishTable.dropColumn(t, "x")
     IcebergishTable.renameColumn(t, "y", "x")
-    val snap = IcebergishTable.currentSnapshot(t)
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(IcebergishTable.manifestMeta(t)._1)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val all = Manifest.read(t, snap).paths
-    val cand = ManifestStats.prune(t, snap, schema,
-      ManifestStats.fromColumn(col("x") >= 500L, schema), all)
+    val all = Manifest.read(t, IcebergishTable.currentSnapshot(t)).paths
+    val cand = planned(t, col("x") >= 500L)
     assert(cand.size == all.size,
       s"stale dropped-column stats over-pruned: ${cand.size} of ${all.size}")
     // And the stats are not merely conservative — they are EXACT for the
     // surviving field: a miss predicate prunes everything.
-    assert(ManifestStats.prune(t, snap, schema,
-      ManifestStats.fromColumn(col("x") >= 5000L, schema), all).isEmpty)
+    assert(planned(t, col("x") >= 5000L).isEmpty)
     // Full-read correctness: by-name parquet pushdown on the reused name
     // would consult the DEAD x's row-group stats ([0,39]) and prune every
     // group — the ghost list suppresses pushdown for exactly this table.
@@ -140,7 +131,7 @@ class TableFeatureInteractionSpec extends SparkSpec {
       .where(col("k") === "kNew").select("value").as[Long].head() == 7777L)
     // Zone maps on the compacted files are live for the renamed column.
     val snap = IcebergishTable.currentSnapshot(t)
-    val stats = ManifestStats.fileStatsOf(t, snap)
-    assert(stats.nonEmpty && stats.values.exists(_.contains("value")))
+    val stats = Manifest.read(t, snap).files.map(_.stats)
+    assert(stats.nonEmpty && stats.exists(_.contains("value")))
   }
 }

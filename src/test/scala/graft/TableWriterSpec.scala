@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.io.{IcebergishTable, Manifest, ManifestStats}
+import graft.io.{IcebergishTable, Manifest}
 
 /** The table writer: its plan shape and job count, its abort path, the
   * session's parquet settings reaching the files, and the manifest bounds
@@ -111,17 +111,13 @@ class TableWriterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val t = Files.createTempDirectory("graft-trunc").toString + "/t"
       val values = (0 until 50).map(i => f"value-string-number-$i%04d")
       IcebergishTable.write(values.toDF("s"), t, "s", 4)
-      val snap = IcebergishTable.currentSnapshot(t)
-      val files = Manifest.read(t, snap).paths
+      val stats = Manifest.read(t, IcebergishTable.currentSnapshot(t)).files.map(_.stats)
       // The session's parquet.* setting reached the writer: every file's
       // lower bound is the 8-byte truncated prefix.
-      val stats = ManifestStats.fileStatsOf(t, snap)
-      assert(files.size == 4 && files.forall(f =>
-        stats(f).get("s").map(_._1).contains("value-st")), s"bounds: $stats")
+      assert(stats.size == 4 && stats.forall(_.get("s").map(_._1).contains("value-st")),
+        s"bounds: $stats")
       // Pruning on the truncated bounds stays: no file can hold "zzz".
-      val schema = IcebergishTable.read(spark, t).schema
-      assert(ManifestStats.prune(t, snap, schema,
-        ManifestStats.fromColumn(col("s") === "zzz", schema), files).isEmpty)
+      assert(plannedFiles(IcebergishTable.read(spark, t).where(col("s") === "zzz")).isEmpty)
       // MIN/MAX answer the exact values.
       val r = IcebergishTable.read(spark, t).agg(min("s"), max("s")).head()
       assert((r.getString(0), r.getString(1)) ==
