@@ -78,6 +78,11 @@ object ConnectedComponents {
     * above the threshold the map itself may not fit on the driver, and the
     * join-based [[graft.triples.TripleExtract.canonicalize]] is the safe
     * path.
+    *
+    * The strategy is ONE up-front size gate: local iff the edge count is
+    * at most `localThreshold` AND the estimated driver heap of collecting
+    * it ([[heapEstimate]]) is at most `localByteBudget`; otherwise
+    * distributed. Both figures are known before any union-find runs.
     */
   def componentsSized(edges: DataFrame, maxIter: Int = 50,
                       localThreshold: Long = 500000L,
@@ -108,19 +113,9 @@ object ConnectedComponents {
           coalesce(sum(length(col("src")) + length(col("dst"))), lit(0L))).head()
         (gate.getLong(0), gate.getLong(1))
     }
-    if (rows <= localThreshold) {
-      // Runtime re-plan (the reference's analog: Dump→AQL downgrade on a
-      // RUNTIME support failure, graph_loader.rs:213-238): on a measured
-      // budget overflow the SAME edge set re-plans onto the distributed
-      // path instead of dying in the driver.
-      try (componentsLocal(e, localByteBudget, Some(heapEstimate(rows, chars)), onDriver), true)
-      catch {
-        case ex: graft.LocalPlanOverBudget =>
-          System.err.println(
-            s"[graft] cc strategy fallback: local -> distributed (${ex.getMessage})")
-          (componentsDistributed(e, maxIter), false)
-      }
-    } else (componentsDistributed(e, maxIter), false)
+    if (rows <= localThreshold && heapEstimate(rows, chars) <= localByteBudget)
+      (componentsLocal(e, onDriver), true)
+    else (componentsDistributed(e, maxIter), false)
   }
 
   /** Estimated JVM HEAP cost of collecting `rows` edges totalling `chars`
@@ -136,28 +131,12 @@ object ConnectedComponents {
     chars * 2 + rows * 240
 
   /** Driver-side union-find for small graphs (single collect, or the
-    * `collected` edges). The collect is budget-gated: the estimated heap
-    * cost (passed down from [[componentsSized]]'s gate, or measured here
-    * for direct callers) crossing `byteBudget` aborts with the typed
-    * [[graft.LocalPlanOverBudget]] BEFORE the driver heap is at risk —
-    * [[componentsSized]] catches it and re-plans distributed.
+    * `collected` edges); [[componentsSized]]'s gate decides it fits.
     */
-  private[graft] def componentsLocal(edges: DataFrame,
-                                     byteBudget: Long = Long.MaxValue,
-                                     knownBytes: Option[Long] = None,
-                                     collected: Option[Array[(String, String)]] = None): DataFrame = {
+  private def componentsLocal(edges: DataFrame,
+                              collected: Option[Array[(String, String)]]): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    if (byteBudget != Long.MaxValue) {
-      val bytes = knownBytes.getOrElse {
-        val g = edges.agg(count(lit(1)),
-          coalesce(sum(length(col("src")) + length(col("dst"))),
-            lit(0L))).head()
-        heapEstimate(g.getLong(0), g.getLong(1))
-      }
-      if (bytes > byteBudget)
-        throw new graft.LocalPlanOverBudget("cc local union-find", bytes, byteBudget)
-    }
     val pairs = collected.getOrElse(edges.as[(String, String)].collect())
     val parent = scala.collection.mutable.HashMap.empty[String, String]
     // Iterative find with path compression (no recursion — adversarial

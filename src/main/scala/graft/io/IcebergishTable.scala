@@ -175,10 +175,6 @@ object IcebergishTable {
     try Manifest.load(table, snapshot)
     catch { case _: graft.ManifestCorrupted => None }
 
-  /** Bucket ids a commit spans: the committed spec's, else `fallback`. */
-  private def partsOf(spec: Option[(String, Int)], fallback: => Seq[Int]): Seq[Int] =
-    spec.map { case (_, n) => 0 until n: Seq[Int] }.getOrElse(fallback)
-
   def currentSnapshot(table: String): Int = {
     val v = dir(table).resolve("VERSION")
     if (Files.exists(v)) new String(Files.readAllBytes(v), StandardCharsets.UTF_8).trim.toInt
@@ -247,7 +243,6 @@ object IcebergishTable {
     * claim. Returns the committed snapshot.
     */
   private def commit(table: String, schemaJson: String,
-                     parts: Seq[Int],
                      bucketKey: Option[(String, Int)] = None,
                      epochUpdate: Map[String, Long] = Map.empty,
                      added: Seq[WrittenFile] = Seq.empty,
@@ -259,7 +254,7 @@ object IcebergishTable {
                      statsRekey: Map[String, Option[String]] = Map.empty,
                      addedGhosts: Seq[String] = Seq.empty): Option[Int] =
     commitLocks.computeIfAbsent(table, _ => new Object).synchronized {
-      commitLocked(table, schemaJson, parts, bucketKey,
+      commitLocked(table, schemaJson, bucketKey,
         epochUpdate, added, dropParent, replaceAll, expectedParent,
         schemaEvolution, addedDeletes, statsRekey, addedGhosts)
     }
@@ -289,7 +284,6 @@ object IcebergishTable {
   }
 
   private def commitLocked(table: String, schemaJson: String,
-                           parts: Seq[Int],
                            bucketKey: Option[(String, Int)],
                            epochUpdate: Map[String, Long],
                            added: Seq[WrittenFile],
@@ -405,10 +399,13 @@ object IcebergishTable {
       // Exchange). bucket_fn versions the HASH FUNCTION itself (see
       // validateAppend). Streaming epoch high-waters carry forward on
       // EVERY commit: the VERSION swap is then the single atomic point
-      // that commits a micro-batch's files AND records its epoch.
+      // that commits a micro-batch's files AND records its epoch. The
+      // bucket ids the snapshot spans are the spec's, else its files'.
+      val parts: Seq[Int] = bucketKey.fold(
+        files.map(f => bucketOfPath(f.path)).distinct.sorted)(k => 0 until k._2)
       val manifest = Manifest(target, 0L, bucketKey, bucketKey.map(_ => BucketFn),
         parent.fold(Map.empty[String, Long])(_.epochs) ++ epochUpdate,
-        maxFid, ghosts, deletes, parts.sorted, files, effSchema)
+        maxFid, ghosts, deletes, parts, files, effSchema)
       // ATOMIC publication: full bytes to a private hidden temp file, then
       // the snapshot NAME claimed with a hard link — kernel-atomic EEXIST
       // arbitration, and the linked name carries COMPLETE content or
@@ -523,16 +520,15 @@ object IcebergishTable {
     * bucket_fn (mixed layouts), or whose schema is incompatible — all
     * BEFORE any files are staged, promoted, or (on the partition-
     * overwrite paths) committed bucket files wiped: a refused write must
-    * refuse with the table intact. An empty `keyCol` skips the spec gate
-    * (caller bucketed upstream), never the schema gate. The commit-time
-    * schema resolution still runs; it covers the rare CAS re-merge onto a
-    * parent evolved between this check and the commit.
+    * refuse with the table intact. The commit-time schema resolution
+    * still runs; it covers the rare CAS re-merge onto a parent evolved
+    * between this check and the commit.
     */
   private def validateAppend(table: String, keyCol: String, numParts: Int,
                              schema: org.apache.spark.sql.types.StructType): Unit = {
     if (!exists(table)) return
     val m = Manifest.read(table, currentSnapshot(table))
-    if (keyCol.nonEmpty) m.bucket.foreach { case (k, n) =>
+    m.bucket.foreach { case (k, n) =>
       if (k != keyCol || n != numParts)
         throw new graft.BucketSpecMismatch(table, s"($k, $n)",
           s"($keyCol, $numParts)")
@@ -690,7 +686,7 @@ object IcebergishTable {
     else deleteTree(dir(table).resolve("data"))
     val prior = currentSnapshot(table)
     stagePromote(table, TableWriter.stage(withPart, table, _)) { s =>
-      commit(table, withPart.schema.json, 0 until numParts,
+      commit(table, withPart.schema.json,
         bucketKey = Some((keyCol, numParts)), added = s.files, replaceAll = !append)
     }
     // Drop the overwritten snapshots' manifests AFTER the new commit is
@@ -724,15 +720,14 @@ object IcebergishTable {
     * snapshots keep time-traveling; [[expireSnapshots]] reclaims them.
     */
   def writePrePartitioned(df0: DataFrame, table: String, numParts: Int,
-                          keyCol: String = "",
+                          keyCol: String,
                           replaceParts: Seq[Int] = Seq.empty): Unit = {
     val df = withFieldIds(df0, table)
     validateAppend(table, keyCol, numParts, df.schema)
     val base = currentSnapshot(table) // pin before staging (see contract)
     stagePromote(table, TableWriter.stage(df, table, _)) { s =>
       val touched = s.files.map(_.bucket).toSet ++ replaceParts
-      commit(table, df.schema.json, 0 until numParts,
-        bucketKey = if (keyCol.nonEmpty) Some((keyCol, numParts)) else None,
+      commit(table, df.schema.json, bucketKey = Some((keyCol, numParts)),
         added = s.files,
         dropParent = f => touched.contains(bucketOfPath(f)),
         expectedParent = Some(base))
@@ -777,8 +772,8 @@ object IcebergishTable {
   private def commitEpoch(table: String, schemaJson: String, spec: Option[(String, Int)],
                           queryId: String, epoch: Long)(s: Staged): Option[Int] =
     if (s.files.isEmpty) None
-    else commit(table, schemaJson, partsOf(spec, s.files.map(_.bucket).distinct.sorted),
-      bucketKey = spec, epochUpdate = Map(queryId -> epoch), added = s.files)
+    else commit(table, schemaJson, bucketKey = spec,
+      epochUpdate = Map(queryId -> epoch), added = s.files)
 
   /** Parsed current-snapshot manifest metadata for the DSv2 catalog:
     * (schema json, bucket key, bucket count). Tables written before bucket
@@ -814,17 +809,14 @@ object IcebergishTable {
     manifestEpochs(table).get(queryId)
 
   /** Parse one position-delete file: TSV lines `relativeDataFile\tposition`
-    * (positions are parquet row ordinals within that file). Missing files
-    * yield nothing when `lenient` (verification reads), throw otherwise.
+    * (positions are parquet row ordinals within that file). A missing
+    * file fails typed.
     */
-  private[graft] def readDeleteFile(table: String, rel: String,
-                                    lenient: Boolean = false): Seq[(String, Long)] = {
+  private[graft] def readDeleteFile(table: String, rel: String): Seq[(String, Long)] = {
     val p = dir(table).resolve(rel)
-    if (!Files.exists(p)) {
-      if (lenient) return Seq.empty
+    if (!Files.exists(p))
       throw new graft.ManifestCorrupted(table, currentSnapshot(table),
         s"manifest references missing delete file $rel")
-    }
     new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
       .linesIterator.filter(_.nonEmpty).map { line =>
         val i = line.lastIndexOf('\t')
@@ -867,24 +859,20 @@ object IcebergishTable {
     * `#eq\t<col1>,<col2>\t<fid1>,<fid2>` (field ids empty for id-less
     * tables) then one TSV row of escaped key values per line. Key columns
     * resolve against the CURRENT schema by field id first (rename-safe),
-    * name second — see [[resolveEqCols]].
+    * name second — see [[resolveEqCols]]. A missing or header-less file
+    * fails typed.
     */
-  private[graft] def readEqDeleteFile(table: String, rel: String,
-                                      lenient: Boolean = false)
-      : Option[(Seq[String], Seq[Option[Long]], Seq[Array[String]])] = {
+  private[graft] def readEqDeleteFile(table: String, rel: String)
+      : (Seq[String], Seq[Option[Long]], Seq[Array[String]]) = {
     val p = dir(table).resolve(rel)
-    if (!Files.exists(p)) {
-      if (lenient) return None
+    if (!Files.exists(p))
       throw new graft.ManifestCorrupted(table, currentSnapshot(table),
         s"manifest references missing delete file $rel")
-    }
     val lines = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
       .linesIterator.filter(_.nonEmpty).toSeq
-    if (lines.isEmpty || !lines.head.startsWith("#eq\t")) {
-      if (lenient) return None
+    if (lines.isEmpty || !lines.head.startsWith("#eq\t"))
       throw new graft.ManifestCorrupted(table, currentSnapshot(table),
         s"equality-delete file $rel has no #eq header")
-    }
     val header = lines.head.stripPrefix("#eq\t").split("\t", -1)
     val cols = header(0).split(",").toSeq
     val ids: Seq[Option[Long]] =
@@ -892,7 +880,7 @@ object IcebergishTable {
         header(1).split(",", -1).toSeq.map(s =>
           if (s.isEmpty) None else Some(s.toLong))
       else cols.map(_ => None)
-    Some((cols, ids, lines.tail.map(_.split("\t", -1))))
+    (cols, ids, lines.tail.map(_.split("\t", -1)))
   }
 
   /** Resolve an equality delete's key columns against a CURRENT schema:
@@ -971,8 +959,7 @@ object IcebergishTable {
     }
     stagePromote(table, deletes = Seq(writeDeleteFile(table, EqDeletePrefix,
         s"#eq\t${keyCols.mkString(",")}\t${ids.mkString(",")}" +: body))) { s =>
-      commit(table, schemaJson, partsOf(spec, Seq.empty),
-        bucketKey = spec, addedDeletes = s.deletes)
+      commit(table, schemaJson, bucketKey = spec, addedDeletes = s.deletes)
     }
   }
 
@@ -1013,9 +1000,8 @@ object IcebergishTable {
     snap
   }
 
-  private def frameOf(spark: SparkSession, table: String, m: Manifest,
-                      lenient: Boolean = false): DataFrame =
-    graft.sources.v2.GraftTable.frame(spark, table, m, lenient)
+  private def frameOf(spark: SparkSession, table: String, m: Manifest): DataFrame =
+    graft.sources.v2.GraftTable.frame(spark, table, m)
 
   private def structOf(schemaJson: String): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(schemaJson)
@@ -1035,17 +1021,19 @@ object IcebergishTable {
     }
   }
 
-  /** Tamper-TOLERANT current-state read for resume verification: committed
-    * files that no longer exist on disk when it is called are skipped, and
-    * so are missing delete files, so a partially-deleted bucket reads as
-    * its surviving rows and FAILS ITS FINGERPRINT CHECK (→ recompute)
-    * instead of killing the verification read itself. Otherwise it is
-    * [[read]], which stays strict — a missing committed file is loud.
+  /** Current-state read for resume verification: [[read]]'s strict
+    * frame over the current manifest, restricted to the data files and
+    * delete files that exist on disk when it is called. A partially-deleted
+    * bucket reads as its surviving rows and FAILS ITS FINGERPRINT CHECK
+    * (→ recompute) instead of killing the verification read itself; a
+    * delete file that is present is read strictly (a header-less equality
+    * delete fails typed).
     */
   def readVerification(spark: SparkSession, table: String): DataFrame = {
     val m = Manifest.read(table, requireSnapshot(table))
-    frameOf(spark, table, m.copy(files =
-      m.files.filter(f => Files.exists(dir(table).resolve(f.path)))), lenient = true)
+    def onDisk(rel: String) = Files.exists(dir(table).resolve(rel))
+    frameOf(spark, table, m.copy(files = m.files.filter(f => onDisk(f.path)),
+      deletes = m.deletes.filter(d => onDisk(d.path))))
   }
 
   /** Time travel: read the table exactly as of `snapshot` (the file list
@@ -1098,15 +1086,9 @@ object IcebergishTable {
       dataCols.toSeq ++ Seq(newField) ++ partCols.toSeq)
     // No added files, no dropped parent files — the commit carries the
     // parent's file list forward under the evolved schema.
-    commit(table, evolved.json, partsOfManifest(m), bucketKey = m.bucket,
+    commit(table, evolved.json, bucketKey = m.bucket,
       schemaEvolution = true, expectedParent = Some(base))
   }
-
-  /** Bucket ids of a metadata-only commit onto `m`: the committed spec's,
-    * else the buckets its files occupy.
-    */
-  private def partsOfManifest(m: Manifest): Seq[Int] =
-    partsOf(m.bucket, m.paths.map(bucketOfPath).distinct.sorted)
 
   /** Guard shared by rename/drop: both are only safe when every data file
     * carries field ids (the reader then resolves columns by id, immune to
@@ -1151,7 +1133,7 @@ object IcebergishTable {
     val evolved = StructType(cur.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
     val evolvedSpec = m.bucket.map { case (k, n) => (if (k == from) to else k, n) }
-    commit(table, evolved.json, partsOfManifest(m), bucketKey = evolvedSpec,
+    commit(table, evolved.json, bucketKey = evolvedSpec,
       schemaEvolution = true, expectedParent = Some(base),
       statsRekey = Map(from -> Some(to)),
       // `from` stays physically present in old files under its id; if the
@@ -1186,7 +1168,7 @@ object IcebergishTable {
     // applying (its rows would resurrect) — fold it into data first.
     val referencedByEq = m.deletes.map(_.path)
       .filter(isEqDeleteFile)
-      .flatMap(f => readEqDeleteFile(table, f, lenient = true))
+      .map(f => readEqDeleteFile(table, f))
       .exists { case (cols, ids, _) =>
         scala.util.Try(resolveEqCols(table, cur, cols, ids)).toOption
           .exists(_.contains(name))
@@ -1196,7 +1178,7 @@ object IcebergishTable {
         s"column '$name' is a key of a live equality-delete tombstone in " +
           s"$table — compact to fold the tombstone, then drop")
     val evolved = StructType(cur.fields.filterNot(_.name == name))
-    commit(table, evolved.json, partsOfManifest(m), bucketKey = m.bucket,
+    commit(table, evolved.json, bucketKey = m.bucket,
       schemaEvolution = true, expectedParent = Some(base),
       statsRekey = Map(name -> None),
       // The dropped column's bytes stay in old files — ghost the name so
@@ -1218,8 +1200,7 @@ object IcebergishTable {
     val withPart = annotateFieldIds(table, dataSchema)
       .add(org.apache.spark.sql.types.StructField(PartCol,
         org.apache.spark.sql.types.IntegerType, nullable = false))
-    commit(table, withPart.json, 0 until numParts,
-      bucketKey = Some((keyCol, numParts)))
+    commit(table, withPart.json, bucketKey = Some((keyCol, numParts)))
   }
 
   /** Commit files ALREADY present under the bucket directories as one
@@ -1231,8 +1212,8 @@ object IcebergishTable {
   private[graft] def commitAddedFiles(table: String, added: Seq[String],
                                       expectedParent: Option[Int] = None): Int = {
     val (schemaJson, spec) = manifestMeta(table)
-    commit(table, schemaJson, partsOf(spec, added.map(bucketOfPath).distinct.sorted),
-      bucketKey = spec, added = added.map(f => WrittenFile(bucketOfPath(f), f)),
+    commit(table, schemaJson, bucketKey = spec,
+      added = added.map(f => WrittenFile(bucketOfPath(f), f)),
       expectedParent = expectedParent).get // no epoch: always commits
   }
 
@@ -1315,13 +1296,8 @@ object IcebergishTable {
     // Fresh files land beside the old ones (the old files stay on disk —
     // deleting them would break older snapshots' time travel).
     try stagePromote(table, TableWriter.stage(current, table, _)) { s =>
-      // Partition list from the COMMITTED spec when one exists: numParts
-      // shapes the rewrite's shuffle only (PartCol values are unchanged by
-      // the repartition), it is not a layout change.
-      commit(table, current.schema.json,
-        0 until spec.map(_._2).getOrElse(numParts),
-        bucketKey = spec, added = s.files, replaceAll = true,
-        expectedParent = Some(startSnap))
+      commit(table, current.schema.json, bucketKey = spec, added = s.files,
+        replaceAll = true, expectedParent = Some(startSnap))
     } finally current.unpersist(blocking = false)
   }
 
@@ -1353,7 +1329,7 @@ object IcebergishTable {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rewritten.count() // materialize before the inputs are superseded
     try stagePromote(table, TableWriter.stage(rewritten, table, _)) { s =>
-      commit(table, rewritten.schema.json, 0 until newNumParts,
+      commit(table, rewritten.schema.json,
         bucketKey = Some((newKey, newNumParts)), added = s.files,
         replaceAll = true, expectedParent = Some(startSnap))
     } finally rewritten.unpersist(blocking = false)
@@ -1411,8 +1387,8 @@ object IcebergishTable {
       val victims = predScan.select(col(FileCol), col(PosCol))
         .collect().map(r => (r.getString(0), r.getLong(1)))
       stagePromote(table, deletes = Seq(writePositionDeletes(table, victims.toSeq))) { s =>
-        commit(table, schema.json, partsOf(spec, touched.toSeq.sorted),
-          bucketKey = spec, addedDeletes = s.deletes, expectedParent = Some(startSnap))
+        commit(table, schema.json, bucketKey = spec, addedDeletes = s.deletes,
+          expectedParent = Some(startSnap))
       }
       return deleted
     }
@@ -1521,9 +1497,8 @@ object IcebergishTable {
       stagePromote(table, TableWriter.stage(withFieldIds(up.select(outCols.map(col): _*)
           .repartition(math.max(1, touched.size), col(PartCol)), table), table, _),
         if (victims.isEmpty) Seq.empty else Seq(writePositionDeletes(table, victims))) { s =>
-        commit(table, schema.json, partsOf(spec, touched.toSeq.sorted),
-          bucketKey = spec, added = s.files, addedDeletes = s.deletes,
-          expectedParent = Some(startSnap))
+        commit(table, schema.json, bucketKey = spec, added = s.files,
+          addedDeletes = s.deletes, expectedParent = Some(startSnap))
       }
     // Positions of matched EXISTING rows, excluding already-tombstoned
     // ones (they are logically absent — their keys re-insert, not match).
@@ -1559,8 +1534,7 @@ object IcebergishTable {
     // Re-annotate: unionByName/joins in the replacement plan may have
     // dropped the field-id metadata the fresh files must embed.
     stagePromote(table, TableWriter.stage(withFieldIds(replacement, table), table, _)) { s =>
-      commit(table, schemaJson, partsOf(spec, touched.toSeq.sorted),
-        bucketKey = spec, added = s.files,
+      commit(table, schemaJson, bucketKey = spec, added = s.files,
         dropParent = f => touched.contains(bucketOfPath(f)),
         expectedParent = Some(startSnap))
     }

@@ -6,19 +6,18 @@ import org.apache.spark.sql.functions._
 import graft.CheckpointRow
 import graft.io.IcebergishTable
 
-/** Thrown by the test-only fault injector to simulate a mid-job crash. */
-final class SimulatedFailure(msg: String) extends RuntimeException(msg)
-
 /** Graph materialization with per-partition checkpointed, idempotent writes
   * (SURVEY.md §7.2 #8).
   *
-  * Output tables are hash-bucketed [[IcebergishTable]]s. Buckets are written
-  * in groups; after each group's files are durable, one [[CheckpointRow]]
-  * per bucket (with lineage: input fingerprint, row count, wall ms) is
-  * appended. A re-run with the same (runId, stage) anti-joins pending
-  * buckets against completed checkpoint rows and recomputes only those —
-  * the reference's resumable batch-ack cursor re-expressed
-  * (/root/reference/src/sharding.rs:237-271).
+  * Output tables are hash-bucketed [[IcebergishTable]]s. A stage writes all
+  * of its pending buckets in ONE write; once that write's snapshot is
+  * committed, one [[CheckpointRow]] per bucket (with lineage: input
+  * fingerprint, row count, wall ms) is appended. A re-run with the same
+  * (runId, stage, inputTag) verifies the acked buckets against the table
+  * and recomputes only the rest — the reference's resumable batch-ack
+  * cursor re-expressed (/root/reference/src/sharding.rs:237-271). A write
+  * that fails commits nothing and acks nothing, so its re-run writes every
+  * pending bucket again.
   */
 object GraphOut {
 
@@ -42,7 +41,7 @@ object GraphOut {
     val expected = Checkpoint.ackedFingerprints(ckptPath, runId, stage, inputTag)
     if (expected.isEmpty || !IcebergishTable.exists(table)) return Set.empty
     val done = expected.keySet
-    // Tamper-tolerant read: a deleted acked file must surface as a
+    // Read of what is on disk: a deleted acked file must surface as a
     // fingerprint mismatch below (→ demote to pending and recompute),
     // not abort the verification with a missing-path error. A table with
     // no readable data files reads as a schema-typed empty frame, so only
@@ -57,11 +56,12 @@ object GraphOut {
     done.filter(p => actual.getOrElse(p, "0") == expected(p))
   }
 
-  /** Shared grouped-write core: for each group of pending buckets, build the
-    * group's pre-partitioned plan, write it over the group's buckets, then
-    * ack with lineage. `plan(group)` must return
-    * a DataFrame already exchange-partitioned on [[IcebergishTable.PartCol]]
-    * (each task holds exactly one bucket).
+  /** Shared write core: build the pre-partitioned plan of the stage's
+    * pending buckets, write it over those buckets in ONE
+    * [[IcebergishTable.writePrePartitioned]] execution, then ack each of
+    * them with lineage. `plan(pending)` must return a DataFrame already
+    * exchange-partitioned on [[IcebergishTable.PartCol]] (each task holds
+    * exactly one bucket). Nothing is written when every bucket is done.
     *
     * Lineage (per-bucket row count + order-insensitive key fingerprint)
     * rides the WRITE JOB itself via `observe` — one pair of builtin
@@ -69,61 +69,52 @@ object GraphOut {
     * `bit_xor(when(part=p, xxhash64(key)) else 0)`; the extra zeros are
     * xor-identity) collected by a CollectMetrics node as the rows stream
     * into the files. This removed the post-write read-back scan that used
-    * to cost a second (pruned) pass over every fresh file per group —
-    * measured as the dominant per-build fixed cost at 300k pages.
+    * to cost a second (pruned) pass over every fresh file — measured as
+    * the dominant per-build fixed cost at 300k pages.
     */
   private def writeGrouped(
       spark: SparkSession, table: String, keyCol: String, numParts: Int,
-      ckptPath: String, runId: String, stage: String, groupSize: Int,
-      inputTag: String, failAfterGroups: Int = -1)
+      ckptPath: String, runId: String, stage: String, inputTag: String)
       (plan: Seq[Int] => DataFrame): WriteStats = {
     val done = verifiedDoneParts(spark, table, keyCol, ckptPath, runId,
       stage, inputTag)
     val all = (0 until numParts).toSeq
     val pending = all.filterNot(done)
+    if (pending.isEmpty) return WriteStats(pending, all, 0L)
 
-    var written = 0L
-    var groups = 0
-    pending.grouped(groupSize).foreach { group =>
-      if (failAfterGroups >= 0 && groups >= failAfterGroups)
-        throw new SimulatedFailure(
-          s"injected failure after $groups groups (stage=$stage)")
-      val t0 = System.nanoTime()
-      val obs = org.apache.spark.sql.Observation(
-        s"lineage-$stage-${group.head}-${java.util.UUID.randomUUID}")
-      val part = col(IcebergishTable.PartCol)
-      val metricCols = group.flatMap { p =>
-        Seq(
-          sum(when(part === p, 1L).otherwise(0L)).as(s"n_$p"),
-          expr(s"bit_xor(CASE WHEN ${IcebergishTable.PartCol} = $p " +
-            s"THEN xxhash64($keyCol) ELSE 0L END)").as(s"fp_$p"))
-      }
-      val deduped = plan(group)
-        .observe(obs, metricCols.head, metricCols.tail: _*)
-      // replaceParts = the WHOLE group: every bucket of the group leaves
-      // the parent manifest, a rewritten bucket that came out empty
-      // included. The replaced files stay on disk until expiry.
-      IcebergishTable.writePrePartitioned(deduped, table, numParts, keyCol,
-        replaceParts = group)
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-      // Aggregates over an entirely empty group plan come back null.
-      val m = obs.get
-      def asLong(v: Any): Long = v match {
-        case null => 0L
-        case l: java.lang.Long => l.longValue
-        case other => other.toString.toLong
-      }
-      val rows = group.map { p =>
-        val n = asLong(m.getOrElse(s"n_$p", 0L))
-        val fp = if (n == 0L) 0L else asLong(m.getOrElse(s"fp_$p", 0L))
-        written += n
-        CheckpointRow(runId, stage, p, inputTag,
-          java.lang.Long.toHexString(fp), n, n, wallMs, "done")
-      }
-      Checkpoint.append(spark, ckptPath, rows)
-      groups += 1
+    val t0 = System.nanoTime()
+    val obs = org.apache.spark.sql.Observation(
+      s"lineage-$stage-${java.util.UUID.randomUUID}")
+    val part = col(IcebergishTable.PartCol)
+    val metricCols = pending.flatMap { p =>
+      Seq(
+        sum(when(part === p, 1L).otherwise(0L)).as(s"n_$p"),
+        expr(s"bit_xor(CASE WHEN ${IcebergishTable.PartCol} = $p " +
+          s"THEN xxhash64($keyCol) ELSE 0L END)").as(s"fp_$p"))
     }
-    WriteStats(pending, all.filter(done), written)
+    val deduped = plan(pending)
+      .observe(obs, metricCols.head, metricCols.tail: _*)
+    // replaceParts = EVERY pending bucket: each leaves the parent manifest,
+    // a rewritten bucket that came out empty included. The replaced files
+    // stay on disk until expiry.
+    IcebergishTable.writePrePartitioned(deduped, table, numParts, keyCol,
+      replaceParts = pending)
+    val wallMs = (System.nanoTime() - t0) / 1000000L
+    // Aggregates over an entirely empty plan come back null.
+    val m = obs.get
+    def asLong(v: Any): Long = v match {
+      case null => 0L
+      case l: java.lang.Long => l.longValue
+      case other => other.toString.toLong
+    }
+    val rows = pending.map { p =>
+      val n = asLong(m.getOrElse(s"n_$p", 0L))
+      val fp = if (n == 0L) 0L else asLong(m.getOrElse(s"fp_$p", 0L))
+      CheckpointRow(runId, stage, p, inputTag,
+        java.lang.Long.toHexString(fp), n, n, wallMs, "done")
+    }
+    Checkpoint.append(spark, ckptPath, rows)
+    WriteStats(pending, all.filter(done), rows.map(_.rows_out).sum)
   }
 
   /** Single-shuffle bucketed write with in-shuffle dedup (the 100 TB hot
@@ -132,9 +123,7 @@ object GraphOut {
     * de-duplicated with an O(1)-memory adjacent filter; each task then holds
     * exactly one bucket, so `partitionBy` emits one file per bucket with no
     * further repartition. `skewSalt > 1` is the maximum split of a hot
-    * bucket ([[bucketedDedupPlanAlignedSalted]]). `groupSize` buckets
-    * commit per group; `failAfterGroups >= 0` injects a crash after that
-    * many committed groups (tests only).
+    * bucket ([[bucketedDedupPlanAlignedSalted]]).
     */
   def writeBucketedDedup(
       df: DataFrame,
@@ -145,16 +134,14 @@ object GraphOut {
       ckptPath: String,
       runId: String,
       stage: String,
-      groupSize: Int = 64,
       inputTag: String = "static",
-      skewSalt: Int = 1,
-      failAfterGroups: Int = -1
+      skewSalt: Int = 1
   ): WriteStats = {
     val withPart = df.withColumn(IcebergishTable.PartCol,
       IcebergishTable.partExpr(keyCol, numParts))
     writeGrouped(df.sparkSession, table, keyCol, numParts, ckptPath, runId,
-      stage, groupSize, inputTag, failAfterGroups) { group =>
-      val scoped = withPart.where(col(IcebergishTable.PartCol).isin(group: _*))
+      stage, inputTag) { pending =>
+      val scoped = withPart.where(col(IcebergishTable.PartCol).isin(pending: _*))
       if (skewSalt <= 1)
         bucketedDedupPlanAligned(scoped, numParts, keyCol, dedupCols)
       else
@@ -321,11 +308,10 @@ object GraphOut {
       ckptPath: String,
       runId: String,
       stage: String,
-      groupSize: Int = 64,
       inputTag: String = "static"
   ): WriteStats =
     writeGrouped(triples.sparkSession, table, "id", numParts, ckptPath,
-      runId, stage, groupSize, inputTag) { group =>
-      verticesBucketedPlan(triples, numParts, Some(group))
+      runId, stage, inputTag) { pending =>
+      verticesBucketedPlan(triples, numParts, Some(pending))
     }
 }

@@ -108,15 +108,6 @@ final class SnapshotNotFound(table: String, snapshot: Int)
 final class GraphNotInCatalog(graph: String)
     extends GraftError(s"no such graph in catalog: $graph")
 
-/** A driver-local plan overran its memory budget mid-flight; the caller
-  * re-plans onto the distributed path (the reference's runtime Dump→AQL
-  * strategy downgrade, graph_loader.rs:213-238, re-expressed as a
-  * local→distributed re-plan).
-  */
-final class LocalPlanOverBudget(plan: String, bytes: Long, budget: Long)
-    extends GraftError(
-      s"$plan exceeded driver byte budget: $bytes > $budget")
-
 /** A snapshot manifest exists but cannot be parsed (torn write, manual
   * corruption) — the table-protocol analog of the reference's decoding
   * error normalization (/root/reference/src/errors.rs:30-41: malformed

@@ -47,11 +47,9 @@ import graft.io.{DataFile, IcebergishTable, Manifest, ManifestStats}
   *
   * `manifest` is the snapshot the table was resolved at; `pinned` tables
   * (VERSION AS OF, and every [[GraftTable.frame]]) scan exactly it.
-  * `lenient` scans skip missing delete files (resume verification).
   */
 final class GraftTable private (ident: String, path: String,
-                                manifest: Manifest, pinned: Boolean,
-                                lenient: Boolean)
+                                manifest: Manifest, pinned: Boolean)
     extends Table with SupportsRead with SupportsWrite
     with SupportsMetadataColumns {
 
@@ -63,7 +61,7 @@ final class GraftTable private (ident: String, path: String,
       val cur = IcebergishTable.currentSnapshot(path)
       if (cur < 0) throw new graft.TableNotFound(path)
       cur
-    }), pinned.isDefined, lenient = false)
+    }), pinned.isDefined)
 
   /** Filesystem path of the backing Icebergish table — the SQL row-level
     * command rewrites ([[graft.plans.GraftRowLevelSql]]) route DELETE/MERGE
@@ -121,7 +119,7 @@ final class GraftTable private (ident: String, path: String,
     val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
     val maxSnaps = Option(options.get("maxSnapshotsPerTrigger")).map(_.toInt)
     new GraftScanBuilder(path, tableSchema, dataSchema, bucketSpec, () => scanned,
-      lenient, maxFiles, maxSnaps)
+      maxFiles, maxSnaps)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -137,11 +135,10 @@ object GraftTable {
     * `part` as an ordinary column; the relation carries [[GraftFunctions]]
     * so two bucket-aligned frames join storage-partitioned. `m` may list a
     * subset of its snapshot's files: only those are read, still under the
-    * snapshot's deletes. `lenient` skips missing delete files.
+    * snapshot's deletes.
     */
-  private[graft] def frame(spark: SparkSession, path: String, m: Manifest,
-                           lenient: Boolean = false): DataFrame = {
-    val table = new GraftTable(path, path, m, pinned = true, lenient)
+  private[graft] def frame(spark: SparkSession, path: String, m: Manifest): DataFrame = {
+    val table = new GraftTable(path, path, m, pinned = true)
     org.apache.spark.sql.GraftColumnBridge.dfOf(spark, DataSourceV2Relation(table,
       DataTypeUtils.toAttributes(table.tableSchema), Some(GraftFunctions), None,
       CaseInsensitiveStringMap.empty()))
@@ -220,7 +217,6 @@ final class GraftScanBuilder(path: String, tableSchema: StructType,
                              dataSchema: StructType,
                              bucketSpec: Option[(String, Int)],
                              scanned: () => Manifest,
-                             lenient: Boolean = false,
                              maxFilesPerTrigger: Option[Int] = None,
                              maxSnapshotsPerTrigger: Option[Int] = None)
     extends ScanBuilder
@@ -242,7 +238,7 @@ final class GraftScanBuilder(path: String, tableSchema: StructType,
   private lazy val manifest: Manifest = scanned()
 
   private lazy val eqGroups: Seq[GraftEqGroup] =
-    GraftRead.eqGroups(path, manifest, tableSchema, lenient)
+    GraftRead.eqGroups(path, manifest, tableSchema)
 
   override def pruneColumns(required: StructType): Unit = {
     // Preserve table column order (parquet factory appends partition cols
@@ -366,7 +362,7 @@ final class GraftScanBuilder(path: String, tableSchema: StructType,
     case Some((schema, values)) => new GraftMetaAggScan(schema, values)
     case None =>
       new GraftScan(path, manifest, dataSchema, requiredSchema, bucketSpec,
-        prunedBuckets, dataFilters, eqGroups, lenient,
+        prunedBuckets, dataFilters, eqGroups,
         maxFilesPerTrigger, maxSnapshotsPerTrigger)
   }
 }
@@ -471,16 +467,13 @@ private[v2] object GraftRead {
     * by field id first (the tombstone survives key-column renames since it
     * was written).
     */
-  def eqGroups(path: String, m: Manifest, schema: StructType,
-               lenient: Boolean): Seq[GraftEqGroup] =
+  def eqGroups(path: String, m: Manifest, schema: StructType): Seq[GraftEqGroup] =
     m.deletes
       .filter(d => IcebergishTable.isEqDeleteFile(d.path))
-      .flatMap { d =>
-        IcebergishTable.readEqDeleteFile(path, d.path, lenient).map {
-          case (cols, ids, rows) =>
-            (IcebergishTable.resolveEqCols(path, schema, cols, ids),
-              rows.map(r => (r, d.seq)))
-        }
+      .map { d =>
+        val (cols, ids, rows) = IcebergishTable.readEqDeleteFile(path, d.path)
+        (IcebergishTable.resolveEqCols(path, schema, cols, ids),
+          rows.map(r => (r, d.seq)))
       }
       .groupBy(_._1)
       .map { case (cols, group) =>
@@ -496,12 +489,12 @@ private[v2] object GraftRead {
     * Delete sets are driver-small by the MOR write paths' own thresholds.
     */
   def partitions(path: String, m: Manifest, files: Seq[DataFile],
-                 needsPart: Boolean, lenient: Boolean): Array[InputPartition] = {
+                 needsPart: Boolean): Array[InputPartition] = {
     val root = java.nio.file.Paths.get(path)
     val delByFile: Map[String, Array[Long]] =
       m.deletes.map(_.path)
         .filterNot(IcebergishTable.isEqDeleteFile)
-        .flatMap(IcebergishTable.readDeleteFile(path, _, lenient))
+        .flatMap(IcebergishTable.readDeleteFile(path, _))
         .groupBy(_._1)
         .map { case (f, ps) => f -> ps.map(_._2).distinct.sorted.toArray }
     files
@@ -568,7 +561,6 @@ final class GraftScan(path: String, manifest: Manifest, dataSchema: StructType,
                       prunedBuckets: Option[Set[Int]],
                       dataFilters: Array[Filter],
                       eqGroups: Seq[GraftEqGroup],
-                      lenient: Boolean,
                       maxFilesPerTrigger: Option[Int] = None,
                       maxSnapshotsPerTrigger: Option[Int] = None)
     extends Scan with Batch with SupportsReportPartitioning
@@ -631,7 +623,7 @@ final class GraftScan(path: String, manifest: Manifest, dataSchema: StructType,
     * `planInputPartitions` call all read this one plan.
     */
   private lazy val plannedPartitions: Array[InputPartition] =
-    GraftRead.partitions(path, manifest, files, needsPart, lenient)
+    GraftRead.partitions(path, manifest, files, needsPart)
 
   // Runtime filter applied ON TOP of the cached plan: `plannedPartitions`
   // may already be forced (outputPartitioning runs at planning time,
@@ -875,10 +867,9 @@ final class GraftMicroBatchStream(path: String, dataSchema: StructType,
     // plan time, not as a mid-task read failure.
     if (added.exists(f => !java.nio.file.Files.exists(java.nio.file.Paths.get(path, f.path))))
       throw new graft.SnapshotNotFound(path, e)
-    val parts = GraftRead.partitions(path, after, added, needsPart, lenient = false)
+    val parts = GraftRead.partitions(path, after, added, needsPart)
     planned = (after.ghosts, GraftRead.eqGroups(path, after,
-      StructType(dataSchema :+ StructField(IcebergishTable.PartCol, IntegerType)),
-      lenient = false), parts)
+      StructType(dataSchema :+ StructField(IcebergishTable.PartCol, IntegerType))), parts)
     parts
   }
 

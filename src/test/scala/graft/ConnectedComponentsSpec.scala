@@ -93,7 +93,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(cc(edges, parts = 16) == base)
   }
 
-  test("runtime strategy fallback: local collect over byte budget re-plans distributed, same result") {
+  test("size gate: a starved byte budget plans distributed up front, same result") {
     import spark.implicits._
     val edges = (0 until 200).map { j =>
       (f"n${Rng.nextInt(7L, j.toLong, 0, 60)}%03d",
@@ -103,22 +103,15 @@ class ConnectedComponentsSpec extends SparkSpec {
     // Budget the local path can live within: local strategy chosen.
     val (primary, usedLocal) = ConnectedComponents.componentsSized(df)
     assert(usedLocal, "fixture should fit the local path")
-    // Starve the byte budget: the row-count gate still says "local", the
-    // mid-flight meter trips LocalPlanOverBudget, and the SAME call
-    // re-plans onto the distributed path — a runtime strategy downgrade,
-    // not an a-priori choice.
-    val (fallback, stillLocal) =
+    // Starve the byte budget: the row count alone would say "local", but
+    // the gate's heap estimate exceeds the budget, so the SAME call plans
+    // the distributed path before any union-find runs.
+    val (distributed, stillLocal) =
       ConnectedComponents.componentsSized(df, localByteBudget = 64L)
-    assert(!stillLocal, "starved budget must force the distributed re-plan")
+    assert(!stillLocal, "starved budget must choose the distributed path")
     val p = primary.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val f = fallback.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(f == p, "fallback result diverged from the primary path")
-    // The typed error itself is catchable by callers that want to abort.
-    val e = intercept[graft.LocalPlanOverBudget] {
-      ConnectedComponents.componentsLocal(
-        df.where(col("src") =!= col("dst")), byteBudget = 8L)
-    }
-    assert(e.getMessage.contains("byte budget"))
+    val d = distributed.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(d == p, "distributed result diverged from the local path")
   }
 
   test("edges already on the driver: gate and union-find run no Spark job, same components") {

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 
 import graft.io.{IcebergishTable, RootCommit}
-import graft.materialize.{Checkpoint, GraphOut, SimulatedFailure}
+import graft.materialize.{Checkpoint, GraphOut}
 import graft.synth.PageSynth
 import graft.triples.TripleExtract
 import graft.link.Mentions
@@ -76,7 +76,8 @@ class PipelineSpec extends SparkSpec {
     assert(dupIds.isEmpty, s"uncanonicalized ids: $dupIds")
   }
 
-  test("resume: crash mid-write recomputes only pending partitions; final table identical") {
+  test("resume: a write that fails inside its tasks commits and acks nothing; the re-run writes every bucket") {
+    import org.apache.spark.sql.functions.{col, udf}
     val cfg = PipelineConfig(seed = 7L, nPages = 300L, partitions = 8,
       outputBuckets = 16, workDir = tmpDir("graft-resume-pages"))
     val triples = oracleTriples(Pipeline.buildPagesTable(spark, cfg))
@@ -87,24 +88,31 @@ class PipelineSpec extends SparkSpec {
     // Clean full write → expected table.
     val refDir = tmpDir("graft-ref")
     GraphOut.writeBucketedDedup(triples, s"$refDir/edges", "subj", numParts,
-      dedupCols, s"$refDir/ckpt", "ref", "edges", groupSize = 4)
+      dedupCols, s"$refDir/ckpt", "ref", "edges")
     val expected = edgeSet(IcebergishTable.read(spark, s"$refDir/edges"))
 
-    // Crashing write: fails after 2 of 4 groups.
+    // Crashing write: a column whose UDF throws fails the write's tasks.
+    val boom = udf((u: String) => {
+      if (u != null) throw new IllegalStateException("task failure")
+      u
+    })
     val dir = tmpDir("graft-resume")
-    intercept[SimulatedFailure] {
-      GraphOut.writeBucketedDedup(triples, s"$dir/edges", "subj", numParts,
-        dedupCols, s"$dir/ckpt", "r1", "edges", groupSize = 4,
-        failAfterGroups = 2)
+    intercept[org.apache.spark.SparkException] {
+      GraphOut.writeBucketedDedup(triples.withColumn("url", boom(col("url"))),
+        s"$dir/edges", "subj", numParts, dedupCols, s"$dir/ckpt", "r1", "edges")
     }
-    val doneBefore = Checkpoint.doneParts(spark, s"$dir/ckpt", "r1", "edges", "static")
-    assert(doneBefore.size == 8, s"expected 8 acked parts, got $doneBefore")
+    assert(!IcebergishTable.exists(s"$dir/edges"), "failed write committed a snapshot")
+    assert(Checkpoint.readRows(s"$dir/ckpt").isEmpty, "failed write acked buckets")
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/edges/data/_staging")),
+      "failed write left its staging tree")
 
-    // Resume: only the remaining 8 partitions are recomputed.
+    // Re-run with the clean frame: every bucket is written and acked.
     val stats = GraphOut.writeBucketedDedup(triples, s"$dir/edges", "subj",
-      numParts, dedupCols, s"$dir/ckpt", "r1", "edges", groupSize = 4)
-    assert(stats.partsWritten.toSet == (0 until numParts).toSet -- doneBefore)
-    assert(stats.partsSkipped.toSet == doneBefore)
+      numParts, dedupCols, s"$dir/ckpt", "r1", "edges")
+    assert(stats.partsWritten == (0 until numParts))
+    assert(stats.partsSkipped.isEmpty)
+    assert(Checkpoint.doneParts(spark, s"$dir/ckpt", "r1", "edges", "static") ==
+      (0 until numParts).toSet)
 
     assert(edgeSet(IcebergishTable.read(spark, s"$dir/edges")) == expected)
 

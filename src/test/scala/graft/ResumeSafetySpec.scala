@@ -3,6 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.io.IcebergishTable
@@ -52,24 +54,65 @@ class ResumeSafetySpec extends SparkSpec {
     assert(ack.nonEmpty && ack.forall(_.rows_out == 0L))
   }
 
-  test("recompute on new input drops zero-row buckets (multi-group bucketed write)") {
+  test("resume after three of 16 buckets are deleted: one snapshot, three acks; new input drops zero-row buckets") {
     import spark.implicits._
-    val numParts = 4
-    val all = (1 to 40).map(i => Triple(s"E$i", "p", s"F$i", s"u$i", 1.0))
+    val numParts = 16
+    val all = (1 to 160).map(i => Triple(s"E$i", "p", s"F$i", s"u$i", 1.0))
     val victimBucket = bucketOf(all.head.subj, numParts)
     val df2 = all.filter(t => bucketOf(t.subj, numParts) != victimBucket).toDF
-
     val dir = tmpDir("graft-stalebucket2")
-    GraphOut.writeBucketedDedup(all.toDF, s"$dir/edges", "subj", numParts,
-      Seq("subj", "pred", "obj", "url"), s"$dir/ckpt", "r1", "edges",
-      groupSize = 2, inputTag = "snap-0")
-    GraphOut.writeBucketedDedup(df2, s"$dir/edges", "subj", numParts,
-      Seq("subj", "pred", "obj", "url"), s"$dir/ckpt", "r1", "edges",
-      groupSize = 2, inputTag = "snap-1")
+    val (edges, ckpt) = (s"$dir/edges", s"$dir/ckpt")
+    def write(df: org.apache.spark.sql.DataFrame, tag: String) =
+      GraphOut.writeBucketedDedup(df, edges, "subj", numParts,
+        Seq("subj", "pred", "obj", "url"), ckpt, "r1", "edges", inputTag = tag)
+    write(all.toDF, "snap-0")
+    val full = IcebergishTable.read(spark, edges).select("subj").as[String].collect().toSet
+    assert(full == all.map(_.subj).toSet)
 
-    val got = IcebergishTable.read(spark, s"$dir/edges")
+    // Delete three acked buckets behind the checkpoint's back: the re-run
+    // rewrites exactly those, in ONE commit, and acks exactly those.
+    val deleted = Seq(victimBucket, (victimBucket + 5) % numParts, (victimBucket + 11) % numParts)
+    deletePartitionDirs(edges, deleted)
+    val snapBefore = IcebergishTable.currentSnapshot(edges)
+    val acksBefore = Checkpoint.readRows(ckpt).size
+    val resumed = write(all.toDF, "snap-0")
+    assert(resumed.partsWritten.toSet == deleted.toSet, s"$resumed")
+    assert(IcebergishTable.currentSnapshot(edges) == snapBefore + 1)
+    assert(Checkpoint.readRows(ckpt).drop(acksBefore).map(_.part).sorted == deleted.sorted)
+    assert(IcebergishTable.read(spark, edges).select("subj").as[String].collect().toSet == full)
+
+    // New input snapshot in which the victim bucket has NO rows.
+    write(df2, "snap-1")
+    val got = IcebergishTable.read(spark, edges)
       .select("subj").as[String].collect().toSet
     assert(got == df2.select("subj").as[String].collect().toSet)
+  }
+
+  test("resume verification skips a deleted MOR position-delete file and keeps the matching acked buckets") {
+    import spark.implicits._
+    val numParts = 4
+    val df = (1 to 40).map(i => Triple(s"E$i", "p", s"F$i", s"u$i", 1.0)).toDF
+    val dir = tmpDir("graft-mor-verify")
+    val (edges, ckpt) = (s"$dir/edges", s"$dir/ckpt")
+    def write() = GraphOut.writeBucketedDedup(df, edges, "subj", numParts,
+      Seq("subj", "pred", "obj", "url"), ckpt, "r1", "edges", inputTag = "snap-0")
+    write()
+    // A MOR delete masks one row of E1's bucket with a position-delete file.
+    assert(IcebergishTable.deleteWhere(spark, edges, col("subj") === "E1",
+      morMaxRows = 10L) == 1L)
+    val deleteFiles = Files.list(Paths.get(edges, "deletes")).iterator().asScala.toSeq
+    assert(deleteFiles.size == 1)
+    // Remove the delete file from disk, and wipe another bucket's data.
+    deleteFiles.foreach(Files.delete)
+    val tampered = (1 to 40).map(i => bucketOf(s"E$i", numParts))
+      .find(_ != bucketOf("E1", numParts)).get
+    deletePartitionDirs(edges, Seq(tampered))
+    // Verification reads what is on disk without throwing: E1's bucket
+    // holds its acked rows again and is skipped; only the wiped bucket
+    // recomputes.
+    val resumed = write()
+    assert(resumed.partsWritten == Seq(tampered), s"$resumed")
+    assert(resumed.partsSkipped.toSet == (0 until numParts).toSet - tampered)
   }
 
   test("checkpoint log tolerates a torn final line (crash mid-append)") {
