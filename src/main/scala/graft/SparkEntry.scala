@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,6 +27,34 @@ object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
+
+  /** A fresh directory for one query body's tables, under the driver's
+    * per-context scratch directory (`SparkFiles.getRootDirectory`), which
+    * Spark deletes when the context stops and at JVM exit. The returned
+    * frames are lazy and read those tables, so nothing deletes them sooner.
+    */
+  private def scratch(tag: String): String =
+    Files.createTempDirectory(Paths.get(SparkFiles.getRootDirectory()), s"$tag-").toString
+
+  /** `body` with `confs` set on the session; each is restored (or unset)
+    * afterwards. A body that returns a frame materializes it first, so the
+    * restore cannot re-plan it.
+    */
+  private def scoped[A](s: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val prior = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** The confs that mount a [[graft.sources.v2.GraftCatalog]] named `name`
+    * over `warehouse`.
+    */
+  private def catalog(name: String, warehouse: String): Seq[(String, String)] = Seq(
+    s"spark.sql.catalog.$name" -> classOf[graft.sources.v2.GraftCatalog].getName,
+    s"spark.sql.catalog.$name.warehouse" -> warehouse)
 
   /** Flagship: full KG build on synthesized pages — returns the canonical
     * edge (triple) table. Driver smoke-checks rows > 0 on sf0.001.
@@ -223,8 +254,8 @@ object SparkEntry {
       // Custom Aggregator: per-source corpus minhash sketch (element-wise
       // min is the exact sketch of the shingle-set union), then BANDED
       // pairing of the sketches themselves — never the G² cross join
-      // (that remains only as Dedup.minhashSketchPairsAllPairs, the
-      // small-G oracle path OpsSpec checks equality against).
+      // (that remains only as the small-G oracle OpsSpec checks equality
+      // against).
       val sketches = ops.Dedup.minhashSketches(
         t(s, dir, "documents"), "source", "text")
       ops.Dedup.minhashSketchPairs(sketches)
@@ -272,8 +303,7 @@ object SparkEntry {
       // per-batch pair emissions must equal the single-shot run — which
       // is exactly what the brute-force jaccard oracle checks.
       val d = t(s, dir, "documents")
-      val state = java.nio.file.Files
-        .createTempDirectory("graft-incdedup").toString + "/sigs"
+      val state = scratch("incdedup") + "/sigs"
       val parts = (0 until 3).map(i =>
         ops.IncrementalDedup.processBatch(
           d.where(pmod(col("doc_id"), lit(3)) === i), "doc_id", "text", state))
@@ -309,8 +339,7 @@ object SparkEntry {
     "ann_lsh_indexed" -> ((s, dir) => {
       // Disk-partitioned LSH index probe (the 10^9-vector scale path):
       // partition-pruned scan over bucket=<b> dirs; equals ann_lsh_topk.
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-annidx").toString + "/index"
+      val path = scratch("annidx") + "/index"
       ops.Ann.writeLshIndex(t(s, dir, "embeddings"), "vec_id", "embedding", path)
       ops.Ann.lshTopKIndexed(s, path, queryId = 0L, k = 10)
     }),
@@ -320,8 +349,7 @@ object SparkEntry {
       // now verifies the whole indexed read path end-to-end — bucket
       // assignment, partitioned layout, probe scan, cosine ranking. The
       // approximate multiprobe path keeps its recall/equivalence specs.
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-annfp").toString + "/index"
+      val path = scratch("annfp") + "/index"
       ops.Ann.writeLshIndex(t(s, dir, "embeddings"), "vec_id", "embedding", path)
       ops.Ann.lshTopKIndexed(s, path, queryId = 0L, k = 10, fullProbe = true)
     }),
@@ -333,8 +361,7 @@ object SparkEntry {
       // checks the entire batch path end-to-end; the approximate multiprobe
       // keeps its recall spec (OpsSpec).
       val emb = t(s, dir, "embeddings")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-knnj").toString + "/index"
+      val path = scratch("knnj") + "/index"
       ops.Ann.writeLshIndex(emb, "vec_id", "embedding", path)
       ops.Ann.knnJoin(emb.where(col("vec_id") < 8), "vec_id", "embedding",
         path, k = 5, fullProbe = true)
@@ -344,8 +371,7 @@ object SparkEntry {
       // force) so the cell layout + stored-centroid probe ranking + batch
       // join all sit under the same oracle as ann_knn_join.
       val emb = t(s, dir, "embeddings")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-ivfknnj").toString + "/index"
+      val path = scratch("ivfknnj") + "/index"
       ops.Ann.writeIvfIndex(emb, "vec_id", "embedding", path, nCells = 8)
       ops.Ann.ivfKnnJoin(emb.where(col("vec_id") < 8), "vec_id", "embedding",
         path, k = 5, fullProbe = true)
@@ -425,18 +451,13 @@ object SparkEntry {
       // read edges and vertices by path (no session catalog), join them on
       // the bucket key (plans with zero exchanges — the catalog twin is
       // asserted in GraftCatalogSpec; here the driver checks the result
-      // shape). Session hygiene: the bucketing conf, and the broadcast
-      // threshold that would otherwise turn these small tables' join into
-      // a broadcast, are restored to what they were — materialize eagerly
-      // (localCheckpoint) first, so the restore cannot re-plan the query.
-      val dir = java.nio.file.Files.createTempDirectory("graft-spj").toString
+      // shape). The bucketing conf, and the broadcast threshold that would
+      // otherwise make these small tables' join a broadcast, are scoped.
+      val dir = scratch("spj")
       Pipeline.build(s, PipelineConfig(seed = 42L, nPages = 200L,
         partitions = 4, outputBuckets = 8, workDir = dir, runId = "spj"))
-      val scoped = Seq("spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      val saved = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      scoped(s, "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val e = graft.io.IcebergishTable.read(s, s"$dir/edges")
         val v = graft.io.IcebergishTable.read(s, s"$dir/vertices")
         e.join(v, e("subj") === v("id"))
@@ -445,9 +466,6 @@ object SparkEntry {
             first(v("props")("degree").cast("long")).as("degree"))
           .orderBy(col("id"))
           .localCheckpoint() // eager: executes the SPJ plan NOW
-      } finally saved.foreach {
-        case (k, Some(prev)) => s.conf.set(k, prev)
-        case (k, None) => s.conf.unset(k)
       }
     }),
     "kg_writeto" -> ((s, _) => {
@@ -458,14 +476,8 @@ object SparkEntry {
       // range() — any row lost/duplicated/misbucketed by the write path or
       // the snapshot pinning breaks the hash compare.
       import org.apache.spark.sql.functions.bucket
-      val dir = java.nio.file.Files.createTempDirectory("graft-wt").toString
-      val touched = Seq("spark.sql.catalog.graft_w",
-        "spark.sql.catalog.graft_w.warehouse")
-      val saved = touched.map(k => k -> s.conf.getOption(k))
-      s.conf.set("spark.sql.catalog.graft_w",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft_w.warehouse", dir)
-      try {
+      val dir = scratch("wt")
+      scoped(s, catalog("graft_w", dir): _*) {
         s.range(0, 1000)
           .select(concat(lit("k"), col("id") % 37).as("k"), col("id").as("v"))
           .writeTo("graft_w.t")
@@ -485,9 +497,6 @@ object SparkEntry {
             "ctas"))
           .orderBy(col("tag"), col("k"))
           .localCheckpoint() // eager: executes before the conf restore
-      } finally saved.foreach {
-        case (k, Some(prev)) => s.conf.set(k, prev)
-        case (k, None) => s.conf.unset(k)
       }
     }),
     "kg_stats_prune" -> ((s, _) => {
@@ -497,14 +506,8 @@ object SparkEntry {
       // low-range file (StatsPruningSpec asserts the file counts; here
       // DuckDB recomputes the values — a file wrongly skipped loses rows
       // and breaks the hash, a wrongly kept one is correct-but-slower).
-      val dir = java.nio.file.Files.createTempDirectory("graft-zm").toString
-      val touched = Seq("spark.sql.catalog.graft_z",
-        "spark.sql.catalog.graft_z.warehouse")
-      val saved = touched.map(k => k -> s.conf.getOption(k))
-      s.conf.set("spark.sql.catalog.graft_z",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft_z.warehouse", dir)
-      try {
+      val dir = scratch("zm")
+      scoped(s, catalog("graft_z", dir): _*) {
         def slice(a: Long, b: Long): DataFrame = s.range(a, b)
           .select(concat(lit("k"), col("id") % 19).as("k"), col("id").as("v"))
         graft.io.IcebergishTable.write(slice(0, 900), s"$dir/t", "k", 4)
@@ -517,9 +520,6 @@ object SparkEntry {
             min(col("v")).as("min_v"), max(col("v")).as("max_v"))
           .orderBy(col("k"))
           .localCheckpoint()
-      } finally saved.foreach {
-        case (k, Some(prev)) => s.conf.set(k, prev)
-        case (k, None) => s.conf.unset(k)
       }
     }),
     "kg_meta_agg" -> ((s, _) => {
@@ -529,14 +529,8 @@ object SparkEntry {
       // MetaAggSpec proves that by hiding the data dir). The require()
       // pins the metadata plan, and DuckDB recomputes the same values
       // from range() — a wrong manifest count/bound breaks the hash.
-      val dir = java.nio.file.Files.createTempDirectory("graft-mg").toString
-      val touched = Seq("spark.sql.catalog.graft_mg",
-        "spark.sql.catalog.graft_mg.warehouse")
-      val saved = touched.map(k => k -> s.conf.getOption(k))
-      s.conf.set("spark.sql.catalog.graft_mg",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft_mg.warehouse", dir)
-      try {
+      val dir = scratch("mg")
+      scoped(s, catalog("graft_mg", dir): _*) {
         def slice(a: Long, b: Long): DataFrame = s.range(a, b)
           .select(concat(lit("k"),
             lpad((col("id") % 37).cast("string"), 2, "0")).as("k"),
@@ -550,9 +544,6 @@ object SparkEntry {
             .contains("GraftMetaAggScan"),
           "metadata aggregation did not push to the manifest")
         agg.localCheckpoint()
-      } finally saved.foreach {
-        case (k, Some(prev)) => s.conf.set(k, prev)
-        case (k, None) => s.conf.unset(k)
       }
     }),
     "kg_eq_delete" -> ((s, _) => {
@@ -561,7 +552,7 @@ object SparkEntry {
       // deleted keys — the re-inserted rows must survive (their files'
       // sequence exceeds the delete's) while the pre-delete rows stay
       // dead. DuckDB recomputes both eras from range().
-      val dir = java.nio.file.Files.createTempDirectory("graft-eqd").toString
+      val dir = scratch("eqd")
       val t = s"$dir/t"
       def slice(a: Long, b: Long): DataFrame = s.range(a, b)
         .select(concat(lit("k"), col("id") % 41).as("k"), col("id").as("v"))
@@ -584,7 +575,7 @@ object SparkEntry {
       // aggregate by w. DuckDB recomputes from range(): a row lost,
       // duplicated, or mis-bucketed by the layout migration breaks the
       // hash compare.
-      val dir = java.nio.file.Files.createTempDirectory("graft-rb").toString
+      val dir = scratch("rb")
       val t = s"$dir/t"
       def slice(a: Long, b: Long): DataFrame = s.range(a, b)
         .select(concat(lit("k"), col("id") % 37).as("k"),
@@ -606,7 +597,7 @@ object SparkEntry {
       // the files only they reference). DuckDB recomputes the aggregate
       // from range() — any row lost or duplicated by the rewrite or by
       // expiry breaks the hash compare.
-      val dir = java.nio.file.Files.createTempDirectory("graft-cp").toString
+      val dir = scratch("cp")
       val t = s"$dir/t"
       def slice(a: Long, b: Long): DataFrame = s.range(a, b)
         .select(concat(lit("k"), col("id") % 37).as("k"), col("id").as("v"))
@@ -631,7 +622,7 @@ object SparkEntry {
       // DuckDB recomputes the survivors of both from range() — a lost
       // survivor, surviving victim, or resurrected tombstoned row breaks
       // the hash compare.
-      val dir = java.nio.file.Files.createTempDirectory("graft-del").toString
+      val dir = scratch("del")
       val t = s"$dir/t"
       graft.io.IcebergishTable.write(
         s.range(0, 2000).select(concat(lit("k"), col("id") % 41).as("k"),
@@ -654,7 +645,7 @@ object SparkEntry {
       // files touched). DuckDB recomputes the final merged state from
       // range() — a lost update, surviving replaced row, or resurrected
       // tombstoned row breaks the hash compare.
-      val dir = java.nio.file.Files.createTempDirectory("graft-mrg").toString
+      val dir = scratch("mrg")
       val t = s"$dir/t"
       def rows(a: Long, b: Long, mult: Long) = s.range(a, b)
         .select(concat(lit("k"), col("id") % 31).as("k"),
@@ -679,7 +670,7 @@ object SparkEntry {
       // range() — a clobbered or torn commit loses a slice and breaks the
       // hash compare. Deterministic under ANY interleaving: commit order
       // does not affect the union.
-      val dir = java.nio.file.Files.createTempDirectory("graft-mw").toString
+      val dir = scratch("mw")
       val t = s"$dir/t"
       def slice(a: Long, b: Long): DataFrame = s.range(a, b)
         .select(concat(lit("k"), col("id") % 29).as("k"), col("id").as("v"))
@@ -708,7 +699,7 @@ object SparkEntry {
       // aggregate the evolved table per tag (old files read the new column
       // as null) plus the pre-evolution snapshot pinned with its era
       // schema. DuckDB recomputes every slice from range().
-      val dir = java.nio.file.Files.createTempDirectory("graft-ev").toString
+      val dir = scratch("ev")
       val t = s"$dir/t"
       def slice(a: Long, b: Long): DataFrame = s.range(a, b)
         .select(concat(lit("k"), col("id") % 23).as("k"), col("id").as("v"))
@@ -737,14 +728,8 @@ object SparkEntry {
       // aggregate over the table's committed state must match DuckDB
       // aggregating the same source parquet — any row lost, duplicated, or
       // misbucketed by the streaming sink breaks the hash compare.
-      val base = java.nio.file.Files.createTempDirectory("graft-sw").toString
-      val touched = Seq("spark.sql.catalog.graft_sw",
-        "spark.sql.catalog.graft_sw.warehouse")
-      val saved = touched.map(k => k -> s.conf.getOption(k))
-      s.conf.set("spark.sql.catalog.graft_sw",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft_sw.warehouse", base)
-      try {
+      val base = scratch("sw")
+      scoped(s, catalog("graft_sw", base): _*) {
         val eventsPath = s"$dir/events.parquet"
         val schema = s.read.parquet(eventsPath).schema
         val p = java.nio.file.Paths.get(eventsPath)
@@ -770,15 +755,12 @@ object SparkEntry {
             countDistinct(col("user_id")).as("n_users"))
           .orderBy(col("event_type"))
           .localCheckpoint() // eager: executes before the conf restore
-      } finally saved.foreach {
-        case (k, Some(prev)) => s.conf.set(k, prev)
-        case (k, None) => s.conf.unset(k)
       }
     }),
     "kg_checkpoint" -> ((s, _) => {
       // Run a small checkpointed build and return its lineage table.
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-kgck").toString
+      val dir = scratch("kgck")
       Pipeline.build(s, PipelineConfig(seed = 42L, nPages = 200L,
         partitions = 4, outputBuckets = 8, workDir = dir, runId = "verify"))
       graft.materialize.Checkpoint.read(s, s"$dir/checkpoint")

@@ -480,9 +480,10 @@ object Ann {
     probeTopK(spark.read.parquet(indexPath), probes, "cell", k, excludeSelf)
   }
 
-  /** Embedding near-dup pairs at scale: vectors meeting `minCosine` tend
-    * to share sign-LSH buckets; join within buckets only, verify by exact
-    * cosine. Complements [[Dedup.embeddingCosinePairs]] (brute force).
+  /** Embedding near-dup pairs at scale: [[Blocking.pairs]] over each
+    * vector's `nTables` sign-LSH buckets (vectors meeting `minCosine` tend
+    * to share one), verified by exact cosine. Complements
+    * [[Dedup.embeddingCosinePairs]] (brute force).
     */
   def cosineLshPairs(df: DataFrame, idCol: String, vecCol: String,
                      minCosine: Double, nBits: Int = 8,
@@ -497,26 +498,16 @@ object Ann {
     if (first.isEmpty)
       return Seq.empty[(Long, Long, Double)].toDF("ia", "ib", "cosine")
     val dim = first(0)._2.length
-    val buckets = v.flatMap { case (id, vec) =>
+    val keyed = v.map { case (id, vec) =>
       val arr = vec.toArray
-      (0 until nTables).map { t =>
-        (id, vec, t, Ann.bucketOf(arr, Ann.planesFor(dim, nBits, seed + t)))
-      }
-    }.toDF("id", "v", "table", "bucket")
-      // Both sides of the self-join: project nTables×nBits hyperplanes once.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = buckets.select(col("id").as("ia"), col("v").as("va"),
-        col("table"), col("bucket"))
-      .join(buckets.select(col("id").as("ib"), col("v").as("vb"),
-        col("table"), col("bucket")), Seq("table", "bucket"))
-      .where(col("ia") < col("ib"))
-      .select(col("ia"), col("ib"), col("va"), col("vb"))
-      .dropDuplicates("ia", "ib")
-    val out = cand.withColumn("cosine", round(dot(col("va"), col("vb")), 4))
-      .where(col("cosine") >= minCosine)
-      .select(col("ia"), col("ib"), col("cosine"))
-    val materialized = out.localCheckpoint()
-    buckets.unpersist(blocking = false)
-    materialized
+      (id, vec, Array.tabulate(nTables)(t =>
+        Ann.bucketOf(arr, Ann.planesFor(dim, nBits, seed + t))))
+    }.toDF("id", "v", "buckets")
+    Blocking.pairs(keyed, Seq("table", "bucket"), _.select(col("id"), col("v"),
+        posexplode(col("buckets")).as(Seq("table", "bucket")))) { cand =>
+      cand.withColumn("cosine", round(dot(col("va"), col("vb")), 4))
+        .where(col("cosine") >= minCosine)
+        .select(col("ia"), col("ib"), col("cosine"))
+    }
   }
 }

@@ -91,12 +91,12 @@ object Dedup {
     }
   }
 
-  /** Exact n-gram Jaccard pairs via shingle inverted index:
-    * explode(shingle) → self-join on shingle → per-pair intersection count
-    * → jaccard. Exact (oracle-checkable) but O(sum of bucket²); the scale
-    * path is [[minhashLshPairs]].
-    */
-  /** `maxDf` defaults ON at 10 000: a shingle present in >10k documents is
+  /** Exact n-gram Jaccard pairs: [[Blocking.pairs]] over each document's
+    * distinct w-shingles, whose shared-block count is the intersection.
+    * Exact (oracle-checkable) but O(sum of bucket²); the scale path is
+    * [[minhashLshPairs]].
+    *
+    * `maxDf` defaults ON at 10 000: a shingle present in >10k documents is
     * boilerplate (navigation chrome, licenses) and only fuels the join's
     * worst-case bucket; below 10k docs total the cap can never trigger, so
     * the small-scale oracle comparison is unaffected by the default.
@@ -116,42 +116,31 @@ object Dedup {
       .as[(Long, String)]
       .map { case (id, text) => (id, shinglesSqlCompat(text, w)) }
       .toDF("id", "sh")
-      .withColumn("nsh", size(col("sh")))
-    // Consumed 2-3× (both join sides + the df-frequency filter): shingle
-    // the corpus once.
-    val inv0 = docs.select(col("id"), col("nsh"), explode(col("sh")).as("shingle"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val inv = maxDf match {
-      case Some(cap) =>
-        // Drop ultra-frequent shingles (stopword-like skew) before the join,
-        // then RECOMPUTE per-doc set sizes over the kept shingles: jaccard
-        // must be the jaccard of the FILTERED sets — keeping the unfiltered
-        // denominator would bias scores toward 0 for boilerplate-heavy
-        // near-duplicates once the cap triggers.
-        val dfreq = inv0.groupBy("shingle").count().where(col("count") <= cap)
-          .select(col("shingle"))
-        val kept = inv0.join(dfreq, Seq("shingle"))
-          .select(col("id"), col("shingle"))
-        val sizes = kept.groupBy(col("id")).agg(count(lit(1)).as("nsh"))
-        // (id, nsh, shingle) order: downstream renames are positional.
-        kept.join(sizes, Seq("id"))
-          .select(col("id"), col("nsh"), col("shingle"))
-      case None => inv0
+    def blocks(keyed: DataFrame): DataFrame = {
+      val inv = keyed.select(col("id"), size(col("sh")).as("n"),
+        explode(col("sh")).as("shingle"))
+      maxDf match {
+        case Some(cap) =>
+          // Drop ultra-frequent shingles (stopword-like skew) before the
+          // join, then RECOMPUTE per-doc set sizes over the kept shingles:
+          // jaccard must be the jaccard of the FILTERED sets — keeping the
+          // unfiltered denominator would bias scores toward 0 for
+          // boilerplate-heavy near-duplicates once the cap triggers.
+          val dfreq = inv.groupBy("shingle").count().where(col("count") <= cap)
+            .select(col("shingle"))
+          val kept = inv.join(dfreq, Seq("shingle"))
+            .select(col("id"), col("shingle"))
+          kept.join(kept.groupBy(col("id")).agg(count(lit(1)).as("n")), Seq("id"))
+        case None => inv
+      }
     }
-    val a = inv.toDF("ia", "na", "shingle")
-    val b = inv.toDF("ib", "nb", "shingle")
-    val out = a.join(b, Seq("shingle"))
-      .where(col("ia") < col("ib"))
-      .groupBy(col("ia"), col("ib"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", round(
-        col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")).cast("double"), 4))
-      .where(col("jaccard") >= minJaccard)
-      .select(col("ia"), col("ib"), col("jaccard"))
-    val materialized = out.localCheckpoint()
-    inv0.unpersist(blocking = false)
-    materialized
+    Blocking.pairs(docs, Seq("shingle"), blocks) { cand =>
+      cand.withColumn("jaccard", round(
+          col("shared").cast("double") /
+            (col("na") + col("nb") - col("shared")).cast("double"), 4))
+        .where(col("jaccard") >= minJaccard)
+        .select(col("ia"), col("ib"), col("jaccard"))
+    }
   }
 
   /** Dup-pair → dup-group resolution: the step a pipeline runs AFTER any
@@ -195,12 +184,6 @@ object Dedup {
       .withColumn("keep", col("doc_id") === col("group_id"))
   }
 
-  /** MinHash + LSH near-dup pairs: signature (narrow map) → band keys →
-    * bucket groupBy-join → candidate pairs → exact-jaccard verification of
-    * candidates only. With numHashes=128, rowsPerBand=2 (64 bands), a pair
-    * at jaccard 0.5 is missed with probability (1-0.25)^64 ≈ 1e-8, so at
-    * verification threshold ≥0.5 the output matches the exact variant.
-    */
   /** The MinHash sketch frame ("id", "sh", "bandKeys") — ONE definition of
     * the shingle→minhash→band pipeline, shared by [[minhashLshPairs]] and
     * [[IncrementalDedup]] so the incremental operator's batch-union ≡
@@ -244,29 +227,21 @@ object Dedup {
       .where(col("jaccard") >= minJaccard)
       .select(col("ia"), col("ib"), col("jaccard"))
 
+  /** MinHash + LSH near-dup pairs: [[Blocking.pairs]] over the band keys
+    * of each document's signature ([[minhashSignatureFrame]]), verified by
+    * exact jaccard over the fingerprint sets ([[jaccardVerify]]). With
+    * numHashes=128, rowsPerBand=2 (64 bands), a pair at jaccard 0.5 is
+    * missed with probability (1-0.25)^64 ≈ 1e-8, so at verification
+    * threshold ≥0.5 the output matches the exact variant.
+    */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       w: Int = 3, numHashes: Int = 128, rowsPerBand: Int = 2,
                       minJaccard: Double = 0.5): DataFrame = {
     val sigs = minhashSignatureFrame(df, idCol, textCol, w, numHashes, rowsPerBand)
-      // Consumed three times (band buckets + both sides of the verify
-      // join): persist so the text scan + 128 minhashes per doc run ONCE.
-      // MEMORY_AND_DISK: signatures spill rather than recompute at scale.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val buckets = sigs.select(col("id"),
-      posexplode(col("bandKeys")).as(Seq("band", "key")))
-    val cand = buckets.toDF("ia", "band", "key")
-      .join(buckets.toDF("ib", "band", "key"), Seq("band", "key"))
-      .where(col("ia") < col("ib"))
-      .select(col("ia"), col("ib"))
-      .distinct()
-
-    val out = jaccardVerify(cand, sigs.select(col("id"), col("sh")), minJaccard)
-    // Materialize the (small) pair set eagerly, then free the signature
-    // cache — returning the lazy plan would recompute sigs after unpersist.
-    val materialized = out.localCheckpoint()
-    sigs.unpersist(blocking = false)
-    materialized
+    Blocking.pairs(sigs, Seq("band", "key"),
+        _.select(col("id"), posexplode(col("bandKeys")).as(Seq("band", "key")))) {
+      cand => jaccardVerify(cand, sigs.select(col("id"), col("sh")), minJaccard)
+    }
   }
 
   /** SimHash near-dup pairs: 64-bit signature (narrow), pigeonhole-block
@@ -283,33 +258,24 @@ object Dedup {
     hammingPairs(hashes, maxHamming)
   }
 
-  /** Near-dup pairs over ANY 64-bit signature column ("id", "h") by
-    * pigeonhole-block LSH: split the hash into maxHamming+1 blocks —
-    * hamming ≤ maxHamming forces at least one block equal — bucket-join on
-    * (block, value), verify with codegen'd bit_count. The generic core
-    * behind [[simhashPairs]] and [[Multimodal.imageNearDupPairs]]'s
-    * perceptual hashes.
+  /** Near-dup pairs over ANY 64-bit signature column ("id", "h"):
+    * [[Blocking.pairs]] over the hash's maxHamming+1 pigeonhole blocks
+    * (hamming ≤ maxHamming forces at least one block equal), verified with
+    * codegen'd bit_count. The generic core behind [[simhashPairs]] and
+    * [[Multimodal.imageNearDupPairs]]'s perceptual hashes.
     */
   def hammingPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
     val spark = hashes.sparkSession
     import spark.implicits._
-    val nBlocks = maxHamming + 1
-    val blocks = hashes.select(col("id"), col("h")).as[(Long, Long)]
-      .flatMap { case (id, h) =>
-        Signatures.simhashBlocks(h, nBlocks).map { case (b, v) => (id, h, b, v) }
-      }.toDF("id", "simhash", "block", "value")
-      // Both sides of the self-join: hash the corpus once, not twice.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = blocks.toDF("ia", "ha", "block", "value")
-      .join(blocks.toDF("ib", "hb", "block", "value"), Seq("block", "value"))
-      .where(col("ia") < col("ib"))
-      .select(col("ia"), col("ib"),
-        bit_count(col("ha").bitwiseXOR(col("hb"))).as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
-    val materialized = pairs.localCheckpoint()
-    blocks.unpersist(blocking = false)
-    materialized
+    val keyed = hashes.select(col("id"), col("h")).as[(Long, Long)]
+      .map { case (id, h) => (id, h, Signatures.simhashBlocks(h, maxHamming + 1)) }
+      .toDF("id", "h", "blocks")
+    Blocking.pairs(keyed, Seq("block", "value"), _.select(col("id"), col("h"),
+        posexplode(col("blocks")).as(Seq("block", "value")))) { cand =>
+      cand.select(col("ia"), col("ib"),
+          bit_count(col("ha").bitwiseXOR(col("hb"))).as("hamming"))
+        .where(col("hamming") <= maxHamming)
+    }
   }
 
   /** Per-doc simhash signatures (inspectable output / rows-only check). */
@@ -346,55 +312,31 @@ object Dedup {
     * of [[MinHashAgg.estimateJaccard]], fully codegen'd (zip_with +
     * aggregate builtins, no UDF in the pair loop).
     */
-  private def slotAgreement(a: Column, b: Column): Column =
+  private[graft] def slotAgreement(a: Column, b: Column): Column =
     round(
       aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
         lit(0), (acc, v) => acc + v).cast("double") / size(a), 4)
 
   /** Banded pairing of corpus sketches (input: (grp, sketch) from
-    * [[minhashSketches]]): band the SKETCHES themselves — band index = slot
-    * position, band key = slot value — so two sketches that agree on at
-    * least one slot meet in that slot's bucket. Recall vs the all-pairs
-    * scan is therefore EXACTLY 1 for any `minEstJaccard > 0` (an agreeing
-    * slot IS a shared bucket), while the shuffle volume is
+    * [[minhashSketches]]): [[Blocking.pairs]] over the SKETCHES themselves
+    * — band index = slot position, band key = slot value — so two sketches
+    * that agree on at least one slot meet in that slot's bucket. Recall vs
+    * the all-pairs scan is therefore EXACTLY 1 for any `minEstJaccard > 0`
+    * (an agreeing slot IS a shared bucket), while the shuffle volume is
     * O(groups × numHashes) bucket rows instead of the G² cross join —
     * the same LSH shape [[minhashLshPairs]] uses per-document, lifted to
     * corpus level. Default threshold = one agreeing slot out of 128.
     */
   def minhashSketchPairs(sketches: DataFrame,
                          minEstJaccard: Double = 0.005): DataFrame = {
-    val sk = sketches.toDF("grp", "sketch")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val slots = sk.select(col("grp"),
-      posexplode(col("sketch")).as(Seq("band", "key")))
-    val cand = slots.toDF("ga", "band", "key")
-      .join(slots.toDF("gb", "band", "key"), Seq("band", "key"))
-      .where(col("ga") < col("gb"))
-      .select(col("ga"), col("gb"))
-      .distinct()
-    val a = sk.toDF("ga", "ka")
-    val b = sk.toDF("gb", "kb")
-    val out = cand.join(a, Seq("ga")).join(b, Seq("gb"))
-      .withColumn("est_jaccard", slotAgreement(col("ka"), col("kb")))
-      .where(col("est_jaccard") >= minEstJaccard)
-      .select(col("ga").as("src_a"), col("gb").as("src_b"), col("est_jaccard"))
-    val materialized = out.localCheckpoint()
-    sk.unpersist(blocking = false)
-    materialized
-  }
-
-  /** All-pairs reference scan over the sketches — G² by construction, kept
-    * ONLY as the small-G oracle path for [[minhashSketchPairs]] (OpsSpec
-    * asserts banded ≡ all-pairs); never use beyond ~10³ groups.
-    */
-  def minhashSketchPairsAllPairs(sketches: DataFrame,
-                                 minEstJaccard: Double = 0.005): DataFrame = {
-    val sk = sketches.toDF("grp", "sketch")
-    sk.toDF("ga", "ka").crossJoin(sk.toDF("gb", "kb"))
-      .where(col("ga") < col("gb"))
-      .withColumn("est_jaccard", slotAgreement(col("ka"), col("kb")))
-      .where(col("est_jaccard") >= minEstJaccard)
-      .select(col("ga").as("src_a"), col("gb").as("src_b"), col("est_jaccard"))
+    val sk = sketches.toDF("id", "sketch")
+    Blocking.pairs(sk, Seq("band", "key"),
+        _.select(col("id"), posexplode(col("sketch")).as(Seq("band", "key")))) { cand =>
+      cand.join(sk.toDF("ia", "ka"), Seq("ia")).join(sk.toDF("ib", "kb"), Seq("ib"))
+        .withColumn("est_jaccard", slotAgreement(col("ka"), col("kb")))
+        .where(col("est_jaccard") >= minEstJaccard)
+        .select(col("ia").as("src_a"), col("ib").as("src_b"), col("est_jaccard"))
+    }
   }
 
   /** Embedding near-dup pairs by cosine similarity.

@@ -155,11 +155,12 @@ object Signatures {
 
   /** Pigeonhole blocks for hamming-distance LSH: split the 64-bit simhash
     * into `nBlocks` equal bit-blocks; two hashes within hamming distance
-    * `nBlocks - 1` share at least one identical block.
+    * `nBlocks - 1` share at least one identical block. Element `b` is
+    * block `b`'s value.
     */
-  def simhashBlocks(h: Long, nBlocks: Int): Array[(Int, Long)] = {
+  def simhashBlocks(h: Long, nBlocks: Int): Array[Long] = {
     val width = 64 / nBlocks
     val mask = if (width == 64) -1L else (1L << width) - 1
-    Array.tabulate(nBlocks)(b => (b, (h >>> (b * width)) & mask))
+    Array.tabulate(nBlocks)(b => (h >>> (b * width)) & mask)
   }
 }

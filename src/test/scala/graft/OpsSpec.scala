@@ -465,6 +465,20 @@ class OpsSpec extends SparkSpec {
     assert(ops.MinHashAgg.estimateJaccard(sigs.head, sigs.head) == 1.0)
   }
 
+  /** All-pairs reference scan over the sketches — G² by construction, the
+    * small-G oracle for [[Dedup.minhashSketchPairs]]; never use beyond ~10³
+    * groups.
+    */
+  private def minhashSketchPairsAllPairs(sketches: DataFrame,
+                                         minEstJaccard: Double = 0.005): DataFrame = {
+    val sk = sketches.toDF("grp", "sketch")
+    sk.toDF("ga", "ka").crossJoin(sk.toDF("gb", "kb"))
+      .where(col("ga") < col("gb"))
+      .withColumn("est_jaccard", Dedup.slotAgreement(col("ka"), col("kb")))
+      .where(col("est_jaccard") >= minEstJaccard)
+      .select(col("ga").as("src_a"), col("gb").as("src_b"), col("est_jaccard"))
+  }
+
   test("banded sketch pairing equals the all-pairs scan at G=50") {
     // Banding the corpus sketches (band = slot index, key = slot value)
     // has recall EXACTLY 1 vs the G² scan for any threshold > 0: a pair
@@ -476,7 +490,7 @@ class OpsSpec extends SparkSpec {
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
     val banded = asSet(ops.Dedup.minhashSketchPairs(sketches))
-    val allPairs = asSet(ops.Dedup.minhashSketchPairsAllPairs(sketches))
+    val allPairs = asSet(minhashSketchPairsAllPairs(sketches))
     assert(banded == allPairs, s"banded ${banded.size} vs G² ${allPairs.size}")
     assert(banded.nonEmpty, "degenerate fixture: no agreeing sketch slots")
   }
