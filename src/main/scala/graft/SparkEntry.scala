@@ -730,16 +730,8 @@ object SparkEntry {
       // misbucketed by the streaming sink breaks the hash compare.
       val base = scratch("sw")
       scoped(s, catalog("graft_sw", base): _*) {
-        val eventsPath = s"$dir/events.parquet"
-        val schema = s.read.parquet(eventsPath).schema
-        val p = java.nio.file.Paths.get(eventsPath)
-        val reader = s.readStream.schema(schema)
-        val src =
-          if (java.nio.file.Files.isRegularFile(p))
-            reader.option("pathGlobFilter", p.getFileName.toString)
-              .parquet(p.getParent.toString)
-          else reader.parquet(eventsPath)
-        val cols = src.select(col("event_type"), col("value"), col("user_id"))
+        val cols = streaming.EventStream.source(s, s"$dir/events.parquet")
+          .select(col("event_type"), col("value"), col("user_id"))
         graft.io.IcebergishTable.createEmpty(s"$base/events_sink",
           cols.schema, "event_type", 4)
         val q = cols.writeStream

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
 import graft.synth.Rng
@@ -65,17 +65,54 @@ object Ann {
       .toDF("id", "v")
   }
 
+  /** The one score of every search and pair verify here: exact cosine of
+    * two unit vectors, rounded to 4 places.
+    */
+  private def cosine(a: Column, b: Column): Column = round(dot(a, b), 4)
+
+  /** The one rank order: cosine descending, then id ascending. */
+  private def byCosine: Seq[Column] = Seq(col("cosine").desc, col("id").asc)
+
+  /** Shared tail of the single-query entries: every candidate but the query
+    * itself, scored against the query's one-row `qv` frame, top k in rank
+    * order. A sort-and-limit plan (no per-query window: there is one query).
+    * Returns (vec_id, cosine).
+    */
+  private def topK(cands: DataFrame, q: DataFrame, queryId: Long,
+                   k: Int): DataFrame =
+    cands.where(col("id") =!= queryId)
+      .crossJoin(broadcast(q))
+      .withColumn("cosine", cosine(col("v"), col("qv")))
+      .orderBy(byCosine: _*)
+      .select(col("id").as("vec_id"), col("cosine"))
+      .limit(k)
+
+  /** Shared head of the probed single-query entries: ONE eager lookup
+    * fetches the query's row of `index` (vector and `key` together — the
+    * probe set is unknowable without it), `probes` picks the `key` values
+    * to scan from that row, and the vector re-enters the plan as a 1-row
+    * local relation. The doubles round-trip the driver bit-exactly, so the
+    * ranking equals a plan-side query vector's.
+    *
+    * Ids are unique in an index [[lshBuckets]] or [[ivfIndex]] built; in one
+    * that repeats an id, the first row the lookup returns serves as the
+    * query, and every row with that id is left out of the result. An id
+    * absent from the index throws `NoSuchElementException`.
+    */
+  private def probedTopK(index: DataFrame, key: String, queryId: Long,
+                         k: Int)(probes: Row => Seq[Int]): DataFrame = {
+    val spark = index.sparkSession
+    import spark.implicits._
+    val qRow = index.where(col("id") === queryId).select(col("v"), col(key)).head()
+    topK(index.where(col(key).isin(probes(qRow).map(Integer.valueOf): _*)),
+      Seq(Tuple1(qRow.getSeq[Double](0))).toDF("qv"), queryId, k)
+  }
+
   /** Exact top-k by cosine for one query id (brute force over all rows). */
   def bruteForceTopK(df: DataFrame, idCol: String, vecCol: String,
                      queryId: Long, k: Int): DataFrame = {
     val v = normalized(df, idCol, vecCol)
-    val q = v.where(col("id") === queryId).select(col("v").as("qv"))
-    v.where(col("id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .withColumn("cosine", round(dot(col("v"), col("qv")), 4))
-      .orderBy(col("cosine").desc, col("id").asc)
-      .select(col("id").as("vec_id"), col("cosine"))
-      .limit(k)
+    topK(v, v.where(col("id") === queryId).select(col("v").as("qv")), queryId, k)
   }
 
   /** Deterministic random hyperplanes: nBits × dim sign projections. */
@@ -86,7 +123,7 @@ object Ann {
   /** Executor-side plane cache: the counter-based RNG makes planes a pure
     * function of (dim, nBits, seed), so every executor derives IDENTICAL
     * planes with nothing broadcast. The dimension itself comes from the
-    * COLUMN (callers pay one tiny take(1) job) so that a ragged row trips
+    * COLUMN ([[byDim]]'s one tiny take(1) job) so that a ragged row trips
     * [[bucketOf]]'s loud guard instead of hashing in its own incomparable
     * space. Bounded: a healthy workload has few (dim, bits, seed) keys;
     * overflow just clears the cache (planes recompute deterministically).
@@ -125,58 +162,53 @@ object Ann {
     bucket
   }
 
+  /** `build` over the column's dimension, fixed from its first row: every
+    * row then hashes against the SAME plane family, so a ragged vector
+    * fails [[bucketOf]]'s dimension check instead of silently bucketing in
+    * its own incomparable space. An empty (or all-zero-norm) input returns
+    * `empty`, a valid empty result, not an error.
+    */
+  private def byDim(v: Dataset[(Long, Seq[Double])], empty: => DataFrame)(
+      build: Int => DataFrame): DataFrame =
+    v.take(1).headOption.fold(empty)(first => build(first._2.length))
+
+  /** The buckets a query in `bucket` probes: its own plus the nBits buckets
+    * one bit away (1-bit multiprobe), or every bucket under `fullProbe`
+    * (provably ≡ brute force — the IVF full-probe trick).
+    */
+  private def probeBuckets(bucket: Int, nBits: Int, fullProbe: Boolean): Seq[Int] =
+    if (fullProbe) 0 until (1 << nBits)
+    else bucket +: (0 until nBits).map(b => bucket ^ (1 << b))
+
   /** Assign every vector its LSH bucket (narrow map; the index build). */
   def lshBuckets(df: DataFrame, idCol: String, vecCol: String,
                  nBits: Int = 10, seed: Long = 4242L): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val v = normalized(df, idCol, vecCol).as[(Long, Seq[Double])]
-    // The column's dimension, fixed from the first row: every row then
-    // hashes against the SAME plane family, so a ragged vector fails
-    // bucketOf's dimension check instead of silently bucketing in its own
-    // incomparable space. An empty (or all-zero-norm) input is a valid
-    // empty index, not an error.
-    val first = v.take(1)
-    if (first.isEmpty)
-      return Seq.empty[(Long, Seq[Double], Int)].toDF("id", "v", "bucket")
-    val dim = first(0)._2.length
-    v.map { case (id, vec) =>
-      val arr = vec.toArray
-      (id, vec, Ann.bucketOf(arr, Ann.planesFor(dim, nBits, seed)))
-    }.toDF("id", "v", "bucket")
+    byDim(v, Seq.empty[(Long, Seq[Double], Int)].toDF("id", "v", "bucket")) { dim =>
+      v.map { case (id, vec) =>
+        (id, vec, Ann.bucketOf(vec.toArray, Ann.planesFor(dim, nBits, seed)))
+      }.toDF("id", "v", "bucket")
+    }
   }
 
   /** ANN top-k for one query id: probe the query's bucket plus all 1-bit
     * neighbor buckets (multiprobe), rank by exact cosine within the probe
     * set. Returns (vec_id, cosine).
     *
-    * NOTE on scale: this in-memory variant filters a CACHED index — the
-    * probe is a predicate over the full set, cheap per-query once cached
-    * but not storage-pruned. The scale path is [[writeLshIndex]] +
+    * NOTE on scale: this in-memory variant filters the index plan — the
+    * probe is a predicate over the full set, recomputed per query and not
+    * storage-pruned. The scale path is [[writeLshIndex]] +
     * [[lshTopKIndexed]], where the index is disk-partitioned by bucket and
     * the probe plans a partition-pruned scan (only the probed buckets'
     * files are read).
     */
   def lshTopK(df: DataFrame, idCol: String, vecCol: String,
               queryId: Long, k: Int, nBits: Int = 10,
-              seed: Long = 4242L): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val indexed = lshBuckets(df, idCol, vecCol, nBits, seed).cache()
-    val qRow = indexed.where(col("id") === queryId)
-      .select(col("v"), col("bucket")).head()
-    val qBucket = qRow.getInt(1)
-    val probes = qBucket +: Array.tabulate(nBits)(b => qBucket ^ (1 << b))
-    val q = indexed.where(col("id") === queryId).select(col("v").as("qv"))
-    indexed
-      .where(col("bucket").isin(probes.map(Integer.valueOf): _*))
-      .where(col("id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .withColumn("cosine", round(dot(col("v"), col("qv")), 4))
-      .orderBy(col("cosine").desc, col("id").asc)
-      .select(col("id").as("vec_id"), col("cosine"))
-      .limit(k)
-  }
+              seed: Long = 4242L): DataFrame =
+    probedTopK(lshBuckets(df, idCol, vecCol, nBits, seed), "bucket", queryId, k)(
+      q => probeBuckets(q.getInt(1), nBits, fullProbe = false))
 
   /** Persist the LSH index disk-partitioned by bucket: at 10^9 vectors the
     * probe becomes a PARTITION-PRUNED scan (Spark's partition discovery on
@@ -206,51 +238,21 @@ object Ann {
       df.sparkSession.sparkContext.defaultParallelism * 2))
 
   /** Probe a [[writeLshIndex]] index: scans ONLY the probed buckets'
-    * partitions (the 1-bit multiprobe neighborhood), ranks by exact cosine.
+    * partitions (the 1-bit multiprobe neighborhood, a static `bucket IN`
+    * filter the partition discovery prunes on), ranks by exact cosine.
     * Same results as [[lshTopK]] on the same parameters.
     *
-    * The query vector and bucket come from the FIRST index row with id
-    * `queryId` that the lookup scan returns. Ids are unique in an index
-    * [[lshBuckets]] built; in one that repeats an id, which of its rows
-    * serves as the query depends on file order, and every row with that id
-    * is left out of the result. An id absent from the index throws
-    * `NoSuchElementException`.
+    * `fullProbe` = every bucket: it drags the ENTIRE indexed read path
+    * (partition discovery, bucket layout, cosine ranking) under the
+    * brute-force DuckDB oracle. The approximate multiprobe path keeps its
+    * recall spec. The query lookup ([[probedTopK]]) is one unpruned pass
+    * over the index: the query's bucket is unknowable without it.
     */
   def lshTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                      queryId: Long, k: Int, nBits: Int = 10,
-                     fullProbe: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val index = spark.read.parquet(path)
-    // fullProbe = every bucket (provably ≡ brute force — the IVF
-    // full-probe trick): it drags the ENTIRE indexed read path (partition
-    // discovery, bucket layout, cosine ranking) under the brute-force
-    // DuckDB oracle. The approximate multiprobe path keeps its recall spec.
-    // ONE eager lookup fetches the query row (vector + bucket together —
-    // the query's bucket is unknowable without a scan, so this pass over
-    // the index is unavoidable); the vector re-enters the plan as a 1-row
-    // local relation. The old shape paid that unpruned scan TWICE per
-    // probe: once for `.head()` and once inside a broadcast-exchange
-    // subquery for the query vector. The doubles round-trip the driver
-    // bit-exactly, so the cosine ranking is unchanged.
-    val qRow = index.where(col("id") === queryId)
-      .select(col("v"), col("bucket")).head()
-    val probes =
-      if (fullProbe) Array.tabulate(1 << nBits)(identity)
-      else {
-        val qBucket = qRow.getInt(1)
-        qBucket +: Array.tabulate(nBits)(b => qBucket ^ (1 << b))
-      }
-    val q = broadcast(Seq(Tuple1(qRow.getSeq[Double](0)))
-      .toDF("qv"))
-    index
-      .where(col("bucket").isin(probes.map(Integer.valueOf).toIndexedSeq: _*))
-      .where(col("id") =!= queryId)
-      .crossJoin(q)
-      .withColumn("cosine", round(dot(col("v"), col("qv")), 4))
-      .orderBy(col("cosine").desc, col("id").asc)
-      .select(col("id").as("vec_id"), col("cosine"))
-      .limit(k)
-  }
+                     fullProbe: Boolean = false): DataFrame =
+    probedTopK(spark.read.parquet(path), "bucket", queryId, k)(
+      q => probeBuckets(q.getInt(1), nBits, fullProbe))
 
   /** Batch k-NN join: top-k neighbors for EVERY query in a set, probed
     * against a [[writeLshIndex]] index — the bulk-parallel shape a training
@@ -280,35 +282,30 @@ object Ann {
     val spark = queries.sparkSession
     import spark.implicits._
     val q = normalized(queries, idCol, vecCol).as[(Long, Seq[Double])]
-    val first = q.take(1)
-    if (first.isEmpty)
-      return Seq.empty[(Long, Long, Double, Int)]
-        .toDF("query_id", "vec_id", "cosine", "rank")
-    val dim = first(0)._2.length
-    val nb = nBits
-    val sd = seed
-    val fp = fullProbe
-    // Probe rows: (query_id, qv, bucket) — the query's own bucket plus all
-    // 1-bit neighbors (distinct by construction), or every bucket under
-    // fullProbe. Same deterministic plane family as the index build.
-    val probes = q.flatMap { case (id, vec) =>
-      val arr = vec.toArray
-      val planes = Ann.planesFor(dim, nb, sd)
-      val b = Ann.bucketOf(arr, planes)
-      val bs =
-        if (fp) Array.tabulate(1 << nb)(identity)
-        else b +: Array.tabulate(nb)(i => b ^ (1 << i))
-      bs.map(pb => (id, vec, pb))
-    }.toDF("query_id", "qv", "bucket")
-    probeTopK(spark.read.parquet(indexPath), probes, "bucket", k, excludeSelf)
+    val empty = Seq.empty[(Long, Long, Double, Int)]
+      .toDF("query_id", "vec_id", "cosine", "rank")
+    byDim(q, empty) { dim =>
+      val nb = nBits
+      val sd = seed
+      val fp = fullProbe
+      // Probe rows: (query_id, qv, bucket) — the query's own bucket plus all
+      // 1-bit neighbors (distinct by construction), or every bucket under
+      // fullProbe. Same deterministic plane family as the index build.
+      val probes = q.flatMap { case (id, vec) =>
+        val b = Ann.bucketOf(vec.toArray, Ann.planesFor(dim, nb, sd))
+        Ann.probeBuckets(b, nb, fp).map(pb => (id, vec, pb))
+      }.toDF("query_id", "qv", "bucket")
+      probeTopK(spark.read.parquet(indexPath), probes, "bucket", k, excludeSelf)
+    }
   }
 
   /** Shared tail of both batch joins ([[knnJoin]], [[ivfKnnJoin]]): ONE
     * equi-join of the index against the probe rows, exact cosine, windowed
     * per-query top-k (query_id partitions are high-cardinality; Spark's
-    * WindowGroupLimit keeps the partial top-k map-side). One definition so
-    * tie-breaks/rounding can never drift between the two index families —
-    * both answer to the same per-query brute-force oracle.
+    * WindowGroupLimit keeps the partial top-k map-side). Score and order
+    * are [[cosine]] and [[byCosine]], the single-query [[topK]]'s own, so
+    * tie-breaks/rounding can never drift between the entries — all answer
+    * to the same per-query brute-force oracle.
     */
   private def probeTopK(index: DataFrame, probes: DataFrame, joinKey: String,
                         k: Int, excludeSelf: Boolean): DataFrame = {
@@ -317,9 +314,9 @@ object Ann {
                else joined
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("id").asc)
+      .orderBy(byCosine: _*)
     cand
-      .withColumn("cosine", round(dot(col("v"), col("qv")), 4))
+      .withColumn("cosine", cosine(col("v"), col("qv")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("query_id"), col("id").as("vec_id"), col("cosine"),
@@ -328,9 +325,10 @@ object Ann {
 
   // ---- IVF (inverted-file) ANN: centroid-pruned probe ---------------------
 
-  /** Cells ranked by centroid·vec, best first, truncated to nProbe — the
-    * ONE centroid dot-product used by assignment ([[nearestCell]]) and
-    * probe selection ([[ivfKnnJoin]], [[ivfTopK]]) alike.
+  /** Cells ranked by centroid·vec, best first (ties by cell), truncated to
+    * nProbe — the ONE centroid dot-product used by assignment
+    * ([[nearestCell]]) and probe selection ([[ivfKnnJoin]], [[ivfTopK]])
+    * alike.
     */
   private def rankCells(vec: Array[Double], cents: Array[Array[Double]],
                         nProbe: Int): Array[Int] = {
@@ -415,22 +413,8 @@ object Ann {
               k: Int, nCells: Int = 16, nProbe: Int = 4,
               iters: Int = 3): DataFrame = {
     val cents = ivfCentroids(df, idCol, vecCol, nCells, iters)
-    val index = ivfIndex(df, idCol, vecCol, cents)
-    val qVec = index.where(col("id") === queryId)
-      .select(col("v")).head().getSeq[Double](0).toArray
-    val probes = cents.zipWithIndex
-      .map { case (c, i) => i -> c.zip(qVec).map(p => p._1 * p._2).sum }
-      .sortBy(-_._2).take(nProbe).map(_._1)
-    val q = broadcast(index.where(col("id") === queryId)
-      .select(col("v").as("qv")))
-    index
-      .where(col("cell").isin(probes.map(Integer.valueOf).toIndexedSeq: _*))
-      .where(col("id") =!= queryId)
-      .crossJoin(q)
-      .withColumn("cosine", round(dot(col("v"), col("qv")), 4))
-      .orderBy(col("cosine").desc, col("id").asc)
-      .select(col("id").as("vec_id"), col("cosine"))
-      .limit(k)
+    probedTopK(ivfIndex(df, idCol, vecCol, cents), "cell", queryId, k)(
+      q => rankCells(q.getSeq[Double](0).toArray, cents, nProbe).toSeq)
   }
 
   /** Persist an IVF index disk-partitioned by cell (`cell=<c>` dirs →
@@ -491,23 +475,18 @@ object Ann {
     val spark = df.sparkSession
     import spark.implicits._
     val v = normalized(df, idCol, vecCol).as[(Long, Seq[Double])]
-    // Column dimension fixed from the first row (see lshBuckets): ragged
-    // rows must trip bucketOf's check, not hash in a private space. An
-    // empty input yields zero pairs, not a crash.
-    val first = v.take(1)
-    if (first.isEmpty)
-      return Seq.empty[(Long, Long, Double)].toDF("ia", "ib", "cosine")
-    val dim = first(0)._2.length
-    val keyed = v.map { case (id, vec) =>
-      val arr = vec.toArray
-      (id, vec, Array.tabulate(nTables)(t =>
-        Ann.bucketOf(arr, Ann.planesFor(dim, nBits, seed + t))))
-    }.toDF("id", "v", "buckets")
-    Blocking.pairs(keyed, Seq("table", "bucket"), _.select(col("id"), col("v"),
-        posexplode(col("buckets")).as(Seq("table", "bucket")))) { cand =>
-      cand.withColumn("cosine", round(dot(col("va"), col("vb")), 4))
-        .where(col("cosine") >= minCosine)
-        .select(col("ia"), col("ib"), col("cosine"))
+    byDim(v, Seq.empty[(Long, Long, Double)].toDF("ia", "ib", "cosine")) { dim =>
+      val keyed = v.map { case (id, vec) =>
+        val arr = vec.toArray
+        (id, vec, Array.tabulate(nTables)(t =>
+          Ann.bucketOf(arr, Ann.planesFor(dim, nBits, seed + t))))
+      }.toDF("id", "v", "buckets")
+      Blocking.pairs(keyed, Seq("table", "bucket"), _.select(col("id"), col("v"),
+          posexplode(col("buckets")).as(Seq("table", "bucket")))) { cand =>
+        cand.withColumn("cosine", cosine(col("va"), col("vb")))
+          .where(col("cosine") >= minCosine)
+          .select(col("ia"), col("ib"), col("cosine"))
+      }
     }
   }
 }

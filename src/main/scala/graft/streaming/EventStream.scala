@@ -16,24 +16,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStream {
 
-  /** Streaming tumbling-window aggregation: hourly event counts/sums per
-    * event_type, computed via readStream over the parquet directory with a
-    * watermark, memory sink, Complete mode (all windows emitted on the
-    * bounded input). Returns the final result table — identical to the
-    * batch SQL aggregation, which is the DuckDB oracle.
+  /** The events file (or directory of files) as a streaming source. The
+    * file stream source requires a directory: a single parquet file streams
+    * its parent with a glob filter.
     */
-  def hourlyCountsStreaming(spark: SparkSession, eventsPath: String): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    // The file stream source requires a directory: stream the parent with
-    // a glob filter when given a single parquet file.
+  private[graft] def source(spark: SparkSession, eventsPath: String): DataFrame = {
     val p = java.nio.file.Paths.get(eventsPath)
-    val reader = spark.readStream.schema(schema)
-    val stream0 =
-      if (java.nio.file.Files.isRegularFile(p))
-        reader.option("pathGlobFilter", p.getFileName.toString)
-          .parquet(p.getParent.toString)
-      else reader.parquet(eventsPath)
-    val stream = stream0
+    val reader = spark.readStream.schema(spark.read.parquet(eventsPath).schema)
+    if (java.nio.file.Files.isRegularFile(p))
+      reader.option("pathGlobFilter", p.getFileName.toString)
+        .parquet(p.getParent.toString)
+    else reader.parquet(eventsPath)
+  }
+
+  /** Hourly event counts/sums per event_type over a watermarked stream of
+    * events.
+    */
+  private def hourlyCounts(events: DataFrame): DataFrame =
+    events
       // Event-time watermarks require TIMESTAMP (the table stores NTZ);
       // the session runs in UTC so the instant is unchanged.
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -49,6 +49,14 @@ object EventStream {
       // oracle's naive timestamps.
       .select(col("window.start").cast("timestamp_ntz").as("window_start"),
         col("event_type"), col("n_events"), col("total_value"))
+
+  /** Streaming tumbling-window aggregation: [[hourlyCounts]] via readStream
+    * over the events parquet, memory sink, Complete mode (all windows
+    * emitted on the bounded input). Returns the final result table —
+    * identical to the batch SQL aggregation, which is the DuckDB oracle.
+    */
+  def hourlyCountsStreaming(spark: SparkSession, eventsPath: String): DataFrame = {
+    val stream = hourlyCounts(source(spark, eventsPath))
     val name = s"hourly_counts_${System.identityHashCode(stream)}"
     val q = stream.writeStream
       .format("memory")
@@ -64,7 +72,7 @@ object EventStream {
     out
   }
 
-  /** PRODUCTION sink shape: the same hourly aggregation in Append mode to a
+  /** PRODUCTION sink shape: the same [[hourlyCounts]] in Append mode to a
     * parquet directory with a checkpoint — bounded state (watermark expires
     * closed windows), restartable, no driver-memory sink. Only windows the
     * watermark has closed are emitted; the trailing open window stays in
@@ -74,29 +82,7 @@ object EventStream {
     */
   def hourlyCountsToFiles(spark: SparkSession, eventsPath: String,
                           outDir: String, checkpointDir: String): Unit = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val p = java.nio.file.Paths.get(eventsPath)
-    val reader = spark.readStream.schema(schema)
-    val stream0 =
-      if (java.nio.file.Files.isRegularFile(p))
-        reader.option("pathGlobFilter", p.getFileName.toString)
-          .parquet(p.getParent.toString)
-      else reader.parquet(eventsPath)
-    val agg = stream0
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("total_value"))
-      // Back to NTZ on the way out: the input is NTZ and the session is
-      // UTC, so the wall-clock value is unchanged — but a WRITTEN
-      // TimestampType column becomes isAdjustedToUTC=true parquet under
-      // TIMESTAMP_MICROS output, which external readers (the DuckDB
-      // oracle's pandas bridge) surface as tz-aware and unequal to the
-      // oracle's naive timestamps.
-      .select(col("window.start").cast("timestamp_ntz").as("window_start"),
-        col("event_type"), col("n_events"), col("total_value"))
-    val q = agg.writeStream
+    val q = hourlyCounts(source(spark, eventsPath)).writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)

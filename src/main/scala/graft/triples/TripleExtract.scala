@@ -173,26 +173,6 @@ object TripleExtract {
     candidatesFromMentions(url, text, ms, phrases) ++
       corefCandidates(url, text, ms, phrases)
 
-  /** Pure per-page candidate scan — also used by tests. */
-  def scanCandidates(url: String, text: String, trie: AliasTrie,
-                     phrases: Map[String, String]): Seq[RelCandidate] =
-    allCandidates(url, text, Mentions.scanText(url, text, trie), phrases)
-
-  /** Distributed candidate scan: narrow flatMap over pages, no shuffle. */
-  def candidates(pages: Dataset[Page], aliasSurfaces: Seq[String],
-                 phrases: Map[String, String]): Dataset[RelCandidate] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val trieB = spark.sparkContext.broadcast(AliasTrie.build(aliasSurfaces))
-    val phrasesB = spark.sparkContext.broadcast(phrases)
-    // Same narrow-before-flatMap projection as extractDirect: the closure
-    // only reads (url, text); don't deserialize html per row.
-    pages.select(col("url"), col("text")).as[(String, String)]
-      .flatMap { case (url, text) =>
-        scanCandidates(url, text, trieB.value, phrasesB.value)
-      }
-  }
-
   /** Fully-fused direct extraction: one narrow pass per page does mention
     * scan, map-side linking (pre-reduced broadcast winners — see
     * [[graft.link.Mentions.aliasWinners]]), and local candidate resolution.

@@ -28,7 +28,7 @@ class CheckpointCodecSpec extends SparkSpec {
 
   test("codec round-trip: any row is one line that decodes to itself, in the log too") {
     val prop = Prop.forAll(Gen.listOf(rowGen)) { rows =>
-      val path = Files.createTempDirectory("graft-ckcodec").toString
+      val path = specDir("graft-ckcodec").toString
       Checkpoint.append(spark, path, rows)
       rows.forall(r => !Checkpoint.encode(r).contains('\n') &&
         Checkpoint.decode(Checkpoint.encode(r)).contains(r)) &&

@@ -34,7 +34,7 @@ class CommitFunnelSpec extends SparkSpec {
     */
   private def tableWithWinner(prefix: String): (String, String) = {
     import spark.implicits._
-    val table = Files.createTempDirectory(prefix).toString + "/t"
+    val table = specDir(prefix).toString + "/t"
     IcebergishTable.write((0 until 40).map(i => (s"k$i", i.toLong)).toDF("k", "v"),
       table, "k", 4)
     val seed = Manifest.read(table, IcebergishTable.currentSnapshot(table)).paths.head

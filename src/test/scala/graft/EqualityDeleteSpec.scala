@@ -15,7 +15,7 @@ class EqualityDeleteSpec extends SparkSpec {
 
   private def seed(prefix: String): String = {
     import spark.implicits._
-    val t = Files.createTempDirectory(prefix).resolve("t").toString
+    val t = specDir(prefix).resolve("t").toString
     IcebergishTable.write(
       (0 until 100).map(i => (s"k$i", i.toLong)).toDF("k", "v"), t, "k", 4)
     t
@@ -118,7 +118,7 @@ class EqualityDeleteSpec extends SparkSpec {
     intercept[InvalidConfig] {
       IcebergishTable.deleteEquality(spark, t2, Seq("x").toDF("nope"), Seq("nope"))
     }
-    val t3 = Files.createTempDirectory("graft-eq-ty").resolve("t").toString
+    val t3 = specDir("graft-eq-ty").resolve("t").toString
     IcebergishTable.write(Seq(("a", 1.5)).toDF("k", "d"), t3, "k", 2)
     intercept[InvalidConfig] {
       IcebergishTable.deleteEquality(spark, t3, Seq(1.5).toDF("d"), Seq("d"))
@@ -154,7 +154,7 @@ class EqualityDeleteSpec extends SparkSpec {
     // Dropping a NON-bucket column that keys a LIVE tombstone rejects
     // typed (the bucket-key rule would mask this on `id`): the tombstone
     // would silently stop applying — rows resurrect.
-    val t2 = java.nio.file.Files.createTempDirectory("graft-eq-drop")
+    val t2 = specDir("graft-eq-drop")
       .resolve("t").toString
     IcebergishTable.write(
       (0 until 20).map(i => (s"k$i", s"tag${i % 4}")).toDF("k", "tag"),
@@ -171,7 +171,7 @@ class EqualityDeleteSpec extends SparkSpec {
 
   test("composite keys and integral keys; nulls never match") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-eq-comp").resolve("t").toString
+    val t = specDir("graft-eq-comp").resolve("t").toString
     IcebergishTable.write(
       Seq(("a", 1L, "x1"), ("a", 2L, "x2"), ("b", 1L, "x3"),
         (null.asInstanceOf[String], 1L, "x4"))

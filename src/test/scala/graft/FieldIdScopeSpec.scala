@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{LongType, MetadataBuilder, StructField, Struc
 class FieldIdScopeSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    specDir(prefix).toString
 
   private def fieldIdClone() = org.apache.spark.sql.GraftColumnBridge
     .scopedSession(spark, Map("spark.sql.parquet.fieldId.read.enabled" -> "true"))

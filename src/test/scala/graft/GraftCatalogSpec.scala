@@ -15,7 +15,7 @@ import graft.io.{IcebergishTable, Manifest}
 class GraftCatalogSpec extends SparkSpec {
 
   private lazy val warehouse: String = {
-    val dir = Files.createTempDirectory("graft-warehouse").toString
+    val dir = specDir("graft-warehouse").toString
     import spark.implicits._
     val edges = spark.range(0, 2000)
       .select(concat(lit("s"), col("id") % 80).as("subj"),
@@ -234,7 +234,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("scan planning is metadata-only: manifest sizes, zero filesystem calls") {
-    val dir = Files.createTempDirectory("graft-meta-plan").toString
+    val dir = specDir("graft-meta-plan").toString
     import spark.implicits._
     val df = spark.range(0, 500)
       .select(concat(lit("k"), col("id") % 20).as("k"), col("id").as("v"))
@@ -331,7 +331,7 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("typed errors at the table protocol surface: corrupt manifest, bucket-spec mismatch") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-typed").toString
+    val base = specDir("graft-typed").toString
     val table = s"$base/t"
     IcebergishTable.write(Seq(("a", 1L)).toDF("k", "v"), table, "k", 4)
 
@@ -421,8 +421,7 @@ class GraftCatalogSpec extends SparkSpec {
     // FILE-backed with a real filter — DPP's selectivity heuristic needs a
     // Filter node, and literal LocalRelations constant-fold it away.
     import spark.implicits._
-    val dimPath = java.nio.file.Files
-      .createTempDirectory("graft-dpp-dim").toString + "/dim"
+    val dimPath = specDir("graft-dpp-dim").toString + "/dim"
     Seq((3, "keep"), (4, "drop"), (5, "drop")).toDF("p", "tag")
       .write.parquet(dimPath)
     val dim = spark.read.parquet(dimPath).where(col("tag") === "keep")

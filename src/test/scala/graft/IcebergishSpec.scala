@@ -40,7 +40,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("append creates snapshots; readSnapshot time-travels; current read sees all") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-ice").toString + "/t"
+    val t = specDir("graft-ice").toString + "/t"
     val df1 = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
     IcebergishTable.write(df1, t, "k", 4)
     val s0 = IcebergishTable.currentSnapshot(t)
@@ -76,7 +76,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("late/duplicated pages converge: incremental build equals batch over unique pages") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-skgl").toString
+    val base = specDir("graft-skgl").toString
     val pagesDir = s"$base/pages-data"
     Files.createDirectories(java.nio.file.Paths.get(pagesDir))
     val canon = PageSynth.sameAsPairs.map { case (c, d) => d -> c }.toMap
@@ -115,7 +115,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("incremental KG into the bucketed Icebergish table: exactly-once across replays") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-skgb").toString
+    val base = specDir("graft-skgb").toString
     val pagesDir = s"$base/pages-data"
     Files.createDirectories(java.nio.file.Paths.get(pagesDir))
     val canon = PageSynth.sameAsPairs.map { case (c, d) => d -> c }.toMap
@@ -172,7 +172,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("a table reused by a new stream checkpoint appends that stream's first batches") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-skg2q").toString
+    val base = specDir("graft-skg2q").toString
     val canon = PageSynth.sameAsPairs.map { case (c, d) => d -> c }.toMap
     val table = s"$base/edges"
     val (dirA, dirB) = (s"$base/pages-a", s"$base/pages-b")
@@ -230,7 +230,7 @@ class IcebergishSpec extends SparkSpec {
   test("compaction tombstones superseded files; time travel survives until snapshots expire") {
     import spark.implicits._
     import graft.io.IcebergishTable
-    val base = Files.createTempDirectory("graft-compact").toString
+    val base = specDir("graft-compact").toString
     val table = s"$base/edges"
     (0 until 3).foreach { b =>
       StreamingKg.appendBatch(
@@ -270,7 +270,7 @@ class IcebergishSpec extends SparkSpec {
   test("committer staging files (_temporary) are never treated as data") {
     import spark.implicits._
     import graft.io.IcebergishTable
-    val base = Files.createTempDirectory("graft-staged").toString
+    val base = specDir("graft-staged").toString
     val table = s"$base/t"
     IcebergishTable.write(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), table, "k", 4)
     val n0 = IcebergishTable.read(spark, table).count()
@@ -299,7 +299,7 @@ class IcebergishSpec extends SparkSpec {
   test("rollback over a compaction un-tombstones the restored snapshot's files") {
     import spark.implicits._
     import graft.io.IcebergishTable
-    val base = Files.createTempDirectory("graft-rbcomp").toString
+    val base = specDir("graft-rbcomp").toString
     val table = s"$base/t"
     IcebergishTable.write(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), table, "k", 4)
     IcebergishTable.write(Seq(("c", 3L)).toDF("k", "v"), table, "k", 4,
@@ -331,7 +331,7 @@ class IcebergishSpec extends SparkSpec {
   test("streaming crash BETWEEN parquet commit and manifest swap: replay still exactly-once") {
     import spark.implicits._
     import graft.io.IcebergishTable
-    val base = Files.createTempDirectory("graft-skgc2").toString
+    val base = specDir("graft-skgc2").toString
     val table = s"$base/edges"
     StreamingKg.appendBatch(Seq(Triple("A", "p", "B", "u1", 1.0)).toDF, table, "q", 0L, 4)
     val pre = IcebergishTable.currentSnapshot(table)
@@ -365,7 +365,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("read() is manifest-based: files landed by an uncommitted write stay invisible") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-snapread").toString + "/t"
+    val table = specDir("graft-snapread").toString + "/t"
     IcebergishTable.write(
       (0 until 20).map(i => (s"k$i", i.toLong)).toDF("k", "v"), table, "k", 4)
     val before = IcebergishTable.read(spark, table).count()
@@ -389,7 +389,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("overwrite drops old manifests: pinned reads of the old state fail loudly") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-ow").toString + "/t"
+    val table = specDir("graft-ow").toString + "/t"
     def rows(a: Int, b: Int) = (a until b)
       .map(i => (s"k$i", i.toLong)).toDF("k", "v")
     IcebergishTable.write(rows(0, 10), table, "k", 4)
@@ -415,7 +415,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("a legitimately EMPTY snapshot reads typed and plans empty — not as expired") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-empty").toString + "/t"
+    val table = specDir("graft-empty").toString + "/t"
     IcebergishTable.createEmpty(table,
       Seq(("a", 1L)).toDF("k", "v").schema, "k", 4)
     // Schema-typed empty frame (a zero-column one would break .select).
@@ -433,7 +433,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("commit CAS: a racing writer's manifest is never clobbered — the chain steps past it") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-cas").toString + "/t"
+    val table = specDir("graft-cas").toString + "/t"
     IcebergishTable.write(
       (0 until 8).map(i => (s"k$i", i.toLong)).toDF("k", "v"), table, "k", 4)
     val s = IcebergishTable.currentSnapshot(table)
@@ -454,7 +454,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("multi-writer: concurrent threads appending to ONE table all survive, union visible") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-mw").toString + "/t"
+    val table = specDir("graft-mw").toString + "/t"
     IcebergishTable.write(
       (0 until 8).map(i => (s"seed$i", i.toLong)).toDF("k", "v"), table, "k", 4)
     val s0 = IcebergishTable.currentSnapshot(table)
@@ -494,7 +494,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("multi-writer: two separate JVMs race commits through the filesystem CAS") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-mw2").toString + "/t"
+    val table = specDir("graft-mw2").toString + "/t"
     IcebergishTable.write(
       (0 until 8).map(i => (s"seed$i", i.toLong)).toDF("k", "v"), table, "k", 4)
     val s0 = IcebergishTable.currentSnapshot(table)
@@ -533,7 +533,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("part-filtered manifest reads prune at the FILE level (the COW/stream bucket-scoping premise)") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-prune").toString + "/t"
+    val table = specDir("graft-prune").toString + "/t"
     IcebergishTable.write(
       spark.range(0, 1000).select(concat(lit("k"), col("id") % 37).as("k"),
         col("id").as("v")),
@@ -558,7 +558,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("COW deleteWhere rewrites only touched buckets; time travel keeps deleted rows") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-del").toString + "/t"
+    val table = specDir("graft-del").toString + "/t"
     IcebergishTable.write(
       (0 until 64).map(i => (s"k${i % 16}", i.toLong)).toDF("k", "v"),
       table, "k", 8)
@@ -606,7 +606,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("COW mergeRows upserts atomically: updates replace by key, inserts append, one commit") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-mrg").toString + "/t"
+    val table = specDir("graft-mrg").toString + "/t"
     IcebergishTable.write(
       (0 until 40).map(i => (s"k${i % 10}", i.toLong, s"old$i"))
         .toDF("k", "id", "tag"),
@@ -646,7 +646,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("removeOrphans reclaims promote-then-crash leftovers; referenced and staged files survive") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-orph").toString + "/t"
+    val table = specDir("graft-orph").toString + "/t"
     IcebergishTable.write(
       (0 until 8).map(i => (s"k$i", i.toLong)).toDF("k", "v"), table, "k", 4)
     val seed = Manifest.read(
@@ -682,7 +682,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("removeOrphans reclaims a crashed writer's aged staging tree; a fresh one survives") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-orph-staging").toString + "/t"
+    val table = specDir("graft-orph-staging").toString + "/t"
     IcebergishTable.write(
       (0 until 8).map(i => (s"k$i", i.toLong)).toDF("k", "v"), table, "k", 4)
     val seed = java.nio.file.Paths.get(table, Manifest.read(
@@ -711,7 +711,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("slow-staged writes survive vacuum: promote restarts the grace clock") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-slowstage").toString + "/t"
+    val table = specDir("graft-slowstage").toString + "/t"
     IcebergishTable.write(
       (0 until 8).map(i => (s"k$i", i.toLong)).toDF("k", "v"), table, "k", 4)
     val seed = Manifest.read(
@@ -745,7 +745,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("replace-type commits abort with CommitConflict when another writer lands first") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-cc2").toString + "/t"
+    val table = specDir("graft-cc2").toString + "/t"
     IcebergishTable.write(
       (0 until 8).map(i => (s"k$i", i.toLong)).toDF("k", "v"), table, "k", 4)
     val s0 = IcebergishTable.currentSnapshot(table)
@@ -772,7 +772,7 @@ class IcebergishSpec extends SparkSpec {
   test("schema evolution: addColumn widens the current schema, time travel keeps the old one") {
     import spark.implicits._
     import org.apache.spark.sql.types.StringType
-    val table = Files.createTempDirectory("graft-ev").toString + "/t"
+    val table = specDir("graft-ev").toString + "/t"
     IcebergishTable.write(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), table, "k", 4)
     val sOld = IcebergishTable.currentSnapshot(table)
 
@@ -826,7 +826,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("appends onto a pre-versioned bucket layout (no bucket_fn) are refused") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-fn").toString + "/t"
+    val table = specDir("graft-fn").toString + "/t"
     IcebergishTable.write(
       Seq(("a", 1L)).toDF("k", "v"), table, "k", 4)
     // Simulate a table committed by the pre-murmur3 layout: strip the
@@ -845,7 +845,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("expiry after a compaction reclaims the replaced files from the manifests alone") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-expleak").toString + "/t"
+    val table = specDir("graft-expleak").toString + "/t"
     (0 until 3).foreach { i =>
       IcebergishTable.write(Seq((s"a$i", i.toLong), (s"b$i", i.toLong)).toDF("k", "v"),
         table, "k", 4, org.apache.spark.sql.SaveMode.Append)
@@ -864,7 +864,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("a stream epoch's crashed promote is an orphan that removeOrphans reclaims") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-sweep").toString + "/t"
+    val table = specDir("graft-sweep").toString + "/t"
     val root = java.nio.file.Paths.get(table)
     IcebergishTable.createEmpty(table,
       Seq(Triple("A", "p", "B", "u", 1.0)).toDF.schema, "subj", 4)
@@ -874,7 +874,7 @@ class IcebergishSpec extends SparkSpec {
     def stage(uid: String, subj: String): WrittenFile = {
       val rows = Seq(Triple(subj, "p", "B", s"u-$subj", 1.0)).toDF
       val b = Seq(subj).toDF("k").select(IcebergishTable.partExpr("k", 4)).head().getInt(0)
-      val tmp = Files.createTempDirectory("graft-sweep-stage")
+      val tmp = specDir("graft-sweep-stage")
       spark.createDataFrame(rows.rdd, IcebergishTable.annotateFieldIds(table, rows.schema))
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val written = Files.list(tmp).iterator().asScala
@@ -920,7 +920,7 @@ class IcebergishSpec extends SparkSpec {
 
   test("rollback behind a compaction, then expiry, keeps every file a surviving manifest references") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-rbexp").toString + "/t"
+    val table = specDir("graft-rbexp").toString + "/t"
     def keys(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select("k").as[String].collect().toSeq.sorted
     IcebergishTable.write(

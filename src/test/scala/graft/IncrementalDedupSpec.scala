@@ -38,7 +38,7 @@ class IncrementalDedupSpec extends SparkSpec {
       (0 until 30).map(k => s"w${Rng.nextInt(37L, i, k.toLong, 50)}").mkString(" ")
     val corpus = ((0L until 20L).map(i => (i, doc(i))) ++
       (20L until 30L).map(i => (i, doc(i - 20) + " tail"))).toDF("doc_id", "text")
-    val base = Files.createTempDirectory("graft-incjobs")
+    val base = specDir("graft-incjobs")
     val (state, pairsT) = (s"$base/sigs", s"$base/pairs")
     val batches = (0 until 3).map(i => corpus.where(pmod(col("doc_id"), lit(3)) === i))
     batches.zipWithIndex.foreach { case (b, i) =>

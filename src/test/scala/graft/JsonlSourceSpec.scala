@@ -12,7 +12,7 @@ class JsonlSourceSpec extends SparkSpec {
 
   test("pages round-trip through JSONL byte-identically") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-jsonl").toString
+    val dir = specDir("graft-jsonl").toString
     val pages = PageSynth.pages(spark, 31L, 80L, 4)
     JsonlPages.write(pages, s"$dir/pages")
     val (back, rejected) = JsonlPages.read(spark, s"$dir/pages")
@@ -29,7 +29,7 @@ class JsonlSourceSpec extends SparkSpec {
   }
 
   test("malformed and incomplete lines are quarantined, not fatal") {
-    val dir = Files.createTempDirectory("graft-jsonl-bad").toString
+    val dir = specDir("graft-jsonl-bad").toString
     val f = Paths.get(dir, "mixed.jsonl")
     Files.writeString(f,
       """{"url":"u1","warc_ts":"2024-01-01T00:00:00.000Z","html_b64":"PGI+aGk8L2I+","text":"hi","lang":"en"}

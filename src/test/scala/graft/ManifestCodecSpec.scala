@@ -16,7 +16,7 @@ import graft.io.{DataFile, DeleteFile, IcebergishTable, Manifest, RootCommit, Ro
 class ManifestCodecSpec extends SparkSpec {
   import ManifestCodecSpec.textGen
 
-  private def freshDir(prefix: String) = Files.createTempDirectory(prefix)
+  private def freshDir(prefix: String) = specDir(prefix)
 
   private def check(name: String, prop: Prop, n: Int = 100): Unit = {
     val res = SCTest.check(

@@ -16,7 +16,7 @@ class ManifestFixtureSpec extends SparkSpec {
     Paths.get(getClass.getResource("/manifest-fixture/expected.tsv").toURI).getParent
 
   private lazy val table: String = {
-    val t = Files.createTempDirectory("graft-fixture").resolve("table")
+    val t = specDir("graft-fixture").resolve("table")
     ManifestFixtureGen.copyTable(fixture.resolve("table"), t)
     t.toString
   }

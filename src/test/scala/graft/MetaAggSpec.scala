@@ -15,7 +15,7 @@ import graft.io.IcebergishTable
 class MetaAggSpec extends SparkSpec {
 
   private lazy val warehouse: String = {
-    val dir = Files.createTempDirectory("graft-metaagg").toString
+    val dir = specDir("graft-metaagg").toString
     import spark.implicits._
     val rows = spark.range(0, 1000)
       .select(concat(lit("k"), lpad((col("id") % 37).cast("string"), 2, "0")).as("k"),
@@ -90,7 +90,7 @@ class MetaAggSpec extends SparkSpec {
 
   test("metadata MIN/MAX follows a rename and refuses ghost-shadowed names") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-metaagg-ren").toString
+    val dir = specDir("graft-metaagg-ren").toString
     val t = s"$dir/t"
     IcebergishTable.write(
       spark.range(0, 200).select(col("id").cast("string").as("k"), col("id").as("v")),
@@ -122,7 +122,7 @@ class MetaAggSpec extends SparkSpec {
 
   test("TIMESTAMP_MILLIS-written files refuse metadata MIN/MAX (unit guard) but COUNT still pushes") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-metaagg-ms").toString
+    val dir = specDir("graft-metaagg-ms").toString
     val t = s"$dir/t"
     val saved = spark.conf.get("spark.sql.parquet.outputTimestampType")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
@@ -151,7 +151,7 @@ class MetaAggSpec extends SparkSpec {
 
   test("metadata aggregation survives partition-spec evolution (rebucket)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-metaagg-rb").toString
+    val dir = specDir("graft-metaagg-rb").toString
     val t = s"$dir/t"
     IcebergishTable.write(
       spark.range(0, 300).select(col("id").cast("string").as("k"), col("id").as("v")),
@@ -171,7 +171,7 @@ class MetaAggSpec extends SparkSpec {
 
   test("snapshot time travel aggregates the pinned state") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-metaagg-tt").toString
+    val dir = specDir("graft-metaagg-tt").toString
     val t = s"$dir/t"
     IcebergishTable.write(
       spark.range(0, 100).select(col("id").cast("string").as("k"), col("id").as("v")),

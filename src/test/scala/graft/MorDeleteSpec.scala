@@ -16,7 +16,7 @@ class MorDeleteSpec extends SparkSpec {
 
   private def seed(prefix: String): String = {
     import spark.implicits._
-    val t = Files.createTempDirectory(prefix).resolve("t").toString
+    val t = specDir(prefix).resolve("t").toString
     IcebergishTable.write(
       (0 until 200).map(i => (s"k$i", i.toLong)).toDF("k", "v"), t, "k", 4)
     t

@@ -59,7 +59,7 @@ class OpenCatalogSpec extends SparkSpec {
   test("disk-partitioned LSH index: probe equals in-memory lshTopK and prunes partitions") {
     import spark.implicits._
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val path = Files.createTempDirectory("graft-annidx-spec").toString + "/idx"
+    val path = specDir("graft-annidx-spec").toString + "/idx"
     Ann.writeLshIndex(emb, "vec_id", "embedding", path)
     val indexed = Ann.lshTopKIndexed(spark, path, queryId = 0L, k = 10)
     val inMem = Ann.lshTopK(emb, "vec_id", "embedding", queryId = 0L, k = 10)

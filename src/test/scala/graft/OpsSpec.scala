@@ -154,8 +154,7 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(full.nonEmpty, "fixture must contain near-dup pairs")
 
-    val state = java.nio.file.Files
-      .createTempDirectory("graft-incspec").toString + "/sigs"
+    val state = specDir("graft-incspec").toString + "/sigs"
     val batches = (0 until 3).map(i =>
       corpus.where(pmod(col("doc_id"), lit(3)) === i))
     val incremental = batches.map(b =>
@@ -167,8 +166,7 @@ class OpsSpec extends SparkSpec {
     // The returned frames are lazy: built on a fresh state table and
     // collected only after all three commits, each still answers against
     // the state it was built on.
-    val lazyState = java.nio.file.Files
-      .createTempDirectory("graft-incspec-lazy").toString + "/sigs"
+    val lazyState = specDir("graft-incspec-lazy").toString + "/sigs"
     val lazyFrames = batches.map(b =>
       graft.ops.IncrementalDedup.processBatch(b, "doc_id", "text", lazyState))
     val lazySets = lazyFrames.map(_.collect()
@@ -200,8 +198,7 @@ class OpsSpec extends SparkSpec {
     }
     val emb = (queries ++ planted ++
       (100L until 260L).map(i => (i, vec(i)))).toDF("vec_id", "embedding")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ivfknn-spec").toString + "/index"
+    val path = specDir("graft-ivfknn-spec").toString + "/index"
     Ann.writeIvfIndex(emb, "vec_id", "embedding", path, nCells = 8)
 
     val full = Ann.ivfKnnJoin(emb.where(col("vec_id") < 3), "vec_id",
@@ -235,7 +232,7 @@ class OpsSpec extends SparkSpec {
     assert(full.nonEmpty)
 
     // Three batch files → three micro-batches (maxFilesPerTrigger=1).
-    val base = java.nio.file.Files.createTempDirectory("graft-incstream")
+    val base = specDir("graft-incstream")
     val streamDir = s"$base/in"
     (0 until 3).foreach(i =>
       corpus.where(pmod(col("doc_id"), lit(3)) === i).coalesce(1)
@@ -315,8 +312,7 @@ class OpsSpec extends SparkSpec {
     }
     val fill = (100L until 260L).map(i => (i, vec(i)))
     val emb = (queries ++ planted ++ fill).toDF("vec_id", "embedding")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-knnj-spec").toString + "/index"
+    val path = specDir("graft-knnj-spec").toString + "/index"
     Ann.writeLshIndex(emb, "vec_id", "embedding", path, nBits = 6)
 
     // Full probe == per-query brute force, for EVERY query in the set.

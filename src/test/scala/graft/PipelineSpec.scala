@@ -18,7 +18,7 @@ import graft.canon.ConnectedComponents
 class PipelineSpec extends SparkSpec {
 
   private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    specDir(prefix).toString
 
   private type Edge = (String, String, String, String)
 

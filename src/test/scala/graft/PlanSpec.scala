@@ -47,7 +47,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("pages scan for extraction prunes text and keeps html_extract in codegen") {
-    val dir = Files.createTempDirectory("graft-plan").toString
+    val dir = specDir("graft-plan").toString
     val cfg = PipelineConfig(seed = 3L, nPages = 50L, partitions = 2,
       outputBuckets = 4, workDir = dir)
     val table = Pipeline.buildPagesTable(spark, cfg)
@@ -149,7 +149,7 @@ class PlanSpec extends SparkSpec {
 
   test("bucketed table write produces one file set per bucket (no small-file explosion)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-files").toString
+    val dir = specDir("graft-files").toString
     val df = spark.range(0, 10000, 1, 16)
       .select(col("id").cast("string").as("k"), col("id").as("v"))
     IcebergishTable.write(df, s"$dir/t", "k", 8)

@@ -15,7 +15,7 @@ import graft.sources.v2.GraftCatalog
 class ReadPathSpec extends SparkSpec {
 
   private def tmpTable(prefix: String): String =
-    Files.createTempDirectory(prefix).resolve("t").toString
+    specDir(prefix).resolve("t").toString
 
   private def withConfs[T](confs: (String, String)*)(body: => T): T = {
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -74,7 +74,7 @@ class ReadPathSpec extends SparkSpec {
 
   test("a micro-batch over an append and a MOR delete of one of its rows emits the append minus that row") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-rmor").toString
+    val base = specDir("graft-rmor").toString
     val t = s"$base/t"
     IcebergishTable.write(Seq(("A", 1L), ("B", 2L)).toDF("k", "v"), t, "k", 4)
     IcebergishTable.write(Seq(("C", 3L), ("D", 4L), ("E", 5L)).toDF("k", "v"),
@@ -102,13 +102,13 @@ class ReadPathSpec extends SparkSpec {
 
   test("kg_spj reads its own build, not a graft_q catalog initialized at another warehouse") {
     val s2 = spark.newSession()
-    val other = Files.createTempDirectory("graft-spj-other").toString
+    val other = specDir("graft-spj-other").toString
     Pipeline.build(s2, PipelineConfig(seed = 7L, nPages = 60L,
       partitions = 2, outputBuckets = 8, workDir = other, runId = "other"))
     s2.conf.set("spark.sql.catalog.graft_q", classOf[GraftCatalog].getName)
     s2.conf.set("spark.sql.catalog.graft_q.warehouse", other)
     assert(s2.table("graft_q.edges").count() > 0) // the catalog is initialized
-    val own = Files.createTempDirectory("graft-spj-own").toString
+    val own = specDir("graft-spj-own").toString
     Pipeline.build(s2, PipelineConfig(seed = 42L, nPages = 200L,
       partitions = 4, outputBuckets = 8, workDir = own, runId = "spj"))
     val e = IcebergishTable.read(s2, s"$own/edges")

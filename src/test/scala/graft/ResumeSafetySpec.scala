@@ -17,7 +17,7 @@ import graft.materialize.{Checkpoint, GraphOut}
 class ResumeSafetySpec extends SparkSpec {
 
   private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    specDir(prefix).toString
 
   /** Bucket of a key under the table's partitioning. */
   private def bucketOf(key: String, numParts: Int): Int = {

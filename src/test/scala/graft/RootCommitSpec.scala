@@ -11,7 +11,7 @@ class RootCommitSpec extends SparkSpec {
 
   test("pipeline publishes a root; consistent reads pin the committed pair") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-root").toString
+    val dir = specDir("graft-root").toString
     Pipeline.build(spark, PipelineConfig(seed = 42L, nPages = 150L,
       partitions = 4, outputBuckets = 8, workDir = dir, runId = "root1"))
     val root0 = RootCommit.currentRoot(dir)
@@ -53,12 +53,12 @@ class RootCommitSpec extends SparkSpec {
       RootCommit.commit(dir, Map("edges" -> 999))
     }
     intercept[TableNotFound] {
-      RootCommit.tablesOf(Files.createTempDirectory("graft-noroot").toString)
+      RootCommit.tablesOf(specDir("graft-noroot").toString)
     }
   }
 
   test("rebuild on the same workDir advances the root; overwritten old roots expire loudly") {
-    val dir = Files.createTempDirectory("graft-root2").toString
+    val dir = specDir("graft-root2").toString
     Pipeline.build(spark, PipelineConfig(seed = 7L, nPages = 100L,
       partitions = 4, outputBuckets = 8, workDir = dir, runId = "a"))
     val r0 = RootCommit.currentRoot(dir)

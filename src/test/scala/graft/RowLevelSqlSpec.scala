@@ -13,7 +13,7 @@ import graft.io.{IcebergishTable, Manifest}
 class RowLevelSqlSpec extends SparkSpec {
 
   private lazy val warehouse: String = {
-    val w = Files.createTempDirectory("graft-rls").toString
+    val w = specDir("graft-rls").toString
     spark.conf.set("spark.sql.catalog.graft_q",
       classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_q.warehouse", w)

@@ -14,7 +14,7 @@ import graft.io.{IcebergishTable, Manifest}
 class SchemaEvolutionSpec extends SparkSpec {
 
   private def freshTable(prefix: String): String =
-    Files.createTempDirectory(prefix).resolve("t").toString
+    specDir(prefix).resolve("t").toString
 
   test("rename column: data files keep old name, reads resolve by field id") {
     import spark.implicits._

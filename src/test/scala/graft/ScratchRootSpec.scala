@@ -29,8 +29,8 @@ class ScratchRootSpec extends AnyFunSuite {
   }
 
   test("a consumed query leaves no directory once its session stops, nor after its JVM exits") {
-    val stopTmp = Files.createTempDirectory("scratchspec-stop")
-    val exitTmp = Files.createTempDirectory("scratchspec-exit")
+    val stopTmp = SparkSpec.specDir("scratchspec-stop")
+    val exitTmp = SparkSpec.specDir("scratchspec-exit")
     val out = child(stopTmp, "stop")
     assert(out.exists(_.startsWith("ROWS ")))
     assert(out.filter(_.startsWith("LEFT")) == Seq("LEFT "))

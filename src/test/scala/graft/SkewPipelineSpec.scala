@@ -16,7 +16,7 @@ import graft.synth.PageSynth
   */
 class SkewPipelineSpec extends SparkSpec {
 
-  private def tmpDir(p: String): String = Files.createTempDirectory(p).toString
+  private def tmpDir(p: String): String = specDir(p).toString
 
   test("hub pipeline: salted write == unsalted write, golden P/R exact, hub bucket splits") {
     import spark.implicits._

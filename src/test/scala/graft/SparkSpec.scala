@@ -1,9 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -57,6 +58,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def plannedFiles(df: DataFrame): Seq[String] = SparkSpec.plannedFiles(df.queryExecution)
 
+  def specDir(prefix: String): Path = SparkSpec.specDir(prefix)
+
   /** Remove the data directories of the given buckets, bypassing the
     * manifests: the committed files there go missing under the current
     * snapshot (a tampered table: a deleted bucket must fail resume
@@ -74,6 +77,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** A fresh directory for a spec's files. Every one sits under the shared
+    * session's `SparkFiles.getRootDirectory`, which Spark deletes when the
+    * JVM exits (the context is never stopped mid-suite), so a suite run
+    * leaves nothing in `java.io.tmpdir`. A directory handed to a child JVM
+    * lives as long as the parent's session.
+    */
+  def specDir(prefix: String): Path =
+    Files.createTempDirectory(rootDir, prefix)
+
+  private lazy val rootDir: Path = {
+    session // the root belongs to the running context
+    Paths.get(SparkFiles.getRootDirectory())
+  }
+
   /** Table-relative paths of the data files the graft scans of `qe` plan,
     * after zone-map and bucket pruning.
     */

@@ -19,7 +19,7 @@ class StatsPruningSpec extends SparkSpec {
     */
   private def twoEraTable(prefix: String): (String, Int) = {
     import spark.implicits._
-    val t = Files.createTempDirectory(prefix).resolve("t").toString
+    val t = specDir(prefix).resolve("t").toString
     val lo = (0 until 40).map(i => (s"k$i", i.toLong, s"w${i % 7}"))
       .toDF("k", "v", "w")
     val hi = (0 until 40).map(i => (s"k$i", 1000L + i, s"w${i % 7}"))
@@ -151,7 +151,7 @@ class StatsPruningSpec extends SparkSpec {
     // bucket, two appends: file lo holds v in [10, 20] and s in
     // [bbb, ddd], file hi holds v in [1000, 1005] and s in [xa, xf].
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-stats-cols").resolve("t").toString
+    val t = specDir("graft-stats-cols").resolve("t").toString
     IcebergishTable.write(Seq(("k0", 10L, "bbb"), ("k1", 20L, "ddd"))
       .toDF("k", "v", "s"), t, "k", 1)
     IcebergishTable.write((0 to 5).map(i => (s"k$i", 1000L + i, s"x${"abcdef"(i)}"))
@@ -171,7 +171,7 @@ class StatsPruningSpec extends SparkSpec {
 
   test("timestamp zone maps prune through the DSv2 scan") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-stats-ts").resolve("t").toString
+    val t = specDir("graft-stats-ts").resolve("t").toString
     val base = java.time.Instant.parse("2024-01-01T00:00:00Z")
     def batch(dayOffset: Int) =
       (0 until 20).map { i =>
@@ -198,7 +198,7 @@ class StatsPruningSpec extends SparkSpec {
 
   test("columns named like manifest keys or holding spaces get zone maps and prune") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-stats-names").resolve("t").toString
+    val t = specDir("graft-stats-names").resolve("t").toString
     val lo = (0 until 40).map(i => (s"k$i", i.toLong, s"a${i % 7}"))
     val hi = (0 until 40).map(i => (s"k$i", 1000L + i, s"z${i % 7}"))
     IcebergishTable.write(lo.toDF("k", "files", "a b"), t, "k", 4)

@@ -42,7 +42,7 @@ class StreamingKgSpec extends SparkSpec {
 
   test("appendBatch of a small batch into a broadcast-sized table runs at most 3 Spark jobs") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-skjobs").toString + "/edges"
+    val table = specDir("graft-skjobs").toString + "/edges"
     StreamingKg.appendBatch(triples(0 until 40).toDF, table, "q", 0L, 4)
     // Half the batch is already committed, half is new, with in-batch dups.
     val batch = (triples(20 until 60) ++ triples(50 until 60)).toDF
@@ -55,7 +55,7 @@ class StreamingKgSpec extends SparkSpec {
 
   test("a re-delivered batch commits nothing and acks 0 rows; a normal batch acks its row delta") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-skrows").toString + "/edges"
+    val table = specDir("graft-skrows").toString + "/edges"
     StreamingKg.appendBatch(triples(0 until 30).toDF, table, "q", 0L, 4)
     assert(acks(table).map(_.rows_out) == Seq(30L))
 
@@ -100,7 +100,7 @@ class StreamingKgSpec extends SparkSpec {
     }
     spark.listenerManager.register(planListener)
     try {
-      val base = Files.createTempDirectory("graft-sksmj").toString
+      val base = specDir("graft-sksmj").toString
       val pagesDir = s"$base/pages-data"
       Files.createDirectories(Paths.get(pagesDir))
       val canon = PageSynth.sameAsPairs.map { case (c, d) => d -> c }.toMap

@@ -64,8 +64,8 @@ class StreamingSpec extends SparkSpec {
   test("append-mode file sink emits exactly the watermark-closed windows (production shape)") {
     import java.nio.file.Files
     val dir = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("graft-stream-out").toString
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
+    val out = specDir("graft-stream-out").toString
+    val ckpt = specDir("graft-stream-ckpt").toString
     EventStream.hourlyCountsToFiles(spark, s"$dir/events.parquet", out, ckpt)
     val emitted = spark.read.parquet(out)
       .collect().map(_.toSeq).toSet
@@ -94,7 +94,7 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.Files
     import spark.implicits._
     import graft.io.IcebergishTable
-    val base = Files.createTempDirectory("graft-mbs").toString
+    val base = specDir("graft-mbs").toString
     val table = s"$base/edges"
     val ckpt = s"$base/ckpt"
     val saved = Seq("spark.sql.catalog.graft_s", "spark.sql.catalog.graft_s.warehouse")
@@ -143,7 +143,7 @@ class StreamingSpec extends SparkSpec {
   test("admission control: a backlog of snapshots drains in multiple capped micro-batches, exactly-once") {
     import java.nio.file.Files
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-mbs-ac").toString
+    val base = specDir("graft-mbs-ac").toString
     val table = s"$base/edges"
     val saved = Seq("spark.sql.catalog.graft_ac", "spark.sql.catalog.graft_ac.warehouse")
       .map(k => k -> spark.conf.getOption(k))
@@ -208,7 +208,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.io.{IcebergishTable, TableFileWriter, WrittenFile}
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft-ssw").toString
+    val base = specDir("graft-ssw").toString
     val table = s"$base/sink"
     val saved = Seq("spark.sql.catalog.graft_w", "spark.sql.catalog.graft_w.warehouse")
       .map(k => k -> spark.conf.getOption(k))

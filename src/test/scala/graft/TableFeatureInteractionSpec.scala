@@ -20,7 +20,7 @@ class TableFeatureInteractionSpec extends SparkSpec {
 
   test("rename → zone maps re-key with the field: exact for BOTH eras") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-ix1").resolve("t").toString
+    val t = specDir("graft-ix1").resolve("t").toString
     // Era 1 under the ORIGINAL column name.
     IcebergishTable.write((0 until 40).map(i => (s"k$i", i.toLong))
       .toDF("k", "v"), t, "k", 4)
@@ -54,7 +54,7 @@ class TableFeatureInteractionSpec extends SparkSpec {
 
   test("drop then re-add of the same name: no stale-stats over-pruning") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-ix1b").resolve("t").toString
+    val t = specDir("graft-ix1b").resolve("t").toString
     // x has SMALL values; its per-file stats bound [0, 39].
     IcebergishTable.write((0 until 40).map(i => (s"k$i", i.toLong, 500L + i))
       .toDF("k", "x", "y"), t, "k", 4)
@@ -91,7 +91,7 @@ class TableFeatureInteractionSpec extends SparkSpec {
 
   test("MOR delete → rename → rebucket → compact: rows exact at every step") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-ix2").resolve("t").toString
+    val t = specDir("graft-ix2").resolve("t").toString
     IcebergishTable.write(
       (0 until 100).map(i => (s"k$i", s"g${i % 3}", i.toLong))
         .toDF("k", "g", "v"), t, "k", 4)

@@ -31,7 +31,7 @@ class TableWriterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("a bucket-aligned write is one job of numParts tasks under one exchange, with no sort") {
-    val t = Files.createTempDirectory("graft-wshape").toString + "/t"
+    val t = specDir("graft-wshape").toString + "/t"
     val n = 4
     val obs = Observation("wshape")
     val df = spark.range(0, 200, 1, 2)
@@ -77,7 +77,7 @@ class TableWriterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("an append whose task throws on one row commits nothing and leaves no file") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-wabort").toString + "/t"
+    val t = specDir("graft-wabort").toString + "/t"
     IcebergishTable.write((0 until 40).map(i => (s"k$i", i.toLong)).toDF("k", "v"), t, "k", 4)
     val snap = IcebergishTable.currentSnapshot(t)
     val before = tree(t)
@@ -108,7 +108,7 @@ class TableWriterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val prior = Option(hc.get(key))
     hc.set(key, "8")
     try {
-      val t = Files.createTempDirectory("graft-trunc").toString + "/t"
+      val t = specDir("graft-trunc").toString + "/t"
       val values = (0 until 50).map(i => f"value-string-number-$i%04d")
       IcebergishTable.write(values.toDF("s"), t, "s", 4)
       val stats = Manifest.read(t, IcebergishTable.currentSnapshot(t)).files.map(_.stats)
