@@ -11,11 +11,11 @@ import graft.triples.TripleExtract
 
 /** End-to-end KG construction pipeline (SURVEY.md §7.2 #9, north_star):
   *
-  *   pages (Iceberg-style table) ──scan (url, html) only──▶
-  *   deterministic HTML→text extraction ──▶ mention scan (broadcast trie)
-  *   ──▶ entity linking (broadcast hash join + tie-break window) ──▶
-  *   relation candidates ──▶ triples ──▶ canonicalization (large-star/
-  *   small-star CC over sameAs) ──▶ vertex/edge tables with per-partition
+  *   pages (Iceberg-style table) ──scan (url, html) only──▶ ONE fused
+  *   narrow pass ([[Pipeline.canonicalTriples]]: HTML→text extraction ──▶
+  *   mention scan (broadcast trie) ──▶ map-side linking against broadcast
+  *   alias winners, canonical through the sameAs components ──▶ relation
+  *   candidates ──▶ triples) ──▶ vertex/edge tables with per-partition
   *   checkpoint + lineage.
   *
   * Defaults mirror the reference's configuration envelope
@@ -140,48 +140,50 @@ object Pipeline {
       .as[Page]
   }
 
-  /** The one build path. No per-stage counts — the only actions are the
-    * canonicalization and the checkpointed writes. Returns the number of
-    * edge rows written (from the checkpoint layer's lineage, i.e. free); a
-    * resumed build counts only the buckets it rewrote. PipelineSpec proves
-    * the edge table equals the general operators' composition
-    * (Mentions.link → TripleExtract.triples → ConnectedComponents).
+  /** The one path from pages to canonical triples, shared by [[build]],
+    * the KG queries (`SparkEntry.entry`) and, with a fixed map, the stream
+    * (`StreamingKg.triplesStream`). The strategy gate is SIZE: a sameAs
+    * graph at dictionary scale collapses to a driver map folded into the
+    * broadcast link winners of the fused pass ([[TripleExtract.extractDirect]]:
+    * codegen'd html_extract → char-trie scan → map-side canonical linking →
+    * local candidate resolution, zero shuffles); a huge one (discovered
+    * entities) never touches the driver — the raw triples canonicalize via
+    * a join whose broadcast/shuffle choice is left to AQE. No dedup: the
+    * caller dedups (the bucketed writer in its own shuffle).
+    */
+  def canonicalTriples(pages: Dataset[Page], ccLocalThreshold: Long): Dataset[Triple] = {
+    val spark = pages.sparkSession
+    val aliasDict = PageSynth.aliasDictionary
+    val phrases = PageSynth.relations.toMap
+    val (canonDf, fitsDriver) = ConnectedComponents.componentsSized(
+      PageSynth.sameAs(spark).toDF("src", "dst"),
+      localThreshold = ccLocalThreshold)
+    if (fitsDriver)
+      TripleExtract.extractDirect(pages, aliasDict, phrases,
+        canonDf.collect().map(r => r.getString(0) -> r.getString(1)).toMap)
+    else
+      TripleExtract.canonicalize(
+        TripleExtract.extractDirect(pages, aliasDict, phrases),
+        canonDf, assumeSmall = false, dedup = false)
+  }
+
+  /** The one build path: [[canonicalTriples]], then ONE shuffle (bucket
+    * exchange with in-shuffle sort-dedup, one file per bucket, lineage from
+    * the written columnar files). No per-stage counts — the only actions
+    * are the canonicalization and the checkpointed writes. Returns the
+    * number of edge rows written (from the checkpoint layer's lineage, i.e.
+    * free); a resumed build counts only the buckets it rewrote. PipelineSpec
+    * proves the edge table equals the join-based oracle's composition
+    * (scan → broadcast-join link → candidate joins → ConnectedComponents).
     */
   def build(spark: SparkSession, cfg: PipelineConfig): Long = {
     validate(cfg)
     val table = buildPagesTable(spark, cfg)
     val pages = readPagesForExtraction(spark, table)
-    val aliasDict = PageSynth.aliasDictionary
-    val phrases = PageSynth.relations.toMap
-
-    // Canonicalization first. The strategy gate is SIZE: a sameAs graph at
-    // dictionary scale collapses to a driver map folded into the broadcast
-    // link winners (zero extra joins in the hot pass); a huge one (discovered
-    // entities) never touches the driver — the raw triples canonicalize via
-    // a join whose broadcast/shuffle choice is left to AQE.
-    val (canonDf, fitsDriver) = ConnectedComponents.componentsSized(
-      PageSynth.sameAs(spark).toDF("src", "dst"),
-      localThreshold = cfg.ccLocalThreshold)
-
-    // ONE fused narrow pass (codegen'd html_extract → char-trie scan →
-    // map-side canonical linking → local candidate resolution), then ONE
-    // shuffle: bucket-exchange with in-shuffle sort-dedup, one file per
-    // bucket, lineage from the written columnar files.
     val ckpt = s"${cfg.workDir}/checkpoint"
     val edgesTable = s"${cfg.workDir}/edges"
     val inputTag = s"snap-${IcebergishTable.currentSnapshot(table)}"
-    val canonMap: Map[String, String] =
-      if (fitsDriver)
-        canonDf.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      else Map.empty
-    val rawTriples =
-      if (fitsDriver)
-        TripleExtract.extractDirect(pages, aliasDict, phrases, canonMap)
-      else
-        // No dedup here: the bucketed writer dedups in its own shuffle.
-        TripleExtract.canonicalize(
-          TripleExtract.extractDirect(pages, aliasDict, phrases),
-          canonDf, assumeSmall = false, dedup = false)
+    val rawTriples = canonicalTriples(pages, cfg.ccLocalThreshold)
     val salt = if (cfg.writeSalt == 0) autoSplit(spark) else cfg.writeSalt
     val edgeStats = GraphOut.writeBucketedDedup(
       rawTriples.toDF, edgesTable, "subj", cfg.outputBuckets,

@@ -49,6 +49,15 @@ object SparkEntry {
     }
   }
 
+  /** Row count and `sum(v)` per `k`, ordered by `k`, materialized: the
+    * result every table-format query below hands the oracle compare.
+    */
+  private def countSumBy(df: DataFrame, k: String): DataFrame =
+    df.groupBy(col(k))
+      .agg(count(lit(1)).as("n"), sum(col("v")).as("sum_v"))
+      .orderBy(col(k))
+      .localCheckpoint()
+
   /** The confs that mount a [[graft.sources.v2.GraftCatalog]] named `name`
     * over `warehouse`.
     */
@@ -57,37 +66,18 @@ object SparkEntry {
     s"spark.sql.catalog.$name.warehouse" -> warehouse)
 
   /** Flagship: full KG build on synthesized pages — returns the canonical
-    * edge (triple) table. Driver smoke-checks rows > 0 on sf0.001.
+    * edge (triple) table. Driver smoke-checks rows > 0 on sf0.001. The
+    * build's own pass ([[Pipeline.canonicalTriples]]) with the dedup the
+    * bucketed writer applies in its shuffle.
     */
-  def entry(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val pages = kgPages(spark)
-    val dict = PageSynth.aliasDictionary
-    // ONE fused pass over the pages (scanPages: extract + trie scan +
-    // candidate grammar), materialized: without the checkpoint the
-    // unshared mention/candidate subtrees re-synthesize and re-extract the
-    // corpus THREE times in the final plan (cands side + both link-join
-    // sides — measured in plans/r07/kg_triples_before.txt), and the link
-    // window runs twice. Same operators, same rows — PipelineSpec's oracle
-    // composes exactly this shape and proves Pipeline.build emits its edges.
-    val scanned = Mentions.scanPages(pages, dict,
-      PageSynth.relations.toMap).localCheckpoint()
-    // linked is ALSO checkpointed: its two uses (subj/obj join sides)
-    // would otherwise re-run the broadcast link + tie-break window per
-    // side — measured 0.66 s vs 0.99 s for kg_triples with a lazy linked.
-    val linked = Mentions.link(scanned.flatMap(_.mentions),
-      PageSynth.aliases(spark)).localCheckpoint()
-    val cands = scanned.flatMap(_.cands)
-    val canon = ConnectedComponents.components(
-      PageSynth.sameAs(spark).toDF("src", "dst"))
-    TripleExtract.canonicalize(
-      TripleExtract.triples(cands, linked), canon).toDF
-  }
+  def entry(spark: SparkSession): DataFrame =
+    Pipeline.canonicalTriples(kgPages(spark), PipelineConfig().ccLocalThreshold)
+      .dropDuplicates("subj", "pred", "obj", "url").toDF
 
   /** Shared KG sub-pipeline for the kg_* query entries (deterministic,
     * independent of sfDir).
     */
-  private def kgPages(s: SparkSession) = {
+  private[graft] def kgPages(s: SparkSession) = {
     import s.implicits._
     PageSynth.pages(s, 42L, 400L, 8).map(p =>
       Page(p.url, p.warc_ts, p.html,
@@ -418,21 +408,17 @@ object SparkEntry {
     }),
     "kg_mentions" -> ((s, _) =>
       Mentions.scan(kgPages(s), PageSynth.aliasDictionary).toDF),
-    "kg_linked" -> ((s, _) =>
-      Mentions.link(
-        Mentions.scan(kgPages(s), PageSynth.aliasDictionary),
-        PageSynth.aliases(s)).toDF),
-    "kg_triples" -> ((s, _) => {
+    "kg_linked" -> ((s, _) => {
       import s.implicits._
-      // Fused one-pass scan + materialized link (see entry()): identical
-      // rows to the unshared scan/candidates/link composition, without
-      // re-synthesizing the corpus per plan subtree.
-      val scanned = Mentions.scanPages(kgPages(s), PageSynth.aliasDictionary,
-        PageSynth.relations.toMap).localCheckpoint()
-      val linked = Mentions.link(scanned.flatMap(_.mentions),
-        PageSynth.aliases(s)).localCheckpoint()
-      TripleExtract.triples(scanned.flatMap(_.cands), linked).toDF
+      val winners = s.sparkContext.broadcast(
+        Mentions.aliasWinners(PageSynth.aliasDictionary))
+      Mentions.scan(kgPages(s), PageSynth.aliasDictionary)
+        .flatMap(m => Mentions.linkLocal(Seq(m), winners.value)).toDF
     }),
+    "kg_triples" -> ((s, _) =>
+      TripleExtract.extractDirect(kgPages(s), PageSynth.aliasDictionary,
+        PageSynth.relations.toMap)
+        .dropDuplicates("subj", "pred", "obj", "url").toDF),
     "kg_cc" -> ((s, _) => {
       import s.implicits._
       ConnectedComponents.components(
@@ -562,11 +548,7 @@ object SparkEntry {
         Seq("k"))
       graft.io.IcebergishTable.write(slice(1000, 1100), t, "k", 8,
         org.apache.spark.sql.SaveMode.Append)
-      graft.io.IcebergishTable.read(s, t)
-        .groupBy(col("k"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sum_v"))
-        .orderBy(col("k"))
-        .localCheckpoint()
+      countSumBy(graft.io.IcebergishTable.read(s, t), "k")
     }),
     "kg_rebucket" -> ((s, _) => {
       // Partition-spec evolution under the oracle: write bucketed by k,
@@ -584,11 +566,7 @@ object SparkEntry {
       graft.io.IcebergishTable.rebucket(s, t, "w", 4)
       graft.io.IcebergishTable.write(slice(900, 1200), t, "w", 4,
         org.apache.spark.sql.SaveMode.Append)
-      graft.io.IcebergishTable.read(s, t)
-        .groupBy(col("w"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sum_v"))
-        .orderBy(col("w"))
-        .localCheckpoint()
+      countSumBy(graft.io.IcebergishTable.read(s, t), "w")
     }),
     "kg_compact" -> ((s, _) => {
       // Table-maintenance round trip, oracle-verified: three bucketed
@@ -608,11 +586,7 @@ object SparkEntry {
         org.apache.spark.sql.SaveMode.Append)
       graft.io.IcebergishTable.compact(s, t, 4, "k")
       graft.io.IcebergishTable.expireSnapshots(t, keepLast = 1)
-      graft.io.IcebergishTable.read(s, t)
-        .groupBy(col("k"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sum_v"))
-        .orderBy(col("k"))
-        .localCheckpoint()
+      countSumBy(graft.io.IcebergishTable.read(s, t), "k")
     }),
     "kg_delete" -> ((s, _) => {
       // Row-level DELETE through BOTH physical strategies, oracle-verified:
@@ -631,11 +605,7 @@ object SparkEntry {
       graft.io.IcebergishTable.deleteWhere(s, t, col("v") % 211 === 5,
         morMaxRows = 100L) // 10 rows → MOR path
       graft.io.IcebergishTable.deleteWhere(s, t, col("v") % 7 === 3) // COW
-      graft.io.IcebergishTable.read(s, t)
-        .groupBy(col("k"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sum_v"))
-        .orderBy(col("k"))
-        .localCheckpoint()
+      countSumBy(graft.io.IcebergishTable.read(s, t), "k")
     }),
     "kg_merge" -> ((s, _) => {
       // MERGE (upsert) through BOTH physical strategies in ONE table,
@@ -656,11 +626,7 @@ object SparkEntry {
       graft.io.IcebergishTable.mergeRows(t,
         rows(100, 150, 100).unionByName(rows(1600, 1650, 100)),
         Seq("id"), morMaxRows = 200L)
-      graft.io.IcebergishTable.read(s, t)
-        .groupBy(col("k"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sum_v"))
-        .orderBy(col("k"))
-        .localCheckpoint()
+      countSumBy(graft.io.IcebergishTable.read(s, t), "k")
     }),
     "kg_multiwriter" -> ((s, _) => {
       // Concurrent multi-writer commits, oracle-verified: four threads
@@ -686,11 +652,7 @@ object SparkEntry {
       }
       threads.foreach(_.start()); threads.foreach(_.join(300000))
       if (!errs.isEmpty) throw errs.peek()
-      graft.io.IcebergishTable.read(s, t)
-        .groupBy(col("k"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sum_v"))
-        .orderBy(col("k"))
-        .localCheckpoint()
+      countSumBy(graft.io.IcebergishTable.read(s, t), "k")
     }),
     "kg_evolve" -> ((s, _) => {
       // Schema evolution round trip, oracle-verified: write, ALTER-style

@@ -85,10 +85,10 @@ case class DotProductExpr(left: Expression, right: Expression)
 
 object DotProductExpr {
 
-  import org.apache.spark.sql.graft.ColumnBridge
+  import org.apache.spark.sql.GraftColumnBridge
 
   /** Column-level API. */
   def dot_product(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProductExpr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    GraftColumnBridge.column(DotProductExpr(
+      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 }

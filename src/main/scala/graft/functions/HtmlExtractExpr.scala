@@ -45,11 +45,11 @@ case class HtmlExtractExpr(child: Expression) extends UnaryExpression {
 
 object HtmlExtractExpr {
 
-  import org.apache.spark.sql.graft.ColumnBridge
+  import org.apache.spark.sql.GraftColumnBridge
 
   /** Column-level API. */
   def html_extract(c: Column): Column =
-    ColumnBridge.column(HtmlExtractExpr(ColumnBridge.expression(c)))
+    GraftColumnBridge.column(HtmlExtractExpr(GraftColumnBridge.expression(c)))
 
   /** Register `html_extract` for SQL use on a session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

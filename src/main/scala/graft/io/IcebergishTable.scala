@@ -543,10 +543,6 @@ object IcebergishTable {
     resolveAppendSchema(table, schema.json, m.schema.json)
   }
 
-  /** Bucket hash-function id recorded in the current manifest, if any. */
-  def bucketFnOf(table: String): Option[String] =
-    tryLoad(table, currentSnapshot(table)).flatMap(_.bucketFn)
-
   /** What a staged write hands its commit: the promoted data files and
     * the delete files written for the same commit.
     */

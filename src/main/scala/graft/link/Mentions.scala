@@ -1,8 +1,6 @@
 package graft.link
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 
 import graft.{Alias, LinkedMention, Mention, Page}
 
@@ -13,11 +11,14 @@ import graft.{Alias, LinkedMention, Mention, Page}
   * no shuffle. Matches never span a block ('\n') or any non-single-space
   * gap, mirroring sentence boundaries.
   *
-  * Link: broadcast hash join of mentions against the alias dictionary
-  * (small dim side — the reference's metadata-catalog analog,
-  * /root/reference/src/graph_loader.rs:1047-1109), then a deterministic
-  * tie-break window `row_number over (partition by url, begin
-  * order by score desc, entity asc)` picking the winning entity.
+  * Link: the tie-break `(score desc, entity asc)` per alias is context-free,
+  * so [[aliasWinners]] reduces the dictionary (the reference's
+  * metadata-catalog analog, its `src/graph_loader.rs:1047-1109`)
+  * to one winner per alias on the driver and [[linkLocal]] looks each
+  * mention up in the broadcast map — no join, no window. The fused pass
+  * ([[graft.triples.TripleExtract.extractDirect]]) runs scan and link once
+  * per page and fans the result out to the triples, the analog of the
+  * reference decoding each batch once (graph_loader.rs:420-472).
   */
 object Mentions {
 
@@ -45,34 +46,6 @@ object Mentions {
     out.toSeq
   }
 
-  /** Fused single-pass scan output: one row per page carrying both the
-    * mention spans and the relation candidates, so the (expensive) HTML
-    * extraction + trie walk happens exactly once per page — the analog of
-    * the reference decoding each batch once and fanning results out
-    * (/root/reference/src/graph_loader.rs:420-472).
-    */
-  final case class PageScan(url: String,
-                            mentions: Seq[Mention],
-                            cands: Seq[graft.triples.RelCandidate])
-
-  /** Single narrow pass over pages: mentions + relation candidates. */
-  def scanPages(pages: Dataset[Page], aliases: Seq[Alias],
-                phrases: Map[String, String]): Dataset[PageScan] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val trieB = spark.sparkContext.broadcast(
-      AliasTrie.build(aliases.map(_.alias).distinct))
-    val phrasesB = spark.sparkContext.broadcast(phrases)
-    // Narrow the typed input to the two fields the closure reads — a map
-    // over Dataset[Page] would deserialize the html payload per row.
-    pages.select($"url", $"text").as[(String, String)].map { case (url, text) =>
-      val ms = scanText(url, text, trieB.value)
-      val cs = graft.triples.TripleExtract
-        .allCandidates(url, text, ms, phrasesB.value)
-      PageScan(url, ms, cs)
-    }
-  }
-
   /** Distributed mention scan: narrow map-side flatMap over pages. */
   def scan(pages: Dataset[Page], aliases: Seq[Alias]): Dataset[Mention] = {
     val spark = pages.sparkSession
@@ -84,11 +57,8 @@ object Mentions {
   }
 
   /** Pre-reduced link winners: the tie-break (score desc, entity asc) is
-    * context-free, so the winner per alias can be computed once driver-side
-    * and broadcast — turning the link step into a map-side lookup with no
-    * shuffle at all. [[link]] below is the general operator (broadcast hash
-    * join + window) for when scoring needs row context; the pipeline's hot
-    * path uses this.
+    * context-free, so the winner per alias is computed once driver-side
+    * and broadcast — the link step is a map-side lookup with no shuffle.
     */
   def aliasWinners(aliases: Seq[Alias]): Map[String, (String, Double)] =
     aliases.groupBy(_.alias).map { case (a, as) =>
@@ -104,21 +74,4 @@ object Mentions {
         LinkedMention(m.url, m.mention, m.begin, m.end, entity, score)
       }
     }
-
-  /** Entity linking: broadcast hash join + window tie-break. */
-  def link(mentions: Dataset[Mention],
-           aliases: Dataset[Alias]): Dataset[LinkedMention] = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-    val w = Window
-      .partitionBy($"url", $"begin")
-      .orderBy($"score".desc, $"entity".asc)
-    mentions
-      .join(broadcast(aliases.toDF), $"mention" === $"alias", "inner")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
-      .select($"url", $"mention", $"begin", $"end", $"entity",
-        $"score".as("conf"))
-      .as[LinkedMention]
-  }
 }

@@ -89,9 +89,4 @@ object Checkpoint {
       .filter(r => r.run_id == runId && r.stage == stage &&
         r.status == "done" && r.input_tag == inputTag)
       .groupBy(_.part).view.mapValues(_.last.input_fingerprint).toMap
-
-  /** Partitions of `stage` already completed for `runId` and `inputTag`. */
-  def doneParts(spark: SparkSession, path: String, runId: String,
-                stage: String, inputTag: String): Set[Int] =
-    ackedFingerprints(path, runId, stage, inputTag).keySet
 }

@@ -1,13 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, AttributeSet, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.sources.v2.GraftTable
 
@@ -52,7 +51,7 @@ object GraftRowLevelSql extends Rule[LogicalPlan] {
       // unresolved expression hanging off a command node — resolution
       // happens against the fresh table read inside deleteWhere.
       GraftDeleteCommand(t.tablePath,
-        ColumnBridge.column(unresolveByName(cond)))
+        GraftColumnBridge.column(unresolveByName(cond)))
 
     case m @ MergeIntoTable(target, source, cond,
         matched, notMatched, notMatchedBySource, _)
@@ -187,9 +186,9 @@ final case class GraftMergeCommand(path: String, source: LogicalPlan,
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val src = org.apache.spark.sql.GraftColumnBridge.dfOf(spark, source)
+    val src = GraftColumnBridge.dfOf(spark, source)
     val updates = src.select(columns.map { case (name, expr) =>
-      ColumnBridge.column(expr).as(name)
+      GraftColumnBridge.column(expr).as(name)
     }: _*)
     // Same strategy dial as DELETE: matched rows at or below the
     // threshold take the MOR leg (tombstone + append), larger merges COW.

@@ -29,8 +29,10 @@ object StreamingKg {
     .filter(f => Seq("url", "warc_ts", "html", "lang").contains(f.name)))
 
   /** Streaming triples from a pages directory (parquet files appear over
-    * time). Canonicalization of the dictionary-derived sameAs graph is a
-    * static broadcast map, applied inline.
+    * time): the build's fused pass ([[TripleExtract.extractDirect]]) with
+    * the dictionary-derived sameAs components `canon` folded into its
+    * broadcast link winners, as [[graft.Pipeline.canonicalTriples]] folds
+    * them for a batch.
     */
   def triplesStream(spark: SparkSession, pagesDataDir: String,
                     canon: Map[String, String]): Dataset[Triple] = {
@@ -42,14 +44,8 @@ object StreamingKg {
       .select(col("url"), col("warc_ts"), col("html"),
         html_extract(col("html")).as("text"), col("lang"))
       .as[Page]
-    val canonB = spark.sparkContext.broadcast(canon)
-    val raw = TripleExtract.extractDirect(pages, PageSynth.aliasDictionary,
-      PageSynth.relations.toMap)
-    raw.map { t =>
-      val c = canonB.value
-      t.copy(subj = c.getOrElse(t.subj, t.subj),
-        obj = c.getOrElse(t.obj, t.obj))
-    }
+    TripleExtract.extractDirect(pages, PageSynth.aliasDictionary,
+      PageSynth.relations.toMap, canon)
   }
 
   /** One exactly-once micro-batch append into the bucketed Icebergish

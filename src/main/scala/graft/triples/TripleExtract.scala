@@ -3,12 +3,12 @@ package graft.triples
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.{LinkedMention, Page, Triple}
+import graft.{Page, Triple}
 import graft.link.{AliasTrie, Mentions}
 
 /** Relation candidate: two adjacent mentions in one sentence whose gap text
-  * equals a relation phrase. Carries offsets only — entity resolution joins
-  * in later (keeps page text out of the shuffle).
+  * equals a relation phrase. Carries offsets only — the fused pass resolves
+  * them against the page's linked mentions.
   */
 final case class RelCandidate(
     url: String,
@@ -19,30 +19,18 @@ final case class RelCandidate(
 
 /** Triple extraction (SURVEY.md §7.2 #6).
   *
-  * Pass 1 (narrow, fused with the mention scan): per page, find mention
-  * spans, then for consecutive spans within a block check the between-text
-  * against the broadcast relation-phrase map → [[RelCandidate]] rows. The
-  * heavy `text` column never leaves the scan stage — only (url, offsets,
-  * pred) rows do, mirroring how the reference ships only ids + projected
-  * fields out of decode (/root/reference/src/graph_loader.rs:455-471).
-  *
-  * Pass 2: join candidates to linked mentions on (url, begin) twice to
-  * resolve subj/obj entities; dedupe on (subj, pred, obj, url).
+  * One narrow pass per page ([[TripleExtract.extractDirect]]): find mention
+  * spans, link them against the broadcast alias winners, then for
+  * consecutive spans within a block check the between-text against the
+  * broadcast relation-phrase map ([[RelCandidate]]) and resolve each
+  * candidate's two offsets to their linked entities on the spot. The heavy
+  * `text` column never leaves the scan stage — only triple rows do,
+  * mirroring how the reference ships only ids + projected fields out of
+  * decode (the reference's `src/graph_loader.rs:455-471`). Duplicates
+  * (subj, pred, obj, url) are left to the caller's dedup.
   */
 object TripleExtract {
 
-  /** Candidates from already-scanned mentions (shared with the fused
-    * single-pass scan in [[graft.link.Mentions.scanPages]]).
-    *
-    * Grammar, all gap-EXACT (a `never <phrase>` gap stays silent):
-    *  - fact: `A <phrase> B` → (A, pred, B)
-    *  - n-ary: `A <phrase> B and C …` distributes pred over conjuncts
-    *  - nested clause: `A , which <p1> B , <p2> C` → (A, p1, B) from the
-    *    parenthetical AND (A, p2, C) for the outer relation — the clause's
-    *    ANCHOR (A), not its object (B), is the outer subject. The comma
-    *    grammar is unambiguous: `, which <p1>` opens a clause, a following
-    *    `, <p2>` closes it and resumes the anchor.
-    */
   /** The trimmed gap phrase of `text[from, until)`, or null when the gap
     * crosses a block ('\n' present) — exactly
     * `{ val g = text.substring(from, until); if (g.contains('\n')) null
@@ -65,6 +53,17 @@ object TripleExtract {
     text.substring(s, e)
   }
 
+  /** Candidates from one page's already-scanned mentions.
+    *
+    * Grammar, all gap-EXACT (a `never <phrase>` gap stays silent):
+    *  - fact: `A <phrase> B` → (A, pred, B)
+    *  - n-ary: `A <phrase> B and C …` distributes pred over conjuncts
+    *  - nested clause: `A , which <p1> B , <p2> C` → (A, p1, B) from the
+    *    parenthetical AND (A, p2, C) for the outer relation — the clause's
+    *    ANCHOR (A), not its object (B), is the outer subject. The comma
+    *    grammar is unambiguous: `, which <p1>` opens a clause, a following
+    *    `, <p2>` closes it and resumes the anchor.
+    */
   def candidatesFromMentions(url: String, text: String,
                              ms: Seq[graft.Mention],
                              phrases: Map[String, String]): Seq[RelCandidate] = {
@@ -126,8 +125,8 @@ object TripleExtract {
     *    mention inside a filler sentence.
     *
     * Either form emits a candidate anchored at the ANTECEDENT mention's
-    * offset, so resolution joins against the already-linked antecedent —
-    * no extra linking pass. Blocks are '\n'-delimited (the extractor's
+    * offset, so resolution looks up the already-linked antecedent — no
+    * extra linking pass. Blocks are '\n'-delimited (the extractor's
     * block contract); the phrase gap must match EXACTLY (a `never <phrase>`
     * gap stays silent).
     */
@@ -178,7 +177,8 @@ object TripleExtract {
     * [[graft.link.Mentions.aliasWinners]]), and local candidate resolution.
     * Zero shuffles from the page scan to raw triples; the first shuffle in
     * the pipeline is the post-canonicalization dedup. This is the 100 TB
-    * hot path; [[triples]] below is the general join-based operator.
+    * hot path and the only one: the batch build, the KG queries and the
+    * stream all run it.
     */
   def extractDirect(pages: Dataset[Page], aliases: Seq[graft.Alias],
                     phrases: Map[String, String],
@@ -213,23 +213,6 @@ object TripleExtract {
               math.min(a.conf, b.conf))
         }
       }
-  }
-
-  /** Resolve candidates against linked mentions → deduped triples. */
-  def triples(cands: Dataset[RelCandidate],
-              linked: Dataset[LinkedMention]): Dataset[Triple] = {
-    val spark = cands.sparkSession
-    import spark.implicits._
-    val l = linked.select($"url", $"begin", $"entity", $"conf")
-    val subj = l.toDF("url", "beginA", "subj", "confA")
-    val obj = l.toDF("url", "beginB", "obj", "confB")
-    cands
-      .join(subj, Seq("url", "beginA"))
-      .join(obj, Seq("url", "beginB"))
-      .select($"subj", $"pred", $"obj", $"url",
-        least($"confA", $"confB").as("conf"))
-      .dropDuplicates("subj", "pred", "obj", "url")
-      .as[Triple]
   }
 
   /** Canonicalize subj/obj through a (id → component) mapping.

@@ -1,13 +1,23 @@
 /*
  * Lives in org.apache.spark.sql to reach package-private surfaces of the
- * table read path and the SQL row-level commands: Dataset.ofRows, session
- * cloning and StructType.asNullable. Zone-map pruning does not come
+ * table read path, the SQL row-level commands and the native expressions:
+ * Dataset.ofRows, session cloning, StructType.asNullable and the
+ * Column ↔ Expression converters. Zone-map pruning does not come
  * through here: it reads the filters Spark pushes to the table scan.
  * Everything used here is Apache Spark public source.
  */
 package org.apache.spark.sql
 
 object GraftColumnBridge {
+
+  /** Column ↔ Expression converters (private[sql]): the standard pattern
+    * for libraries contributing native Catalyst expressions (Spark 4
+    * removed the public Column(expr) constructor).
+    */
+  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    classic.ExpressionUtils.column(e)
+  def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    classic.ExpressionUtils.expression(c)
 
   /** DataFrame over a logical plan (classic Dataset.ofRows is
     * private[sql]) — every table read is one over a DSv2 relation, and the

@@ -53,14 +53,14 @@ class DotProductExprSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen (expression evaluated outside WSCG)") {
-    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.GraftColumnBridge
     val expr = graft.functions.DotProductExpr(
-      ColumnBridge.expression(typedLit(Seq(1.5, -2.0, 3.0))),
-      ColumnBridge.expression(typedLit(Seq(2.0, 0.5, -1.0))))
+      GraftColumnBridge.expression(typedLit(Seq(1.5, -2.0, 3.0))),
+      GraftColumnBridge.expression(typedLit(Seq(2.0, 0.5, -1.0))))
     // Foldable constant: ConstantFolding runs nullSafeEval (interpreted).
     import spark.implicits._
     val viaPlan = Seq(1).toDF("x")
-      .select(org.apache.spark.sql.graft.ColumnBridge.column(expr).as("d"))
+      .select(GraftColumnBridge.column(expr).as("d"))
       .as[Double].head()
     assert(viaPlan == (1.5 * 2.0) + (-2.0 * 0.5) + (3.0 * -1.0))
   }

@@ -37,7 +37,8 @@ class ManifestFixtureSpec extends SparkSpec {
     assert(m.deletes.map(d => (IcebergishTable.isEqDeleteFile(d.path), d.seq)) ==
       Seq((false, 5L), (true, 6L)))
     assert(m.files.forall(f => f.size.isDefined && f.rows > 0 && f.stats.nonEmpty))
-    assert(IcebergishTable.bucketFnOf(table).contains(IcebergishTable.BucketFn))
+    assert(Manifest.read(table, IcebergishTable.currentSnapshot(table)).bucketFn
+      .contains(IcebergishTable.BucketFn))
     assert(IcebergishTable.manifestEpochs(table) == Map("q1" -> 7L))
   }
 

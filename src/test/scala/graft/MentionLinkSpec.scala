@@ -1,6 +1,7 @@
 package graft
 
 import graft.link.{AliasTrie, Mentions}
+import graft.JoinOracle.link
 import graft.synth.PageSynth
 
 /** Mention scan + entity linking: exact-value assertions against the
@@ -44,7 +45,7 @@ class MentionLinkSpec extends SparkSpec {
     val n = 300L
     val pages = PageSynth.pages(spark, 42L, n, 8)
     val mentions = Mentions.scan(pages, PageSynth.aliasDictionary)
-    val linked = Mentions.link(mentions, PageSynth.aliases(spark))
+    val linked = link(mentions, PageSynth.aliases(spark))
     val got = linked
       .map(m => (m.url, m.begin, m.end, m.entity, m.conf))
       .collect().toSet

@@ -8,12 +8,12 @@ import graft.io.{IcebergishTable, RootCommit}
 import graft.materialize.{Checkpoint, GraphOut}
 import graft.synth.PageSynth
 import graft.triples.TripleExtract
-import graft.link.Mentions
 import graft.canon.ConnectedComponents
+import graft.JoinOracle.{link, scanPages, triples}
 
 /** End-to-end pipeline: golden-triple P/R, canonicalization, and
-  * checkpointed resume (FIXTURES.md §4, §6). The general operators are the
-  * oracle the fused `Pipeline.build` must equal.
+  * checkpointed resume (FIXTURES.md §4, §6). The join-based operators of
+  * [[JoinOracle]] are the oracle the fused `Pipeline.build` must equal.
   */
 class PipelineSpec extends SparkSpec {
 
@@ -33,13 +33,13 @@ class PipelineSpec extends SparkSpec {
     */
   private def oracleTriples(pagesTable: String): DataFrame = {
     import spark.implicits._
-    val scanned = Mentions.scanPages(
+    val scanned = scanPages(
       Pipeline.readPagesForExtraction(spark, pagesTable),
       PageSynth.aliasDictionary, PageSynth.relations.toMap)
-    val linked = Mentions.link(scanned.flatMap(_.mentions),
+    val linked = link(scanned.flatMap(_.mentions),
       PageSynth.aliases(spark))
     TripleExtract.canonicalize(
-      TripleExtract.triples(scanned.flatMap(_.cands), linked),
+      triples(scanned.flatMap(_.cands), linked),
       ConnectedComponents.components(
         PageSynth.sameAs(spark).toDF("src", "dst"))).toDF
   }
@@ -111,7 +111,7 @@ class PipelineSpec extends SparkSpec {
       numParts, dedupCols, s"$dir/ckpt", "r1", "edges")
     assert(stats.partsWritten == (0 until numParts))
     assert(stats.partsSkipped.isEmpty)
-    assert(Checkpoint.doneParts(spark, s"$dir/ckpt", "r1", "edges", "static") ==
+    assert(Checkpoint.ackedFingerprints(s"$dir/ckpt", "r1", "edges", "static").keySet ==
       (0 until numParts).toSet)
 
     assert(edgeSet(IcebergishTable.read(spark, s"$dir/edges")) == expected)

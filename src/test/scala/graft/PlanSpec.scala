@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.io.IcebergishTable
+import graft.JoinOracle.link
 import graft.ops.SaltedJoin
 import graft.synth.PageSynth
 
@@ -40,7 +41,7 @@ class PlanSpec extends SparkSpec {
   test("linking join broadcasts the alias dictionary") {
     import spark.implicits._
     val pages = PageSynth.pages(spark, 42L, 50L, 2)
-    val linked = graft.link.Mentions.link(
+    val linked = link(
       graft.link.Mentions.scan(pages, PageSynth.aliasDictionary),
       PageSynth.aliases(spark))
     assert(planOf(linked.toDF).contains("BroadcastHashJoin"))
